@@ -36,6 +36,20 @@ def exact_dedup(df: SparkDF, key_cols: list[str], order_col: str) -> SparkDF:
 
 # --- shingling --------------------------------------------------------
 
+# The PPJoin bounds t·n, 2t/(1+t)·n and t/(1+t)·(na+nb) are often
+# exact integers that floating point lands a few ulps above:
+# 0.8/1.8·126 evaluates to 56.00000000000001 and ceils to 57, so a
+# pair at exactly J = t fell to the positional filter. Every bound is taken from x − _BOUND_SLACK
+# instead. That can only loosen a filter (more candidates, never
+# fewer), it absorbs the rounding error for sets below ~10^6
+# shingles, and exact verification still decides every pair.
+_BOUND_SLACK = 1e-9
+
+
+def _ceil_bound(x):
+    """ceil(x) with the lossless slack above (a Column)."""
+    return F.ceil(x - F.lit(_BOUND_SLACK))
+
 
 def tokens_expr(text_col: str):
     """Whitespace tokens of lowercased, trimmed text (JVM-side)."""
@@ -331,7 +345,7 @@ def jaccard_pairs(
     # prefix length: n_sh - ceil(t * n_sh) + 1 (n_sh rides along from
     # shingle_arrays — no second pass); keep size + position for the
     # in-join filters
-    prefix_len = F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
+    prefix_len = F.col("n_sh") - _ceil_bound(F.lit(threshold) * F.col("n_sh")) + 1
     n1 = F.col("n_sh") - F.size("__reps")
     k = (prefix_len - n1).cast("int")  # repeated entries inside the prefix
     # The prefix frame is PERSISTED (r6): the candidate self-join
@@ -391,7 +405,7 @@ def _prefix_candidates(prefix: SparkDF, threshold: float) -> SparkDF:
     # pos <= n − ceil(2t/(1+t)·n) + 1
     idx_len = (
         F.col("__na")
-        - F.ceil(
+        - _ceil_bound(
             F.lit(2.0 * threshold / (1.0 + threshold)) * F.col("__na")
         )
         + 1
@@ -408,7 +422,7 @@ def _prefix_candidates(prefix: SparkDF, threshold: float) -> SparkDF:
         F.col("n_sh").alias("__nb"),
         F.col("pos").alias("__pb"),
     )
-    alpha = F.ceil(
+    alpha = _ceil_bound(
         F.lit(threshold / (1.0 + threshold)) * (F.col("__na") + F.col("__nb"))
     )
     overlap_ub = (
@@ -427,6 +441,7 @@ def _prefix_candidates(prefix: SparkDF, threshold: float) -> SparkDF:
             & (
                 F.least("__na", "__nb")
                 >= F.lit(threshold) * F.greatest("__na", "__nb")
+                - F.lit(_BOUND_SLACK)
             )
             & (overlap_ub >= alpha)
         )
@@ -525,7 +540,7 @@ def _truncated_bound_filter(
     tail = F.when(
         F.col("__tma") <= F.col("__tmb"), F.col("__tna") - F.col("__ka")
     ).otherwise(F.col("__tnb") - F.col("__kb"))
-    alpha = F.ceil(
+    alpha = _ceil_bound(
         F.lit(threshold / (1.0 + threshold))
         * (F.col("__tna") + F.col("__tnb"))
     )
@@ -566,7 +581,7 @@ def _hash_order_prefix(
         _sampled_hot_probe(src, id_col, text_col, n) if demote_hot else None
     )
     plen = (
-        F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
+        F.col("n_sh") - _ceil_bound(F.lit(threshold) * F.col("n_sh")) + 1
     ).cast("int")
     if probe is None:
         ordered = F.array_sort("sh_arr")

@@ -205,9 +205,8 @@ def bucketed_cosine_pairs(
     int64 numpy). ``round_to`` (r13): decimal places for the output
     cosine — default 4 keeps the public cosine_pairs-agreement
     contract; ``None`` emits raw float64 sims so a caller can
-    threshold on the unrounded value (semdedup's GEMM edge path,
-    which must match its expression join's ``sim >= tau`` up to
-    summation-order ulps, not to 4dp)."""
+    threshold on the unrounded value (semdedup's oversized-cluster
+    route, which re-decides pairs near its threshold exactly)."""
     id_type = dict(df.dtypes)[id_col]
     if id_type not in ("int", "bigint", "smallint", "tinyint"):
         raise TypeError(
@@ -297,8 +296,7 @@ def bucketed_cosine_pairs(
             if round_to is not None:
                 # the public 4dp contract (cosine_pairs agreement);
                 # round_to=None keeps raw float64 sims for callers
-                # thresholding on the unrounded value (semdedup's
-                # GEMM edge path, r13)
+                # thresholding on the unrounded value
                 np.round(sims, round_to, out=sims)
             blk_ids = a_ids[lo : lo + block_rows]
             # cross tiles carry each unordered pair once but in
@@ -768,21 +766,202 @@ def knn_lsh(
     )
 
 
-# semdedup edge-engine knee (r13): above this input plan size the
-# within-cluster pair join runs as the bucketed-GEMM kernel instead
-# of the per-pair JVM expression join. The r13 semdedup phase
-# profile (CERT_vectors_stages_r13) put the expression join at
-# 615 s of the 731 s 1000x wall — 512 M candidate pairs each paying
-# an interpreted 256-term aggregate() dot product, exactly the
-# per-pair arithmetic bucketed_cosine_pairs replaces with dense
-# matmul (measured ~50x on 256-dim floats). Driver SFs sit far
-# below the knee and keep the expression join, so every declared
-# query's floats are byte-identical; at cert scale the two engines
-# agree up to summation-order ulps at the tau boundary (GEMM sums
-# blockwise, the expression sequentially — the same class of
-# difference the query contract's rounding absorbs elsewhere), and
-# set-equality on non-degenerate data is test-pinned.
-_SEMDEDUP_GEMM_KNEE = 128 * 1024 * 1024
+
+
+# semdedup's fused pass holds one whole cluster per task; clusters
+# above this bound (bucketed_cosine_pairs' max_bucket_rows default)
+# take the distributed route instead. Tiles are _BLOCK_ROWS rows high
+# (bucketed_cosine_pairs' block_rows default), so a task's peak is the
+# cluster plus one _BLOCK_ROWS x cluster sims tile.
+_MAX_CLUSTER_ROWS = 32768
+_BLOCK_ROWS = 2048
+# GEMM on unit rows and the expression join's sequential
+# dot / (na·nb) differ by at most ~(d + 3)·2^-52 for rows whose norms
+# lie in _NORM_RANGE (product and quotient stay finite and normal), so
+# every pair within _BOUNDARY_EPS of tau is re-decided exactly and the
+# rest cannot flip for any dim below ~10^6. Rows outside the range
+# (zero, huge, NaN or inf norms) are decided exactly on every pair.
+_BOUNDARY_EPS = 1e-9
+_NORM_RANGE = (1e-100, 1e100)
+
+
+def _seq_dot(A, B):
+    """Row-wise dot products summed left to right from 0.0 — the
+    order ``dot``'s aggregate() folds in, so the doubles are
+    bit-identical to the expression's."""
+    acc = np.zeros(A.shape[0])
+    for k in range(A.shape[1]):
+        acc += A[:, k] * B[:, k]
+    return acc
+
+
+def _exact_edges(V, nrm, i, j, tau):
+    """The expression join's verdict ``dot / nullif(na·nb, 0) >= tau``
+    on row pairs (i, j): a zero norm product is SQL NULL (no edge) and
+    NaN sorts above every double in Spark, so a NaN cosine IS an
+    edge."""
+    with np.errstate(all="ignore"):
+        p = nrm[i] * nrm[j]
+        sim = _seq_dot(V[i], V[j]) / p
+    return (p != 0) & ((sim >= tau) | np.isnan(sim))
+
+
+def _min_labels(lab, u, v):
+    """Fold edges (u, v) into ``lab``, a star forest over node indices
+    (lab[x] <= x, lab[lab] == lab): hook the larger root of every
+    unmerged edge onto the smaller, then pointer-jump back to stars,
+    until every edge sits inside one star. Each component ends up
+    labelled by its smallest node index."""
+    while True:
+        lu, lv = lab[u], lab[v]
+        split = lu != lv
+        if not split.any():
+            return lab
+        lu, lv = lu[split], lv[split]
+        low = np.minimum(lu, lv)
+        np.minimum.at(lab, lu, low)
+        np.minimum.at(lab, lv, low)
+        while True:
+            up = lab[lab]
+            if np.array_equal(up, lab):
+                break
+            lab = up
+
+
+def _fused_keep(tau):
+    """Grouped Arrow kernel: one cluster's (id, __v, __cid) rows in,
+    (id, cluster, keep) out. Rows are sorted by id and rows sharing an
+    id are one node, so node order is id order and a component's
+    smallest node is its smallest id — the survivor."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    lo_tau, hi_tau = tau - _BOUNDARY_EPS, tau + _BOUNDARY_EPS
+
+    def run(table):
+        t = table.take(pc.sort_indices(table["id"], null_placement="at_end"))
+        ids = t["id"].combine_chunks()
+        vecs = t["__v"].combine_chunks()
+        n = len(ids)
+        dims = pc.list_value_length(vecs).to_numpy(zero_copy_only=False)
+        if (dims != dims[0]).any():
+            raise ValueError("semdedup needs embeddings of one length")
+        flat = vecs.flatten()
+        V = flat.to_numpy(zero_copy_only=False).reshape(n, -1)
+        # ids are NULL last: a NULL id never satisfies a_id < b_id
+        m = n - ids.null_count
+        node = np.zeros(n, dtype="int64")
+        if m > 1:
+            same = pc.equal(ids[1:m], ids[: m - 1]).to_numpy(zero_copy_only=False)
+            node[1:m] = np.cumsum(~same)
+        live = np.arange(n) < m
+        if flat.null_count:
+            # a NULL element makes the row's norm NULL: never an edge
+            live &= ~flat.is_null().to_numpy(zero_copy_only=False).reshape(n, -1).any(axis=1)
+        with np.errstate(all="ignore"):
+            nrm = np.sqrt(_seq_dot(V, V))
+        regular = live & (nrm >= _NORM_RANGE[0]) & (nrm <= _NORM_RANGE[1])
+        lab = np.arange(int(node[m - 1]) + 1 if m else 0)
+
+        R = np.flatnonzero(regular)
+        U = V[R] / nrm[R, None]
+        for lo in range(0, len(R), _BLOCK_ROWS):
+            S = U[lo : lo + _BLOCK_ROWS] @ U[lo:].T
+            b = S.shape[0]
+            S[:, :b][np.tril_indices(b)] = -np.inf  # upper triangle only
+            r, c = np.nonzero(S >= lo_tau)
+            i, j = R[lo + r], R[lo + c]
+            near = np.flatnonzero(S[r, c] < hi_tau)
+            if len(near):
+                sure = np.ones(len(r), dtype=bool)
+                sure[near] = _exact_edges(V, nrm, i[near], j[near], tau)
+                i, j = i[sure], j[sure]
+            lab = _min_labels(lab, node[i], node[j])
+        for x in np.flatnonzero(live & ~regular):
+            # pair the odd row with every regular row and every later
+            # odd row, each decided exactly
+            j = np.flatnonzero(regular | (live & (np.arange(n) > x)))
+            j = j[_exact_edges(V, nrm, np.full(len(j), x), j, tau)]
+            lab = _min_labels(lab, np.full(len(j), node[x]), node[j])
+
+        keep = np.zeros(n, dtype=bool)
+        keep[:m] = lab[node[:m]] == node[:m]
+        return pa.table(
+            {
+                "id": ids,
+                "cluster": t["__cid"],
+                "keep": pa.array(keep, mask=np.arange(n) >= m),
+            }
+        )
+
+    return run
+
+
+def _oversized_keep(rows: SparkDF, tau: float) -> SparkDF:
+    """The distributed route for clusters one task cannot hold: GEMM
+    candidates from bucketed_cosine_pairs' sub-block tiles at
+    tau - _BOUNDARY_EPS, the same exact re-check (as the expression
+    itself) below tau + _BOUNDARY_EPS and for rows outside
+    _NORM_RANGE, then connected_components. Node keys are
+    (cluster << 32) + dense_rank(id) — integral, unique per (cluster,
+    id) and ordered like the ids inside a cluster, so the min-key
+    survivor is the min-id one and string ids work too."""
+    from pyspark.sql import Window
+
+    from .dedup import _reusable
+    from .graph import connected_components
+
+    nodes = _reusable(
+        rows.where(F.col("id").isNotNull()).withColumn(
+            "__k",
+            F.shiftleft(F.col("__cid").cast("long"), 32)
+            + F.dense_rank().over(Window.partitionBy("__cid").orderBy("id")),
+        )
+    )
+    regular = norm(F.col("__v")).between(*_NORM_RANGE)
+    # persisted: the sure and the near edges both read the GEMM pass,
+    # and connected_components reads its edges several times
+    scored = _reusable(
+        bucketed_cosine_pairs(
+            nodes.where(regular), "__k", "__v", "__cid",
+            threshold=tau - _BOUNDARY_EPS,
+            block_rows=_BLOCK_ROWS,
+            max_bucket_rows=_MAX_CLUSTER_ROWS,
+            round_to=None,
+        )
+    )
+    a = nodes.select(F.col("__k").alias("a_id"), "__cid", F.col("__v").alias("__va"))
+    b = nodes.select(F.col("__k").alias("b_id"), "__cid", F.col("__v").alias("__vb"))
+    exact = cosine(F.col("__va"), F.col("__vb")) >= tau
+    near = (
+        scored.where(F.col("cosine") < tau + _BOUNDARY_EPS)
+        .join(a.drop("__cid"), "a_id")
+        .join(b.drop("__cid"), "b_id")
+        .where(exact)
+    )
+    # ~regular is NULL for a NULL norm, so rows with NULL elements
+    # (never an edge) drop out here as well
+    odd = a.where(~norm(F.col("__va")).between(*_NORM_RANGE)).join(b, "__cid")
+    odd = odd.where((F.col("a_id") != F.col("b_id")) & exact)
+    edges = _reusable(
+        scored.where(F.col("cosine") >= tau + _BOUNDARY_EPS)
+        .select("a_id", "b_id")
+        .unionByName(near.select("a_id", "b_id"))
+        .unionByName(odd.select("a_id", "b_id"))
+    )
+    comp = connected_components(edges, "a_id", "b_id")
+    kept = nodes.join(comp, nodes["__k"] == comp["node"], "left").select(
+        "id",
+        F.col("__cid").alias("cluster"),
+        (F.coalesce("component", "__k") == F.col("__k")).alias("keep"),
+    )
+    return kept.unionByName(
+        rows.where(F.col("id").isNull()).select(
+            "id",
+            F.col("__cid").alias("cluster"),
+            F.lit(None).cast("boolean").alias("keep"),
+        )
+    )
 
 
 def semdedup(
@@ -794,7 +973,6 @@ def semdedup(
     max_iter: int = 3,
     seed: int = 42,
     centroids=None,
-    edge_engine: str | None = None,
 ) -> SparkDF:
     """SemDeDup semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): k-means-partition the embedding space, then
@@ -808,35 +986,44 @@ def semdedup(
     pairs are NOT considered (the paper's documented approximation;
     that is exactly what makes the method scale).
 
-    The 100 TB shape: candidate scoring is an EQUI-join on the
-    cluster id, so the pair cost is sum of squared CLUSTER sizes —
-    bounded by choosing ``k`` proportional to corpus size (the
-    paper's setting: 50k clusters for LAION-440M) — never corpus
-    all-pairs. The model is k x dim driver floats (same footprint
-    contract as the IVF codebook); assignment is one Arrow-batched
-    BLAS pass; duplicate grouping is the alternating-star connected
-    components over within-cluster edges only; norms are computed
-    once per ROW (not per pair) so the join predicate is a single
-    dot product. Deterministic: seeded init, fixed iteration count,
-    sequential-summation dot products; the survivor is the smallest
-    id per duplicate group (the paper keeps the member with the
-    LOWEST centroid similarity; min-id is this engine's
-    deterministic, tie-stable choice — swap via the returned flags
-    if centroid-distance policy is needed).
+    Edge contract (exact at every scale): two rows of one cluster are
+    linked iff ``a_id < b_id`` and ``dot(a, b) / nullif(norm(a) *
+    norm(b), 0) >= tau``, where ``dot`` and ``norm`` are this module's
+    expressions — double precision, summed sequentially. So a NULL id,
+    a NULL vector element or a zero norm product never links, and a
+    NaN cosine (an overflowing norm) does: Spark orders NaN above
+    every double. The survivor of each
+    transitively-closed group is its smallest id (the paper keeps the
+    member with the LOWEST centroid similarity; min-id is this
+    engine's deterministic, tie-stable choice — swap via the returned
+    flags if centroid-distance policy is needed). A NULL id gets
+    ``keep`` NULL. Ids should be unique; rows sharing an id inside a
+    cluster act as one node.
 
-    ``edge_engine`` (r13): ``"gemm"`` computes the within-cluster
-    pair join with the bucketed-GEMM kernel (bucket = cluster id,
-    unrounded threshold — see _SEMDEDUP_GEMM_KNEE), ``"jvm"`` the
-    per-pair expression join; ``None`` gates on input plan size so
-    small corpora (every driver SF) keep the expression join's
-    byte-exact floats while cert-scale corpora take the kernel.
-    ``SPARK_GRAFT_SEMDEDUP_EDGES`` overrides for tests/cert. The
-    GEMM path requires an integral id (falls back to the
-    expression join otherwise)."""
-    import os
+    The 100 TB shape: every duplicate group lies inside one cluster,
+    so after the cluster assignment each cluster is ONE grouped Arrow
+    task that scores its pairs as GEMM tiles on unit rows, re-decides
+    every pair within 1e-9 of ``tau`` with the sequential formula
+    above (the GEMM/sequential gap is ~d·2^-52, so nothing else can
+    flip), and joins components by vectorized label propagation. Pair
+    work is the sum of squared CLUSTER sizes — bounded by choosing
+    ``k`` proportional to corpus size (the paper's setting: 50k
+    clusters for LAION-440M) — never corpus all-pairs. Clusters above
+    32,768 rows, which one task cannot hold, are found by a k-row size
+    probe and take a distributed route (bucketed_cosine_pairs'
+    sub-block tiles, the same exact re-check, connected_components)
+    with identical output. The model is k x dim driver floats (same
+    footprint contract as the IVF codebook); k > 64 fits the two-level
+    codebook (kmeans_fit_hierarchical). Deterministic: seeded init and
+    a fixed iteration count."""
+    from pyspark.sql.types import (
+        BooleanType,
+        IntegerType,
+        StructField,
+        StructType,
+    )
 
     from .dedup import _reusable
-    from .graph import connected_components
 
     if centroids is None and k > HIER_KMEANS_MIN_K:
         # k ∝ corpus (the paper's setting) makes the flat fit and
@@ -854,79 +1041,33 @@ def semdedup(
                 df, id_col, vec_col, k=k, max_iter=max_iter, seed=seed
             )
         assign = _assign_udf(_unit_rows(centroids))
-    forced = os.environ.get("SPARK_GRAFT_SEMDEDUP_EDGES")
-    if forced:
-        edge_engine = forced
-    if edge_engine is None:
-        from ..plans.stats import plan_size_bytes
-
-        edge_engine = (
-            "gemm"
-            if plan_size_bytes(df) > _SEMDEDUP_GEMM_KNEE
-            else "jvm"
-        )
-    if edge_engine not in ("gemm", "jvm"):
-        raise ValueError(
-            f"edge_engine must be 'gemm' or 'jvm', got {edge_engine!r}"
-        )
-    if edge_engine == "gemm" and dict(df.dtypes).get(id_col) not in (
-        "int", "bigint", "smallint", "tinyint"
-    ):
-        edge_engine = "jvm"  # GEMM ids ride int64 numpy
+    # persisted: the size probe below is its first (filling) scan and
+    # the per-cluster pass its second — the assign UDF runs once
     sides = _reusable(
         df.where(F.col(vec_col).isNotNull())
         .select(F.col(id_col).alias("id"), _dvec(vec_col).alias("__v"))
         .withColumn("__cid", assign(F.col("__v")))
-        .withColumn("__nrm", norm(F.col("__v")))
     )
-    # persisted: connected_components references its input several
-    # times before the first localCheckpoint (symmetrize union,
-    # large-star join, node-universe scan) — without this the
-    # dominant within-cluster pairwise join re-runs per consumer
-    if edge_engine == "gemm":
-        # the within-cluster pair join as dense matmul tiles
-        # (bucket = cluster id, raw unrounded sims thresholded at
-        # tau) — see _SEMDEDUP_GEMM_KNEE for the equivalence and
-        # knee rationale. Barrier first: the GEMM's groupBy consumes
-        # sides once, but CC + the final join re-read it, and the
-        # assign UDF is the expensive map work a cold-cache race
-        # would re-run (see dedup._materialize).
-        from .dedup import _materialize
-
-        _materialize(sides)
-        edges = _reusable(
-            bucketed_cosine_pairs(
-                sides, "id", "__v", "__cid",
-                threshold=tau, round_to=None,
-            ).select("a_id", "b_id")
-        )
-    else:
-        a = sides.select(
-            F.col("id").alias("a_id"),
-            "__cid",
-            F.col("__v").alias("__va"),
-            F.col("__nrm").alias("__na"),
-        )
-        b = sides.select(
-            F.col("id").alias("b_id"),
-            "__cid",
-            F.col("__v").alias("__vb"),
-            F.col("__nrm").alias("__nb"),
-        )
-        sim = dot(F.col("__va"), F.col("__vb")) / F.nullif(
-            F.col("__na") * F.col("__nb"), F.lit(0.0)
-        )
-        edges = _reusable(
-            a.join(b, "__cid")
-            .where(F.col("a_id") < F.col("b_id"))
-            .where(sim >= tau)
-            .select("a_id", "b_id")
-        )
-    comp = connected_components(edges, "a_id", "b_id")
-    return sides.join(comp, sides["id"] == comp["node"], "left").select(
-        F.col("id"),
-        F.col("__cid").alias("cluster"),
-        (F.coalesce(F.col("component"), F.col("id")) == F.col("id")).alias(
-            "keep"
-        ),
+    oversized = [
+        r["__cid"]
+        for r in sides.groupBy("__cid")
+        .count()
+        .where(F.col("count") > _MAX_CLUSTER_ROWS)
+        .collect()
+    ]
+    schema = StructType(
+        [
+            StructField("id", sides.schema["id"].dataType),
+            StructField("cluster", IntegerType()),
+            StructField("keep", BooleanType()),
+        ]
+    )
+    if not oversized:
+        return sides.groupBy("__cid").applyInArrow(_fused_keep(tau), schema)
+    big = F.col("__cid").isin(oversized)
+    return (
+        sides.where(~big)
+        .groupBy("__cid")
+        .applyInArrow(_fused_keep(tau), schema)
+        .unionByName(_oversized_keep(sides.where(big), tau))
     )

@@ -41,11 +41,22 @@ def q_describe(spark, sf_dir):
     )
 
 
+def _round_like_duckdb(c, digits: int):
+    """DuckDB's ROUND(x, digits) on a double: round the binary value
+    x·10^digits half away from zero, then divide. ``F.round(c,
+    digits)`` rounds the double's shortest decimal string half-up
+    instead, so 4.00055 (binary 4.000549999…) becomes 4.0006 where
+    DuckDB gives 4.0005. The scaled product's decimal string keeps
+    the side of .5 it lies on, so rounding it to 0 places agrees."""
+    scale = F.lit(10.0**digits)
+    return F.round(c * scale, 0) / scale
+
+
 def q_summarize(spark, sf_dir):
     out = _t(spark, sf_dir, "lineitem").summarize()
     return out.apply_many(
         ["mean", "std", "min", "q25", "median", "q75", "max"],
-        lambda c: F.round(c, 4),
+        lambda c: _round_like_duckdb(c, 4),
     ).df
 
 

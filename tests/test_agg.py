@@ -497,3 +497,29 @@ def test_spearman_closed_form(spark):
     rows4 = rows + [(None, 1.0), (2.0, float("nan"))]
     df4 = DataFrame(spark.createDataFrame(rows4, "a double, b double"))
     assert df4.spearman_corr("a", "b").df.first()["n"] == 10
+
+
+def test_summarize_query_rounds_like_duckdb(spark):
+    """q_summarize's 4-place rounding follows DuckDB's ROUND on the
+    binary double: 4.00055 (binary 4.000549999…) is 4.0005, not the
+    4.0006 that F.round's decimal-string half-up gives; every value
+    on a grid of exact-looking ties agrees with DuckDB."""
+    import duckdb
+
+    from dataframe_spark.queries.stats_q import _round_like_duckdb
+
+    xs = [4.00055, -4.00055, 2.5e-5, 1234.56785] + [
+        i / 1e5 + 5e-6 for i in range(0, 2_000_000, 997)
+    ]
+    df = spark.createDataFrame([(x,) for x in xs], "x double")
+    got = [
+        r["r"]
+        for r in df.select(_round_like_duckdb(F.col("x"), 4).alias("r")).collect()
+    ]
+    assert got[0] == 4.0005 and got[1] == -4.0005
+    assert df.select(F.round("x", 4)).first()[0] == 4.0006  # the old rounding
+    import pandas as pd
+
+    pdf = pd.DataFrame({"x": xs})
+    want = [r[0] for r in duckdb.connect().execute("SELECT ROUND(x, 4) FROM pdf").fetchall()]
+    assert got == want

@@ -967,3 +967,88 @@ def test_truncated_bound_and_counted_verify_paths(spark):
         }
         assert got == want, bc
     assert len(want) > 0
+
+
+def _shingle_hashes(strings):
+    """xxhash64 (seed 42) of each string, as the shingle arrays hold it."""
+    import numpy as np
+
+    from dataframe_spark.operators.dedup import _xxh64_np
+
+    enc = [s.encode() for s in strings]
+    lens = np.array([len(b) for b in enc], np.int64)
+    data = np.zeros(int(lens.sum()) + 8, np.uint8)
+    data[: int(lens.sum())] = np.frombuffer(b"".join(enc), np.uint8)
+    return _xxh64_np(data, np.cumsum(lens) - lens, lens)
+
+
+@pytest.fixture(scope="module")
+def tie_docs(spark):
+    """Two docs of 63 distinct word 3-grams sharing 56: J = 56/70 =
+    0.8 exactly and na + nb = 126, where t/(1+t)·126 and
+    2t/(1+t)·63 evaluate a hair above 56 and used to ceil to 57. Each
+    doc's 7 private 3-grams are chosen to hash below every shared
+    one, so in the hash order (and in the df order, where df = 1 sorts
+    first) the first shared 3-gram sits at position 8 of both docs —
+    the last position the exact bounds admit."""
+    import numpy as np
+
+    shared = [f"s{i}" for i in range(58)]
+    floor = _shingle_hashes(
+        [" ".join(shared[i : i + 3]) for i in range(56)]
+    ).min()
+
+    def doc(tag):
+        toks = list(shared)
+        for step in range(7):
+            cands = [f"{tag}{step}x{j}" for j in range(4000)]
+            hs = _shingle_hashes([f"{toks[-2]} {toks[-1]} {c}" for c in cands])
+            assert hs.min() < floor
+            toks.append(cands[int(np.argmax(hs < floor))])
+        return " ".join(toks)
+
+    return spark.createDataFrame(
+        [(1, doc("a")), (2, doc("b"))], "doc_id long, text string"
+    )
+
+
+def test_jaccard_exact_threshold_tie_small_and_big_paths(tie_docs):
+    """A pair at exactly J = t is a pair on every path: the plain hash
+    order, the df order, hot-shingle demotion, and the big path's
+    truncated-bound filter called directly."""
+    import dataframe_spark.operators.dedup as dd
+
+    want = [(1, 2, 0.8)]
+
+    def pairs(df):
+        return sorted((r["a_id"], r["b_id"], r["jaccard"]) for r in df.collect())
+
+    for kw in ({}, {"order": "df"}, {"demote_hot": True}):
+        got = dd.jaccard_pairs(tie_docs, "doc_id", "text", n=3, threshold=0.8, **kw)
+        assert pairs(got) == want, kw
+    arrs = dd.hashed_shingle_arrays(tie_docs, "doc_id", "text", 3)
+    prefix = dd._hash_order_prefix(arrs, tie_docs, "doc_id", "text", 3, 0.8, True)
+    cands = dd._prefix_candidates(prefix, 0.8)
+    pruned = dd._truncated_bound_filter(cands, arrs, 0.8)
+    assert sorted(tuple(r) for r in pruned.collect()) == [(1, 2)]
+    assert pairs(dd._verify_jaccard(pruned, arrs, 0.8, broadcast_pairs=True)) == want
+
+
+def test_jaccard_length_filter_tie(spark):
+    """t = 0.7: a doc whose 7 shingles are a subset of another's 10
+    (J = 7/10, min(na, nb) = t·max(na, nb) exactly) passes the length
+    filter on the small and the big-path shapes."""
+    import dataframe_spark.operators.dedup as dd
+
+    words = [f"w{i}" for i in range(12)]
+    docs = spark.createDataFrame(
+        [(1, " ".join(words[:9])), (2, " ".join(words))],
+        "doc_id long, text string",
+    )
+    for kw in ({}, {"order": "df"}, {"demote_hot": True}):
+        got = dd.jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.7, **kw)
+        assert [tuple(r) for r in got.collect()] == [(1, 2, 0.7)], kw
+    arrs = dd.hashed_shingle_arrays(docs, "doc_id", "text", 3)
+    prefix = dd._hash_order_prefix(arrs, docs, "doc_id", "text", 3, 0.7, True)
+    pruned = dd._truncated_bound_filter(dd._prefix_candidates(prefix, 0.7), arrs, 0.7)
+    assert [tuple(r) for r in pruned.collect()] == [(1, 2)]

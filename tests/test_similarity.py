@@ -222,37 +222,211 @@ def test_semdedup_known_groups(spark):
     assert got[5] and got[6]
 
 
-def test_semdedup_edge_engines_agree(spark, monkeypatch):
-    """The GEMM edge path (bucket = cluster id, unrounded threshold)
-    must produce the same (id, cluster, keep) rows as the expression
-    join for non-degenerate data — same fit (engine-independent),
-    same clusters, same edge set, same components. Random unit-ish
-    vectors keep every pair's cosine far from tau, so float
-    summation-order differences between GEMM and the sequential
-    expression dot cannot flip an edge."""
+def _semdedup_reference(df, id_col, vec_col, out, tau):
+    """The pre-fusion pipeline on the clusters ``out`` assigned: the
+    dot/norm expression join inside each cluster, connected_components,
+    min-id keep. Sorted (id, cluster, keep) rows."""
+    from dataframe_spark.operators.graph import connected_components
+
+    v = (
+        df.where(F.col(vec_col).isNotNull())
+        .select(F.col(id_col).alias("id"), similarity._dvec(vec_col).alias("v"))
+        .join(out.select(F.col("id").alias("__id"), "cluster"),
+              F.col("id") == F.col("__id"))
+    )
+    a = v.select(F.col("id").alias("a_id"), "cluster", F.col("v").alias("va"))
+    b = v.select(F.col("id").alias("b_id"), "cluster", F.col("v").alias("vb"))
+    sim = similarity.dot(F.col("va"), F.col("vb")) / F.nullif(
+        similarity.norm(F.col("va")) * similarity.norm(F.col("vb")), F.lit(0.0)
+    )
+    edges = (
+        a.join(b, "cluster")
+        .where(F.col("a_id") < F.col("b_id"))
+        .where(sim >= tau)
+        .select("a_id", "b_id")
+    )
+    comp = connected_components(edges, "a_id", "b_id")
+    ref = v.join(comp, v["id"] == comp["node"], "left").select(
+        "id",
+        "cluster",
+        (F.coalesce(F.col("component"), F.col("id")) == F.col("id")).alias("keep"),
+    )
+    return sorted(tuple(r) for r in ref.collect())
+
+
+def _semdedup_rows(df, tau, **kw):
+    out = similarity.semdedup(df, "vec_id", "embedding", tau=tau, **kw)
+    rows = sorted(tuple(r) for r in out.collect())
+    return out, rows
+
+
+def _near_dup_rows(seed, n=120, dim=8):
     import random
 
-    rng = random.Random(77)
+    rng = random.Random(seed)
     rows = []
-    for i in range(120):
-        base = [rng.gauss(0, 1) for _ in range(8)]
+    for i in range(n):
+        base = [rng.gauss(0, 1) for _ in range(dim)]
         rows.append((i, [round(x, 3) for x in base]))
         if i % 4 == 0:  # a near-duplicate partner
             rows.append(
-                (1000 + i, [round(x * 1.5, 3) for x in base])
+                (1000 + i, [round(x * 1.5 + rng.gauss(0, 0.05), 3) for x in base])
             )
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = {}
-    for eng in ("jvm", "gemm"):
-        monkeypatch.setenv("SPARK_GRAFT_SEMDEDUP_EDGES", eng)
-        res = similarity.semdedup(
-            df, "vec_id", "embedding", k=4, tau=0.9, max_iter=2
+    return rows
+
+
+def test_semdedup_matches_expression_reference(spark):
+    """The fused per-cluster pass emits exactly the rows of the
+    expression join + connected_components + min-id keep on the same
+    clusters."""
+    df = spark.createDataFrame(
+        _near_dup_rows(77), "vec_id long, embedding array<float>"
+    )
+    out, rows = _semdedup_rows(df, 0.9, k=4, max_iter=2)
+    assert rows == _semdedup_reference(df, "vec_id", "embedding", out, 0.9)
+    assert any(not keep for _, _, keep in rows)  # dups found
+
+
+def test_semdedup_tau_boundary_is_exact(spark):
+    """tau set to a pair's exact sequential cosine: the pair links, and
+    one ulp above it does not — even where the GEMM cosine of the same
+    pair lands on the other side, so a raw GEMM threshold would flip
+    the edge."""
+    import numpy as np
+
+    rng = np.random.RandomState(5)
+    planted = {}
+    for _ in range(2000):
+        V = rng.rand(2, 64).round(6)
+        V[1] = V[0] + rng.rand(64) * 0.01
+        nrm = np.sqrt(similarity._seq_dot(V, V))
+        seq = similarity._seq_dot(V[:1], V[1:])[0] / (nrm[0] * nrm[1])
+        U = V / nrm[:, None]
+        gemm = (U @ U.T)[0, 1]
+        if gemm < seq and "below" not in planted:
+            planted["below"] = (V, seq, seq)  # raw GEMM would drop it
+        if gemm > seq and "above" not in planted:
+            planted["above"] = (V, np.nextafter(seq, 2.0), seq)  # would keep it
+        if len(planted) == 2:
+            break
+    assert len(planted) == 2
+    for side, (V, tau, seq) in planted.items():
+        df = spark.createDataFrame(
+            [(0, V[0].tolist()), (1, V[1].tolist())],
+            "vec_id long, embedding array<double>",
         )
-        out[eng] = sorted(
-            (r["id"], r["cluster"], r["keep"]) for r in res.collect()
-        )
-    assert out["jvm"] == out["gemm"]
-    assert any(not keep for _, _, keep in out["jvm"])  # dups found
+        # the expression's own cosine is the planted one
+        got = df.where("vec_id = 0").crossJoin(
+            df.where("vec_id = 1").select(F.col("embedding").alias("b"))
+        ).select(
+            (similarity.dot("embedding", "b")
+             / (similarity.norm("embedding") * similarity.norm("b"))).alias("s")
+        ).first()["s"]
+        assert got == seq
+        out, rows = _semdedup_rows(df, float(tau), k=1)
+        assert rows == _semdedup_reference(df, "vec_id", "embedding", out, float(tau))
+        assert [keep for _, _, keep in rows] == [True, side == "above"]
+
+
+def test_semdedup_oversized_route_matches_fused(spark, monkeypatch):
+    """Clusters above the per-task bound take the distributed route
+    (bucketed GEMM sub-blocks + connected_components) and emit the
+    same rows as the fused pass."""
+    df = spark.createDataFrame(
+        _near_dup_rows(91, n=80), "vec_id long, embedding array<float>"
+    )
+    out, fused = _semdedup_rows(df, 0.9, k=2, max_iter=2)
+    monkeypatch.setattr(similarity, "_MAX_CLUSTER_ROWS", 8)
+    monkeypatch.setattr(similarity, "_BLOCK_ROWS", 3)
+    big = sorted(
+        tuple(r)
+        for r in similarity.semdedup(
+            df, "vec_id", "embedding", k=2, tau=0.9, max_iter=2
+        ).collect()
+    )
+    assert big == fused
+    assert fused == _semdedup_reference(df, "vec_id", "embedding", out, 0.9)
+
+
+@pytest.mark.parametrize("bound", [32768, 2])
+def test_semdedup_odd_rows_follow_expression_semantics(spark, monkeypatch, bound):
+    """Rows outside the GEMM's safe norm range are decided by the
+    expression's rules on both routes: a zero (or underflowing) norm
+    against a finite one is a NULL cosine and never links; an
+    overflowing norm makes NaN cosines (inf/inf, 0·inf), which DO link
+    because Spark orders NaN above every double; a NULL element never
+    links."""
+    monkeypatch.setattr(similarity, "_MAX_CLUSTER_ROWS", bound)
+    rows = [
+        (0, [1.0, 0.0, 0.0]),
+        (1, [2.0, 0.01, 0.0]),
+        (2, [0.0, 0.0, 0.0]),          # zero norm
+        (3, [1e-200, 0.0, 0.0]),       # norm underflows to 0
+        (4, [1e200, 1e200, 1e200]),    # norm overflows to inf
+        (5, [1e200, 2e200, 1e200]),    # ... NaN cosine with 4
+        (6, [1.0, None, 0.0]),         # NULL element
+        (7, [0.0, 1.0, 0.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out, got = _semdedup_rows(df, 0.9, k=1)
+    assert got == _semdedup_reference(df, "vec_id", "embedding", out, 0.9)
+    keep = {i: k for i, _, k in got}
+    assert keep == {0: True, 1: False, 2: True, 3: False, 4: False,
+                    5: False, 6: True, 7: True}
+
+
+def test_semdedup_string_ids(spark):
+    """String ids (no integral surrogate needed): survivors are the
+    smallest id in Spark's string order, non-ASCII included."""
+    rows = [
+        (f"{'é' if i % 3 == 0 else 'd'}{i:04d}", v)
+        for i, v in _near_dup_rows(13, n=60)
+    ]
+    df = spark.createDataFrame(rows, "vec_id string, embedding array<float>")
+    out, got = _semdedup_rows(df, 0.9, k=3, max_iter=2)
+    assert got == _semdedup_reference(df, "vec_id", "embedding", out, 0.9)
+    assert any(not keep for _, _, keep in got)
+
+
+def test_semdedup_null_id_never_links(spark):
+    rows = [(0, [1.0, 0.0]), (None, [1.0, 0.0]), (1, [2.0, 0.0]),
+            (2, [0.0, 1.0]), (None, [0.0, 3.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = sorted(
+        (r["id"] is None, r["id"], r["keep"])
+        for r in similarity.semdedup(df, "vec_id", "embedding", k=1).collect()
+    )
+    assert got == [(False, 0, True), (False, 1, False), (False, 2, True),
+                   (True, None, None), (True, None, None)]
+
+
+def test_semdedup_hierarchical_matches_reference(spark):
+    """k > HIER_KMEANS_MIN_K (the two-level codebook) through the
+    same fused pass."""
+    import numpy as np
+
+    rng = np.random.RandomState(7)
+    rows = []
+    for i in range(400):
+        base = np.zeros(16)
+        base[i % 8] = 1.0
+        rows.append((i, (base + rng.rand(16) * 0.05).tolist()))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out, got = _semdedup_rows(df, 0.95, k=80, max_iter=2)
+    assert len({c for _, c, _ in got}) > 8
+    assert got == _semdedup_reference(df, "vec_id", "embedding", out, 0.95)
+
+
+def test_min_labels_long_chain():
+    """Hook-and-jump labels a path of 1000 nodes (diameter 999) with
+    its minimum, fed in reverse order and in two batches."""
+    import numpy as np
+
+    n = 1000
+    u = np.arange(n - 1)[::-1]
+    lab = similarity._min_labels(np.arange(n + 2), u[:500], u[:500] + 1)
+    lab = similarity._min_labels(lab, u[500:] + 1, u[500:])
+    assert (lab[:n] == 0).all() and list(lab[n:]) == [n, n + 1]
 
 
 def test_semdedup_null_embedding_excluded(spark):

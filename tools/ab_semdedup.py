@@ -1,0 +1,136 @@
+"""Interleaved A/B of ``similarity.semdedup`` between two source trees.
+
+    python tools/ab_semdedup.py --a NAME=OLD_TREE --b NAME=NEW_TREE \\
+        --data NAME=DIR[:SHARD_ROWS] [--data ...] --reps 3 --out CERT.json
+
+A tree is a checkout's root; DIR holds an ``embeddings.parquet``
+(``tools/scale_data.py`` or ``perfbench/gen.py`` output). NAMEs label
+the artifact's records.
+
+Every rep runs one child process per tree, alternating which tree goes
+first, on every data dir. A child imports the library from its tree,
+starts a local[nproc] session, and on each shard (consecutive
+``vec_id`` ranges of SHARD_ROWS rows; the whole file when omitted)
+runs one untimed warm-up call, then times ``semdedup`` plus
+``collect()`` with q_semdedup's settings (tau 0.4, max_iter 3, k =
+max(8, rows // 256)). It reports the walls, the number of Spark jobs
+the timed calls launched, the dropped-row count and a SHA-256 of the
+sorted (id, cluster, keep) rows. The artifact keeps every child's
+record, the spin canary before and after it, each tree's median wall
+per data dir and whether the row hashes of the two trees agree.
+"""
+
+from __future__ import annotations
+
+import hashlib
+import json
+import os
+import statistics
+import subprocess
+import sys
+import time
+
+
+def _spin_ms() -> float:
+    """Fixed-work CPU spin (the bench.py / perfbench canary)."""
+    t0 = time.perf_counter()
+    x = 0
+    for i in range(2_000_000):
+        x += i
+    return round((time.perf_counter() - t0) * 1000, 1)
+
+
+def child(tree: str, data: str, shard_rows: int) -> dict:
+    sys.path.insert(0, tree)
+    from pyspark.sql import functions as F
+
+    import dataframe_spark as D
+    from dataframe_spark.operators import similarity
+
+    spark = D.get_spark("ab_semdedup")
+    spark.sparkContext.setLogLevel("ERROR")
+    tracker = spark.sparkContext.statusTracker()
+    emb = spark.read.parquet(os.path.join(data, "embeddings.parquet"))
+    n = emb.count()
+    size = shard_rows or n
+    out = {"rows": n, "walls_s": [], "jobs": 0, "dropped": 0}
+    digest = hashlib.sha256()
+    for lo in range(0, n, size):
+        shard = emb.where((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + size))
+
+        def call():
+            res = similarity.semdedup(
+                shard, "vec_id", "embedding",
+                k=max(8, size // 256), tau=0.4, max_iter=3,
+            )
+            return sorted(tuple(r) for r in res.collect())
+
+        call()
+        spark.catalog.clearCache()
+        group = f"timed-{lo}"
+        spark.sparkContext.setJobGroup(group, group)
+        t0 = time.perf_counter()
+        rows = call()
+        out["walls_s"].append(round(time.perf_counter() - t0, 3))
+        out["jobs"] += len(tracker.getJobIdsForGroup(group))
+        spark.sparkContext.setJobGroup("idle", "idle")
+        spark.catalog.clearCache()
+        out["dropped"] += sum(1 for r in rows if r[2] is False)
+        digest.update(repr(rows).encode())
+    out["rows_sha256"] = digest.hexdigest()
+    spark.stop()
+    return out
+
+
+def main(argv: list[str]) -> int:
+    opts: dict[str, list[str]] = {}
+    for flag, val in zip(argv[::2], argv[1::2]):
+        opts.setdefault(flag.lstrip("-"), []).append(val)
+    if "child" in opts:
+        tree, data, shard_rows = opts["child"][0].split("|")
+        print(json.dumps(child(tree, data, int(shard_rows))))
+        return 0
+    trees = dict(opts[side][0].split("=", 1) for side in ("a", "b"))
+    datas = dict(spec.split("=", 1) for spec in opts["data"])
+    reps = int(opts.get("reps", ["3"])[0])
+    runs = []
+    for rep in range(reps):
+        for data, spec in datas.items():
+            path, _, shard_rows = spec.partition(":")
+            order = list(trees) if rep % 2 == 0 else list(trees)[::-1]
+            for tree in order:
+                spin_before = _spin_ms()
+                res = subprocess.run(
+                    [sys.executable, os.path.abspath(__file__), "--child",
+                     f"{os.path.abspath(trees[tree])}|{path}|{shard_rows or 0}"],
+                    capture_output=True, text=True, check=True,
+                )
+                rec = json.loads(res.stdout.strip().splitlines()[-1])
+                rec.update(rep=rep, tree=tree, data=data,
+                           spin_ms=[spin_before, _spin_ms()])
+                print(json.dumps(rec), flush=True)
+                runs.append(rec)
+    summary = {}
+    for data in datas:
+        mine = [r for r in runs if r["data"] == data]
+        summary[data] = {
+            tree: {
+                "median_total_wall_s": round(statistics.median(
+                    sum(r["walls_s"]) for r in mine if r["tree"] == tree
+                ), 3),
+                "jobs_per_call": next(
+                    r["jobs"] / len(r["walls_s"]) for r in mine if r["tree"] == tree
+                ),
+            }
+            for tree in trees
+        }
+        summary[data]["rows_identical"] = len({r["rows_sha256"] for r in mine}) == 1
+    artifact = {"reps": reps, "summary": summary, "runs": runs}
+    with open(opts["out"][0], "w") as f:
+        json.dump(artifact, f, indent=1)
+    print(json.dumps(summary, indent=1))
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv[1:]))
