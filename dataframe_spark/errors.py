@@ -9,6 +9,7 @@ with a did-you-mean hint for driver-side verb validation."""
 from __future__ import annotations
 
 import difflib
+import warnings
 
 
 class DataFrameError(Exception):
@@ -35,3 +36,20 @@ class MissingOrderError(DataFrameError, ValueError):
     """Raised by tail-relative verbs (take_last/drop_last) when no
     ordering is given: count+offset over an unordered distributed
     frame returns arbitrary rows that differ run to run."""
+
+
+class FallbackWarning(RuntimeWarning):
+    """A scale optimization (persist, plan statistics, cache barrier)
+    was unavailable in this session and was skipped; results are
+    unchanged, only the optimization is lost."""
+
+
+_warned: set[str] = set()
+
+
+def warn_fallback_once(site: str, message: str, exc: BaseException) -> None:
+    """Issue one FallbackWarning per ``site`` per process."""
+    if site in _warned:
+        return
+    _warned.add(site)
+    warnings.warn(f"{site}: {message} ({exc!r})", FallbackWarning, stacklevel=3)

@@ -746,9 +746,9 @@ def _materialize(df: SparkDF) -> None:
     is computed by whichever task arrives first while its twin
     BLOCKS on the storage lock holding a scheduler slot — measured
     2.5-2.8x wall inflation on the jaccard big path (see
-    jaccard_pairs). Connect sessions without count support just skip
-    the barrier: the plan stays correct, only the scheduling
-    optimization is lost.
+    jaccard_pairs). Connect sessions without count support skip the
+    barrier with a FallbackWarning (once per process): the plan stays
+    correct, only the scheduling optimization is lost.
 
     ``SPARK_GRAFT_NO_CACHE_BARRIER=1`` turns every barrier into a
     no-op (r12): the barrier is a pure scheduling optimization with
@@ -763,8 +763,14 @@ def _materialize(df: SparkDF) -> None:
         return
     try:
         df.count()
-    except Exception:  # pragma: no cover - Connect count quirks
-        pass
+    except Exception as exc:  # Connect count quirks
+        from ..errors import warn_fallback_once
+
+        warn_fallback_once(
+            "dedup._materialize",
+            "cache barrier count failed; continuing without it",
+            exc,
+        )
 
 
 def _reusable(df: SparkDF) -> SparkDF:
@@ -780,8 +786,9 @@ def _reusable(df: SparkDF) -> SparkDF:
 
     Session hygiene (r12, ADVICE r11 #3): this applies to EVERY
     helper persist in this module — the shingle-array cache, the
-    truncated-bound slim frame, and the broadcast-verify
-    slim/needed/cands frames all outlive the call by design, unlike
+    truncated-bound slim frame, the broadcast-verify
+    slim/needed/cands frames and lsh_candidate_pairs' banded frame
+    (``persist_bands``) all outlive the call by design, unlike
     pagerank's caches (released there because its result is eagerly
     checkpointed before return). A long-lived session running many
     dedup queries accumulates dead entries until LRU eviction
@@ -903,10 +910,11 @@ def _shingle_kernel(n: int):
 
     - ``trim``: Spark's trim removes leading/trailing SPACE (0x20)
       only — ``pc.utf8_trim(…, " ")``.
-    - ``lower``: ASCII batches take ``pc.ascii_lower`` (identical to
-      UTF8String.toLowerCase's ASCII fast path); any non-ASCII batch
-      falls back to Python ``str.lower()``, the same Unicode full
-      case mapping (incl. final sigma) as Java's toLowerCase.
+    - ``lower``: ASCII rows take ``pc.ascii_lower`` (identical to
+      UTF8String.toLowerCase's ASCII fast path); only the non-ASCII
+      rows of a batch take Python ``str.lower()``, the same Unicode
+      full case mapping (incl. final sigma) as Java's toLowerCase,
+      and are put back in place (``replace_with_mask``).
     - ``split(s, "\\s+")`` + drop-empty-tokens: Java's \\s is the
       ASCII class [ \\t\\n\\x0b\\f\\r]; collapsing runs of exactly
       that class to one space and trimming the (single possible)
@@ -950,11 +958,12 @@ def _shingle_kernel(n: int):
                 if len(txt) == 0:
                     continue
             txt = pc.utf8_trim(txt, " ")
-            if pc.all(pc.string_is_ascii(txt)).as_py():
-                txt = pc.ascii_lower(txt)
-            else:  # pragma: no cover - exercised by the unicode test
-                txt = pa.array(
-                    [s.lower() for s in txt.to_pylist()], type=pa.string()
+            wide = pc.invert(pc.string_is_ascii(txt))
+            wide_lower = [s.lower() for s in txt.filter(wide).to_pylist()]
+            txt = pc.ascii_lower(txt)
+            if wide_lower:
+                txt = pc.replace_with_mask(
+                    txt, wide, pa.array(wide_lower, type=txt.type)
                 )
             txt = pc.replace_substring_regex(
                 txt, pattern="[\\t\\n\\x0b\\f\\r ]+", replacement=" "
@@ -1971,7 +1980,9 @@ def lsh_candidate_pairs(
     default: at bench scale the extra cache write + barrier count
     cost more than the recompute (the same fixed-stage reasoning as
     every other `big` knee); minhash_dedup_pairs passes its 128 MB
-    input-plan gate."""
+    input-plan gate. With ``persist_bands=True`` the call itself runs
+    a Spark job (the cache barrier's count), and the banded frame
+    stays cached after the call (see ``_reusable``)."""
     if rows_per_band < 1:
         # e.g. num_perm // bands with bands > num_perm: every band
         # slice would be empty and hash to ONE constant bucket — a

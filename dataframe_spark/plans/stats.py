@@ -9,10 +9,12 @@ under Spark Connect there is no JVM handle, so callers get their
 ``fallback`` instead. Every gate in this codebase passes a LARGE
 fallback, which routes Connect sessions onto the fully-distributed
 path — the side that is always correct, merely not the small-input
-shortcut.
+shortcut. The first fallback in a process raises a FallbackWarning.
 """
 
 from __future__ import annotations
+
+from ..errors import warn_fallback_once
 
 LARGE = 1 << 62  # "assume big": pick the distributed/scale path
 
@@ -22,5 +24,10 @@ def plan_size_bytes(sdf, fallback: int = LARGE) -> int:
         return int(
             sdf._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
-    except Exception:  # Spark Connect: no _jdf / py4j handle
+    except Exception as exc:  # Spark Connect: no _jdf / py4j handle
+        warn_fallback_once(
+            "plans.stats.plan_size_bytes",
+            "plan statistics unavailable; gates take their fallback size",
+            exc,
+        )
         return fallback

@@ -7,15 +7,34 @@ fully enabled so Catalyst prunes columns/partitions at the scan.
 
 Locally we run ``local[N]``; the same code is cluster-ready because
 nothing here depends on local mode.
+
+Python workers are forked by this package's daemon,
+``dataframe_spark.plans.pyworker`` (``spark.python.daemon.module``):
+it starts with the library, numpy, pandas and pyarrow imported and
+stops each task from re-reading every zip archive on the worker path
+(see that module). So that the daemon imports from any working
+directory, the package's parent directory is appended to the workers'
+``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``, after any value the
+SparkConf already holds).
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _worker_pythonpath() -> str:
+    prior = SparkConf().get("spark.executorEnv.PYTHONPATH", "") or ""
+    paths = [p for p in prior.split(os.pathsep) if p]
+    if _PACKAGE_PARENT not in paths:
+        paths.append(_PACKAGE_PARENT)
+    return os.pathsep.join(paths)
 
 
 def get_spark(
@@ -29,6 +48,8 @@ def get_spark(
       join partitions at runtime — the knob that matters most at
       100 TB where static partition counts are always wrong.
     - Arrow on: any pandas UDF / toPandas exchange is columnar.
+    - Python workers come from this package's daemon (module
+      docstring), with the package importable on the worker path.
     - ANSI off: permissive SQL semantics (null on bad cast /
       division by zero) matching the exploratory-analytics posture
       of the reference library.
@@ -47,6 +68,8 @@ def get_spark(
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", "dataframe_spark.plans.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

@@ -374,6 +374,36 @@ def test_shingle_kernel_matches_jvm(spark):
     assert len(jr) > 0 and jr == ar
 
 
+def test_shingle_kernel_mixed_ascii_batch_matches_jvm(spark):
+    """ONE batch with ASCII and non-ASCII rows interleaved: only the
+    non-ASCII rows take str.lower() and every row keeps its place, so
+    the kernel's rows equal the JVM chain's row for row. The last
+    doc ends in a final sigma."""
+    import pyarrow as pa
+
+    docs = [
+        "Plain ASCII Doc ONE with Caps",
+        "ΟΔΥΣΣΕΥΣ Σοφός naïve ÊTRE doc",
+        "another PLAIN row of Words",
+        "MIXED ascii THEN Éclair weiß",
+        "Plain ASCII Doc ONE with Caps",
+        "ΤΕΛΟΣ ΤΗΣ ΙΣΤΟΡΙΑΣ ΟΔΟΣ",
+    ]
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(range(len(docs)), pa.int64()), pa.array(docs)],
+        names=["id", "__text"],
+    )
+    (out,) = list(dedup._shingle_kernel(3)([batch]))
+    got = list(zip(out.column(0).to_pylist(), out.column(1).to_pylist(),
+                   out.column(2).to_pylist()))
+    df = spark.createDataFrame(
+        list(enumerate(docs)), "doc_id long, text string"
+    )
+    j = dedup.hashed_shingle_arrays(df, "doc_id", "text", 3, engine="jvm")
+    want = [(r.id, list(r.sh_arr), r.n_sh) for r in j.orderBy("id").collect()]
+    assert len(want) == len(docs) and got == want
+
+
 def test_xxh64_kernel_exact(spark):
     """_xxh64_np vs Catalyst's xxhash64, bit-for-bit, over EVERY
     byte length 0..100 plus multi-stripe lengths — the tail rounds

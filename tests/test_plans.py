@@ -2,7 +2,11 @@
 visible in the physical plan (pushdown, pruning, broadcast, no
 Python in JVM-only pipelines)."""
 
+import warnings
+
 from pyspark.sql import functions as F
+
+from dataframe_spark import errors
 
 from dataframe_spark.core import DataFrame
 from dataframe_spark.tables import load_table
@@ -405,3 +409,63 @@ def test_heavy_hitters_batch_has_no_single_window_funnel(spark, sf_dir):
         ln for ln in raw_side.splitlines() if "hashpartitioning" in ln
     ]
     assert exchanges and all("__b" in ln for ln in exchanges), exchanges
+
+
+def _fallback_sites(got):
+    return sorted(
+        str(w.message).split(":")[0]
+        for w in got
+        if issubclass(w.category, errors.FallbackWarning)
+    )
+
+
+def _call_fallback_sites(df, calls=1):
+    from dataframe_spark.operators import dedup
+    from dataframe_spark.plans.cache import try_persist, try_unpersist
+    from dataframe_spark.plans.stats import plan_size_bytes
+
+    with warnings.catch_warnings(record=True) as got:
+        warnings.simplefilter("always")
+        for _ in range(calls):
+            plan_size_bytes(df)
+            dedup._materialize(try_persist(df))
+            try_unpersist(df)
+    return _fallback_sites(got)
+
+
+def test_fallbacks_warn_once_per_process(monkeypatch):
+    """A frame with no JVM handle (a Spark Connect frame) takes every
+    exception-driven fallback; each warns once per process."""
+    from dataframe_spark.plans.stats import LARGE, plan_size_bytes
+
+    class NoJdf:
+        pass
+
+    monkeypatch.setattr(errors, "_warned", set())
+    monkeypatch.delenv("SPARK_GRAFT_NO_CACHE_BARRIER", raising=False)
+    assert _call_fallback_sites(NoJdf(), calls=2) == [
+        "dedup._materialize",
+        "plans.cache.try_persist",
+        "plans.stats.plan_size_bytes",
+    ]
+    assert plan_size_bytes(NoJdf()) == LARGE
+
+
+def test_barrier_opt_out_is_silent(monkeypatch):
+    from dataframe_spark.operators import dedup
+
+    class NoJdf:
+        pass
+
+    monkeypatch.setattr(errors, "_warned", set())
+    monkeypatch.setenv("SPARK_GRAFT_NO_CACHE_BARRIER", "1")
+    with warnings.catch_warnings(record=True) as got:
+        warnings.simplefilter("always")
+        dedup._materialize(NoJdf())
+    assert _fallback_sites(got) == []
+
+
+def test_classic_session_takes_no_fallback(spark, monkeypatch):
+    monkeypatch.setattr(errors, "_warned", set())
+    monkeypatch.delenv("SPARK_GRAFT_NO_CACHE_BARRIER", raising=False)
+    assert _call_fallback_sites(spark.range(10)) == []
