@@ -3,6 +3,7 @@ and the worker PYTHONPATH that get_spark sets for it."""
 
 import importlib
 import os
+import socket
 import subprocess
 import sys
 import textwrap
@@ -71,10 +72,12 @@ def test_refresh_rereads_only_changed_archives(tmp_path, monkeypatch):
 
 def test_worker_refresh_reads_no_archive(spark):
     """Inside a worker forked by the daemon, the per-task refresh
-    reads no archive although zip importers are on the worker path."""
+    reads no archive although zip importers are on the worker path,
+    and the daemon's imports are frozen out of the collector."""
 
-    @F.pandas_udf("reads long, zip_importers long")
+    @F.pandas_udf("reads long, zip_importers long, frozen long")
     def probe(x: pd.Series) -> pd.DataFrame:
+        import gc
         import importlib
         import sys
         import zipimport
@@ -90,12 +93,31 @@ def test_worker_refresh_reads_no_archive(spark):
             isinstance(f, zipimport.zipimporter)
             for f in sys.path_importer_cache.values()
         )
-        return pd.DataFrame({"reads": [len(reads)] * len(x), "zip_importers": zips})
+        return pd.DataFrame({
+            "reads": [len(reads)] * len(x),
+            "zip_importers": zips,
+            "frozen": gc.get_freeze_count(),
+        })
 
     row = spark.range(1, numPartitions=1).select(probe("id").alias("p")).first().p
-    assert row.zip_importers > 0
+    assert row.zip_importers > 0 and row.frozen > 0
     if sys.version_info < (3, 13):
         assert row.reads == 0
+
+
+@pytest.mark.skipif(not hasattr(socket, "TCP_QUICKACK"), reason="Linux only")
+def test_quickack_on_tcp_sockets_only():
+    with socket.create_server(("127.0.0.1", 0)) as server:
+        with socket.create_connection(server.getsockname()) as client:
+            conn, _ = server.accept()
+            with conn:
+                conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_QUICKACK, 0)
+                assert conn.getsockopt(socket.IPPROTO_TCP, socket.TCP_QUICKACK) == 0
+                pyworker.quickack(conn)
+                assert conn.getsockopt(socket.IPPROTO_TCP, socket.TCP_QUICKACK) == 1
+    a, b = socket.socketpair(socket.AF_UNIX)
+    with a, b:
+        pyworker.quickack(a)  # no TCP options on a Unix socket: a no-op
 
 
 def test_worker_pythonpath_appends_package_parent(monkeypatch):
