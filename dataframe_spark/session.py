@@ -9,11 +9,12 @@ Locally we run ``local[N]``; the same code is cluster-ready because
 nothing here depends on local mode.
 
 Python workers are forked by this package's daemon,
-``dataframe_spark.plans.pyworker`` (``spark.python.daemon.module``):
-it starts with the library, numpy, pandas and pyarrow imported and
-stops each task from re-reading every zip archive on the worker path
-(see that module). So that the daemon imports from any working
-directory, the package's parent directory is appended to the workers'
+``dataframe_spark.plans.pyworker`` (``spark.python.daemon.module``),
+which cuts the fixed cost of every Python task: workers start with the
+library, numpy, pandas and pyarrow imported, a task no longer re-reads
+every zip archive on the worker path, and its socket ACKs at once (see
+that module). So that the daemon imports from any working directory,
+the package's parent directory is appended to the workers'
 ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``, after any value the
 SparkConf already holds).
 """
@@ -30,7 +31,7 @@ _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _worker_pythonpath() -> str:
-    prior = SparkConf().get("spark.executorEnv.PYTHONPATH", "") or ""
+    prior = SparkConf().get("spark.executorEnv.PYTHONPATH", "")
     paths = [p for p in prior.split(os.pathsep) if p]
     if _PACKAGE_PARENT not in paths:
         paths.append(_PACKAGE_PARENT)

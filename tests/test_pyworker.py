@@ -126,7 +126,7 @@ def test_worker_pythonpath_appends_package_parent(monkeypatch):
             self.value = value
 
         def get(self, key, default=None):
-            return self.value
+            return default if self.value is None else self.value
 
     monkeypatch.setattr(session, "SparkConf", lambda: Conf(os.pathsep.join(["/a", "/b"])))
     assert session._worker_pythonpath() == os.pathsep.join(["/a", "/b", REPO])

@@ -8,10 +8,10 @@ A tree is a checkout's root; DIR holds an ``embeddings.parquet``
 the artifact's records.
 
 Every rep runs one child process per tree, alternating which tree goes
-first, on every data dir. A child imports the library from its tree,
-starts a local[nproc] session, and on each shard (consecutive
-``vec_id`` ranges of SHARD_ROWS rows; the whole file when omitted)
-runs one untimed warm-up call, then times ``semdedup`` plus
+first, on every data dir. A child runs in its tree, imports the
+library from it, starts a local[nproc] session, and on each shard
+(consecutive ``vec_id`` ranges of SHARD_ROWS rows; the whole file when
+omitted) runs one untimed warm-up call, then times ``semdedup`` plus
 ``collect()`` with q_semdedup's settings (tau 0.4, max_iter 3, k =
 max(8, rows // 256)). It reports the walls, the number of Spark jobs
 the timed calls launched, the dropped-row count and a SHA-256 of the
@@ -100,10 +100,14 @@ def main(argv: list[str]) -> int:
             order = list(trees) if rep % 2 == 0 else list(trees)[::-1]
             for tree in order:
                 spin_before = _spin_ms()
+                # run in the tree: Python workers import the library
+                # from the working directory before any PYTHONPATH entry
                 res = subprocess.run(
                     [sys.executable, os.path.abspath(__file__), "--child",
-                     f"{os.path.abspath(trees[tree])}|{path}|{shard_rows or 0}"],
+                     f"{os.path.abspath(trees[tree])}|{os.path.abspath(path)}|"
+                     f"{shard_rows or 0}"],
                     capture_output=True, text=True, check=True,
+                    cwd=trees[tree],
                 )
                 rec = json.loads(res.stdout.strip().splitlines()[-1])
                 rec.update(rep=rep, tree=tree, data=data,
