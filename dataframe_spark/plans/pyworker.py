@@ -1,7 +1,7 @@
 """PySpark worker daemon (``spark.python.daemon.module``, set by
 ``get_spark``). It cuts the fixed cost every Python task pays before it
 sees a row; on a 4-vCPU VM a 4-task ``mapInArrow`` job over no data
-took 107-121 ms with ``pyspark.daemon`` and 41 ms with this one.
+took 121-150 ms with ``pyspark.daemon`` and 41-64 ms with this one.
 
 - Every task starts with ``importlib.invalidate_caches()``
   (``pyspark.worker_util.setup_spark_files``). Before CPython 3.13 each
