@@ -48,7 +48,7 @@ _warned: set[str] = set()
 
 
 def warn_fallback_once(site: str, message: str, exc: BaseException) -> None:
-    """Issue one FallbackWarning per ``site`` per process."""
+    """Emit one FallbackWarning per ``site`` per process."""
     if site in _warned:
         return
     _warned.add(site)

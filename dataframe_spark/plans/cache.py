@@ -5,7 +5,7 @@ persist API accepts (Connect serializes the level over the wire and
 rejects some combinations). Callers that persist purely as a plan-
 reuse optimization must not fail the query over that — but a bare
 ``except: pass`` also swallows real misconfiguration, so a failed
-persist issues a FallbackWarning (once per process) with the
+persist emits a FallbackWarning (once per process) with the
 exception, and a failed unpersist is logged at debug.
 """
 

@@ -9,7 +9,7 @@ under Spark Connect there is no JVM handle, so callers get their
 ``fallback`` instead. Every gate in this codebase passes a LARGE
 fallback, which routes Connect sessions onto the fully-distributed
 path — the side that is always correct, merely not the small-input
-shortcut. The first fallback in a process issues a FallbackWarning.
+shortcut. The first fallback in a process emits a FallbackWarning.
 """
 
 from __future__ import annotations
