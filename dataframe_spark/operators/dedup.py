@@ -194,15 +194,25 @@ def shingles(df: SparkDF, id_col: str, text_col: str, n: int = 3) -> SparkDF:
 # --- exact n-gram Jaccard pairs ---------------------------------------
 
 
+# One knee for every scale-only dedup mechanism: hot-shingle
+# demotion, the truncated-bound pre-verify, the counted
+# broadcast-verify and the cache barriers all pay fixed stages (a
+# sample job, three slim joins, an eager count) that only amortize
+# when the corpus is big enough for candidate volume to matter.
+# Below it the simple shapes win (measured 2.0 s vs 10.0 s at
+# sf0.1) and the RESULT is identical either way. jaccard_pairs'
+# df order also stops broadcasting its vocabulary above it.
+# Compared against the input plan's size (plans.stats.plan_size_bytes).
+_BIG_PATH_KNEE = 128 * 1024 * 1024
+
+
 def jaccard_pairs(
     df: SparkDF,
     id_col: str,
     text_col: str,
     n: int = 3,
     threshold: float = 0.8,
-    broadcast_df_table: bool | None = None,
     order: str = "hash",
-    demote_hot: bool | None = None,
 ) -> SparkDF:
     """All pairs (a < b) with word-n-gram Jaccard >= threshold —
     EXACT result via prefix filtering (PPJoin-style).
@@ -224,7 +234,8 @@ def jaccard_pairs(
     not O(total shingles).
 
     ``order`` picks the global order, i.e. the candidate strategy —
-    the OUTPUT is identical (r10 test pins it):
+    the OUTPUT is identical (tests pin both against a brute-force
+    reference):
 
     - ``"hash"`` (default): order by (demoted?, shingle hash). The
       order is a pure per-element function, so every doc's prefix is
@@ -238,22 +249,20 @@ def jaccard_pairs(
       that made it super-linear on a fixed box. A uniform hash
       order costs more candidates than rarest-first — hot
       (stopword-heavy) shingles may land in prefixes and fan out
-      quadratically — so hot shingles are DEMOTED to sort last: a
-      1% seeded sample estimates high-df shingles (absolute
-      detection floor ~hot_min/fraction docs, corpus-size
-      independent), and membership ships as a bitmap LITERAL probed
-      in-row (O(1) array index, no broadcast, no join). Demotion
-      changes only the order — any set demoted by any sample is
-      still a consistent order — so sampling affects performance,
-      never the result. ``demote_hot`` None auto-enables it when
-      the input plan is large (small corpora can't have buckets big
-      enough to matter and skip the sample job entirely).
-    - ``"df"``: the legacy rarest-first (global document frequency
-      ascending) order — minimal candidates, but pays the two
-      corpus-wide shuffles; ``broadcast_df_table`` gates its df
-      join strategy as before. Kept for cross-validation and for
-      corpora so adversarially templated that candidate count
-      dominates shuffle volume."""
+      quadratically — so above ``_BIG_PATH_KNEE`` hot shingles are
+      DEMOTED to sort last: a 1% seeded sample estimates high-df
+      shingles (absolute detection floor ~hot_min/fraction docs,
+      corpus-size independent), and membership ships as a bitmap
+      LITERAL probed in-row (O(1) array index, no broadcast, no
+      join). Demotion changes only the order — any set demoted by
+      any sample is still a consistent order — so sampling affects
+      performance, never the result. Below the knee the sample job
+      is skipped.
+    - ``"df"``: rarest-first (global document frequency ascending)
+      order — minimal candidates, but pays the two corpus-wide
+      shuffles. It is the fast order on small corpora whose docs
+      share a boilerplate block: the hash order without demotion
+      puts the shared grams in most prefixes (ROADMAP)."""
     # The ENTIRE pipeline runs on xxhash64(shingle) longs, never the
     # shingle strings: the global order, the candidate join key, and
     # verification all only need a stable shingle identity, so every
@@ -264,22 +273,13 @@ def jaccard_pairs(
     # same vanishing risk _hash_arrays already documents.
     if order not in ("hash", "df"):
         raise ValueError(f"order must be 'hash' or 'df', got {order!r}")
-    arrs = hashed_shingle_arrays(df, id_col, text_col, n)
-    if order == "hash":
-        from ..plans.stats import plan_size_bytes
+    from ..plans.stats import plan_size_bytes
 
-        # one knee for every scale-only mechanism: hot-shingle
-        # demotion, the truncated-bound pre-verify, and the counted
-        # broadcast-verify all pay fixed stages (a sample job, three
-        # slim joins, an eager count) that only amortize when the
-        # corpus is big enough for candidate volume to matter; below
-        # the knee the simple shapes win (measured 2.0 s vs 10.0 s
-        # at sf0.1) and the RESULT is identical either way
-        big = plan_size_bytes(df) > 128 * 1024 * 1024
-        if demote_hot is None:
-            demote_hot = big
+    arrs = hashed_shingle_arrays(df, id_col, text_col, n)
+    big = plan_size_bytes(df) > _BIG_PATH_KNEE
+    if order == "hash":
         prefix = _hash_order_prefix(
-            arrs, df, id_col, text_col, n, threshold, demote_hot
+            arrs, df, id_col, text_col, n, threshold, big
         )
         if big:
             # BARRIER (r11, measured): materialize the persisted
@@ -323,21 +323,17 @@ def jaccard_pairs(
     # Shuffles left: dfreq groupBy, the repeated-occurrence groupBy,
     # the candidate join, and verification — each bounded by data or
     # candidate size, nothing quadratic.
-    # broadcast_df_table: None (default) auto-gates on the INPUT plan
-    # size — the repeated-shingle vocabulary grows with the corpus
-    # (27M rows on the 1000x cert corpus), and a forced broadcast of
-    # a vocabulary that big builds a GB-scale single-threaded hash
-    # relation (measured at 100x: 29.8 s forced vs 16.2 s shuffled,
-    # cold). Small corpora keep the broadcast (the dfreq side is a
-    # few MB and the map-side join skips a shuffle of the exploded
-    # table). Explicit True/False still forces either plan; the
-    # RESULT is identical either way — only the join strategy moves.
-    if broadcast_df_table is None:
-        from ..plans.stats import plan_size_bytes
-
-        broadcast_df_table = plan_size_bytes(df) <= 128 * 1024 * 1024
+    # The df join broadcasts below the knee only: the
+    # repeated-shingle vocabulary grows with the corpus (27M rows on
+    # the 1000x cert corpus), and a forced broadcast of a vocabulary
+    # that big builds a GB-scale single-threaded hash relation
+    # (measured at 100x: 29.8 s forced vs 16.2 s shuffled, cold).
+    # Small corpora keep the broadcast (the dfreq side is a few MB
+    # and the map-side join skips a shuffle of the exploded table).
+    # The RESULT is identical either way — only the join strategy
+    # moves.
     rep = exploded.join(
-        F.broadcast(dfreq) if broadcast_df_table else dfreq, "shingle"
+        dfreq if big else F.broadcast(dfreq), "shingle"
     )  # inner: df >= 2 only
     per_doc = rep.groupBy("id", "n_sh").agg(
         F.sort_array(F.collect_list(F.struct("df", "shingle"))).alias("__reps")
@@ -559,7 +555,7 @@ def _hash_order_prefix(
     text_col: str,
     n: int,
     threshold: float,
-    demote_hot: bool | None,
+    demote_hot: bool,
 ) -> SparkDF:
     """(id, shingle, n_sh, pos) prefix entries under the
     (demoted?, hash) global order — computed IN-ROW: sort the per-doc
@@ -568,15 +564,10 @@ def _hash_order_prefix(
     is persisted because the candidate self-join consumes it twice
     (AQE does not reuse the exchange across the two aliased sides).
 
-    ``demote_hot`` None auto-enables hot-shingle demotion when the
-    source plan exceeds the broadcast-gate size (the same 128 MB
-    knee jaccard's legacy path uses): below it, bucket sizes are too
-    small for fan-out to matter and the sample job is pure
-    overhead."""
-    if demote_hot is None:
-        from ..plans.stats import plan_size_bytes
-
-        demote_hot = plan_size_bytes(src) > 128 * 1024 * 1024
+    ``demote_hot`` turns on hot-shingle demotion; jaccard_pairs
+    passes its big-path gate (``_BIG_PATH_KNEE``): below it, bucket
+    sizes are too small for fan-out to matter and the sample job is
+    pure overhead."""
     probe = (
         _sampled_hot_probe(src, id_col, text_col, n) if demote_hot else None
     )
@@ -1979,9 +1970,9 @@ def lsh_candidate_pairs(
     80.4-82.9 s (shipped r12 shape) → 49-58 s persisted. Off by
     default: at bench scale the extra cache write + barrier count
     cost more than the recompute (the same fixed-stage reasoning as
-    every other `big` knee); minhash_dedup_pairs passes its 128 MB
-    input-plan gate. With ``persist_bands=True`` the call itself runs
-    a Spark job (the cache barrier's count), and the banded frame
+    every other `big` knee); minhash_dedup_pairs passes its
+    ``_BIG_PATH_KNEE`` input-plan gate. With ``persist_bands=True``
+    the call itself runs a Spark job (the cache barrier's count), and the banded frame
     stays cached after the call (see ``_reusable``)."""
     if rows_per_band < 1:
         # e.g. num_perm // bands with bands > num_perm: every band
@@ -2087,7 +2078,7 @@ def minhash_dedup_pairs(
     arrs_h = hashed_shingle_arrays(df, id_col, text_col, n)
     from ..plans.stats import plan_size_bytes
 
-    # the jaccard_pairs knee gates the fixed-stage mechanisms (the
+    # _BIG_PATH_KNEE gates the fixed-stage mechanisms (the
     # counted broadcast-verify, the sigs cache barrier); the
     # signature engine has its own MUCH lower knee because its
     # fixed cost is only the Python-worker roundtrip (~0.3 s),
@@ -2096,7 +2087,7 @@ def minhash_dedup_pairs(
     # 10x (7 MB) a wash (4.53 vs 4.54 s), 100x (70 MB) the kernel
     # wins the signature stage 9.03 -> 2.70 s
     sz = plan_size_bytes(df)
-    big = sz > 128 * 1024 * 1024
+    big = sz > _BIG_PATH_KNEE
     # SPARK_GRAFT_SIG_ENGINE overrides the knee so parity sweeps can
     # oracle-verify the kernel path at driver SFs (r13, VERDICT r12
     # ask #3b; tools/certify.py arrow_parity)
@@ -2161,7 +2152,7 @@ def minhash_dedup_pairs(
     # separate rep frame to scan three times. The counted
     # broadcast-verify (r10) only pays its eager count when the
     # corpus is big enough for the full-array shuffles to matter
-    # (the jaccard_pairs knee)
+    # (_BIG_PATH_KNEE)
     rep_pairs = _verify_jaccard(
         cands, arrs_h, threshold, broadcast_pairs=None if big else False
     )

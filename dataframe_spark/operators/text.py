@@ -629,7 +629,7 @@ def perplexity_score(df, id_col: str, text_col: str, lm, totals, carry=()):
     # broadcast only a BOUNDED lm: with top_v=None the lm is the full
     # corpus vocabulary, and forcing a broadcast would ship it to the
     # driver at corpus scale — leave that case to AQE (same escape
-    # hatch rationale as jaccard_pairs' broadcast_df_table)
+    # hatch rationale as jaccard_pairs' df-order broadcast gate)
     from ..plans.stats import plan_size_bytes
 
     lm_side = (

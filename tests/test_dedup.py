@@ -816,34 +816,81 @@ def test_pagerank_assume_unique_matches_default(spark):
     assert got != want
 
 
-def test_jaccard_broadcast_gate_strategies_agree(spark, sf_dir):
-    """Every candidate strategy must produce the identical pair set:
-    the legacy df-order under forced broadcast, forced shuffle, and
-    the auto gate (the r9 1000x find auto-gated it), AND the r10
-    hash-order plan with demotion off and forced on. The global
-    order / join strategy move only performance, never the result."""
+def _brute_jaccard(rows, n, t):
+    """{(a, b, jaccard)} of every pair (a < b) whose word-n-gram
+    Jaccard, rounded to 4 decimals, is >= t: the all-pairs reference
+    the operator must equal."""
+    import itertools
+
+    def shingles(text):
+        toks = (text or "").lower().split()
+        return {
+            " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
+        }
+
+    sh = {i: shingles(txt) for i, txt in rows}
+    want = set()
+    for (i, a), (j, b) in itertools.combinations(sorted(sh.items()), 2):
+        if not a or not b:
+            continue
+        jac = round(len(a & b) / len(a | b), 4)
+        if jac >= t:
+            want.add((i, j, round(jac, 6)))
+    return want
+
+
+def _hash_chain(docs, n, t, demote_hot, big):
+    """jaccard_pairs' internal chain with the demotion switch and the
+    big-path shape (truncated-bound filter + counted broadcast
+    verify) chosen by the caller instead of by the input size."""
+    import dataframe_spark.operators.dedup as dd
+
+    arrs = dd.hashed_shingle_arrays(docs, "doc_id", "text", n)
+    prefix = dd._hash_order_prefix(
+        arrs, docs, "doc_id", "text", n, t, demote_hot
+    )
+    cands = dd._prefix_candidates(prefix, t)
+    if big:
+        cands = dd._truncated_bound_filter(cands, arrs, t)
+        return dd._verify_jaccard(cands, arrs, t, broadcast_pairs=True)
+    return dd._verify_jaccard(cands, arrs, t, broadcast_pairs=False)
+
+
+def _pair_set(df):
+    return {
+        (r["a_id"], r["b_id"], round(r["jaccard"], 6)) for r in df.collect()
+    }
+
+
+def test_jaccard_broadcast_gate_strategies_agree(spark, sf_dir, monkeypatch):
+    """Every candidate strategy must produce the brute-force pair set:
+    both orders on either side of the big-path knee (the df order's
+    broadcast and shuffle joins), and the hash-order chain with
+    demotion off and forced on, each with the small and the big-path
+    verify. Order, demotion and join shapes move only performance,
+    never the result."""
+    import dataframe_spark.operators.dedup as dd
     from dataframe_spark.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
+    want = _brute_jaccard(
+        [(r["doc_id"], r["text"]) for r in docs.collect()], 3, 0.8
+    )
+    assert want
+    for demote_hot in (False, True):
+        for big in (False, True):
+            got = _pair_set(_hash_chain(docs, 3, 0.8, demote_hot, big))
+            assert got == want, (demote_hot, big)
+    for knee in (dd._BIG_PATH_KNEE, -1):
+        monkeypatch.setattr(dd, "_BIG_PATH_KNEE", knee)
+        for order in ("hash", "df"):
+            got = _pair_set(dd.jaccard_pairs(
+                docs, "doc_id", "text", n=3, threshold=0.8, order=order
+            ))
+            assert got == want, (knee, order)
 
-    def pairs(**kw):
-        return {
-            (r["a_id"], r["b_id"], round(r["jaccard"], 6))
-            for r in dedup.jaccard_pairs(
-                docs, "doc_id", "text", n=3, threshold=0.8, **kw
-            ).collect()
-        }
 
-    p_auto = pairs(order="df", broadcast_df_table=None)
-    p_bc = pairs(order="df", broadcast_df_table=True)
-    p_sh = pairs(order="df", broadcast_df_table=False)
-    p_hash = pairs(order="hash", demote_hot=False)
-    p_hot = pairs(order="hash", demote_hot=True)
-    assert p_auto == p_bc == p_sh == p_hash == p_hot
-    assert len(p_auto) > 0
-
-
-def test_jaccard_hot_demotion_bitmap_is_order_only(spark):
+def test_jaccard_hot_demotion_bitmap_is_order_only(spark, monkeypatch):
     """A corpus with a genuinely hot shingle (a shared template
     sentence in every doc): force the sampled hot bitmap to be
     non-empty (fraction 1.0, hot_min 2) and pin that demotion
@@ -860,27 +907,14 @@ def test_jaccard_hot_demotion_bitmap_is_order_only(spark):
     )
     assert probe is not None  # the template grams really are hot
     orig = dd._sampled_hot_probe
-    dd._sampled_hot_probe = lambda *a, **kw: orig(
-        *a, fraction=1.0, hot_min=2
+    monkeypatch.setattr(
+        dd, "_sampled_hot_probe",
+        lambda *a, **kw: orig(*a, fraction=1.0, hot_min=2),
     )
-    try:
-        p_hot = {
-            (r["a_id"], r["b_id"], round(r["jaccard"], 6))
-            for r in dd.jaccard_pairs(
-                docs, "doc_id", "text", 3, 0.5,
-                order="hash", demote_hot=True,
-            ).collect()
-        }
-    finally:
-        dd._sampled_hot_probe = orig
-    p_df = {
-        (r["a_id"], r["b_id"], round(r["jaccard"], 6))
-        for r in dd.jaccard_pairs(
-            docs, "doc_id", "text", 3, 0.5, order="df"
-        ).collect()
-    }
-    assert p_hot == p_df
-    assert len(p_df) > 0
+    p_hot = _pair_set(_hash_chain(docs, 3, 0.5, True, False))
+    want = _brute_jaccard(rows, 3, 0.5)
+    assert p_hot == want
+    assert len(want) > 0
 
 
 def test_long_array_literal_matches_list_literal(spark):
@@ -918,8 +952,6 @@ def test_jaccard_prefix_asymmetry_matches_brute_force(spark):
     length (subset/superset docs near the threshold), equal-length
     ties (the id tie-break branch), and ids whose numeric order
     disagrees with length order."""
-    import itertools
-
     import dataframe_spark.operators.dedup as dd
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -935,28 +967,12 @@ def test_jaccard_prefix_asymmetry_matches_brute_force(spark):
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
 
-    def shingles(text, n=2):
-        toks = text.lower().split()
-        return {
-            " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
-        }
-
     t = 0.6
-    want = set()
-    sh = {i: shingles(txt) for i, txt in rows}
-    for (i, a), (j, b) in itertools.combinations(sorted(sh.items()), 2):
-        if not a or not b:
-            continue
-        jac = round(len(a & b) / len(a | b), 4)
-        if jac >= t:
-            want.add((i, j, round(jac, 6)))
+    want = _brute_jaccard(rows, 2, t)
     for order in ("hash", "df"):
-        got = {
-            (r["a_id"], r["b_id"], round(r["jaccard"], 6))
-            for r in dd.jaccard_pairs(
-                docs, "doc_id", "text", n=2, threshold=t, order=order
-            ).collect()
-        }
+        got = _pair_set(dd.jaccard_pairs(
+            docs, "doc_id", "text", n=2, threshold=t, order=order
+        ))
         assert got == want, order
     assert len(want) >= 3  # unequal-length pairs really are present
     # doc 9 is SHORTER than doc 1/2 yet has the larger id, so the
@@ -1043,9 +1059,9 @@ def tie_docs(spark):
 
 
 def test_jaccard_exact_threshold_tie_small_and_big_paths(tie_docs):
-    """A pair at exactly J = t is a pair on every path: the plain hash
-    order, the df order, hot-shingle demotion, and the big path's
-    truncated-bound filter called directly."""
+    """A pair at exactly J = t is a pair on every path: the hash and
+    df orders, hot-shingle demotion with the small verify, and the
+    big path's truncated-bound filter called directly."""
     import dataframe_spark.operators.dedup as dd
 
     want = [(1, 2, 0.8)]
@@ -1053,9 +1069,12 @@ def test_jaccard_exact_threshold_tie_small_and_big_paths(tie_docs):
     def pairs(df):
         return sorted((r["a_id"], r["b_id"], r["jaccard"]) for r in df.collect())
 
-    for kw in ({}, {"order": "df"}, {"demote_hot": True}):
-        got = dd.jaccard_pairs(tie_docs, "doc_id", "text", n=3, threshold=0.8, **kw)
-        assert pairs(got) == want, kw
+    for order in ("hash", "df"):
+        got = dd.jaccard_pairs(
+            tie_docs, "doc_id", "text", n=3, threshold=0.8, order=order
+        )
+        assert pairs(got) == want, order
+    assert pairs(_hash_chain(tie_docs, 3, 0.8, True, False)) == want
     arrs = dd.hashed_shingle_arrays(tie_docs, "doc_id", "text", 3)
     prefix = dd._hash_order_prefix(arrs, tie_docs, "doc_id", "text", 3, 0.8, True)
     cands = dd._prefix_candidates(prefix, 0.8)
@@ -1075,9 +1094,13 @@ def test_jaccard_length_filter_tie(spark):
         [(1, " ".join(words[:9])), (2, " ".join(words))],
         "doc_id long, text string",
     )
-    for kw in ({}, {"order": "df"}, {"demote_hot": True}):
-        got = dd.jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.7, **kw)
-        assert [tuple(r) for r in got.collect()] == [(1, 2, 0.7)], kw
+    for order in ("hash", "df"):
+        got = dd.jaccard_pairs(
+            docs, "doc_id", "text", n=3, threshold=0.7, order=order
+        )
+        assert [tuple(r) for r in got.collect()] == [(1, 2, 0.7)], order
+    got = _hash_chain(docs, 3, 0.7, True, False)
+    assert [tuple(r) for r in got.collect()] == [(1, 2, 0.7)]
     arrs = dd.hashed_shingle_arrays(docs, "doc_id", "text", 3)
     prefix = dd._hash_order_prefix(arrs, docs, "doc_id", "text", 3, 0.7, True)
     pruned = dd._truncated_bound_filter(dd._prefix_candidates(prefix, 0.7), arrs, 0.7)

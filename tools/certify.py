@@ -66,6 +66,7 @@ shuffle.partitions 32) unless noted.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
@@ -203,6 +204,28 @@ def _rep_stats(walls):
         "sec": min(walls),
         "reps": walls,
         "spread": round(max(walls) / max(min(walls), 1e-9), 2),
+    }
+
+
+@contextlib.contextmanager
+def _canary_bracket(tag, spark, qs, part):
+    """Run the fixed-work canary (q_stats_agg on the 10x corpus, two
+    cold reps) before and after the block and record both in
+    ``part["canary"]`` with the mean of their best reps."""
+
+    def reps():
+        return _time_reps(
+            lambda: qs["q_stats_agg"](spark, DIR_10X), reps=2, spark=spark
+        )
+
+    pre = reps()
+    print(tag, "canary_pre", pre, flush=True)
+    yield
+    post = reps()
+    print(tag, "canary_post", post, flush=True)
+    part["canary"] = {
+        "pre": pre, "post": post,
+        "mean_sec": round((min(pre) + min(post)) / 2, 3),
     }
 
 
@@ -594,34 +617,18 @@ def sweep_thousandx(argv):
     from dataframe_spark.queries import text_q
 
     qs = entry.queries()
-
-    def canary_reps():
-        return _time_reps(
-            lambda: qs["q_stats_agg"](spark, DIR_10X), reps=2, spark=spark
-        )
-
-    canary_pre = canary_reps()
-    print(tag, "canary_pre", canary_pre, flush=True)
     walls = {}
-    for name in TX_FLAGSHIPS:
-        def build(name=name, d=d):
-            if name == "q_bpe":
-                text_q._BPE_CACHE.clear()
-            return qs[name](spark, d)
+    part = {"walls": walls}
+    with _canary_bracket(tag, spark, qs, part):
+        for name in TX_FLAGSHIPS:
+            def build(name=name, d=d):
+                if name == "q_bpe":
+                    text_q._BPE_CACHE.clear()
+                return qs[name](spark, d)
 
-        w = _rep_stats(_time_reps(build, reps=reps, spark=spark))
-        walls[name] = w
-        print(tag, name, w, flush=True)
-    canary_post = canary_reps()
-    print(tag, "canary_post", canary_post, flush=True)
-    part = {
-        "walls": walls,
-        "canary": {
-            "pre": canary_pre,
-            "post": canary_post,
-            "mean_sec": round((min(canary_pre) + min(canary_post)) / 2, 3),
-        },
-    }
+            w = _rep_stats(_time_reps(build, reps=reps, spark=spark))
+            walls[name] = w
+            print(tag, name, w, flush=True)
     if tag == "1000x":
         print("jaccard stage profile at 1000x:", flush=True)
         part["stage_profile"] = {
@@ -736,64 +743,52 @@ def sweep_dedup_stages(argv):
         sys.exit(1)
     qs = entry.queries()
 
-    def canary_reps():
-        return _time_reps(
-            lambda: qs["q_stats_agg"](spark, DIR_10X), reps=2, spark=spark
-        )
-
-    canary_pre = canary_reps()
-    print(tag, "canary_pre", canary_pre, flush=True)
     part = {}
-    if tag == "minhash_profile":
-        print("minhash stage profile at 1000x:", flush=True)
-        part["stage_profile"] = {
-            "q_dedup_minhash@1000x": _minhash_stage_profile(
-                spark, DIR_1000X
+    with _canary_bracket(tag, spark, qs, part):
+        if tag == "minhash_profile":
+            print("minhash stage profile at 1000x:", flush=True)
+            part["stage_profile"] = {
+                "q_dedup_minhash@1000x": _minhash_stage_profile(
+                    spark, DIR_1000X
+                )
+            }
+        elif tag == "jaccard_profile":
+            print("jaccard stage profile at 1000x:", flush=True)
+            part["stage_profile"] = {
+                "q_dedup_ngram_jaccard@1000x": _jaccard_stage_profile(
+                    spark, DIR_1000X
+                )
+            }
+        elif tag == "jaccard_e2e_100x":
+            e2e = _rep_stats(
+                _time_reps(
+                    lambda: qs["q_dedup_ngram_jaccard"](spark, DIR_100X),
+                    reps=2,
+                    spark=spark,
+                )
             )
-        }
-    elif tag == "jaccard_profile":
-        print("jaccard stage profile at 1000x:", flush=True)
-        part["stage_profile"] = {
-            "q_dedup_ngram_jaccard@1000x": _jaccard_stage_profile(
-                spark, DIR_1000X
+            print("jaccard e2e 100x", e2e, flush=True)
+            part["jaccard_e2e_100x"] = e2e
+        elif tag == "jaccard_e2e_1000x":
+            e2e = _rep_stats(
+                _time_reps(
+                    lambda: qs["q_dedup_ngram_jaccard"](spark, DIR_1000X),
+                    reps=3,
+                    spark=spark,
+                )
             )
-        }
-    elif tag == "jaccard_e2e_100x":
-        e2e = _rep_stats(
-            _time_reps(
-                lambda: qs["q_dedup_ngram_jaccard"](spark, DIR_100X),
-                reps=2,
-                spark=spark,
+            print("jaccard e2e 1000x", e2e, flush=True)
+            part["jaccard_e2e_1000x"] = e2e
+        else:
+            e2e = _rep_stats(
+                _time_reps(
+                    lambda: qs["q_dedup_minhash"](spark, DIR_1000X),
+                    reps=2,
+                    spark=spark,
+                )
             )
-        )
-        print("jaccard e2e 100x", e2e, flush=True)
-        part["jaccard_e2e_100x"] = e2e
-    elif tag == "jaccard_e2e_1000x":
-        e2e = _rep_stats(
-            _time_reps(
-                lambda: qs["q_dedup_ngram_jaccard"](spark, DIR_1000X),
-                reps=3,
-                spark=spark,
-            )
-        )
-        print("jaccard e2e 1000x", e2e, flush=True)
-        part["jaccard_e2e_1000x"] = e2e
-    else:
-        e2e = _rep_stats(
-            _time_reps(
-                lambda: qs["q_dedup_minhash"](spark, DIR_1000X),
-                reps=2,
-                spark=spark,
-            )
-        )
-        print("minhash e2e", e2e, flush=True)
-        part["minhash_e2e_1000x"] = e2e
-    canary_post = canary_reps()
-    print(tag, "canary_post", canary_post, flush=True)
-    part["canary"] = {
-        "pre": canary_pre, "post": canary_post,
-        "mean_sec": round((min(canary_pre) + min(canary_post)) / 2, 3),
-    }
+            print("minhash e2e", e2e, flush=True)
+            part["minhash_e2e_1000x"] = e2e
     with open(f"{partdir}/{tag}.part.json", "w") as f:
         json.dump(part, f)
     print(f"wrote {partdir}/{tag}.part.json")
@@ -810,10 +805,13 @@ def _jaccard_stage_profile(spark, d, threshold=0.8):
     decomposition of one end-to-end run, and their sum approximates
     the query wall (plus scheduling)."""
     import dataframe_spark.operators.dedup as dd
+    from dataframe_spark.plans.stats import plan_size_bytes
     from dataframe_spark.tables import load_table
 
     docs = load_table(spark, d, "documents")
     spark.catalog.clearCache()
+    # the operator's own big-path gate turns hot-shingle demotion on
+    demote_hot = plan_size_bytes(docs) > dd._BIG_PATH_KNEE
     prof = {}
 
     def stage(name, df):
@@ -829,7 +827,7 @@ def _jaccard_stage_profile(spark, d, threshold=0.8):
     prefix = stage(
         "prefix",
         dd._hash_order_prefix(arrs, docs, "doc_id", "text", 3, threshold,
-                              None),
+                              demote_hot),
     )
     cands = stage("candidates", dd._prefix_candidates(prefix, threshold))
     pruned = stage(
@@ -1058,24 +1056,12 @@ def sweep_vectors_stages(argv):
         sys.exit(1)
     qs = entry.queries()
 
-    def canary_reps():
-        return _time_reps(
-            lambda: qs["q_stats_agg"](spark, DIR_10X), reps=2, spark=spark
-        )
-
-    canary_pre = canary_reps()
-    print(tag, "canary_pre", canary_pre, flush=True)
     part = {}
-    print("semdedup stage profile at 1000x:", flush=True)
-    part["stage_profile"] = {
-        "semdedup@1000x": _semdedup_stage_profile(spark, DIR_1000X)
-    }
-    canary_post = canary_reps()
-    print(tag, "canary_post", canary_post, flush=True)
-    part["canary"] = {
-        "pre": canary_pre, "post": canary_post,
-        "mean_sec": round((min(canary_pre) + min(canary_post)) / 2, 3),
-    }
+    with _canary_bracket(tag, spark, qs, part):
+        print("semdedup stage profile at 1000x:", flush=True)
+        part["stage_profile"] = {
+            "semdedup@1000x": _semdedup_stage_profile(spark, DIR_1000X)
+        }
     with open(f"{partdir}/{tag}.part.json", "w") as f:
         json.dump(part, f)
     print(f"wrote {partdir}/{tag}.part.json")
@@ -1212,104 +1198,91 @@ def sweep_vectors1000x(argv):
         sys.exit(1)
     qs = entry.queries()
 
-    def canary_reps():
-        return _time_reps(
-            lambda: qs["q_stats_agg"](spark, DIR_10X), reps=2, spark=spark
-        )
+    part = {}
+    with _canary_bracket(tag, spark, qs, part):
+        emb = spark.read.parquet(f"{d}/embeddings.parquet")
+        n = emb.count()
+        k = max(8, n // EMB_CLUSTER_SIZE)
+        row = {"rows": n, "dim": 256, "semdedup_k": k}
 
-    canary_pre = canary_reps()
-    print(tag, "canary_pre", canary_pre, flush=True)
-
-    emb = spark.read.parquet(f"{d}/embeddings.parquet")
-    n = emb.count()
-    k = max(8, n // EMB_CLUSTER_SIZE)
-    row = {"rows": n, "dim": 256, "semdedup_k": k}
-
-    row["semdedup"] = _rep_stats(_time_reps(
-        lambda: similarity.semdedup(
-            emb, "vec_id", "embedding", k=k, tau=0.4, max_iter=3
-        ),
-        reps=reps, spark=spark,
-    ))
-    print(tag, "semdedup", row["semdedup"], flush=True)
-    row["knn_ivf"] = _rep_stats(_time_reps(
-        lambda: similarity.knn_ivf(
-            emb, "vec_id", "embedding", query_id=0, k=10,
-            nlist=64, nprobe=8, max_iter=3,
-        ),
-        reps=reps, spark=spark,
-    ))
-    print(tag, "knn_ivf", row["knn_ivf"], flush=True)
-
-    edges_path = f"/tmp/spark_graft_vec_edges_{tag}"
-    eb_walls = []
-    for _ in range(reps):
-        spark.catalog.clearCache()
-        t0 = time.monotonic()
-        similarity.bucketed_cosine_pairs(
-            emb, "vec_id", "embedding", "label", threshold=0.4
-        ).select("a_id", "b_id").write.mode("overwrite").parquet(edges_path)
-        eb_walls.append(round(time.monotonic() - t0, 3))
-    row["edge_build"] = _rep_stats(eb_walls)
-    edges = spark.read.parquet(edges_path)
-    row["n_edges"] = edges.count()
-    print(tag, "edge_build", row["edge_build"], "edges", row["n_edges"],
-          flush=True)
-
-    pr_walls, pr_profiles = [], []
-    for _ in range(reps):
-        spark.catalog.clearCache()
-        prof = {}
-        t0 = time.monotonic()
-        # the materialized bucketed-GEMM pairs hold each unordered
-        # pair exactly once (tile construction), so the setup
-        # distinct collapses nothing -- skip its 8+ GB exchange (r12)
-        _noop(pagerank(
-            edges, "a_id", "b_id", damping=0.85, iters=10,
-            symmetrize=True, assume_unique=True, profile=prof,
+        row["semdedup"] = _rep_stats(_time_reps(
+            lambda: similarity.semdedup(
+                emb, "vec_id", "embedding", k=k, tau=0.4, max_iter=3
+            ),
+            reps=reps, spark=spark,
         ))
-        pr_walls.append(round(time.monotonic() - t0, 3))
-        pr_profiles.append(prof)
-    row["pagerank"] = _rep_stats(pr_walls)
-    row["pagerank"]["profiles"] = pr_profiles
-    print(tag, "pagerank", row["pagerank"], flush=True)
+        print(tag, "semdedup", row["semdedup"], flush=True)
+        row["knn_ivf"] = _rep_stats(_time_reps(
+            lambda: similarity.knn_ivf(
+                emb, "vec_id", "embedding", query_id=0, k=10,
+                nlist=64, nprobe=8, max_iter=3,
+            ),
+            reps=reps, spark=spark,
+        ))
+        print(tag, "knn_ivf", row["knn_ivf"], flush=True)
 
-    part = {"row": row}
-    if tag == "1000x":
-        # MEGABUCKET: ~100k of the 2 M vectors forced into one
-        # bucket — ceil(100k/32768) = 4 sub-blocks, 10 tile tasks;
-        # per-task peak is two 32k x 256 sub-blocks + one
-        # 2048 x 32768 sims tile regardless of the bucket size
-        mb_rows = 100_000
-        degenerate = emb.where(F.col("vec_id") < mb_rows).select(
-            "vec_id", "embedding", F.lit(0).alias("label")
-        )
-        spark.catalog.clearCache()
-        t0 = time.monotonic()
-        mb_pairs = similarity.bucketed_cosine_pairs(
-            degenerate, "vec_id", "embedding", "label", threshold=0.4
-        ).count()
-        mb_wall = round(time.monotonic() - t0, 3)
-        n_deg = degenerate.count()
-        import math as _math
+        edges_path = f"/tmp/spark_graft_vec_edges_{tag}"
+        eb_walls = []
+        for _ in range(reps):
+            spark.catalog.clearCache()
+            t0 = time.monotonic()
+            similarity.bucketed_cosine_pairs(
+                emb, "vec_id", "embedding", "label", threshold=0.4
+            ).select("a_id", "b_id").write.mode("overwrite").parquet(edges_path)
+            eb_walls.append(round(time.monotonic() - t0, 3))
+        row["edge_build"] = _rep_stats(eb_walls)
+        edges = spark.read.parquet(edges_path)
+        row["n_edges"] = edges.count()
+        print(tag, "edge_build", row["edge_build"], "edges", row["n_edges"],
+              flush=True)
 
-        s = _math.ceil(n_deg / 32768)
-        part["megabucket"] = {
-            "bucket_rows": n_deg, "max_bucket_rows": 32768,
-            "split_sub_blocks": s, "n_tiles": s * (s + 1) // 2,
-            "wall_sec": mb_wall, "n_pairs": mb_pairs,
-            "note": "split path exercised at cert scale (VERDICT "
-                    "r11 ask #7); task peak = 2 sub-blocks + 1 "
-                    "sims tile (rows pre-normalized in place, r12)",
-        }
-        print(tag, "megabucket", part["megabucket"], flush=True)
+        pr_walls, pr_profiles = [], []
+        for _ in range(reps):
+            spark.catalog.clearCache()
+            prof = {}
+            t0 = time.monotonic()
+            # the materialized bucketed-GEMM pairs hold each unordered
+            # pair exactly once (tile construction), so the setup
+            # distinct collapses nothing -- skip its 8+ GB exchange (r12)
+            _noop(pagerank(
+                edges, "a_id", "b_id", damping=0.85, iters=10,
+                symmetrize=True, assume_unique=True, profile=prof,
+            ))
+            pr_walls.append(round(time.monotonic() - t0, 3))
+            pr_profiles.append(prof)
+        row["pagerank"] = _rep_stats(pr_walls)
+        row["pagerank"]["profiles"] = pr_profiles
+        print(tag, "pagerank", row["pagerank"], flush=True)
 
-    canary_post = canary_reps()
-    print(tag, "canary_post", canary_post, flush=True)
-    part["canary"] = {
-        "pre": canary_pre, "post": canary_post,
-        "mean_sec": round((min(canary_pre) + min(canary_post)) / 2, 3),
-    }
+        part["row"] = row
+        if tag == "1000x":
+            # MEGABUCKET: ~100k of the 2 M vectors forced into one
+            # bucket — ceil(100k/32768) = 4 sub-blocks, 10 tile tasks;
+            # per-task peak is two 32k x 256 sub-blocks + one
+            # 2048 x 32768 sims tile regardless of the bucket size
+            mb_rows = 100_000
+            degenerate = emb.where(F.col("vec_id") < mb_rows).select(
+                "vec_id", "embedding", F.lit(0).alias("label")
+            )
+            spark.catalog.clearCache()
+            t0 = time.monotonic()
+            mb_pairs = similarity.bucketed_cosine_pairs(
+                degenerate, "vec_id", "embedding", "label", threshold=0.4
+            ).count()
+            mb_wall = round(time.monotonic() - t0, 3)
+            n_deg = degenerate.count()
+            import math as _math
+
+            s = _math.ceil(n_deg / 32768)
+            part["megabucket"] = {
+                "bucket_rows": n_deg, "max_bucket_rows": 32768,
+                "split_sub_blocks": s, "n_tiles": s * (s + 1) // 2,
+                "wall_sec": mb_wall, "n_pairs": mb_pairs,
+                "note": "split path exercised at cert scale (VERDICT "
+                        "r11 ask #7); task peak = 2 sub-blocks + 1 "
+                        "sims tile (rows pre-normalized in place, r12)",
+            }
+            print(tag, "megabucket", part["megabucket"], flush=True)
     with open(f"{partdir}/{tag}.part.json", "w") as f:
         json.dump(part, f)
     print(f"wrote {partdir}/{tag}.part.json")
