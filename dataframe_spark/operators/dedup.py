@@ -51,6 +51,18 @@ def _ceil_bound(x):
     return F.ceil(x - F.lit(_BOUND_SLACK))
 
 
+def _t_lo(threshold: float) -> float:
+    """The threshold every PPJoin bound is computed from. The verify
+    keeps round(J, 4) >= t (the DuckDB oracle's rule), and every
+    J >= t − 5e-5 rounds up to t, so the bounds must be lossless down
+    to there, not just to t: a 16,000-of-20,001 subset pair
+    (J = 0.79996, reported as 0.8) fell to the length filter at
+    t = 0.8. Less _BOUND_SLACK, so a ratio's own floating-point error
+    cannot put a kept pair below it. Lowering a bound only adds
+    candidates; the rounded verify still decides every pair."""
+    return threshold - 5e-5 - _BOUND_SLACK
+
+
 def tokens_expr(text_col: str):
     """Whitespace tokens of lowercased, trimmed text (JVM-side)."""
     return F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
@@ -214,8 +226,12 @@ def jaccard_pairs(
     threshold: float = 0.8,
     order: str = "hash",
 ) -> SparkDF:
-    """All pairs (a < b) with word-n-gram Jaccard >= threshold —
-    EXACT result via prefix filtering (PPJoin-style).
+    """All pairs (a < b) whose word-n-gram Jaccard, rounded to 4
+    decimals, is >= threshold — EXACT result via prefix filtering
+    (PPJoin-style). The reported ``jaccard`` is that rounded value,
+    so a pair with exact J in [threshold − 5e-5, threshold) is
+    returned with jaccard == threshold. This is the rule the DuckDB
+    oracle checks (``ROUND(c / (na + nb − c), 4) >= t``).
 
     A naive self-join on shingles fans out quadratically on hot
     shingles (stopword-only grams). Prefix filtering is lossless for
@@ -226,7 +242,9 @@ def jaccard_pairs(
     the distinct and the expensive verify: the length filter (J >= t
     forces min(na,nb) >= t·max(na,nb)) and the positional filter
     (overlap is upper-bounded by min(na-pa, nb-pb)+1, which must
-    reach the overlap threshold α = ceil(t/(1+t)·(na+nb))).
+    reach the overlap threshold α = ceil(t/(1+t)·(na+nb))). Every
+    bound takes t as the smallest ratio the rounded rule keeps
+    (``_t_lo``), so the filters stay lossless for it.
     Candidates are then verified per-pair with array_intersect
     against per-doc arrays of xxhash64(shingle) longs (one row per
     doc; fixed-width comparisons), NOT by re-joining the exploded
@@ -341,7 +359,11 @@ def jaccard_pairs(
     # prefix length: n_sh - ceil(t * n_sh) + 1 (n_sh rides along from
     # shingle_arrays — no second pass); keep size + position for the
     # in-join filters
-    prefix_len = F.col("n_sh") - _ceil_bound(F.lit(threshold) * F.col("n_sh")) + 1
+    prefix_len = (
+        F.col("n_sh")
+        - _ceil_bound(F.lit(_t_lo(threshold)) * F.col("n_sh"))
+        + 1
+    )
     n1 = F.col("n_sh") - F.size("__reps")
     k = (prefix_len - n1).cast("int")  # repeated entries inside the prefix
     # The prefix frame is PERSISTED (r6): the candidate self-join
@@ -397,13 +419,12 @@ def _prefix_candidates(prefix: SparkDF, threshold: float) -> SparkDF:
     of the smaller record's prefix never materializes. Pairs
     re-normalize to a_id < b_id, so the output is identical to the
     symmetric join's."""
+    t = _t_lo(threshold)
     # index-prefix bound of the (n_sh, id)-smaller side:
     # pos <= n − ceil(2t/(1+t)·n) + 1
     idx_len = (
         F.col("__na")
-        - _ceil_bound(
-            F.lit(2.0 * threshold / (1.0 + threshold)) * F.col("__na")
-        )
+        - _ceil_bound(F.lit(2.0 * t / (1.0 + t)) * F.col("__na"))
         + 1
     )
     a = prefix.select(
@@ -419,7 +440,7 @@ def _prefix_candidates(prefix: SparkDF, threshold: float) -> SparkDF:
         F.col("pos").alias("__pb"),
     )
     alpha = _ceil_bound(
-        F.lit(threshold / (1.0 + threshold)) * (F.col("__na") + F.col("__nb"))
+        F.lit(t / (1.0 + t)) * (F.col("__na") + F.col("__nb"))
     )
     overlap_ub = (
         F.least(
@@ -436,7 +457,7 @@ def _prefix_candidates(prefix: SparkDF, threshold: float) -> SparkDF:
             smaller_first
             & (
                 F.least("__na", "__nb")
-                >= F.lit(threshold) * F.greatest("__na", "__nb")
+                >= F.lit(t) * F.greatest("__na", "__nb")
                 - F.lit(_BOUND_SLACK)
             )
             & (overlap_ub >= alpha)
@@ -536,9 +557,9 @@ def _truncated_bound_filter(
     tail = F.when(
         F.col("__tma") <= F.col("__tmb"), F.col("__tna") - F.col("__ka")
     ).otherwise(F.col("__tnb") - F.col("__kb"))
+    t = _t_lo(threshold)
     alpha = _ceil_bound(
-        F.lit(threshold / (1.0 + threshold))
-        * (F.col("__tna") + F.col("__tnb"))
+        F.lit(t / (1.0 + t)) * (F.col("__tna") + F.col("__tnb"))
     )
     return (
         cands.join(a, "a_id")
@@ -572,7 +593,9 @@ def _hash_order_prefix(
         _sampled_hot_probe(src, id_col, text_col, n) if demote_hot else None
     )
     plen = (
-        F.col("n_sh") - _ceil_bound(F.lit(threshold) * F.col("n_sh")) + 1
+        F.col("n_sh")
+        - _ceil_bound(F.lit(_t_lo(threshold)) * F.col("n_sh"))
+        + 1
     ).cast("int")
     if probe is None:
         ordered = F.array_sort("sh_arr")
@@ -2044,7 +2067,9 @@ def minhash_dedup_pairs(
 
     The verify join re-uses the per-doc shingle arrays, so false
     positives from banding never survive; false-negative rate is the
-    standard (1 - s^r)^b curve.
+    standard (1 - s^r)^b curve. The verify is jaccard_pairs': a
+    candidate pair is kept when its Jaccard, rounded to 4 decimals,
+    is >= threshold, and ``jaccard`` is that rounded value.
 
     Documents with IDENTICAL shingle sets collapse to one
     representative before banding (the fuzzy-pairs distinct-value

@@ -1105,3 +1105,80 @@ def test_jaccard_length_filter_tie(spark):
     prefix = dd._hash_order_prefix(arrs, docs, "doc_id", "text", 3, 0.7, True)
     pruned = dd._truncated_bound_filter(dd._prefix_candidates(prefix, 0.7), arrs, 0.7)
     assert [tuple(r) for r in pruned.collect()] == [(1, 2)]
+
+
+@pytest.fixture(scope="module")
+def long_docs(spark):
+    """Long documents planted in pairs whose exact 3-gram Jaccard sits
+    on both sides of t − 5e-5 = 0.79995 at t = 0.8, and the pairs the
+    DuckDB oracle SQL keeps for them. Every word is distinct, so a doc
+    of w words has w − 2 distinct 3-grams; groups share no word."""
+    import duckdb
+    import pandas as pd
+
+    from dataframe_spark.queries.dedup_q import ORACLES
+
+    def words(g, lo, hi):
+        return [f"g{g}w{i}" for i in range(lo, hi)]
+
+    rows = []
+    # subset pairs: a's c 3-grams all lie in b's u, so J = c / u
+    for g, (c, u) in enumerate([
+        (16000, 20001),  # 0.79996, reported as 0.8
+        (12800, 16001),  # 0.7999500031, reported as 0.8
+        (12796, 15996),  # 0.7999499875, rounds to 0.7999
+        (16000, 19999),  # 0.80004, reported as 0.8
+    ]):
+        a = words(g, 0, c + 2)
+        rows.append((2 * g + 1, " ".join(a)))
+        rows.append((2 * g + 2, " ".join(a + words(g, c + 2, u + 2))))
+    # equal lengths: n 3-grams each, c shared, J = c / (2n − c) =
+    # 0.7999520, reported as 0.8
+    n, c = 15008, 13340
+    shared = words(8, 0, c + 2)
+    rows.append((19, " ".join(shared + words(8, c + 2, n + 2))))
+    rows.append((20, " ".join(shared + words(9, c + 2, n + 2))))
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    want = {
+        (a, b, round(j, 6))
+        for a, b, j in con.execute(ORACLES["q_dedup_ngram_jaccard"]).fetchall()
+    }
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    return docs, want
+
+
+def test_jaccard_rounded_threshold_long_docs(long_docs, monkeypatch):
+    """The verify keeps round(J, 4) >= t, as the oracle does, so a pair
+    with exact J in [t − 5e-5, t) is a pair: every PPJoin bound must
+    hold down to t − 5e-5. Checked on the small path, on the big path
+    with every shared 3-gram demoted (the long side's prefix is then
+    all private grams but one, which only the loosened probe prefix
+    and positional bound admit), and through minhash verify on both
+    sides of the knee."""
+    import dataframe_spark.operators.dedup as dd
+
+    docs, want = long_docs
+    assert want == {(1, 2, 0.8), (3, 4, 0.8), (7, 8, 0.8), (19, 20, 0.8)}
+
+    def run():
+        return {
+            "hash": _pair_set(dd.jaccard_pairs(docs, "doc_id", "text", 3, 0.8)),
+            "df": _pair_set(dd.jaccard_pairs(
+                docs, "doc_id", "text", 3, 0.8, order="df"
+            )),
+            "minhash": _pair_set(dd.minhash_dedup_pairs(
+                docs, "doc_id", "text", 3, 64, 16, 0.8
+            )),
+        }
+
+    for path, got in run().items():
+        assert got == want, ("small", path)
+    monkeypatch.setattr(dd, "_BIG_PATH_KNEE", -1)
+    orig = dd._sampled_hot_probe
+    monkeypatch.setattr(
+        dd, "_sampled_hot_probe",
+        lambda *a, **kw: orig(*a, fraction=1.0, hot_min=2),
+    )
+    for path, got in run().items():
+        assert got == want, ("big", path)
