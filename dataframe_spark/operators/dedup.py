@@ -116,67 +116,19 @@ def shingle_arrays(
     )
 
 
-# shingle-chain engine knee (r13): above this input plan size the
-# mapInArrow tokenize→shingle→xxhash64 kernel amortizes its
-# Python-worker roundtrips; below it the JVM expression chain wins
-# on fixed cost. Placed at the MEASURED crossover (interleaved
-# cold-cache jaccard e2e, best-of-3, same session): sf0.001/sf0.01
-# (~64 KB plans) jvm 0.98-1.17 / 1.15-2.47 s vs arrow 1.23-1.94 /
-# 1.66-1.79 s — jvm wins; sf0.1 (580 KB) jvm 2.20-2.41 vs arrow
-# 1.77-1.93 s and 10x (6.9 MB) jvm 3.75-3.92 vs arrow 3.42-3.52 s —
-# arrow wins and keeps widening (chain stage at 100x: 10.2 -> 2.5 s).
-# So the knee sits between the two regimes; unlike the 32 MB sig
-# knee (_SIG_ARROW_KNEE) the chain kernel pays off from bench scale
-# up because it replaces regex-split + zip_with + array_distinct
-# interpreted work, not just hashing.
-_SHINGLE_ARROW_KNEE = 256 * 1024
-
-
-def hashed_shingle_arrays(
-    df: SparkDF, id_col: str, text_col: str, n: int = 3,
-    engine: str | None = None,
+def _hashed_shingles(
+    df: SparkDF, id_col: str, text_col: str, n: int
 ) -> SparkDF:
-    """The persisted (id, sh_arr: array<bigint>, n_sh) frame every
-    shingle-based operator builds on. Centralized so jaccard_pairs,
-    minhash_dedup_pairs and contamination scoring construct the
-    BYTE-IDENTICAL plan — identical plans share one Spark cache
-    entry, so a query mix over the same corpus tokenizes + shingles
-    + hashes it exactly once (r6).
-
-    ``engine`` (r13, guide §4.2): ``"arrow"`` runs the whole
+    """(id, sh_arr: array<bigint>, n_sh), unpersisted: the whole
     tokenize → shingle → xxhash64 → distinct chain as ONE vectorized
-    mapInArrow kernel (_shingle_kernel); ``"jvm"`` keeps the pure
-    expression chain. Rows are identical either way (pinned by
-    tests/test_dedup.py::test_shingle_kernel_matches_jvm — same ids,
-    same hash values, same in-array order, same n_sh), so every
-    downstream result — jaccard prefixes, minhash signatures and
-    banding, contamination intersections — is unchanged by the
-    engine choice. ``None`` (default) gates on the input plan size
-    at ``_SHINGLE_ARROW_KNEE`` (256 KB — the measured crossover, see
-    the knee comment): sub-bench corpora keep the JVM plan, sf0.1
-    and every decade above take the kernel (at the 1000x cert corpus
-    the JVM chain_persist stage was 65-110 s — the top jaccard
-    stage; see OPTIMIZATION_r13.md). The
-    ``SPARK_GRAFT_SHINGLE_ENGINE`` env var overrides the gate so
-    parity sweeps and certification can oracle-verify either engine
-    at any SF (tools/certify.py arrow_parity)."""
-    import os
-
-    forced = os.environ.get("SPARK_GRAFT_SHINGLE_ENGINE")
-    if forced:
-        engine = forced
-    if engine is None:
-        from ..plans.stats import plan_size_bytes
-
-        engine = (
-            "arrow"
-            if plan_size_bytes(df) > _SHINGLE_ARROW_KNEE
-            else "jvm"
-        )
-    if engine not in ("arrow", "jvm"):
-        raise ValueError(f"engine must be 'arrow' or 'jvm', got {engine!r}")
-    if engine == "jvm":
-        return _reusable(_hash_arrays(shingle_arrays(df, id_col, text_col, n)))
+    mapInArrow kernel (``_shingle_kernel``, r13). Rows equal the JVM
+    expression chain ``_hash_arrays(shingle_arrays(...))`` — same ids,
+    same hash values, same in-array order, same n_sh — which the
+    kernel-vs-reference tests pin (tests/test_dedup.py). At the 1000x
+    cert corpus that chain's persist stage was 65-110 s, the top
+    jaccard stage (OPTIMIZATION_r13.md); re-measured against the
+    kernel at sf0.001-0.1 after the worker daemon's fixed-cost cut,
+    the kernel won every pair (ROADMAP direction 2)."""
     from ..plans.hints import ensure_scan_parallelism
 
     sdf = ensure_scan_parallelism(df)
@@ -184,12 +136,25 @@ def hashed_shingle_arrays(
     # explicit 2-column select: mapInArrow is opaque to column
     # pruning — without it the kernel would be shipped every source
     # column (guide §4.1)
-    out = sdf.select(
+    return sdf.select(
         F.col(id_col).alias("id"), F.col(text_col).alias("__text")
     ).mapInArrow(
         _shingle_kernel(n), f"id {id_type}, sh_arr array<bigint>, n_sh int"
     )
-    return _reusable(out)
+
+
+def hashed_shingle_arrays(
+    df: SparkDF, id_col: str, text_col: str, n: int = 3
+) -> SparkDF:
+    """The persisted (id, sh_arr: array<bigint>, n_sh) frame every
+    shingle-based operator builds on. Centralized so jaccard_pairs,
+    minhash_dedup_pairs and contamination scoring construct the
+    BYTE-IDENTICAL plan — identical plans share one Spark cache
+    entry, so a query mix over the same corpus tokenizes + shingles
+    + hashes it exactly once (r6). The chain runs as the
+    ``_shingle_kernel`` mapInArrow kernel at every input size (see
+    ``_hashed_shingles``); docs with fewer than n tokens drop out."""
+    return _reusable(_hashed_shingles(df, id_col, text_col, n))
 
 
 def shingles(df: SparkDF, id_col: str, text_col: str, n: int = 3) -> SparkDF:
@@ -702,10 +667,8 @@ def _sampled_hot_probe(
     order, so the pair set is unchanged. Caps keep the literals
     bounded: the top-count shingles win, exactly the set whose
     buckets matter."""
-    sample = _hash_arrays(
-        shingle_arrays(
-            src.sample(fraction=fraction, seed=seed), id_col, text_col, n
-        )
+    sample = _hashed_shingles(
+        src.sample(fraction=fraction, seed=seed), id_col, text_col, n
     )
     rows = (
         sample.select(F.explode("sh_arr").alias("h"))
@@ -762,19 +725,10 @@ def _materialize(df: SparkDF) -> None:
     2.5-2.8x wall inflation on the jaccard big path (see
     jaccard_pairs). Connect sessions without count support skip the
     barrier with a FallbackWarning (once per process): the plan stays
-    correct, only the scheduling optimization is lost.
-
-    ``SPARK_GRAFT_NO_CACHE_BARRIER=1`` turns every barrier into a
-    no-op (r12): the barrier is a pure scheduling optimization with
-    zero effect on results, and the toggle lets the certification
-    A/B (tools/certify.py barrier_ab) measure barrier-on vs
-    barrier-off walls of the IDENTICAL plan interleaved in one
-    session — committing the r11 cache-racing diagnosis as an
-    artifact instead of prose (VERDICT r11 ask #6)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_CACHE_BARRIER") == "1":
-        return
+    correct, only the scheduling optimization is lost. The barrier
+    never changes a result; its wall effect is committed evidence
+    (CERT_barrier_ab.json, the r12 barrier-on vs barrier-off A/B of
+    one plan at the 1000x cert corpus)."""
     try:
         df.count()
     except Exception as exc:  # Connect count quirks
@@ -912,8 +866,8 @@ def _xxh64_np(data, starts, lengths):
 
 
 def _shingle_kernel(n: int):
-    """mapInArrow kernel computing EXACTLY ``hashed_shingle_arrays``'
-    JVM rows — tokenize, word-n-gram shingles, per-doc distinct,
+    """mapInArrow kernel computing EXACTLY the rows of the JVM
+    reference chain ``_hash_arrays(shingle_arrays(...))`` — tokenize, word-n-gram shingles, per-doc distinct,
     xxhash64 — from (id, __text) batches; output (id, sh_arr:
     array<bigint>, n_sh int), rows with zero shingles dropped (guide
     §4.2: the whole chain is the corpus-scale map stage; at the
@@ -1067,7 +1021,11 @@ def _shingle_kernel(n: int):
 
 
 def _hash_arrays(arrs: SparkDF) -> SparkDF:
-    """Per-doc shingle arrays mapped to xxhash64 longs — set
+    """Test reference for ``_hashed_shingles``, on no product path:
+    ``_hash_arrays(shingle_arrays(...))`` is the JVM expression chain
+    the shingle kernel must reproduce row for row.
+
+    Per-doc shingle arrays mapped to xxhash64 longs — set
     cardinality is preserved (array_distinct ran on the strings;
     a 64-bit in-doc collision is ~n²/2⁶⁴, vanishing), so intersect
     counts are exact while each pairwise comparison touches 8 bytes
@@ -1532,14 +1490,17 @@ def contamination_scores(
     explode + one count groupBy, O(corpus + bench) at any scale
     (caught by the r5 full-headline 10x sweep: the in-row path went
     super-linear when the bench side grew with the corpus). Both
-    paths produce identical rows; pass True/False to force one."""
+    paths produce identical rows; pass True/False to force one. The
+    corpus side is hashed by the shingle kernel (``_hashed_shingles``,
+    unpersisted); the bench side, an exploded string set with no id
+    column, stays an expression chain."""
     if broadcast_bench is None:
         from ..plans.stats import plan_size_bytes
 
         broadcast_bench = (
             plan_size_bytes(bench_df) <= BENCH_BROADCAST_MAX_BYTES
         )
-    corpus = _hash_arrays(shingle_arrays(df, id_col, text_col, n))
+    corpus = _hashed_shingles(df, id_col, text_col, n)
     bench_toks = F.filter(tokens_expr(bench_text_col), lambda x: x != F.lit(""))
     bench = bench_df.select(
         F.explode(shingle_array_expr(bench_toks, n)).alias("__s")
@@ -1751,7 +1712,6 @@ def minhash_signatures(
     text_col: str,
     n: int = 3,
     num_perm: int = 64,
-    engine: str | None = None,
 ) -> SparkDF:
     """(id, sig: array<bigint>) — num_perm min-hashes per document.
 
@@ -1763,29 +1723,19 @@ def minhash_signatures(
     array: a narrow projection fused into the scan, ZERO shuffles —
     the former explode + 64-way min-agg formulation paid a full
     shuffle of every (id, hash) row for the same result (2x slower
-    at sf0.1). ``engine`` (r12): ``"arrow"`` runs the
-    num_perm×|sh_arr| hash loop as a vectorized mapInArrow kernel,
-    ``"jvm"`` the original array_min ∘ transform expression —
-    values bit-identical either way; ``None`` (default) gates on
-    the input plan size like minhash_dedup_pairs (small corpora
-    skip the Python-worker roundtrip)."""
-    forced = __import__("os").environ.get("SPARK_GRAFT_SIG_ENGINE")
-    if forced:
-        engine = forced
-    if engine is None:
-        from ..plans.stats import plan_size_bytes
-
-        engine = (
-            "arrow"
-            if plan_size_bytes(df) > _SIG_ARROW_KNEE
-            else "jvm"
-        )
-    arrs_h = _hash_arrays(shingle_arrays(df, id_col, text_col, n))
-    return _minhash_sigs_frame(arrs_h, num_perm, engine)
+    at sf0.1). Both the shingle hashes and the num_perm×|sh_arr|
+    hash loop run as mapInArrow kernels (``_hashed_shingles``,
+    ``_minhash_sigs_frame``), bit-identical to the expression
+    references the tests compare them with."""
+    return _minhash_sigs_frame(
+        _hashed_shingles(df, id_col, text_col, n), num_perm
+    )
 
 
 def _minhash_sig_expr(num_perm: int):
-    """array<bigint> minhash signature over a hashed shingle array.
+    """array<bigint> minhash signature over a hashed shingle array —
+    the test reference ``_minhash_sig_kernel`` is compared with, on
+    no product path.
 
     ONE nested higher-order expression — the permutation loop runs at
     RUNTIME over ``sequence(0, num_perm-1)`` instead of unrolling
@@ -1804,12 +1754,6 @@ def _minhash_sig_expr(num_perm: int):
             F.transform("sh_arr", lambda h: F.xxhash64(h, i))
         ),
     )
-
-
-# signature-engine knee (r12): above this input plan size the
-# mapInArrow signature kernel amortizes its Python-worker roundtrip
-# (see minhash_dedup_pairs for the measured crossover)
-_SIG_ARROW_KNEE = 32 * 1024 * 1024
 
 
 def _minhash_sig_kernel(num_perm: int):
@@ -1921,18 +1865,10 @@ def _minhash_sig_kernel(num_perm: int):
     return kernel
 
 
-def _minhash_sigs_frame(
-    src: SparkDF, num_perm: int, engine: str = "arrow"
-) -> SparkDF:
-    """(id, sig) over a frame carrying (id, sh_arr), on either
-    engine — ``"arrow"`` runs ``_minhash_sig_kernel``, ``"jvm"``
-    the pure-expression plan. Values are bit-identical
-    (test-pinned), so the banding candidate set and every
-    downstream result are unchanged by the engine choice."""
-    if engine not in ("arrow", "jvm"):
-        raise ValueError(f"engine must be 'arrow' or 'jvm', got {engine!r}")
-    if engine == "jvm":
-        return src.select("id", _minhash_sig_expr(num_perm).alias("sig"))
+def _minhash_sigs_frame(src: SparkDF, num_perm: int) -> SparkDF:
+    """(id, sig) over a frame carrying (id, sh_arr), computed by
+    ``_minhash_sig_kernel``; values are bit-identical to the
+    ``_minhash_sig_expr`` reference (test-pinned)."""
     id_type = src.schema["id"].dataType.simpleString()
     # explicit select: mapInArrow is opaque to column pruning —
     # without it the kernel would be shipped every source column
@@ -2061,7 +1997,6 @@ def minhash_dedup_pairs(
     bands: int = 16,
     threshold: float = 0.8,
     max_bucket: int | None = None,
-    engine: str | None = None,
 ) -> SparkDF:
     """Full pipeline: minhash → LSH candidates → exact-Jaccard verify.
 
@@ -2082,14 +2017,9 @@ def minhash_dedup_pairs(
     identical to the uncollapsed plan; only the candidate join is
     spared the quadratic blowup. ``max_bucket`` additionally caps
     surviving band buckets (recall-trading, off by default; see
-    lsh_candidate_pairs). ``engine`` picks the signature
-    implementation — ``"arrow"`` kernel / ``"jvm"`` expression,
-    bit-identical values, identical output; ``None`` (default)
-    gates on the input plan size at ``_SIG_ARROW_KNEE`` (32 MB —
-    lower than the fixed-stage knee because the kernel's only
-    fixed cost is a ~0.3 s Python-worker roundtrip; measured
-    crossover in the body comment), so small corpora keep the JVM
-    expression and big ones take the kernel."""
+    lsh_candidate_pairs). Shingle hashes and signatures come from
+    the mapInArrow kernels at every input size
+    (``hashed_shingle_arrays``, ``_minhash_sigs_frame``)."""
     if bands < 1 or num_perm % bands != 0:
         # non-divisible num_perm would silently discard trailing
         # signature rows; bands > num_perm would degenerate to one
@@ -2103,24 +2033,9 @@ def minhash_dedup_pairs(
     arrs_h = hashed_shingle_arrays(df, id_col, text_col, n)
     from ..plans.stats import plan_size_bytes
 
-    # _BIG_PATH_KNEE gates the fixed-stage mechanisms (the
-    # counted broadcast-verify, the sigs cache barrier); the
-    # signature engine has its own MUCH lower knee because its
-    # fixed cost is only the Python-worker roundtrip (~0.3 s),
-    # not extra stages — measured crossover (interleaved A/B,
-    # cold-cache e2e): sf0.1 (0.6 MB plan) jvm wins by 0.35 s,
-    # 10x (7 MB) a wash (4.53 vs 4.54 s), 100x (70 MB) the kernel
-    # wins the signature stage 9.03 -> 2.70 s
-    sz = plan_size_bytes(df)
-    big = sz > _BIG_PATH_KNEE
-    # SPARK_GRAFT_SIG_ENGINE overrides the knee so parity sweeps can
-    # oracle-verify the kernel path at driver SFs (r13, VERDICT r12
-    # ask #3b; tools/certify.py arrow_parity)
-    forced = __import__("os").environ.get("SPARK_GRAFT_SIG_ENGINE")
-    if forced:
-        engine = forced
-    if engine is None:
-        engine = "arrow" if sz > _SIG_ARROW_KNEE else "jvm"
+    # _BIG_PATH_KNEE gates the fixed-stage mechanisms (the counted
+    # broadcast-verify, the sigs cache barrier, the persisted bands)
+    big = plan_size_bytes(df) > _BIG_PATH_KNEE
     # group stats shuffle ONLY (group-hash, id) pairs — the shingle
     # arrays never move for the collapse; representative rows are
     # then picked by a narrow join (the gstats side is 2 slim
@@ -2150,14 +2065,9 @@ def minhash_dedup_pairs(
     # persisted (r6): the band self-join consumes sigs on both sides
     # and AQE does not reuse the exchange across the two aliased
     # projections — without the persist the num_perm×|sh_arr|
-    # signature hashing ran once per side. The hashing itself runs
-    # on the arrow kernel above the size knee (r12,
-    # _minhash_sigs_frame): same values bit-for-bit, so the
-    # candidate set is unchanged either way
+    # signature hashing ran once per side
     sigs = _reusable(
-        _minhash_sigs_frame(
-            arrs_h.join(gstats.select("id"), "id"), num_perm, engine
-        )
+        _minhash_sigs_frame(arrs_h.join(gstats.select("id"), "id"), num_perm)
     )
     if big:
         # barrier: the banded frame (persisted below) derives from

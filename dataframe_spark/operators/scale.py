@@ -147,10 +147,6 @@ def robust_scale(
     )
 
 
-# widest replicate count that runs as 2B agg columns in one pass
-# (beyond it the explode shape avoids codegen-stressing agg lists)
-BOOTSTRAP_WIDE_MAX_B = 128
-
 # inverse-CDF thresholds for Poisson(1), capped at 8 (tail mass
 # ~1e-5 folded into the cap) — shared verbatim by the DuckDB oracle
 POISSON1_CDF = [
@@ -175,15 +171,16 @@ def poisson1_from_uniform(u):
 
 
 def _bootstrap_arrow_kernel(group_names: Sequence[str], B: int):
-    """mapInArrow partial-aggregation kernel for bootstrap_mean_se's
-    arrow engine. Input batches: (group_cols..., __x double, __kb
+    """mapInArrow partial-aggregation kernel for bootstrap_mean_se.
+    Input batches: (group_cols..., __x double, __kb
     string = the \\x1f-joined key prefix of row_digest). Emits, per
     group value seen by the task, B rows (__b, partial sum(w_b*x),
     partial sum(w_b)) plus one __b = -1 row carrying the plain-mean
     partials (sum(x), count) — one corpus pass covers both the
     replicate sums and the plain mean.
 
-    Bit-equivalence with the JVM expression path (pinned by
+    Bit-equivalence with the JVM expression reference
+    (``_bootstrap_mean_se_jvm``; pinned by
     tests/test_ml.py::test_bootstrap_engines_agree and the weight
     unit test): md5 digest bytes read as big-endian uint32 words ==
     conv(substring(hex, 1+8j, 8), 16, 10); u = word / 2**32 is an
@@ -314,7 +311,6 @@ def bootstrap_mean_se(
     key_cols: Sequence[str],
     group_cols: Sequence[str] | None = None,
     n_replicates: int = 50,
-    engine: str = "arrow",
 ) -> SparkDF:
     """Deterministic Poisson bootstrap of the mean (Chamandy et al.,
     "Estimating Uncertainty for Massive Data Streams", Google 2012;
@@ -328,97 +324,101 @@ def bootstrap_mean_se(
 
     Weight scheme (r8): one md5 digest covers FOUR replicates —
     uniform b reads hex slice ``b % 4`` of md5(key_cols, b // 4)
-    (text.row_digest / row_uniform_slice). The digest was the whole
-    per-row cost: the r7 plan exploded the replicate index and
-    evaluated md5(key, b) on every (row × b) pair — B md5s per row.
-    Now ceil(B/4) digests are bound to real columns once (a
-    projection boundary, not codegen-CSE luck) and all B weights
-    derive in-row.
+    (text.row_digest / row_uniform_slice), so a row costs ceil(B/4)
+    digests, not B.
 
-    Engines (r12): ``engine="arrow"`` (default) runs the whole
-    per-row derivation — digests, uniforms, Poisson ladder, partial
-    sums — as ONE mapInArrow kernel (guide §4.2: hand whole batches
-    to vectorized native code): hashlib computes the identical md5
+    The whole per-row derivation — digests, uniforms, Poisson
+    ladder, partial sums — runs as ONE mapInArrow kernel
+    (``_bootstrap_arrow_kernel``; guide §4.2: hand whole batches to
+    vectorized native code): hashlib computes the identical md5
     digests, the uniform is the digest's big-endian uint32 word
     (== conv(substring(hex),16,10), exact), the ladder is one
     np.searchsorted, and each task emits only #groups × (B+1)
     partial-sum rows, so the exchange is tiny and the plain mean
-    rides the same single corpus pass. Motivation (measured r12,
-    guide §1): the JVM expression path's 100-expression hash-agg
-    fails whole-stage codegen ("Code grows beyond 64 KB") and
-    evaluates ~30M interpreted conv+CASE trees at sf0.1 — its
-    measured floor (~2.8-3.3 s) is 50-100x numpy's cost for the
-    same arithmetic. ``engine="jvm"`` keeps the pure-expression
-    plan (B ≤ 128 wide path: NO explode — one hash-agg computes all
-    B replicate partial sums as 2B agg expressions per group, the
-    melt happens on #groups × B rows after, measured at 10x sf0.1
-    26.5 s → 4.7 s vs the r7 explode; larger B keeps the explode
-    shape). Both engines draw the SAME weights from the SAME
-    chunked digests; equality is test-pinned
-    (test_bootstrap_engines_agree). Null values are excluded like
-    avg does on either engine."""
-    from ..operators.text import row_digest, row_uniform_slice
-
+    rides the same single corpus pass. Measured r12 (guide §1): the
+    pure-expression plan of the time (a 100-expression hash-agg)
+    failed whole-stage codegen ("Code grows beyond 64 KB") and
+    evaluated ~30M interpreted conv+CASE trees at sf0.1 — ~2.8-3.3 s,
+    50-100x numpy's cost for the same arithmetic. Expressions survive
+    only in the test reference ``_bootstrap_mean_se_jvm``: both draw the SAME
+    weights from the SAME chunked digests, and equality is
+    test-pinned (test_bootstrap_engines_agree). Null and NaN values
+    are excluded like avg does."""
     if n_replicates < 2:
         raise ValueError(f"need >= 2 replicates, got {n_replicates}")
-    if engine not in ("arrow", "jvm"):
-        raise ValueError(f"engine must be 'arrow' or 'jvm', got {engine!r}")
     if not key_cols:
-        # ADVICE r12 #2: with zero key columns the two engines would
-        # hash different byte strings (md5(b"\x1f0") vs md5(b"0"))
-        # and draw DIFFERENT weights; a row-identity key set is
-        # semantically required anyway, so fail loudly
+        # ADVICE r12 #2: with zero key columns the kernel and the
+        # expression reference would hash different byte strings
+        # (md5(b"\x1f0") vs md5(b"0")) and draw DIFFERENT weights; a
+        # row-identity key set is semantically required anyway, so
+        # fail loudly
         raise ValueError("key_cols must name at least one column")
     B = int(n_replicates)
     keys = list(group_cols or [])
     v = F.col(value_col).cast("double")
-    if engine == "arrow":
-        keyed = [
-            F.coalesce(F.col(k).cast("string"), F.lit("\x00"))
-            for k in key_cols
-        ]
-        src = df.where(v.isNotNull() & ~F.isnan(v)).select(
-            *keys,
-            v.alias("__x"),
-            F.concat_ws("\x1f", *keyed).alias("__kb"),
-        )
-        gtypes = ", ".join(
-            f"`{k}` {src.schema[k].dataType.simpleString()}" for k in keys
-        )
-        schema = (gtypes + ", " if gtypes else "") + (
-            "__b int, __swx double, __sw double"
-        )
-        part = src.mapInArrow(_bootstrap_arrow_kernel(keys, B), schema)
-        # Single lineage: one global merge of the per-task partials
-        # (exchange keyed (keys, __b)), then ONE conditional agg per
-        # key folds the replicate rows into se_boot and the __b = -1
-        # row into mean/n — no self-join, so the kernel subtree
-        # appears (and executes) exactly once in the plan
-        tot = part.groupBy(*keys, "__b").agg(
-            F.sum("__swx").alias("__swx"), F.sum("__sw").alias("__sw")
-        )
-        is_rep = (F.col("__b") >= 0) & (F.col("__sw") > 0)
-        mb = F.when(is_rep, F.col("__swx") / F.col("__sw"))
-        is_plain = F.col("__b") == -1
-        out = tot.groupBy(*keys).agg(
-            (
-                F.max(F.when(is_plain, F.col("__swx")))
-                / F.max(F.when(is_plain, F.col("__sw")))
-            ).alias("mean"),
-            F.max(F.when(is_plain, F.col("__sw")))
-            .cast("long")
-            .alias("n"),
-            F.stddev_samp(mb).alias("se_boot"),
-            F.count(mb).alias("n_replicates"),
-        )
-        return out.select(*keys, "mean", "n", "se_boot", "n_replicates")
-    n_chunks = (B + 3) // 4
+    keyed = [
+        F.coalesce(F.col(k).cast("string"), F.lit("\x00"))
+        for k in key_cols
+    ]
+    src = df.where(v.isNotNull() & ~F.isnan(v)).select(
+        *keys,
+        v.alias("__x"),
+        F.concat_ws("\x1f", *keyed).alias("__kb"),
+    )
+    gtypes = ", ".join(
+        f"`{k}` {src.schema[k].dataType.simpleString()}" for k in keys
+    )
+    schema = (gtypes + ", " if gtypes else "") + (
+        "__b int, __swx double, __sw double"
+    )
+    part = src.mapInArrow(_bootstrap_arrow_kernel(keys, B), schema)
+    # Single lineage: one global merge of the per-task partials
+    # (exchange keyed (keys, __b)), then ONE conditional agg per
+    # key folds the replicate rows into se_boot and the __b = -1
+    # row into mean/n — no self-join, so the kernel subtree
+    # appears (and executes) exactly once in the plan
+    tot = part.groupBy(*keys, "__b").agg(
+        F.sum("__swx").alias("__swx"), F.sum("__sw").alias("__sw")
+    )
+    is_rep = (F.col("__b") >= 0) & (F.col("__sw") > 0)
+    mb = F.when(is_rep, F.col("__swx") / F.col("__sw"))
+    is_plain = F.col("__b") == -1
+    out = tot.groupBy(*keys).agg(
+        (
+            F.max(F.when(is_plain, F.col("__swx")))
+            / F.max(F.when(is_plain, F.col("__sw")))
+        ).alias("mean"),
+        F.max(F.when(is_plain, F.col("__sw")))
+        .cast("long")
+        .alias("n"),
+        F.stddev_samp(mb).alias("se_boot"),
+        F.count(mb).alias("n_replicates"),
+    )
+    return out.select(*keys, "mean", "n", "se_boot", "n_replicates")
+
+
+def _bootstrap_mean_se_jvm(
+    df: SparkDF,
+    value_col: str,
+    key_cols: Sequence[str],
+    group_cols: Sequence[str] | None = None,
+    n_replicates: int = 50,
+) -> SparkDF:
+    """Test reference for bootstrap_mean_se, on no product path: the
+    same weights as pure Spark expressions (row_digest chunks →
+    row_uniform_slice → the poisson1 CASE ladder), one exploded row
+    per (row, replicate), then a groupBy per replicate."""
+    from ..operators.text import row_digest, row_uniform_slice
+
+    B = int(n_replicates)
+    keys = list(group_cols or [])
+    v = F.col(value_col).cast("double")
     src = df.where(v.isNotNull() & ~F.isnan(v)).select(
         *keys,
         v.alias("__x"),
         *[
             row_digest(key_cols, str(c)).alias(f"__h{c}")
-            for c in range(n_chunks)
+            for c in range((B + 3) // 4)
         ],
     )
 
@@ -426,48 +426,19 @@ def bootstrap_mean_se(
         u = row_uniform_slice(F.col(f"__h{b // 4}"), b % 4)
         return poisson1_from_uniform(u).cast("double")
 
-    if B <= BOOTSTRAP_WIDE_MAX_B:
-        wide = src.groupBy(*keys).agg(
-            *[F.sum(w(b) * F.col("__x")).alias(f"__swx_{b}") for b in range(B)],
-            *[F.sum(w(b)).alias(f"__sw_{b}") for b in range(B)],
-        )
-        melt = F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.col(f"__swx_{b}").alias("swx"),
-                        F.col(f"__sw_{b}").alias("sw"),
-                    )
-                    for b in range(B)
-                ]
-            )
-        )
-        per_rep = (
-            wide.select(*keys, melt.alias("__r"))
-            .where(F.col("__r.sw") > 0)
-            .select(
-                *keys,
-                (F.col("__r.swx") / F.col("__r.sw")).alias("__mb"),
-            )
-        )
-    else:
-        rep = src.select(
-            *keys,
-            "__x",
-            F.posexplode(
-                F.array(*[w(b) for b in range(B)])
-            ).alias("__b", "__w"),
-        )
-        per_rep = (
-            rep.select(*keys, "__b", (F.col("__w") * F.col("__x")).alias("__wx"),
-                       F.col("__w"))
-            .groupBy(*keys, "__b")
-            .agg(F.sum("__wx").alias("__swx"), F.sum("__w").alias("__sw"))
-            .where(F.col("__sw") > 0)
-            .select(
-                *keys, (F.col("__swx") / F.col("__sw")).alias("__mb")
-            )
-        )
+    rep = src.select(
+        *keys,
+        "__x",
+        F.posexplode(F.array(*[w(b) for b in range(B)])).alias("__b", "__w"),
+    )
+    per_rep = (
+        rep.select(*keys, "__b", (F.col("__w") * F.col("__x")).alias("__wx"),
+                   F.col("__w"))
+        .groupBy(*keys, "__b")
+        .agg(F.sum("__wx").alias("__swx"), F.sum("__w").alias("__sw"))
+        .where(F.col("__sw") > 0)
+        .select(*keys, (F.col("__swx") / F.col("__sw")).alias("__mb"))
+    )
     plain = (
         df.where(v.isNotNull() & ~F.isnan(v))
         .groupBy(*keys)

@@ -420,9 +420,10 @@ def q_decontaminate(spark, sf_dir):
     Both sides derive from the SAME persisted hashed-shingle frame
     the n=3 dedup queries build (hashed_shingle_arrays — byte-
     identical plan ⇒ shared cache entry), so in a query mix the
-    corpus is tokenized once, not once per operator (r6). The
-    broadcast-vs-shuffle gate keeps its pre-r6 semantics: it sizes
-    the RAW bench docs, exactly what contamination_scores gates on."""
+    corpus is tokenized once, not once per operator (r6), by the
+    shingle kernel at every scale factor. The broadcast-vs-shuffle
+    gate keeps its pre-r6 semantics: it sizes the RAW bench docs,
+    exactly what contamination_scores gates on."""
     from ..operators.dedup import (
         BENCH_BROADCAST_MAX_BYTES,
         contamination_scores_hashed,

@@ -1,9 +1,14 @@
+import os
 import sys
 from pathlib import Path
 
 import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+# The session default (8g) lets the test JVM's heap grow to ~9 GB
+# resident on these tiny inputs; bound it so the suite can share a box
+# with a second Spark session. An explicit setting still wins.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
 
 SF_DIR = "/root/testdata/sf0.001"
 

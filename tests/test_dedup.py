@@ -292,9 +292,14 @@ def test_minhash_identical_docs_collapse(spark):
     assert sigs_rows.count() == n + 2
 
 
+def _jvm_hashed_shingles(df):
+    """The JVM expression reference for the shingle kernel."""
+    return dedup._hash_arrays(dedup.shingle_arrays(df, "doc_id", "text", 3))
+
+
 def test_minhash_sig_kernel_matches_jvm(spark):
-    """The arrow signature kernel must reproduce the JVM expression
-    EXACTLY (integer equality over every doc and permutation): the
+    """minhash_signatures (shingle and signature kernels) must
+    reproduce the JVM expression reference EXACTLY (integer equality over every doc and permutation): the
     banding candidate set — and with it q_dedup_minhash's
     deterministic 100% recall at the driver SFs — depends on the
     values, so bit-equality is the equivalence proof, not a
@@ -308,8 +313,10 @@ def test_minhash_sig_kernel_matches_jvm(spark):
         for i in range(200)
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = dedup.minhash_signatures(df, "doc_id", "text", 3, 64, engine="arrow")
-    j = dedup.minhash_signatures(df, "doc_id", "text", 3, 64, engine="jvm")
+    a = dedup.minhash_signatures(df, "doc_id", "text", 3, 64)
+    j = _jvm_hashed_shingles(df).select(
+        "id", dedup._minhash_sig_expr(64).alias("sig")
+    )
     av = {r["id"]: r["sig"] for r in a.collect()}
     jv = {r["id"]: r["sig"] for r in j.collect()}
     assert len(av) == 200
@@ -319,15 +326,18 @@ def test_minhash_sig_kernel_matches_jvm(spark):
 def test_minhash_sig_kernel_empty_array_matches_jvm(spark):
     """Defensive parity for an input minhash_signatures itself never
     produces (shingle_arrays filters n_sh > 0): an EMPTY sh_arr row
-    yields num_perm null entries on both engines (array_min over an
-    empty transform is null per permutation)."""
-    from dataframe_spark.operators.dedup import _minhash_sigs_frame
+    yields num_perm null entries from the kernel and the expression
+    reference alike (array_min over an empty transform is null per
+    permutation)."""
+    from dataframe_spark.operators.dedup import (
+        _minhash_sig_expr, _minhash_sigs_frame)
 
     src = spark.createDataFrame(
         [(1, [123456789, -42]), (2, [])], "id long, sh_arr array<bigint>"
     )
-    a = {r["id"]: r["sig"] for r in _minhash_sigs_frame(src, 8, "arrow").collect()}
-    j = {r["id"]: r["sig"] for r in _minhash_sigs_frame(src, 8, "jvm").collect()}
+    a = {r["id"]: r["sig"] for r in _minhash_sigs_frame(src, 8).collect()}
+    ref = src.select("id", _minhash_sig_expr(8).alias("sig"))
+    j = {r["id"]: r["sig"] for r in ref.collect()}
     assert a == j
     assert a[2] == [None] * 8
 
@@ -342,7 +352,7 @@ def test_shingle_kernel_matches_jvm(spark):
     The corpus covers every boundary the chain has: Java-\\s-class
     whitespace runs (tab/newline/vtab/formfeed/cr), leading/trailing
     whitespace vs Spark's space-only trim, empty and whitespace-only
-    and sub-n-token docs (dropped on both engines), repeated
+    and sub-n-token docs (dropped by both), repeated
     shingles (distinct order), case folding incl. non-ASCII Unicode
     (Python str.lower fallback vs UTF8String.toLowerCase), non-\\s
     Unicode whitespace kept inside tokens, >32-byte windows (the
@@ -367,8 +377,8 @@ def test_shingle_kernel_matches_jvm(spark):
     df = spark.createDataFrame(
         [(i, d) for i, d in enumerate(docs)], "doc_id long, text string"
     )
-    j = dedup.hashed_shingle_arrays(df, "doc_id", "text", 3, engine="jvm")
-    a = dedup.hashed_shingle_arrays(df, "doc_id", "text", 3, engine="arrow")
+    j = _jvm_hashed_shingles(df)
+    a = dedup.hashed_shingle_arrays(df, "doc_id", "text", 3)
     jr = [(r.id, list(r.sh_arr), r.n_sh) for r in j.orderBy("id").collect()]
     ar = [(r.id, list(r.sh_arr), r.n_sh) for r in a.orderBy("id").collect()]
     assert len(jr) > 0 and jr == ar
@@ -399,7 +409,7 @@ def test_shingle_kernel_mixed_ascii_batch_matches_jvm(spark):
     df = spark.createDataFrame(
         list(enumerate(docs)), "doc_id long, text string"
     )
-    j = dedup.hashed_shingle_arrays(df, "doc_id", "text", 3, engine="jvm")
+    j = _jvm_hashed_shingles(df)
     want = [(r.id, list(r.sh_arr), r.n_sh) for r in j.orderBy("id").collect()]
     assert len(want) == len(docs) and got == want
 
@@ -437,9 +447,9 @@ def test_xxh64_kernel_exact(spark):
     assert list(got) == expected
 
 
-def test_jaccard_pairs_engine_invariant(spark, monkeypatch):
-    """End-to-end: jaccard_pairs output is identical under either
-    shingle engine (the env override is the cert/parity hook)."""
+def test_jaccard_pairs_engine_invariant(spark):
+    """End-to-end on the kernel-hashed shingles: docs 1 and 3 are
+    identical, doc 2 shares 5 of their 6 3-grams (J = 5/7)."""
     rows = [
         (1, "alpha beta gamma delta epsilon zeta eta theta"),
         (2, "alpha beta gamma delta epsilon zeta eta iota"),
@@ -447,14 +457,64 @@ def test_jaccard_pairs_engine_invariant(spark, monkeypatch):
         (4, "totally different words in this document here now"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {}
-    for eng in ("jvm", "arrow"):
-        monkeypatch.setenv("SPARK_GRAFT_SHINGLE_ENGINE", eng)
-        pairs = dedup.jaccard_pairs(df, "doc_id", "text", 3, 0.5)
-        out[eng] = sorted(
-            (r.a_id, r.b_id, r.jaccard) for r in pairs.collect()
-        )
-    assert out["jvm"] == out["arrow"] and len(out["jvm"]) == 3
+    pairs = dedup.jaccard_pairs(df, "doc_id", "text", 3, 0.5)
+    got = sorted((r.a_id, r.b_id, r.jaccard) for r in pairs.collect())
+    assert got == [(1, 2, 0.7143), (1, 3, 1.0), (2, 3, 0.7143)]
+
+
+def test_product_paths_plan_the_arrow_kernels(docs, monkeypatch):
+    """Every product path that hashes shingles or builds signatures
+    plans the mapInArrow kernels at any input size: on the sf0.001
+    documents (a parquet scan whose plan is far below any size gate;
+    a createDataFrame input would not do, its plan size is unknown
+    and reads as huge) no zip_with shingle chain and no array_min
+    signature expression is planned. contamination_scores' bench
+    side (an exploded string set with no ids) keeps its own
+    expression chain, so its plan holds exactly that chain's
+    zip_with calls and no more."""
+    from dataframe_spark.plans.stats import plan_size_bytes
+
+    assert plan_size_bytes(docs) < 256 * 1024
+    bench = docs.where(F.col("doc_id") % 97 == 0)
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    sampled = []
+    cls = type(docs)
+    collect = cls.collect
+
+    def spy(self):
+        sampled.append(plan(self))
+        return collect(self)
+
+    monkeypatch.setattr(cls, "collect", spy)
+    dedup._sampled_hot_probe(docs, "doc_id", "text", 3, fraction=1.0)
+    monkeypatch.setattr(cls, "collect", collect)
+    assert len(sampled) == 1
+
+    plans = {
+        "hashed_shingle_arrays": plan(
+            dedup.hashed_shingle_arrays(docs, "doc_id", "text", 3)),
+        "minhash_signatures": plan(
+            dedup.minhash_signatures(docs, "doc_id", "text", 3, 64)),
+        "minhash_dedup_pairs": plan(
+            dedup.minhash_dedup_pairs(docs, "doc_id", "text", 3, 64, 16)),
+        "_sampled_hot_probe": sampled[0],
+    }
+    for name, p in plans.items():
+        assert "MapInArrow" in p, name
+        assert "zip_with" not in p, name
+    for name in ("minhash_signatures", "minhash_dedup_pairs"):
+        assert "array_min" not in plans[name], name
+
+    scores = plan(dedup.contamination_scores(
+        docs, "doc_id", "text", bench, "text", 3))
+    toks = F.filter(dedup.tokens_expr("text"), lambda x: x != F.lit(""))
+    bench_chain = plan(
+        bench.select(F.explode(dedup.shingle_array_expr(toks, 3))))
+    assert "MapInArrow" in scores
+    assert scores.count("zip_with") == bench_chain.count("zip_with") > 0
 
 
 def test_lsh_max_bucket_caps_candidates(spark):

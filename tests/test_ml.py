@@ -703,40 +703,10 @@ def test_bootstrap_se_statistical_properties(spark):
         bootstrap_mean_se(df, "x", ["id"], n_replicates=1)
 
 
-def test_bootstrap_wide_and_explode_paths_agree(spark, monkeypatch):
-    """The r8 wide path (2B agg columns, no explode) and the
-    explode path draw weights from the SAME chunked digests and
-    must produce identical replicate SEs up to float summation
-    order (the two plans sum the same weighted terms in different
-    orders — ulp-level drift, far inside the query contract's 4dp
-    rounding); exercised by forcing the gate both ways at one B."""
-    import pytest as _pytest
-
-    import dataframe_spark.operators.scale as scale
-    from pyspark.sql import functions as F
-
-    df = spark.range(500).select(
-        F.col("id"), (F.col("id") % 37).cast("double").alias("x"),
-        (F.col("id") % 3).cast("int").alias("g"),
-    )
-    wide = scale.bootstrap_mean_se(
-        df, "x", ["id"], ["g"], n_replicates=22, engine="jvm"
-    ).collect()
-    monkeypatch.setattr(scale, "BOOTSTRAP_WIDE_MAX_B", 0)
-    exploded = scale.bootstrap_mean_se(
-        df, "x", ["id"], ["g"], n_replicates=22, engine="jvm"
-    ).collect()
-    a = {r["g"]: (r["mean"], r["se_boot"], r["n"]) for r in wide}
-    b = {r["g"]: (r["mean"], r["se_boot"], r["n"]) for r in exploded}
-    assert len(a) == 3 and set(a) == set(b)
-    for g in a:
-        assert a[g][0] == b[g][0] and a[g][2] == b[g][2]
-        assert a[g][1] == _pytest.approx(b[g][1], rel=1e-12)
-
-
 def test_bootstrap_engines_agree(spark):
-    """The r12 arrow engine (mapInArrow partial-sum kernel) and the
-    pure-JVM expression path draw the SAME md5-chunked weights and
+    """bootstrap_mean_se (the r12 mapInArrow partial-sum kernel) and
+    the pure-JVM expression reference (_bootstrap_mean_se_jvm, the
+    explode shape) draw the SAME md5-chunked weights and
     must produce identical results up to float summation order:
     counts exactly, means/SEs to ulp-level relative tolerance (far
     inside the query contract's 2dp/4dp rounding). Covers grouped
@@ -744,7 +714,8 @@ def test_bootstrap_engines_agree(spark):
     digest chunk)."""
     import pytest as _pytest
 
-    from dataframe_spark.operators.scale import bootstrap_mean_se
+    from dataframe_spark.operators.scale import (
+        _bootstrap_mean_se_jvm, bootstrap_mean_se)
     from pyspark.sql import functions as F
 
     df = spark.range(700).select(
@@ -757,12 +728,8 @@ def test_bootstrap_engines_agree(spark):
         {"group_cols": ["g"], "n_replicates": 22},
         {"group_cols": None, "n_replicates": 10},
     ):
-        a = bootstrap_mean_se(
-            df, "x", ["id", "k2"], engine="arrow", **kwargs
-        ).collect()
-        j = bootstrap_mean_se(
-            df, "x", ["id", "k2"], engine="jvm", **kwargs
-        ).collect()
+        a = bootstrap_mean_se(df, "x", ["id", "k2"], **kwargs).collect()
+        j = _bootstrap_mean_se_jvm(df, "x", ["id", "k2"], **kwargs).collect()
         key = (lambda r: r["g"]) if kwargs["group_cols"] else (lambda r: 0)
         am = {key(r): r for r in a}
         jm = {key(r): r for r in j}

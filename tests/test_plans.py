@@ -442,7 +442,6 @@ def test_fallbacks_warn_once_per_process(monkeypatch):
         pass
 
     monkeypatch.setattr(errors, "_warned", set())
-    monkeypatch.delenv("SPARK_GRAFT_NO_CACHE_BARRIER", raising=False)
     assert _call_fallback_sites(NoJdf(), calls=2) == [
         "dedup._materialize",
         "plans.cache.try_persist",
@@ -451,21 +450,6 @@ def test_fallbacks_warn_once_per_process(monkeypatch):
     assert plan_size_bytes(NoJdf()) == LARGE
 
 
-def test_barrier_opt_out_is_silent(monkeypatch):
-    from dataframe_spark.operators import dedup
-
-    class NoJdf:
-        pass
-
-    monkeypatch.setattr(errors, "_warned", set())
-    monkeypatch.setenv("SPARK_GRAFT_NO_CACHE_BARRIER", "1")
-    with warnings.catch_warnings(record=True) as got:
-        warnings.simplefilter("always")
-        dedup._materialize(NoJdf())
-    assert _fallback_sites(got) == []
-
-
 def test_classic_session_takes_no_fallback(spark, monkeypatch):
     monkeypatch.setattr(errors, "_warned", set())
-    monkeypatch.delenv("SPARK_GRAFT_NO_CACHE_BARRIER", raising=False)
     assert _call_fallback_sites(spark.range(10)) == []

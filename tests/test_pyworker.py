@@ -162,9 +162,7 @@ def test_python_stages_run_from_foreign_cwd(tmp_path):
         docs = spark.createDataFrame(
             [(1, "a b c d"), (2, "E F G H i")], "doc_id long, text string"
         )
-        rows = dedup.hashed_shingle_arrays(
-            docs, "doc_id", "text", 3, engine="arrow"
-        ).collect()
+        rows = dedup.hashed_shingle_arrays(docs, "doc_id", "text", 3).collect()
         assert sorted(r.n_sh for r in rows) == [2, 3], rows
         spark.stop()
         print("OK")

@@ -5,14 +5,35 @@ headline) into plans/<tag>/<query>_<suffix>.txt.
 
 Driver-side planning only — no job execution — so it is cheap and
 safe to run next to other work.
+
+Session counters (expression and subquery ids ``#N``, ``[id=#N]``,
+``plan_id=N``, RDD ids ``MapPartitionsRDD[N]``) are renumbered in
+order of first appearance within each file, per counter, so two
+captures of the same tree diff clean whatever jobs ran before them
+in the session, and every cross-reference inside a file survives.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+_COUNTER = re.compile(r"(plan_id=|\[id=#|RDD\[|#)(\d+)")
+
+
+def normalize(plan: str) -> str:
+    """``plan`` with each session counter renumbered 0, 1, ... in
+    order of first appearance (one numbering per counter kind)."""
+    seen: dict[str, dict[str, int]] = {}
+
+    def renumber(m):
+        ids = seen.setdefault(m.group(1), {})
+        return m.group(1) + str(ids.setdefault(m.group(2), len(ids)))
+
+    return _COUNTER.sub(renumber, plan)
 
 
 def main():
@@ -63,8 +84,10 @@ def main():
         df = qs[name](spark, sf_dir)
         # _explainString is the py4j-side accessor behind .explain();
         # use the public API via a captured stdout to stay stable.
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
+        plan = normalize(
+            df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
         )
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:

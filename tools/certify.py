@@ -39,12 +39,6 @@ Usage: python tools/certify.py <sweep> [options]
       GROWING factor across decades, which two points cannot see.
       -> CERT_thousandx.json
 
-  barrier_ab
-      The r11 cache-racing diagnosis as a committed artifact
-      (VERDICT r11 ask #6): jaccard end-to-end at 1000x with the
-      _materialize barriers ON vs OFF, interleaved ABBA in one
-      session, identical plan and data. -> CERT_barrier_ab.json
-
 NOISE REGIME (r12, VERDICT r11 ask #1). The box swings same-code
 walls 2-9x (documented r11: virtio disk, long-lived JVM state, one
 wedged 48 GB JVM that poisoned a round of measurements), so raw
@@ -289,37 +283,6 @@ def sweep_parity(argv):
     })
     # prompt JVM teardown so a back-to-back sweep's stray-JVM guard
     # sees a clean box without burning its grace period
-    spark.stop()
-    sys.exit(1 if n_fail else 0)
-
-
-def sweep_arrow_parity(argv):
-    """Oracle-backed parity with the ARROW kernels FORCED at a
-    driver SF (r13, VERDICT r12 ask #3b): the engine knees resolve
-    to the JVM expressions at every driver SF, so the kernels that
-    run at 100x+ were otherwise covered only by pinned bit-equality
-    unit tests. Forcing SPARK_GRAFT_SIG_ENGINE=arrow (the r12
-    minhash signature kernel) and SPARK_GRAFT_SHINGLE_ENGINE=arrow
-    (the r13 tokenize→shingle→xxhash64 kernel) routes every
-    shingle-based query through the kernel plans and verifies the
-    FULL registry against the DuckDB oracle on them."""
-    os.environ["SPARK_GRAFT_SIG_ENGINE"] = "arrow"
-    os.environ["SPARK_GRAFT_SHINGLE_ENGINE"] = "arrow"
-    sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    from tools.parity import run_parity
-
-    spark = _spark("certify_arrow_parity")
-    results = {}
-    n_pass, n_fail, n_rowsonly = run_parity(spark, sf_dir, results=results)
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_rowsonly} rows-only")
-    _write(f"CERT_parity_arrow_{tag}.json", {
-        "sweep": "arrow_parity", "sf_dir": sf_dir,
-        "forced": {"SPARK_GRAFT_SIG_ENGINE": "arrow",
-                   "SPARK_GRAFT_SHINGLE_ENGINE": "arrow"},
-        "n_pass": n_pass, "n_fail": n_fail, "n_rows_only": n_rowsonly,
-        "results": results,
-    })
     spark.stop()
     sys.exit(1 if n_fail else 0)
 
@@ -887,11 +850,8 @@ def _minhash_stage_profile(
     sigs = stage(
         "signatures",
         dd._reusable(
-            # the operator's shipped default path (r12: the arrow
-            # signature kernel) so the profile measures the plan
-            # minhash_dedup_pairs actually runs
             dd._minhash_sigs_frame(
-                arrs_h.join(gstats.select("id"), "id"), num_perm, "arrow"
+                arrs_h.join(gstats.select("id"), "id"), num_perm
             )
         ),
     )
@@ -1288,64 +1248,9 @@ def sweep_vectors1000x(argv):
     print(f"wrote {partdir}/{tag}.part.json")
 
 
-def sweep_barrier_ab(argv):
-    """Commit the r11 sibling-stage cache-racing diagnosis as an
-    artifact (VERDICT r11 ask #6): the _materialize barriers in the
-    dedup big path exist because two sibling stages racing one COLD
-    persisted frame measured 2.5-2.8x wall inflation — but that
-    number lived only in the survey prose. This sweep times the
-    jaccard flagship end-to-end at 1000x with barriers ON vs OFF
-    (SPARK_GRAFT_NO_CACHE_BARRIER, read at plan-build time),
-    INTERLEAVED A-B-B-A in one session so both modes sample the
-    same box state, identical plan and data, storage cache cleared
-    per rep. -> CERT_barrier_ab.json"""
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-    os.environ["SPARK_GRAFT_CACHE_TABLES"] = "0"
-    _guard_stray_jvm()
-    import __spark_entry__ as entry
-
-    from tools.scale_data import ensure
-
-    spark = _spark("certify_barrier_ab")
-    _ensure_100x(spark)
-    if not ensure(spark, DIR_100X, DIR_1000X):
-        print("1000x generation failed", file=sys.stderr)
-        sys.exit(1)
-    qs = entry.queries()
-    walls = {"on": [], "off": []}
-    for mode in ("on", "off", "off", "on"):
-        os.environ["SPARK_GRAFT_NO_CACHE_BARRIER"] = (
-            "0" if mode == "on" else "1"
-        )
-        spark.catalog.clearCache()
-        t0 = time.monotonic()
-        _noop(qs["q_dedup_ngram_jaccard"](spark, DIR_1000X))
-        w = round(time.monotonic() - t0, 3)
-        walls[mode].append(w)
-        print(f"barrier {mode}: {w}", flush=True)
-    os.environ.pop("SPARK_GRAFT_NO_CACHE_BARRIER", None)
-    stats = {m: _rep_stats(w) for m, w in walls.items()}
-    _write("CERT_barrier_ab.json", {
-        "sweep": "barrier_ab", "query": "q_dedup_ngram_jaccard",
-        "decade": "1000x", "order": ["on", "off", "off", "on"],
-        "walls": stats,
-        "on_over_off_best": round(
-            stats["on"]["sec"] / max(stats["off"]["sec"], 1e-9), 3
-        ),
-        "note": "identical plan/data; barriers are one cache-fill "
-                "count per shared persisted frame before its "
-                "two-sided consumer (dedup._materialize), a pure "
-                "scheduling optimization — on <= off within the "
-                "committed spread confirms the r11 diagnosis; "
-                "ABBA interleave samples both modes across the "
-                "session's drift",
-    })
-
-
 def main():
     sweeps = {
         "parity": sweep_parity,
-        "arrow_parity": sweep_arrow_parity,
         "tenx": sweep_tenx,
         "vectors": sweep_vectors,
         "vectors1000x": sweep_vectors1000x,
@@ -1353,7 +1258,6 @@ def main():
         "thousandx": sweep_thousandx,
         "dedup_stages": sweep_dedup_stages,
         "vectors_stages": sweep_vectors_stages,
-        "barrier_ab": sweep_barrier_ab,
     }
     if len(sys.argv) < 2 or sys.argv[1] not in sweeps:
         print(__doc__)
