@@ -867,8 +867,9 @@ def _xxh64_np(data, starts, lengths):
 
 def _shingle_kernel(n: int):
     """mapInArrow kernel computing EXACTLY the rows of the JVM
-    reference chain ``_hash_arrays(shingle_arrays(...))`` — tokenize, word-n-gram shingles, per-doc distinct,
-    xxhash64 — from (id, __text) batches; output (id, sh_arr:
+    reference chain ``_hash_arrays(shingle_arrays(...))`` — tokenize,
+    word-n-gram shingles, per-doc distinct, xxhash64 — from
+    (id, __text) batches; output (id, sh_arr:
     array<bigint>, n_sh int), rows with zero shingles dropped (guide
     §4.2: the whole chain is the corpus-scale map stage; at the
     1000x cert it was the top jaccard stage).

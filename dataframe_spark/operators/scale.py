@@ -340,8 +340,8 @@ def bootstrap_mean_se(
     failed whole-stage codegen ("Code grows beyond 64 KB") and
     evaluated ~30M interpreted conv+CASE trees at sf0.1 — ~2.8-3.3 s,
     50-100x numpy's cost for the same arithmetic. Expressions survive
-    only in the test reference ``_bootstrap_mean_se_jvm``: both draw the SAME
-    weights from the SAME chunked digests, and equality is
+    only in the test reference ``_bootstrap_mean_se_jvm``: both draw
+    the SAME weights from the SAME chunked digests, and equality is
     test-pinned (test_bootstrap_engines_agree). Null and NaN values
     are excluded like avg does."""
     if n_replicates < 2:

@@ -299,11 +299,11 @@ def _jvm_hashed_shingles(df):
 
 def test_minhash_sig_kernel_matches_jvm(spark):
     """minhash_signatures (shingle and signature kernels) must
-    reproduce the JVM expression reference EXACTLY (integer equality over every doc and permutation): the
-    banding candidate set — and with it q_dedup_minhash's
-    deterministic 100% recall at the driver SFs — depends on the
-    values, so bit-equality is the equivalence proof, not a
-    statistical check."""
+    reproduce the JVM expression reference EXACTLY (integer
+    equality over every doc and permutation): the banding candidate
+    set — and with it q_dedup_minhash's deterministic 100% recall at
+    the driver SFs — depends on the values, so bit-equality is the
+    equivalence proof, not a statistical check."""
     import random
 
     rng = random.Random(12)
