@@ -21,7 +21,6 @@ remain fully distributed.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column
@@ -43,18 +42,6 @@ NUMERIC_TYPES = ("int", "bigint", "double", "float", "smallint", "tinyint")
 
 def is_numeric_dtype(t: str) -> bool:
     return t in NUMERIC_TYPES or t.startswith("decimal")
-
-# Input-size threshold (plan-estimated bytes) above which quantile
-# verbs switch from the built-in ``F.percentile`` (full value-count
-# map buffered and merged on ONE reducer) to the sharded exact plan
-# in operators/quantiles.py. The buffer's memory is bounded by the
-# column's distinct values, for which scan size is the cheap proxy.
-# Size it like a broadcast threshold: well under one executor's
-# task memory (the default assumes >= 1 GiB per task slot).
-# Deployments tune it via SPARK_GRAFT_QUANTILE_BUFFER_MB.
-QUANTILE_BUFFER_MAX_BYTES = (
-    int(os.environ.get("SPARK_GRAFT_QUANTILE_BUFFER_MB", "256")) * 1024 * 1024
-)
 
 # drop_last's lazy plan tops-n the order keys toward the driver and
 # broadcasts them; above this n that side is itself driver-sized, so
@@ -166,17 +153,6 @@ class DataFrame:
 
     def _wrap(self, df: SparkDF) -> "DataFrame":
         return DataFrame(df)
-
-    def _plan_size_bytes(self) -> int:
-        """Catalyst's plan-side size estimate for this frame (file
-        sizes for scans, propagated through the plan). Reading it
-        runs NO job — it is the same statistic AQE and the broadcast
-        threshold consult. Under Spark Connect (no JVM handle) this
-        reports "large", routing gated verbs to their distributed
-        path (plans/stats.py)."""
-        from .plans.stats import plan_size_bytes
-
-        return plan_size_bytes(self.df)
 
     # -- core / exploration (Operations/Core.hs) -----------------------
 
@@ -695,12 +671,12 @@ class DataFrame:
         ):
             filled = self.df.fillna(strategy, subset=list(cols))
             return self._wrap(filled)
-        if strategy == "median" and self._plan_size_bytes() > QUANTILE_BUFFER_MAX_BYTES:
+        from .operators.quantiles import exact_quantiles, quantile_buffer_fits
+
+        if strategy == "median" and not quantile_buffer_fits(self.df):
             # large input: sharded exact-median plan instead of the
             # single-reducer percentile buffer; pivot the long result
             # back to the same one-row __fill_* shape
-            from .operators.quantiles import exact_quantiles
-
             med = exact_quantiles(self.df, list(cols), [0.5])
             stats = med.agg(
                 *[
@@ -1732,27 +1708,27 @@ class DataFrame:
         group and merged on one reducer), this stays sharded by
         (column, radix-bin) end to end — the scale path for quantiles
         over billions of rows. At small scale the built-in buffer is
-        faster; see ``summarize(distributed=...)`` for the cutover."""
+        faster; ``summarize`` cuts over at QUANTILE_BUFFER_MAX_BYTES
+        (operators/quantiles.py)."""
         from .operators.quantiles import exact_quantiles
 
         return self._wrap(exact_quantiles(self.df, cols, probs))
 
-    def summarize(self, distributed: bool | None = None) -> "DataFrame":
+    def summarize(self) -> "DataFrame":
         """Statistics.hs:326 ``summarize`` — per numeric column: mean,
         std (sample), min, q25, median, q75, max. One agg pass +
         unpivot, same shape as describe_columns.
 
-        The quartile strategy is picked AUTOMATICALLY from the plan's
-        size estimate (default ``distributed=None``): inputs under
-        the gate (< QUANTILE_BUFFER_MAX_BYTES) use the all-JVM
+        The quartile strategy is picked from the plan's size
+        estimate (``quantile_buffer_fits``): inputs within
+        QUANTILE_BUFFER_MAX_BYTES (operators/quantiles.py) use the all-JVM
         sorted-tails radix plan (exact_quantiles_tails — hit-bin
         arrays are gate-bounded; 0.57 s at sf0.1 vs 1.7 s for
         ``F.percentile``'s per-column hashmap buffers and 0.80 s for
         the r5–r7 two-Arrow-stage kernel). Inputs above the gate use
         the sharded exact-quantile plan (operators/quantiles.py),
         which keeps every stage's state bounded — the 100 TB path.
-        Pass True/False to force a side. Both paths produce
-        identical quantile_cont values."""
+        Both paths produce identical quantile_cont values."""
         df = self.df
         num_cols = [c for c, t in df.dtypes if is_numeric_dtype(t)]
         if not num_cols:
@@ -1760,9 +1736,9 @@ class DataFrame:
             # malformed stack(0,) / zero-column Arrow plan either
             # path would otherwise build
             raise ValueError("summarize needs at least one numeric column")
-        if distributed is None:
-            distributed = self._plan_size_bytes() > QUANTILE_BUFFER_MAX_BYTES
-        if distributed:
+        from .operators.quantiles import exact_quantiles_tails, quantile_buffer_fits
+
+        if not quantile_buffer_fits(df):
             return self._summarize_distributed(df, num_cols)
         # Small path, r8: ALL-JVM — the radix histogram locates each
         # quartile's bin, pass 2 sorts ONLY the hit bins' values
@@ -1779,8 +1755,6 @@ class DataFrame:
         # coalesce(1).sortWithinPartitions — the output is #cols
         # rows, and a global orderBy's range exchange measured
         # 0.11 s of pure latency on 8 rows.
-        from .operators.quantiles import exact_quantiles_tails
-
         src = df.coalesce(12)
         probs = [0.25, 0.5, 0.75]
         names = ["q25", "median", "q75"]
@@ -2067,34 +2041,22 @@ class GroupedDataFrame:
         self,
         value_col: str,
         probs: Sequence[float],
-        distributed: bool | None = None,
     ) -> DataFrame:
         """Per-group EXACT interpolated quantiles.
 
-        Strategy is picked from the plan-size estimate (same gate as
-        ``summarize``): inputs under QUANTILE_BUFFER_MAX_BYTES use the
-        built-in ``percentile`` aggregate (one buffer per group — one
-        hash-agg stage, ~10x cheaper when the buffer is known small);
-        larger inputs use the sharded radix-bin plan
-        (operators/quantiles.py), which is scale-safe where the
-        buffer would hold a huge group's full value multiset on one
-        reducer. Both paths emit identical (keys..., prob, value)
-        rows. Pass True/False to force a side."""
-        from .operators.quantiles import (
-            exact_quantiles_grouped,
-            grouped_quantiles_buffered,
-        )
+        Strategy is picked from the plan-size estimate (the gate of
+        ``summarize``, ``grouped_quantiles_for``): inputs within
+        QUANTILE_BUFFER_MAX_BYTES use the built-in ``percentile``
+        aggregate (one buffer per group — one hash-agg stage, ~10x
+        cheaper when the buffer is known small); larger inputs use
+        the sharded radix-bin plan (operators/quantiles.py), which is
+        scale-safe where the buffer would hold a huge group's full
+        value multiset on one reducer. Both paths emit identical
+        (keys..., prob, value) rows."""
+        from .operators.quantiles import grouped_quantiles_for
 
-        if distributed is None:
-            distributed = (
-                DataFrame(self.df)._plan_size_bytes() > QUANTILE_BUFFER_MAX_BYTES
-            )
-        if distributed:
-            return DataFrame(
-                exact_quantiles_grouped(self.df, self.keys, value_col, probs)
-            )
         return DataFrame(
-            grouped_quantiles_buffered(self.df, self.keys, value_col, probs)
+            grouped_quantiles_for(self.df)(self.df, self.keys, value_col, probs)
         )
 
     def apply_in_pandas(self, fn, schema) -> DataFrame:

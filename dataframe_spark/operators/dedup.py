@@ -176,10 +176,18 @@ def shingles(df: SparkDF, id_col: str, text_col: str, n: int = 3) -> SparkDF:
 # broadcast-verify and the cache barriers all pay fixed stages (a
 # sample job, three slim joins, an eager count) that only amortize
 # when the corpus is big enough for candidate volume to matter.
-# Below it the simple shapes win (measured 2.0 s vs 10.0 s at
-# sf0.1) and the RESULT is identical either way. jaccard_pairs'
-# df order also stops broadcasting its vocabulary above it.
-# Compared against the input plan's size (plans.stats.plan_size_bytes).
+# Below it the simple shapes win and the RESULT is identical either
+# way. Measured with the worker daemon (plans/pyworker.py) on a
+# 4-vCPU box, build + collect, storage cache cleared per run, 5
+# interleaved reps after a warm-up, small side vs the knee patched
+# to 0: jaccard_pairs 0.91-1.48 s vs 2.94-4.61 s at sf0.01 and
+# 1.72-2.43 s vs 3.81-5.22 s at sf0.1; minhash_dedup_pairs
+# 1.95-2.71 s vs 2.90-5.76 s and 3.20-3.89 s vs 3.69-4.54 s; small
+# side faster in all 20 pairs, same pairs (25 and 256). The demotion
+# sample alone (_sampled_hot_probe) took 0.30-0.52 s and 0.45-0.64 s.
+# jaccard_pairs' df order and edit_distance_pairs also stop
+# broadcasting their vocabulary above it. Compared against the
+# input plan's size (plans.stats.plan_size_bytes).
 _BIG_PATH_KNEE = 128 * 1024 * 1024
 
 
@@ -1470,7 +1478,6 @@ def contamination_scores(
     bench_df: SparkDF,
     bench_text_col: str,
     n: int = 5,
-    broadcast_bench: bool | None = None,
 ) -> SparkDF:
     """Benchmark decontamination: per corpus document, the fraction
     of its distinct word n-grams that also occur in the benchmark
@@ -1485,22 +1492,18 @@ def contamination_scores(
     no per-doc groupBy shuffle (the 8-byte hashes make the set
     compact; a cross-set collision could only add ~1/2^64 noise to a
     count). The in-row pass costs O(corpus_rows × bench_set) though,
-    so the default (``broadcast_bench=None``) GATES on the bench
-    plan's size estimate (the summarize pattern): above
-    BENCH_BROADCAST_MAX_BYTES it shuffle-joins instead — one corpus
-    explode + one count groupBy, O(corpus + bench) at any scale
-    (caught by the r5 full-headline 10x sweep: the in-row path went
-    super-linear when the bench side grew with the corpus). Both
-    paths produce identical rows; pass True/False to force one. The
-    corpus side is hashed by the shingle kernel (``_hashed_shingles``,
+    so it GATES on the bench plan's size estimate (the summarize
+    pattern): above BENCH_BROADCAST_MAX_BYTES it shuffle-joins
+    instead — one corpus explode + one count groupBy, O(corpus +
+    bench) at any scale (caught by the r5 full-headline 10x sweep:
+    the in-row path went super-linear when the bench side grew with
+    the corpus). Both paths produce identical rows. The corpus side
+    is hashed by the shingle kernel (``_hashed_shingles``,
     unpersisted); the bench side, an exploded string set with no id
     column, stays an expression chain."""
-    if broadcast_bench is None:
-        from ..plans.stats import plan_size_bytes
+    from ..plans.stats import plan_size_bytes
 
-        broadcast_bench = (
-            plan_size_bytes(bench_df) <= BENCH_BROADCAST_MAX_BYTES
-        )
+    broadcast_bench = plan_size_bytes(bench_df) <= BENCH_BROADCAST_MAX_BYTES
     corpus = _hashed_shingles(df, id_col, text_col, n)
     bench_toks = F.filter(tokens_expr(bench_text_col), lambda x: x != F.lit(""))
     bench = bench_df.select(
@@ -1630,9 +1633,7 @@ def edit_distance_pairs(
     from ..plans.stats import plan_size_bytes
 
     dfreq_side = (
-        F.broadcast(dfreq)
-        if plan_size_bytes(df) <= 128 * 1024 * 1024
-        else dfreq
+        F.broadcast(dfreq) if plan_size_bytes(df) <= _BIG_PATH_KNEE else dfreq
     )
     rep = exploded.join(dfreq_side, "g")
     per_str = rep.groupBy("id", "len", "n_g").agg(

@@ -21,6 +21,12 @@ from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import functions as F
 
 
+# pagerank broadcasts its per-node sides (outdeg, ranks) while
+# n_nodes x ~24 B per (node, rank) row of a broadcast hash relation
+# stays within this bound
+RANKS_BROADCAST_MAX_BYTES = 128 * 1024 * 1024
+
+
 def _symmetrize(e: SparkDF) -> SparkDF:
     return e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
 
@@ -318,8 +324,7 @@ def pagerank(
     # cached edges + two map-side joins + partial agg + one
     # partials-sized exchange: no edge-sized shuffle anywhere
     base = (1.0 - damping) / n
-    # ~24 B per (node, rank) row in a broadcast hash relation
-    bcast_ranks = n * 24 <= 128 * 1024 * 1024
+    bcast_ranks = n * 24 <= RANKS_BROADCAST_MAX_BYTES
     contrib_src = e.join(
         F.broadcast(outdeg) if bcast_ranks else outdeg, "u"
     )

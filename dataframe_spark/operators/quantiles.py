@@ -48,8 +48,36 @@ _SUB = 64
 _MAG_CLAMP = 70000.0
 _TOP = 200_000  # shift that keeps every finite bin id positive
 
+# Input-size threshold (plan-estimated bytes) above which quantile
+# verbs switch from the built-in ``F.percentile`` (full value-count
+# map buffered and merged on ONE reducer) to the sharded exact plan
+# in this module. The buffer's memory is bounded by the column's
+# distinct values, for which scan size is the cheap proxy. Size it
+# like a broadcast threshold: well under one executor's task memory
+# (the value assumes >= 1 GiB per task slot).
+QUANTILE_BUFFER_MAX_BYTES = 256 * 1024 * 1024
 
 from ..expr import bq as _bt  # shared backtick-quoting helper
+
+
+def quantile_buffer_fits(df: SparkDF) -> bool:
+    """True when ``df``'s plan-size estimate (plans.stats; no job)
+    is within QUANTILE_BUFFER_MAX_BYTES, i.e. a quantile verb over
+    it may take the buffered small side. The one quantile gate."""
+    from ..plans.stats import plan_size_bytes
+
+    return plan_size_bytes(df) <= QUANTILE_BUFFER_MAX_BYTES
+
+
+def grouped_quantiles_for(df: SparkDF):
+    """The per-group quantile function for inputs the size of
+    ``df``: :func:`grouped_quantiles_buffered` under the gate,
+    :func:`exact_quantiles_grouped` above it. Both take
+    ``(frame, group_cols, value_col, probs)`` and emit identical
+    rows."""
+    if quantile_buffer_fits(df):
+        return grouped_quantiles_buffered
+    return exact_quantiles_grouped
 
 
 def _radix_bin(v: Column) -> Column:
@@ -479,23 +507,19 @@ def winsorize(
     group_cols: Sequence[str],
     lower: float = 0.05,
     upper: float = 0.95,
-    distributed: bool | None = None,
 ) -> SparkDF:
     """Clip ``value_col`` into its per-group [lower, upper] quantile
     band (outlier treatment before training-statistics aggregation).
     Adds ``<value_col>_winsorized``; other columns pass through.
 
-    The quantile bounds use the same gated strategy as
-    ``GroupedDataFrame.quantiles`` (buffered percentile small /
-    sharded radix large) and join back as a BROADCAST side — the
-    bounds frame is one row per (group) regardless of data size, so
-    the clip is a map-side operation at any scale."""
-    if distributed is None:
-        from ..plans.stats import plan_size_bytes
-
-        distributed = plan_size_bytes(df) > 256 * 1024 * 1024
-    fn = exact_quantiles_grouped if distributed else grouped_quantiles_buffered
-    q = fn(df, list(group_cols), value_col, [float(lower), float(upper)])
+    The quantile bounds use the QUANTILE_BUFFER_MAX_BYTES gate
+    (``grouped_quantiles_for``: buffered percentile small / sharded
+    radix large) and join back as a BROADCAST side — the bounds
+    frame is one row per (group) regardless of data size, so the
+    clip is a map-side operation at any scale."""
+    q = grouped_quantiles_for(df)(
+        df, list(group_cols), value_col, [float(lower), float(upper)]
+    )
     bounds = q.groupBy(*group_cols).agg(
         F.min(F.when(F.col("prob") == float(lower), F.col("value"))).alias("__lo"),
         F.max(F.when(F.col("prob") == float(upper), F.col("value"))).alias("__hi"),

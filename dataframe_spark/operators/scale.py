@@ -102,12 +102,11 @@ def robust_scale(
     lower: float = 0.25,
     upper: float = 0.75,
     out_col: str | None = None,
-    distributed: bool | None = None,
 ) -> SparkDF:
     """(x - median) / (q_upper - q_lower) per group (sklearn
     RobustScaler: centering on the median, scaling by the
     IQR — outlier-insensitive where mean/std are not). Quantiles are
-    EXACT via the same gated strategy as winsorize (buffered
+    EXACT via winsorize's QUANTILE_BUFFER_MAX_BYTES gate (buffered
     percentile small / sharded two-pass radix large,
     operators/quantiles.py) and join back as one broadcast row per
     group. A zero-IQR group scales to 0.0; nulls stay null."""
@@ -116,18 +115,11 @@ def robust_scale(
     out_col = out_col or f"{value_col}_robust"
     keys = list(group_cols or [])
     probs = sorted({float(lower), 0.5, float(upper)})
-    from .quantiles import exact_quantiles_grouped, grouped_quantiles_buffered
+    from .quantiles import exact_quantiles, grouped_quantiles_for
 
-    if distributed is None:
-        from ..plans.stats import plan_size_bytes
-
-        distributed = plan_size_bytes(df) > 256 * 1024 * 1024
     if keys:
-        fn = exact_quantiles_grouped if distributed else grouped_quantiles_buffered
-        q = fn(df, keys, value_col, probs)
+        q = grouped_quantiles_for(df)(df, keys, value_col, probs)
     else:
-        from .quantiles import exact_quantiles
-
         q = exact_quantiles(df, [value_col], probs)
     stats = q.groupBy(*keys).agg(
         F.min(F.when(F.col("prob") == float(lower), F.col("value"))).alias("__ql"),
@@ -459,7 +451,6 @@ def mad_outliers(
     group_cols: Sequence[str] | None = None,
     k: float = 3.5,
     out_col: str | None = None,
-    distributed: bool | None = None,
 ) -> SparkDF:
     """Robust outlier FLAGGING by the MAD rule (Iglewicz & Hoaglin
     1993): a row is an outlier when |x − median| > k·1.4826·MAD,
@@ -469,24 +460,16 @@ def mad_outliers(
     Appends boolean ``out_col`` (null values stay null; a zero-MAD
     group — over half the values identical — flags any deviation).
 
-    Plan: TWO exact-quantile passes on the gated engine (median,
-    then median of in-row absolute deviations against the broadcast
-    medians) + one broadcast join back; assignment is map-side. The
-    1.4826 constant makes k·MAD comparable to k·sigma under
-    normality."""
+    Plan: TWO exact-quantile passes (median, then median of in-row
+    absolute deviations against the broadcast medians), both on the
+    side the QUANTILE_BUFFER_MAX_BYTES gate picks for ``df``, + one
+    broadcast join back; assignment is map-side. The 1.4826 constant
+    makes k·MAD comparable to k·sigma under normality."""
     out_col = out_col or f"{value_col}_outlier"
     keys = list(group_cols or [])
-    from .quantiles import (
-        exact_quantiles,
-        exact_quantiles_grouped,
-        grouped_quantiles_buffered,
-    )
+    from .quantiles import exact_quantiles, grouped_quantiles_for
 
-    if distributed is None:
-        from ..plans.stats import plan_size_bytes
-
-        distributed = plan_size_bytes(df) > 256 * 1024 * 1024
-    fn = exact_quantiles_grouped if distributed else grouped_quantiles_buffered
+    fn = grouped_quantiles_for(df)
 
     def _median_of(frame, col):
         if keys:

@@ -46,33 +46,42 @@ def cosine(a, b) -> Column:
     return dot(a, b) / F.nullif(norm(a) * norm(b), F.lit(0.0))
 
 
+# cosine_pairs broadcasts the whole corpus matrix while the input
+# plan's size estimate is at most this (Spark's broadcast-join test);
+# above it the pairs run through bucketed_cosine_pairs.
+COSINE_BROADCAST_MAX_BYTES = 64 * 1024 * 1024
+# bucketed_cosine_pairs splits buckets above _MAX_CLUSTER_ROWS into
+# sub-block tiles and runs each GEMM _BLOCK_ROWS rows high, so a task
+# holds two sub-blocks plus one _BLOCK_ROWS x _MAX_CLUSTER_ROWS sims
+# tile. semdedup's fused pass holds one whole cluster per task and
+# sends larger clusters the distributed route, with the same tiles.
+_MAX_CLUSTER_ROWS = 32768
+_BLOCK_ROWS = 2048
+
+
 def cosine_pairs(
     df: SparkDF,
     id_col: str,
     vec_col: str,
     threshold: float = 0.9,
-    num_blocks: int = 8,
-    broadcast_bytes: int = 64 << 20,
 ) -> SparkDF:
-    """All pairs (a < b) with cosine >= threshold — broadcast or
-    blocked GEMM, chosen like Spark's broadcast-join cutover.
+    """All pairs (a < b) with cosine >= threshold — broadcast scan or
+    bounded GEMM tiles, chosen like Spark's broadcast-join cutover.
 
     When the corpus fits a broadcast (plan size estimate <=
-    ``broadcast_bytes``, the same PLAN-side test a broadcast join
-    uses — no eager count job), ship the whole matrix to every task
-    and run one shuffle-free mapInPandas scan: each Arrow batch is
-    multiplied against the broadcast matrix with one BLAS call,
-    emitting only (a < b) pairs. Otherwise tile the n×n similarity
-    matrix into (num_blocks choose 2)+num_blocks tiles, ship each
-    tile's two vector blocks through Arrow once, and compute the
-    tile with one BLAS matmul per group (applyInPandas). Either way
-    the math is identical float64 GEMM rounded to 4dp. This is the
-    exact baseline; LSH bucketing (knn_lsh) is the sub-quadratic
-    scale path.
+    COSINE_BROADCAST_MAX_BYTES, the same PLAN-side test a broadcast
+    join uses — no eager count job), ship the whole matrix to every
+    task and run one shuffle-free mapInPandas scan: each Arrow batch
+    is multiplied against the broadcast matrix with one BLAS call,
+    emitting only (a < b) pairs. Otherwise every row goes into ONE
+    bucket of :func:`bucketed_cosine_pairs`, whose sub-block tiles
+    bound each task's memory at any corpus size. Either way the math
+    is float64 GEMM rounded to 4dp. This is the exact baseline; LSH
+    bucketing (knn_lsh) is the sub-quadratic scale path.
 
     ``id_col`` must be integral: both paths carry ids through int64
-    numpy arrays / pmod block arithmetic, and a string id would
-    crash one path and silently empty the other (review r5)."""
+    numpy arrays, and a string id would crash one path and silently
+    empty the other (review r5)."""
     id_type = dict(df.dtypes)[id_col]
     if id_type not in ("int", "bigint", "smallint", "tinyint"):
         raise TypeError(
@@ -84,80 +93,38 @@ def cosine_pairs(
     from ..plans.stats import plan_size_bytes
 
     est = plan_size_bytes(df)
-    if est <= broadcast_bytes:
-        corpus = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")).toPandas()
-        ids = corpus["id"].to_numpy(dtype="int64")
-        M = np.stack(corpus["vec"].to_numpy()).astype("float64")
-        Mn = np.linalg.norm(M, axis=1)
-        bc = spark.sparkContext.broadcast((ids, M, Mn))
-
-        def scan(batches):
-            b_ids, b_M, b_Mn = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                A = np.stack(pdf["vec"].to_numpy()).astype("float64")
-                a_ids = pdf["id"].to_numpy(dtype="int64")
-                sims = (A @ b_M.T) / np.outer(np.linalg.norm(A, axis=1), b_Mn)
-                sims = np.round(sims, 4)
-                # emit from the smaller-id side only: each unordered
-                # pair appears in exactly one batch row's output
-                mask = (sims >= threshold) & (a_ids[:, None] < b_ids[None, :])
-                ai, bi_ = np.nonzero(mask)
-                yield pd.DataFrame(
-                    {"a_id": a_ids[ai], "b_id": b_ids[bi_], "cosine": sims[ai, bi_]}
-                )
-
-        parallelism = spark.sparkContext.defaultParallelism
-        src = df.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-        ).repartition(max(2, min(parallelism, (est >> 15) + 1)))
-        return src.mapInPandas(scan, "a_id long, b_id long, cosine double")
-    v = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
-        F.pmod(F.col(id_col), F.lit(num_blocks)).cast("int").alias("blk"),
-    )
-    bp = spark.createDataFrame(
-        [(i, j) for i in range(num_blocks) for j in range(i, num_blocks)],
-        "bi int, bj int",
-    )
-    a = v.join(F.broadcast(bp), v.blk == bp.bi).select(
-        "bi", "bj", F.lit("a").alias("role"), "id", "vec"
-    )
-    b = v.join(F.broadcast(bp), v.blk == bp.bj).select(
-        "bi", "bj", F.lit("b").alias("role"), "id", "vec"
-    )
-    tagged = a.unionByName(b)
-
-    def tile(pdf: pd.DataFrame) -> pd.DataFrame:
-        same = pdf["bi"].iat[0] == pdf["bj"].iat[0]
-        asub = pdf[pdf.role == "a"]
-        bsub = pdf[pdf.role == "b"]
-        if asub.empty or bsub.empty:
-            return pd.DataFrame({"a_id": [], "b_id": [], "cosine": []})
-        A = np.stack(asub["vec"].to_numpy())
-        B = np.stack(bsub["vec"].to_numpy())
-        sims = (A @ B.T) / np.outer(
-            np.linalg.norm(A, axis=1), np.linalg.norm(B, axis=1)
+    if est > COSINE_BROADCAST_MAX_BYTES:
+        return bucketed_cosine_pairs(
+            df.withColumn("__one", F.lit(0)), id_col, vec_col, "__one", threshold
         )
-        sims = np.round(sims, 4)
-        ai, bi_ = np.nonzero(sims >= threshold)
-        a_ids = asub["id"].to_numpy()[ai]
-        b_ids = bsub["id"].to_numpy()[bi_]
-        lo = np.minimum(a_ids, b_ids)
-        hi = np.maximum(a_ids, b_ids)
-        keep = lo < hi
-        if same:
-            keep &= a_ids < b_ids  # upper triangle only
-        return pd.DataFrame(
-            {"a_id": lo[keep], "b_id": hi[keep], "cosine": sims[ai, bi_][keep]}
-        )
+    corpus = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")).toPandas()
+    ids = corpus["id"].to_numpy(dtype="int64")
+    M = np.stack(corpus["vec"].to_numpy()).astype("float64")
+    Mn = np.linalg.norm(M, axis=1)
+    bc = spark.sparkContext.broadcast((ids, M, Mn))
 
-    return (
-        tagged.groupBy("bi", "bj")
-        .applyInPandas(tile, "a_id long, b_id long, cosine double")
-    )
+    def scan(batches):
+        b_ids, b_M, b_Mn = bc.value
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            A = np.stack(pdf["vec"].to_numpy()).astype("float64")
+            a_ids = pdf["id"].to_numpy(dtype="int64")
+            sims = (A @ b_M.T) / np.outer(np.linalg.norm(A, axis=1), b_Mn)
+            sims = np.round(sims, 4)
+            # emit from the smaller-id side only: each unordered
+            # pair appears in exactly one batch row's output
+            mask = (sims >= threshold) & (a_ids[:, None] < b_ids[None, :])
+            ai, bi_ = np.nonzero(mask)
+            yield pd.DataFrame(
+                {"a_id": a_ids[ai], "b_id": b_ids[bi_], "cosine": sims[ai, bi_]}
+            )
+
+    parallelism = spark.sparkContext.defaultParallelism
+    src = df.select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
+    ).repartition(max(2, min(parallelism, (est >> 15) + 1)))
+    return src.mapInPandas(scan, "a_id long, b_id long, cosine double")
 
 
 def bucketed_cosine_pairs(
@@ -166,8 +133,6 @@ def bucketed_cosine_pairs(
     vec_col: str,
     bucket_col: str,
     threshold: float = 0.9,
-    block_rows: int = 2048,
-    max_bucket_rows: int = 32768,
     round_to: int | None = 4,
 ) -> SparkDF:
     """Exact all-pairs cosine WITHIN each bucket: (a_id, b_id,
@@ -189,16 +154,16 @@ def bucketed_cosine_pairs(
     Per-task memory is BOUNDED (r11, ADVICE r10 #2 — the r10 kernel
     tiled only the sims matrix; the full bucket still materialized
     per task, an OOM cliff for a degenerate mega-bucket): buckets
-    larger than ``max_bucket_rows`` are split into s =
-    ceil(n / max_bucket_rows) id-hash sub-blocks and every sub-block
-    PAIR (i <= j) becomes its own task, cosine_pairs-tile style —
-    the a-side row replicates to tiles (blk..s-1), the b-side to
-    (0..blk-1), so each unordered pair lands in exactly one tile.
-    A task therefore holds at most two sub-blocks
-    (2 × max_bucket_rows × dim doubles) plus one
-    block_rows × max_bucket_rows sims tile, whatever the bucket
-    size; oversize detection is one bucket-keyed count agg whose
-    over-limit survivors (≤ corpus/max_bucket_rows rows) broadcast.
+    larger than _MAX_CLUSTER_ROWS are split into s =
+    ceil(n / _MAX_CLUSTER_ROWS) id-hash sub-blocks and every
+    sub-block PAIR (i <= j) becomes its own task — the a-side row
+    replicates to tiles (blk..s-1), the b-side to (0..blk-1), so each
+    unordered pair lands in exactly one tile. A task therefore holds
+    at most two sub-blocks (2 × _MAX_CLUSTER_ROWS × dim doubles) plus
+    one _BLOCK_ROWS × _MAX_CLUSTER_ROWS sims tile, whatever the
+    bucket size; oversize detection is one bucket-keyed count agg
+    whose over-limit survivors (≤ corpus/_MAX_CLUSTER_ROWS rows)
+    broadcast.
     Small buckets keep the r10 single-task shape: blk = 0, s = 1,
     one a-role copy per row — no duplication, same shuffle volume.
     ``id_col`` must be integral (the cosine_pairs rule: ids ride
@@ -213,6 +178,7 @@ def bucketed_cosine_pairs(
             f"bucketed_cosine_pairs needs an integral id column, got "
             f"{id_col}: {id_type}; hash string ids to longs first"
         )
+    block_rows, max_bucket_rows = _BLOCK_ROWS, _MAX_CLUSTER_ROWS
     src = df.where(F.col(bucket_col).isNotNull()).select(
         F.col(bucket_col).alias("__bkt"),
         F.col(id_col).alias("id"),
@@ -768,13 +734,6 @@ def knn_lsh(
 
 
 
-# semdedup's fused pass holds one whole cluster per task; clusters
-# above this bound (bucketed_cosine_pairs' max_bucket_rows default)
-# take the distributed route instead. Tiles are _BLOCK_ROWS rows high
-# (bucketed_cosine_pairs' block_rows default), so a task's peak is the
-# cluster plus one _BLOCK_ROWS x cluster sims tile.
-_MAX_CLUSTER_ROWS = 32768
-_BLOCK_ROWS = 2048
 # GEMM on unit rows and the expression join's sequential
 # dot / (na·nb) differ by at most ~(d + 3)·2^-52 for rows whose norms
 # lie in _NORM_RANGE (product and quotient stay finite and normal), so
@@ -925,8 +884,6 @@ def _oversized_keep(rows: SparkDF, tau: float) -> SparkDF:
         bucketed_cosine_pairs(
             nodes.where(regular), "__k", "__v", "__cid",
             threshold=tau - _BOUNDARY_EPS,
-            block_rows=_BLOCK_ROWS,
-            max_bucket_rows=_MAX_CLUSTER_ROWS,
             round_to=None,
         )
     )

@@ -594,6 +594,12 @@ def unigram_lm(df, text_col: str, top_v: int | None = None, counts=None):
     return lm, totals
 
 
+# Perplexity scoring broadcasts an LM side whose plan-size estimate
+# is at most this; a larger one (top_v=None at corpus scale) is left
+# to AQE instead of being shipped through the driver.
+LM_BROADCAST_MAX_BYTES = 256 * 1024 * 1024
+
+
 def perplexity_score(df, id_col: str, text_col: str, lm, totals, carry=()):
     """Per-document cross-entropy and perplexity under a unigram LM
     from ``unigram_lm`` — the standard LM-based quality filter for
@@ -633,7 +639,7 @@ def perplexity_score(df, id_col: str, text_col: str, lm, totals, carry=()):
     from ..plans.stats import plan_size_bytes
 
     lm_side = (
-        F.broadcast(lm) if plan_size_bytes(lm) <= 256 * 1024 * 1024 else lm
+        F.broadcast(lm) if plan_size_bytes(lm) <= LM_BROADCAST_MAX_BYTES else lm
     )
     scored = (
         pairs.join(lm_side, "token", "left")
@@ -686,10 +692,8 @@ def ppl_buckets(
     bits with aggregation order); ties at a cutoff land in the LOWER
     bucket (quantile_bucket's convention). Zero-token docs are
     absent (nothing to score), matching perplexity_score."""
-    from ..plans.stats import plan_size_bytes
-    from .quantiles import exact_quantiles_grouped, grouped_quantiles_buffered
-
     from ..operators.dedup import _reusable
+    from .quantiles import grouped_quantiles_for
 
     lm, totals = unigram_lm(df, text_col, top_v=top_v)
     # group_col rides through scoring (no join back against the
@@ -704,13 +708,9 @@ def ppl_buckets(
         ).withColumn("__ce4", F.round("cross_entropy", 4))
     )
     probs = [i / len(labels) for i in range(1, len(labels))]
-    fn = (
-        exact_quantiles_grouped
-        if plan_size_bytes(df) > 256 * 1024 * 1024
-        else grouped_quantiles_buffered
-    )
+    # gated on the input df, not on the persisted scored frame
     cuts = (
-        fn(scored, ["__grp"], "__ce4", probs)
+        grouped_quantiles_for(df)(scored, ["__grp"], "__ce4", probs)
         .groupBy("__grp")
         .agg(F.array_sort(F.collect_list(F.round("value", 6))).alias("__cuts"))
     )
@@ -1349,11 +1349,13 @@ def bigram_perplexity_score(
         F.col("__p.tf").cast("long").alias("tf"),
     )
     bilm_side = (
-        F.broadcast(bilm) if plan_size_bytes(bilm) <= 256 * 1024 * 1024 else bilm
+        F.broadcast(bilm)
+        if plan_size_bytes(bilm) <= LM_BROADCAST_MAX_BYTES
+        else bilm
     )
     uni_side = (
         F.broadcast(unilm)
-        if plan_size_bytes(unilm) <= 256 * 1024 * 1024
+        if plan_size_bytes(unilm) <= LM_BROADCAST_MAX_BYTES
         else unilm
     )
     scored = (

@@ -96,8 +96,8 @@ def q_stats_agg(spark, sf_dir):
 
 def q_quantiles(spark, sf_dir):
     """Distributed exact quantiles (operators/quantiles.py) — the
-    scale path behind summarize(distributed=True); parity-checked
-    against DuckDB QUANTILE_CONT."""
+    scale path summarize takes above QUANTILE_BUFFER_MAX_BYTES;
+    parity-checked against DuckDB QUANTILE_CONT."""
     li = _t(spark, sf_dir, "lineitem")
     out = li.quantiles(["l_quantity", "l_extendedprice"], [0.1, 0.5, 0.9]).df
     return out.select(

@@ -98,7 +98,7 @@ def test_histogram_constant_column(small):
 
 
 def test_summarize_auto_cutover(lineitem, monkeypatch):
-    import dataframe_spark.core as core
+    from dataframe_spark.operators import quantiles
 
     li = lineitem.select(["l_quantity", "l_discount"])
     # small input → gate-bounded sorted-tails plan (hit-bin
@@ -108,7 +108,7 @@ def test_summarize_auto_cutover(lineitem, monkeypatch):
     assert "sort_array" in plan
     # above-threshold input → sharded exact-quantile plan engages
     # (bounded state: no collected bin arrays, no percentile buffer)
-    monkeypatch.setattr(core, "QUANTILE_BUFFER_MAX_BYTES", 0)
+    monkeypatch.setattr(quantiles, "QUANTILE_BUFFER_MAX_BYTES", 0)
     dist = li.summarize()
     plan_d = dist.df._jdf.queryExecution().optimizedPlan().toString()
     assert "sort_array" not in plan_d
@@ -121,7 +121,7 @@ def test_summarize_auto_cutover(lineitem, monkeypatch):
             assert a[c][s] == pytest.approx(b[c][s], rel=1e-9)
 
 
-def test_summarize_bin_straddle(spark):
+def test_summarize_bin_straddle(spark, monkeypatch):
     """The bracketing order statistics can land in two ADJACENT
     radix bins (jlo the last value of its bin, jhi the first of the
     next): [1.0, 2.0] puts the median's lo in bin(1.0) and hi in
@@ -129,27 +129,33 @@ def test_summarize_bin_straddle(spark):
     null-safely (a naive element_at would throw INVALID_INDEX_OF_
     ZERO on the out-of-range side) and merge to 1.5."""
     from dataframe_spark import DataFrame
+    from dataframe_spark.operators import quantiles
 
     df = DataFrame(
         spark.createDataFrame([(1.0,), (2.0,)], "v double")
     )
-    row = df.summarize(distributed=False).collect()[0]
+    # a list-built frame reads 2^63-1 plan bytes (plans/stats.py)
+    monkeypatch.setattr(quantiles, "QUANTILE_BUFFER_MAX_BYTES", 1 << 63)
+    row = df.summarize().collect()[0]
     assert row["median"] == pytest.approx(1.5)
     assert row["q25"] == pytest.approx(1.25)
     assert row["q75"] == pytest.approx(1.75)
     # distributed engine agrees on the same straddle input
-    row_d = df.summarize(distributed=True).collect()[0]
+    monkeypatch.setattr(quantiles, "QUANTILE_BUFFER_MAX_BYTES", 0)
+    row_d = df.summarize().collect()[0]
     for s in ("q25", "median", "q75", "mean", "min", "max"):
         assert row_d[s] == pytest.approx(row[s])
 
 
 def test_impute_median_auto_cutover(small, monkeypatch):
-    import dataframe_spark.core as core
+    from dataframe_spark.operators import quantiles
 
+    # a list-built frame reads 2^63-1 plan bytes (plans/stats.py)
+    monkeypatch.setattr(quantiles, "QUANTILE_BUFFER_MAX_BYTES", 1 << 63)
     expected = sorted(
         r["val"] for r in small.impute(["val"], "median").collect()
     )
-    monkeypatch.setattr(core, "QUANTILE_BUFFER_MAX_BYTES", 0)
+    monkeypatch.setattr(quantiles, "QUANTILE_BUFFER_MAX_BYTES", 0)
     got = sorted(r["val"] for r in small.impute(["val"], "median").collect())
     assert got == pytest.approx(expected)
 

@@ -600,19 +600,20 @@ def test_lsh_band_refactor_matches_reference(spark):
     assert want == {(10 + 2 * p, 11 + 2 * p) for p in range(10)}
 
 
-def test_contamination_paths_equivalent(docs):
+def test_contamination_paths_equivalent(docs, monkeypatch):
     """The gated broadcast (in-row array) and shuffle-join plans of
     contamination_scores must produce identical rows."""
+    from dataframe_spark.operators import dedup
     from dataframe_spark.operators.dedup import contamination_scores
 
     bench = docs.where(F.col("doc_id") % 97 == 0)
     corpus = docs.where(F.col("doc_id") % 97 != 0)
+    monkeypatch.setattr(dedup, "BENCH_BROADCAST_MAX_BYTES", 1 << 63)
     a = sorted(map(str, contamination_scores(
-        corpus, "doc_id", "text", bench, "text", n=3,
-        broadcast_bench=True).collect()))
+        corpus, "doc_id", "text", bench, "text", n=3).collect()))
+    monkeypatch.setattr(dedup, "BENCH_BROADCAST_MAX_BYTES", 0)
     b = sorted(map(str, contamination_scores(
-        corpus, "doc_id", "text", bench, "text", n=3,
-        broadcast_bench=False).collect()))
+        corpus, "doc_id", "text", bench, "text", n=3).collect()))
     assert a == b and len(a) > 0
 
 

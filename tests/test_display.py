@@ -135,11 +135,12 @@ def test_terminal_plots_empty_and_constant(spark):
     assert "#" in disp.plot_box_plots(const, ["a", "b"], width=20)
 
 
-def test_plots_tolerate_nan(spark):
+def test_plots_tolerate_nan(spark, monkeypatch):
     """One NaN must not poison quartiles, axes, or bins (review r4):
     summarize/plot paths drop NaN like the old dropna() kernel."""
     from dataframe_spark import DataFrame
     from dataframe_spark import display as disp
+    from dataframe_spark.operators import quantiles
 
     df = DataFrame(
         spark.createDataFrame(
@@ -147,14 +148,15 @@ def test_plots_tolerate_nan(spark):
             "a double, x double",
         )
     )
-    row = {r["column_name"]: r for r in df.summarize(distributed=False).collect()}
+    # a list-built frame reads 2^63-1 plan bytes (plans/stats.py)
+    monkeypatch.setattr(quantiles, "QUANTILE_BUFFER_MAX_BYTES", 1 << 63)
+    row = {r["column_name"]: r for r in df.summarize().collect()}
     assert row["a"]["median"] == 2.0 and row["a"]["q25"] == 1.5
     # moments must be NaN-cleaned like the quartiles (review r4):
     # a NaN-poisoned max would sit below the clean q75
     assert row["a"]["mean"] == 2.0 and row["a"]["max"] == 3.0
-    drow = {
-        r["column_name"]: r for r in df.summarize(distributed=True).collect()
-    }
+    monkeypatch.setattr(quantiles, "QUANTILE_BUFFER_MAX_BYTES", 0)
+    drow = {r["column_name"]: r for r in df.summarize().collect()}
     assert drow["a"]["mean"] == 2.0 and drow["a"]["max"] == 3.0
     out = disp.plot_lines(df, "x", ["a"], width=10, height=4)
     assert "(empty)" not in out  # and no ValueError

@@ -73,22 +73,23 @@ def test_z_score_has_no_global_window(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" in plan
 
 
-def test_contamination_broadcasts_bench_side(spark):
+def test_contamination_broadcasts_bench_side(spark, monkeypatch):
     """The eval-set shingle set must be the broadcast build side (a
     single collected array row), and the per-doc score must be
     computed in-row: no aggregate may run downstream of the join —
     the corpus side streams map-only start to finish."""
+    from dataframe_spark.operators import dedup
     from dataframe_spark.operators.dedup import contamination_scores
 
     corpus = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
     bench = spark.createDataFrame([(9, "a b c")], "doc_id long, text string")
-    # force the broadcast side of the r5 size gate: an ExistingRDD
-    # has no size estimate, so the None default conservatively picks
-    # the shuffle-join scale path for it
+    # force the broadcast side of the r5 size gate: a list-built
+    # frame reads 2^63-1 plan bytes (plans/stats.py), so the gate
+    # would pick the shuffle-join scale path for it
+    monkeypatch.setattr(dedup, "BENCH_BROADCAST_MAX_BYTES", 1 << 63)
     qe = (
         contamination_scores(
             corpus, "doc_id", "text", bench, "text", n=3,
-            broadcast_bench=True,
         )._jdf.queryExecution()
     )
     plan = qe.executedPlan().toString()
@@ -170,12 +171,13 @@ def test_sample_k_per_group_single_shuffle(spark, sf_dir):
     assert plan.count("Exchange hashpartitioning") == 1
 
 
-def test_summarize_small_path_is_jvm_radix(spark):
+def test_summarize_small_path_is_jvm_radix(spark, monkeypatch):
     """summarize's r8 small path contract: all-JVM (no Python/Arrow
     stage), the pass-2 hit-bin filter joins on the BROADCAST fused
     long key, and the bin histogram partitions by column index —
     never a single constant-key funnel."""
     from dataframe_spark import DataFrame
+    from dataframe_spark.operators import quantiles
 
     df = DataFrame(
         spark.createDataFrame(
@@ -183,8 +185,10 @@ def test_summarize_small_path_is_jvm_radix(spark):
             "a double, b double",
         )
     )
+    # a list-built frame reads 2^63-1 plan bytes (plans/stats.py)
+    monkeypatch.setattr(quantiles, "QUANTILE_BUFFER_MAX_BYTES", 1 << 63)
     plan = (
-        df.summarize(distributed=False)
+        df.summarize()
         .df._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -453,3 +457,19 @@ def test_fallbacks_warn_once_per_process(monkeypatch):
 def test_classic_session_takes_no_fallback(spark, monkeypatch):
     monkeypatch.setattr(errors, "_warned", set())
     assert _call_fallback_sites(spark.range(10)) == []
+
+
+def test_list_built_frames_read_the_default_size(spark):
+    """The same rows read as unsized when built from a Python list (a
+    LogicalRDD: spark.sql.defaultSizeInBytes) and as their actual
+    bytes when built from pandas (a LocalRelation), so every size
+    gate takes its scale side for a list-built frame (plans/stats.py)."""
+    import pandas as pd
+
+    from dataframe_spark.plans.stats import plan_size_bytes
+
+    rows = [(i, f"doc {i}") for i in range(20)]
+    listed = spark.createDataFrame(rows, "id long, text string")
+    framed = spark.createDataFrame(pd.DataFrame(rows, columns=["id", "text"]))
+    assert plan_size_bytes(listed) >= 1 << 62
+    assert plan_size_bytes(framed) < 1 << 20

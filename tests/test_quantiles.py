@@ -64,12 +64,12 @@ def test_wide_layout(lineitem):
     assert [row["q25"], row["q50"], row["q75"]] == pytest.approx(ref)
 
 
-def test_summarize_distributed_matches_default(lineitem):
+def test_summarize_distributed_matches_default(lineitem, monkeypatch):
+    from dataframe_spark.operators import quantiles
+
     base = {r["column_name"]: r for r in lineitem.summarize().df.collect()}
-    dist = {
-        r["column_name"]: r
-        for r in lineitem.summarize(distributed=True).df.collect()
-    }
+    monkeypatch.setattr(quantiles, "QUANTILE_BUFFER_MAX_BYTES", 0)
+    dist = {r["column_name"]: r for r in lineitem.summarize().df.collect()}
     assert set(base) == set(dist)
     for c, b in base.items():
         d = dist[c]
@@ -97,16 +97,22 @@ def test_radix_bin_monotone(spark):
     assert nan_bin > max(b for b, v in zip(bins, vals) if not math.isnan(v))
 
 
-def test_grouped_quantiles_paths_agree_and_gate_engages(lineitem):
+def test_grouped_quantiles_paths_agree_and_gate_engages(lineitem, monkeypatch):
     """Both per-group strategies produce identical rows, and the
     auto gate picks buffered below the threshold / radix above it
     (observable from the physical plan: the radix path has Window
     execs, the buffered path a `percentile` aggregate)."""
     from dataframe_spark.core import DataFrame
+    from dataframe_spark.operators import quantiles
 
     grouped = DataFrame(lineitem.df).group_by(["l_returnflag"])
-    small = grouped.quantiles("l_extendedprice", [0.25, 0.5, 0.9], distributed=False)
-    big = grouped.quantiles("l_extendedprice", [0.25, 0.5, 0.9], distributed=True)
+    monkeypatch.setattr(quantiles, "QUANTILE_BUFFER_MAX_BYTES", 1 << 63)
+    small = grouped.quantiles("l_extendedprice", [0.25, 0.5, 0.9])
+    monkeypatch.setattr(quantiles, "QUANTILE_BUFFER_MAX_BYTES", 0)
+    big = grouped.quantiles("l_extendedprice", [0.25, 0.5, 0.9])
+    monkeypatch.undo()
+    # the gate patched to 0 engages the radix plan
+    assert "Window" in big.df._jdf.queryExecution().executedPlan().toString()
     assert small.df.columns == big.df.columns
     k = lambda r: (r["l_returnflag"], r["prob"])
     s = {k(r): r["value"] for r in small.df.collect()}
@@ -119,19 +125,6 @@ def test_grouped_quantiles_paths_agree_and_gate_engages(lineitem):
     plan = auto.df._jdf.queryExecution().executedPlan().toString()
     # sf0.001 fixture is far below the gate → buffered percentile path
     assert "percentile" in plan and "Window" not in plan
-    forced = grouped.quantiles("l_extendedprice", [0.5], distributed=True)
-    plan_d = forced.df._jdf.queryExecution().executedPlan().toString()
-    assert "Window" in plan_d
-
-    import dataframe_spark.core as core_mod
-
-    old = core_mod.QUANTILE_BUFFER_MAX_BYTES
-    core_mod.QUANTILE_BUFFER_MAX_BYTES = 0
-    try:
-        gated = grouped.quantiles("l_extendedprice", [0.5])
-        assert "Window" in gated.df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        core_mod.QUANTILE_BUFFER_MAX_BYTES = old
 
 
 def test_winsorize_clips_to_quantile_band(lineitem):
@@ -227,11 +220,12 @@ def test_quantile_bucket_null_and_order(spark):
     assert bs == sorted(bs) and bs[0] == 0 and bs[-1] == 4
 
 
-def test_winsorize_preserves_nulls_and_boundless_groups(spark):
+def test_winsorize_preserves_nulls_and_boundless_groups(spark, monkeypatch):
     """NULL values must stay NULL (greatest/least would collapse them
     to __lo) and a group whose values are ALL null has no quantile
     bounds — its rows must pass through unclipped, not be dropped
     (clip-not-filter contract)."""
+    from dataframe_spark.operators import quantiles
     from dataframe_spark.operators.quantiles import winsorize
 
     df = spark.createDataFrame(
@@ -239,7 +233,9 @@ def test_winsorize_preserves_nulls_and_boundless_groups(spark):
         + [("a", None), ("b", None), ("b", None)],
         "g string, x double",
     )
-    out = winsorize(df, "x", ["g"], 0.1, 0.9, distributed=False)
+    # a list-built frame reads 2^63-1 plan bytes (plans/stats.py)
+    monkeypatch.setattr(quantiles, "QUANTILE_BUFFER_MAX_BYTES", 1 << 63)
+    out = winsorize(df, "x", ["g"], 0.1, 0.9)
     rows = out.collect()
     assert len(rows) == 23  # no rows dropped
     for r in rows:

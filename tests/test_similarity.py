@@ -41,6 +41,22 @@ def test_cosine_pairs_threshold(vecs):
     assert {(r["a_id"], r["b_id"]) for r in pairs} == {(0, 1)}
 
 
+def test_cosine_pairs_tiled_side_matches_broadcast_scan(spark, sf_dir, monkeypatch):
+    """Above COSINE_BROADCAST_MAX_BYTES cosine_pairs runs as one
+    bucket of bucketed_cosine_pairs: same rows as the broadcast scan."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    key = lambda r: (r["a_id"], r["b_id"], r["cosine"])
+    scan = similarity.cosine_pairs(emb, "vec_id", "embedding", threshold=0.4)
+    assert "MapInPandas" in scan._jdf.queryExecution().executedPlan().toString()
+    monkeypatch.setattr(similarity, "COSINE_BROADCAST_MAX_BYTES", 0)
+    tiled = similarity.cosine_pairs(emb, "vec_id", "embedding", threshold=0.4)
+    assert "FlatMapGroupsInPandas" in (
+        tiled._jdf.queryExecution().executedPlan().toString()
+    )
+    want = sorted(map(key, scan.collect()))
+    assert sorted(map(key, tiled.collect())) == want and len(want) > 0
+
+
 def test_knn_lsh_contains_identical(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     brute = similarity.knn_brute(emb, "vec_id", "embedding", 0, k=10).collect()
@@ -632,11 +648,14 @@ def test_hierarchical_kmeans_semdedup_contract(spark):
     )
 
 
-def test_bucketed_cosine_pairs_matches_global_within_buckets(spark):
+def test_bucketed_cosine_pairs_matches_global_within_buckets(spark, monkeypatch):
     """Per-bucket GEMM pairs == the bucket-filtered subset of the
-    global exact pairs, including across GEMM row-block boundaries
-    (block_rows=3 forces multi-tile buckets)."""
+    global exact pairs (numpy brute force over the collected rows),
+    including across GEMM row-block boundaries (_BLOCK_ROWS = 3
+    forces multi-tile buckets)."""
     import random
+
+    import numpy as np
 
     from dataframe_spark.operators import similarity as S
 
@@ -648,19 +667,21 @@ def test_bucketed_cosine_pairs_matches_global_within_buckets(spark):
     df = spark.createDataFrame(
         rows, "vec_id long, embedding array<double>, label int"
     )
+    monkeypatch.setattr(S, "_BLOCK_ROWS", 3)
     got = {
         (r["a_id"], r["b_id"], r["cosine"])
         for r in S.bucketed_cosine_pairs(
-            df, "vec_id", "embedding", "label", threshold=0.2, block_rows=3
+            df, "vec_id", "embedding", "label", threshold=0.2
         ).collect()
     }
-    label = {i: i % 3 for i in range(40)}
+    U = np.array([v for _, v, _ in rows])
+    U /= np.linalg.norm(U, axis=1)[:, None]
+    sims = np.round(U @ U.T, 4)
     want = {
-        (r["a_id"], r["b_id"], r["cosine"])
-        for r in S.cosine_pairs(
-            df, "vec_id", "embedding", threshold=0.2
-        ).collect()
-        if label[r["a_id"]] == label[r["b_id"]]
+        (a, b, float(sims[a, b]))
+        for a in range(40)
+        for b in range(a + 1, 40)
+        if a % 3 == b % 3 and sims[a, b] >= 0.2
     }
     assert got == want and len(want) > 10
     import pytest
@@ -696,8 +717,8 @@ def test_bucketed_cosine_pairs_null_buckets_dropped(spark):
     assert got == [(1, 2)]  # the two null-label rows never pair
 
 
-def test_bucketed_cosine_pairs_mega_bucket_split(spark):
-    """A bucket past max_bucket_rows splits into sub-block tile
+def test_bucketed_cosine_pairs_mega_bucket_split(spark, monkeypatch):
+    """A bucket past _MAX_CLUSTER_ROWS splits into sub-block tile
     pairs (ADVICE r10 #2); result identical to the single-task
     shape, each unordered pair exactly once."""
     import random
@@ -715,9 +736,10 @@ def test_bucketed_cosine_pairs_mega_bucket_split(spark):
     whole = S.bucketed_cosine_pairs(
         df, "vec_id", "embedding", "label", threshold=0.2
     ).collect()
+    monkeypatch.setattr(S, "_BLOCK_ROWS", 3)
+    monkeypatch.setattr(S, "_MAX_CLUSTER_ROWS", 7)
     split = S.bucketed_cosine_pairs(
-        df, "vec_id", "embedding", "label", threshold=0.2,
-        block_rows=3, max_bucket_rows=7,
+        df, "vec_id", "embedding", "label", threshold=0.2
     ).collect()
     key = lambda r: (r["a_id"], r["b_id"], r["cosine"])
     ws, ss = sorted(map(key, whole)), sorted(map(key, split))

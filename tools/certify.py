@@ -1049,7 +1049,7 @@ def sweep_vectors1000x(argv):
     number) with all rep walls committed, pagerank setup +
     per-iteration walls recorded per rep (graph.pagerank profile
     hook), and a MEGABUCKET stanza at the top decade: 100k rows
-    forced into ONE bucket (~3x max_bucket_rows) so the
+    forced into ONE bucket (~3x _MAX_CLUSTER_ROWS) so the
     bucketed-GEMM sub-block split path runs at certification scale
     instead of only in its toy-sized unit test.
     -> CERT_vectors_1000x.json
@@ -1233,9 +1233,10 @@ def sweep_vectors1000x(argv):
             n_deg = degenerate.count()
             import math as _math
 
-            s = _math.ceil(n_deg / 32768)
+            cap = similarity._MAX_CLUSTER_ROWS
+            s = _math.ceil(n_deg / cap)
             part["megabucket"] = {
-                "bucket_rows": n_deg, "max_bucket_rows": 32768,
+                "bucket_rows": n_deg, "max_bucket_rows": cap,
                 "split_sub_blocks": s, "n_tiles": s * (s + 1) // 2,
                 "wall_sec": mb_wall, "n_pairs": mb_pairs,
                 "note": "split path exercised at cert scale (VERDICT "
