@@ -177,14 +177,10 @@ def shingles(df: SparkDF, id_col: str, text_col: str, n: int = 3) -> SparkDF:
 # sample job, three slim joins, an eager count) that only amortize
 # when the corpus is big enough for candidate volume to matter.
 # Below it the simple shapes win and the RESULT is identical either
-# way. Measured with the worker daemon (plans/pyworker.py) on a
-# 4-vCPU box, build + collect, storage cache cleared per run, 5
-# interleaved reps after a warm-up, small side vs the knee patched
-# to 0: jaccard_pairs 0.91-1.48 s vs 2.94-4.61 s at sf0.01 and
-# 1.72-2.43 s vs 3.81-5.22 s at sf0.1; minhash_dedup_pairs
-# 1.95-2.71 s vs 2.90-5.76 s and 3.20-3.89 s vs 3.69-4.54 s; small
-# side faster in all 20 pairs, same pairs (25 and 256). The demotion
-# sample alone (_sampled_hot_probe) took 0.30-0.52 s and 0.45-0.64 s.
+# way: at sf0.1 on a 4-vCPU box (5 interleaved cold-storage reps,
+# ROADMAP direction 3) jaccard_pairs took 1.72-2.43 s against
+# 3.81-5.22 s with the knee at 0, minhash_dedup_pairs 3.20-3.89 s
+# against 3.69-4.54 s, and the demotion sample alone 0.45-0.64 s.
 # jaccard_pairs' df order and edit_distance_pairs also stop
 # broadcasting their vocabulary above it. Compared against the
 # input plan's size (plans.stats.plan_size_bytes).

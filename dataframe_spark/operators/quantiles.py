@@ -70,11 +70,8 @@ def quantile_buffer_fits(df: SparkDF) -> bool:
 
 
 def grouped_quantiles_for(df: SparkDF):
-    """The per-group quantile function for inputs the size of
-    ``df``: :func:`grouped_quantiles_buffered` under the gate,
-    :func:`exact_quantiles_grouped` above it. Both take
-    ``(frame, group_cols, value_col, probs)`` and emit identical
-    rows."""
+    """:func:`grouped_quantiles_buffered` when ``df`` fits the gate,
+    else :func:`exact_quantiles_grouped` (same signature and rows)."""
     if quantile_buffer_fits(df):
         return grouped_quantiles_buffered
     return exact_quantiles_grouped

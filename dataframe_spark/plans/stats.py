@@ -11,14 +11,11 @@ fallback, which routes Connect sessions onto the fully-distributed
 path — the side that is always correct, merely not the small-input
 shortcut. The first fallback in a process emits a FallbackWarning.
 
-A plan leaf with no size estimate reads ``spark.sql.defaultSizeInBytes``
-(2^63-1 by default), so every gate takes its scale side for it, as
-Spark's own broadcast planner does. A frame built by
-``createDataFrame`` from a Python list is such a leaf (a LogicalRDD):
-20 rows read 2^63-1 bytes, while the same rows built from pandas (a
-LocalRelation) read their actual few hundred bytes. Tests that need
-the small side on a list-built frame patch the gate's constant to
-``1 << 63``.
+A leaf with no size estimate reads ``spark.sql.defaultSizeInBytes``
+(2^63-1), so every gate takes its scale side for it, as Spark's
+broadcast planner does. ``createDataFrame`` from a Python list makes
+such a leaf (a LogicalRDD); from pandas it makes a sized
+LocalRelation.
 """
 
 from __future__ import annotations
