@@ -1,10 +1,16 @@
 """Similarity search over embedding columns (array<float>).
 
-LLM-pipeline extension (no reference analogue). All math runs
-JVM-side via higher-order functions (zip_with / aggregate) in
-double precision with sequential summation — deterministic and
-engine-portable. The LSH variant buckets by random-hyperplane signs
-so the candidate set per query is a bucket, not the corpus.
+LLM-pipeline extension (no reference analogue). The JVM expressions
+``dot``, ``norm`` and ``cosine`` (double precision, summed
+sequentially) define every similarity here. The all-pairs operators
+share one pair rule: a and b link iff ``cosine(a, b) >= t`` (semdedup)
+or ``round(cosine(a, b), 4) >= t`` (cosine_pairs and
+bucketed_cosine_pairs, which report that value), as the expression
+join decides: a NULL id, vector or element or a zero norm never links,
+and an overflowing norm links with a NaN cosine (Spark orders NaN
+above every double). They share one Arrow GEMM tile kernel,
+:func:`_cosine_tiles`. The LSH variant buckets by random-hyperplane
+signs so the candidate set per query is a bucket, not the corpus.
 """
 
 from __future__ import annotations
@@ -13,6 +19,8 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import functions as F
@@ -57,6 +65,134 @@ COSINE_BROADCAST_MAX_BYTES = 64 * 1024 * 1024
 # sends larger clusters the distributed route, with the same tiles.
 _MAX_CLUSTER_ROWS = 32768
 _BLOCK_ROWS = 2048
+# GEMM on unit rows and the expressions' sequential dot / (na·nb)
+# differ by at most ~(d + 3)·2^-52 for rows whose norms lie in
+# _NORM_RANGE (product and quotient stay finite and normal), so a pair
+# whose GEMM value lies more than _BOUNDARY_EPS from every decision
+# boundary cannot flip for any dim below ~10^6. The others, and every
+# pair of a row outside the range (zero, huge, NaN or inf norms), are
+# decided with the expressions' own arithmetic.
+_BOUNDARY_EPS = 1e-9
+_NORM_RANGE = (1e-100, 1e100)
+
+
+def _seq_dot(A, B):
+    """Row-wise dot products summed left to right from 0.0 — the
+    order ``dot``'s aggregate() folds in, so the doubles are
+    bit-identical to the expression's."""
+    acc = np.zeros(A.shape[0])
+    for k in range(A.shape[1]):
+        acc += A[:, k] * B[:, k]
+    return acc
+
+
+def _round4(s):
+    """Spark's ``round(s, 4)``: HALF_UP on the double's decimal form,
+    so |s| rounds away from zero from the double nearest each midpoint
+    (k + 0.5)/1e4 on, where numpy's binary rounding can fall short."""
+    k = np.round(s * 1e4)
+    a, ak = np.abs(s), np.abs(k)
+    k += np.sign(s) * ((a >= (ak + 0.5) / 1e4) * 1.0 - (a < (ak - 0.5) / 1e4))
+    return k / 1e4 + 0.0  # a decimal has no -0.0
+
+
+def _int_ids(col):
+    """Integral Arrow ids as int64 numpy (a NULL, never live, reads 0)."""
+    return np.asarray(pc.fill_null(col, 0), dtype="int64")
+
+
+def _read_rows(ids, vecs):
+    """``(V, nrm, live)`` of Arrow id and ``list<double>`` (or
+    ``list<float>``) columns: the float64 matrix, the sequential norms,
+    and False where the id, the vector or an element is NULL (a NULL
+    cosine: never a pair)."""
+    ok = np.asarray(pc.is_valid(vecs))
+    live = ok & np.asarray(pc.is_valid(ids))
+    lens = pc.list_value_length(vecs).drop_null().to_numpy()
+    d = int(lens[0]) if len(lens) else 0
+    if (lens != d).any():
+        raise ValueError("cosine kernels need embeddings of one length")
+    flat = pc.list_flatten(vecs)  # a NULL vector has no elements
+    V = np.zeros((len(ok), d))
+    V[ok] = np.asarray(flat).reshape(-1, d) if d else 0.0
+    if flat.null_count:
+        live[ok] &= ~np.asarray(flat.is_null()).reshape(-1, d).any(axis=1)
+    with np.errstate(all="ignore"):
+        return V, np.sqrt(_seq_dot(V, V)), live
+
+
+def _seq_cosine(a, i, b, j):
+    """The expressions' ``dot / nullif(na·nb, 0)`` on row pairs (i, j)
+    of sides a and b, and False where it is NULL (a zero product)."""
+    (VA, na, _), (VB, nb, _) = a, b
+    with np.errstate(all="ignore"):
+        p = na[i] * nb[j]
+        return _seq_dot(VA[i], VB[j]) / p, p != 0
+
+
+def _cosine_tiles(a, b, threshold, rounded, block_rows):
+    """Yield ``(i, j, cosine)`` arrays of the row pairs of sides ``a``
+    and ``b`` (:func:`_read_rows`; ``b=None`` pairs ``a`` with itself,
+    i < j) that the module's pair rule links, on ``round(cosine, 4)``
+    (then the value reported) when ``rounded``.
+
+    Rows with norms in _NORM_RANGE are scored as GEMM tiles of
+    ``block_rows`` (the caller's _BLOCK_ROWS) unit rows, upper triangle
+    only on the diagonal. Pairs whose GEMM value lies within
+    _BOUNDARY_EPS of a decision boundary (``threshold``; when rounded,
+    every 4dp rounding midpoint, which covers it) and every pair of a
+    row outside the range are decided with the expressions' arithmetic."""
+    same = b is None
+    b = a if same else b
+    lo_n, hi_n = _NORM_RANGE
+    reg_a = a[2] & (a[1] >= lo_n) & (a[1] <= hi_n)
+    reg_b = reg_a if same else b[2] & (b[1] >= lo_n) & (b[1] <= hi_n)
+    Ra, Rb = np.flatnonzero(reg_a), np.flatnonzero(reg_b)
+    UA = a[0][Ra] / a[1][Ra, None]
+    UB = UA if same else b[0][Rb] / b[1][Rb, None]
+    floor = threshold - (5e-5 if rounded else 0.0) - _BOUNDARY_EPS
+
+    def linked(i, j, s, valid=True):
+        if rounded:
+            s = _round4(s)
+        ok = valid & ((s >= threshold) | np.isnan(s))
+        return i[ok], j[ok], s[ok]
+
+    for lo in range(0, len(Ra), block_rows):
+        top = lo if same else 0
+        S = UA[lo : lo + block_rows] @ UB[top:].T
+        if same:
+            h = S.shape[0]
+            S[:, :h][np.tril_indices(h)] = -np.inf  # upper triangle only
+        r, c = np.nonzero(S >= floor)
+        i, j, s = Ra[lo + r], Rb[top + c], S[r, c]
+        if rounded:  # distance to the nearest rounding midpoint
+            gap = np.abs(s * 1e4 % 1 - 0.5) / 1e4
+        else:
+            gap = np.abs(s - threshold)
+        near = gap < _BOUNDARY_EPS
+        if near.any():
+            s[near] = _seq_cosine(a, i[near], b, j[near])[0]
+        yield linked(i, j, s)
+    # a row outside the range pairs with every live row of the other
+    # side (on the diagonal: every regular row and every later odd one)
+    later = np.arange(len(b[2]))
+    for x in np.flatnonzero(a[2] & ~reg_a):
+        j = np.flatnonzero(reg_b | (b[2] & (later > x)) if same else b[2])
+        i = np.full(len(j), x)
+        yield linked(i, j, *_seq_cosine(a, i, b, j))
+    for y in [] if same else np.flatnonzero(b[2] & ~reg_b):
+        j = np.full(len(Ra), y)
+        yield linked(Ra, j, *_seq_cosine(a, Ra, b, j))
+
+
+def _check_int_ids(df, id_col, fn):
+    id_type = dict(df.dtypes)[id_col]
+    if id_type not in ("int", "bigint", "smallint", "tinyint"):
+        raise TypeError(
+            f"{fn} needs an integral id column, got {id_col}: {id_type}; "
+            "hash string ids to longs first (e.g. xxhash64)"
+        )
 
 
 def cosine_pairs(
@@ -65,66 +201,54 @@ def cosine_pairs(
     vec_col: str,
     threshold: float = 0.9,
 ) -> SparkDF:
-    """All pairs (a < b) with cosine >= threshold — broadcast scan or
-    bounded GEMM tiles, chosen like Spark's broadcast-join cutover.
+    """All pairs ``(a_id, b_id, cosine)`` linked by the module's pair
+    rule at ``threshold``, ``cosine`` being the rounded value.
 
     When the corpus fits a broadcast (plan size estimate <=
     COSINE_BROADCAST_MAX_BYTES, the same PLAN-side test a broadcast
-    join uses — no eager count job), ship the whole matrix to every
-    task and run one shuffle-free mapInPandas scan: each Arrow batch
-    is multiplied against the broadcast matrix with one BLAS call,
-    emitting only (a < b) pairs. Otherwise every row goes into ONE
-    bucket of :func:`bucketed_cosine_pairs`, whose sub-block tiles
-    bound each task's memory at any corpus size. Either way the math
-    is float64 GEMM rounded to 4dp. This is the exact baseline; LSH
+    join uses — no eager count job), the whole matrix ships to every
+    task and one shuffle-free mapInArrow scan multiplies each batch
+    against it. Otherwise every row goes into ONE bucket of
+    :func:`bucketed_cosine_pairs`, whose sub-block tiles bound each
+    task's memory at any corpus size. This is the exact baseline; LSH
     bucketing (knn_lsh) is the sub-quadratic scale path.
 
     ``id_col`` must be integral: both paths carry ids through int64
     numpy arrays, and a string id would crash one path and silently
     empty the other (review r5)."""
-    id_type = dict(df.dtypes)[id_col]
-    if id_type not in ("int", "bigint", "smallint", "tinyint"):
-        raise TypeError(
-            f"cosine_pairs needs an integral id column, got "
-            f"{id_col}: {id_type}; hash string ids to longs first "
-            "(e.g. xxhash64)"
-        )
-    spark = df.sparkSession
     from ..plans.stats import plan_size_bytes
 
+    _check_int_ids(df, id_col, "cosine_pairs")
+    spark = df.sparkSession
     est = plan_size_bytes(df)
     if est > COSINE_BROADCAST_MAX_BYTES:
         return bucketed_cosine_pairs(
             df.withColumn("__one", F.lit(0)), id_col, vec_col, "__one", threshold
         )
-    corpus = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")).toPandas()
-    ids = corpus["id"].to_numpy(dtype="int64")
-    M = np.stack(corpus["vec"].to_numpy()).astype("float64")
-    Mn = np.linalg.norm(M, axis=1)
-    bc = spark.sparkContext.broadcast((ids, M, Mn))
+    corpus = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")).toArrow()
+    bc = spark.sparkContext.broadcast(
+        (_int_ids(corpus["id"]), _read_rows(corpus["id"], corpus["vec"]))
+    )
+    block_rows = _BLOCK_ROWS
 
     def scan(batches):
-        b_ids, b_M, b_Mn = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            A = np.stack(pdf["vec"].to_numpy()).astype("float64")
-            a_ids = pdf["id"].to_numpy(dtype="int64")
-            sims = (A @ b_M.T) / np.outer(np.linalg.norm(A, axis=1), b_Mn)
-            sims = np.round(sims, 4)
-            # emit from the smaller-id side only: each unordered
-            # pair appears in exactly one batch row's output
-            mask = (sims >= threshold) & (a_ids[:, None] < b_ids[None, :])
-            ai, bi_ = np.nonzero(mask)
-            yield pd.DataFrame(
-                {"a_id": a_ids[ai], "b_id": b_ids[bi_], "cosine": sims[ai, bi_]}
-            )
+        b_ids, b = bc.value
+        for batch in batches:
+            a_ids = _int_ids(batch.column("id"))
+            a = _read_rows(batch.column("id"), batch.column("vec"))
+            for i, j, s in _cosine_tiles(a, b, threshold, True, block_rows):
+                # emit from the smaller-id side only: each unordered
+                # pair appears in exactly one batch row's output
+                keep = a_ids[i] < b_ids[j]
+                yield pa.record_batch(
+                    {"a_id": a_ids[i][keep], "b_id": b_ids[j][keep], "cosine": s[keep]}
+                )
 
     parallelism = spark.sparkContext.defaultParallelism
     src = df.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
     ).repartition(max(2, min(parallelism, (est >> 15) + 1)))
-    return src.mapInPandas(scan, "a_id long, b_id long, cosine double")
+    return src.mapInArrow(scan, "a_id long, b_id long, cosine double")
 
 
 def bucketed_cosine_pairs(
@@ -133,51 +257,34 @@ def bucketed_cosine_pairs(
     vec_col: str,
     bucket_col: str,
     threshold: float = 0.9,
-    round_to: int | None = 4,
 ) -> SparkDF:
-    """Exact all-pairs cosine WITHIN each bucket: (a_id, b_id,
-    cosine) for a < b and cosine >= threshold, computed with BLAS
-    GEMM tiles per bucket (applyInPandas) — the cluster-then-pair
-    contract: after any coarse grouping (k-means cell, LSH bucket,
-    planted label), candidate work is the sum of squared BUCKET
-    sizes, never corpus², and each bucket's math is a dense matmul
-    instead of per-pair JVM expression evaluation (measured ~50x on
-    256-dim floats). Rounded to 4dp like cosine_pairs, so the two
-    paths agree bit-for-bit on shared pairs.
+    """:func:`cosine_pairs`' rows among pairs that share a non-NULL
+    ``bucket_col`` value (an equijoin, so NULL never matches NULL),
+    one grouped Arrow task per bucket: the cluster-then-pair contract.
+    After any coarse grouping (k-means cell, LSH bucket, planted
+    label), candidate work is the sum of squared BUCKET sizes, never
+    corpus², and each bucket's math is a dense matmul instead of
+    per-pair JVM expression evaluation (measured ~50x on 256-dim
+    floats).
 
-    NULL buckets are dropped before grouping (r11, ADVICE r10 #1):
-    the contract is an equijoin on the bucket key, and SQL equijoins
-    never match NULL = NULL — without the filter Spark's groupBy
-    would pool every unassigned row into one giant phantom bucket
-    and pair them all.
+    Per-task memory is bounded: a bucket larger than _MAX_CLUSTER_ROWS
+    is split into s = ceil(n / _MAX_CLUSTER_ROWS) id-hash sub-blocks,
+    and every sub-block PAIR (i <= j) becomes its own task — the
+    a-side row replicates to tiles (blk..s-1), the b-side to
+    (0..blk-1), so each unordered pair lands in exactly one tile. A
+    task therefore holds at most two sub-blocks plus one _BLOCK_ROWS ×
+    _MAX_CLUSTER_ROWS sims tile, whatever the bucket size. Oversize
+    detection is one bucket-keyed count agg whose over-limit survivors
+    broadcast; small buckets stay one task with one copy of each row.
+    ``id_col`` must be integral (the cosine_pairs rule)."""
+    _check_int_ids(df, id_col, "bucketed_cosine_pairs")
+    return _tile_pairs(df, id_col, vec_col, bucket_col, threshold, True)
 
-    Per-task memory is BOUNDED (r11, ADVICE r10 #2 — the r10 kernel
-    tiled only the sims matrix; the full bucket still materialized
-    per task, an OOM cliff for a degenerate mega-bucket): buckets
-    larger than _MAX_CLUSTER_ROWS are split into s =
-    ceil(n / _MAX_CLUSTER_ROWS) id-hash sub-blocks and every
-    sub-block PAIR (i <= j) becomes its own task — the a-side row
-    replicates to tiles (blk..s-1), the b-side to (0..blk-1), so each
-    unordered pair lands in exactly one tile. A task therefore holds
-    at most two sub-blocks (2 × _MAX_CLUSTER_ROWS × dim doubles) plus
-    one _BLOCK_ROWS × _MAX_CLUSTER_ROWS sims tile, whatever the
-    bucket size; oversize detection is one bucket-keyed count agg
-    whose over-limit survivors (≤ corpus/_MAX_CLUSTER_ROWS rows)
-    broadcast.
-    Small buckets keep the r10 single-task shape: blk = 0, s = 1,
-    one a-role copy per row — no duplication, same shuffle volume.
-    ``id_col`` must be integral (the cosine_pairs rule: ids ride
-    int64 numpy). ``round_to`` (r13): decimal places for the output
-    cosine — default 4 keeps the public cosine_pairs-agreement
-    contract; ``None`` emits raw float64 sims so a caller can
-    threshold on the unrounded value (semdedup's oversized-cluster
-    route, which re-decides pairs near its threshold exactly)."""
-    id_type = dict(df.dtypes)[id_col]
-    if id_type not in ("int", "bigint", "smallint", "tinyint"):
-        raise TypeError(
-            f"bucketed_cosine_pairs needs an integral id column, got "
-            f"{id_col}: {id_type}; hash string ids to longs first"
-        )
+
+def _tile_pairs(df, id_col, vec_col, bucket_col, threshold, rounded):
+    """bucketed_cosine_pairs' sub-block fan-out and grouped tiles;
+    ``rounded=False`` links and reports raw cosines (semdedup's
+    oversized route)."""
     block_rows, max_bucket_rows = _BLOCK_ROWS, _MAX_CLUSTER_ROWS
     src = df.where(F.col(bucket_col).isNotNull()).select(
         F.col(bucket_col).alias("__bkt"),
@@ -228,64 +335,37 @@ def bucketed_cosine_pairs(
     )
     tagged = a_side.unionByName(b_side)
 
-    def tile(key, pdf):
+    def tile(key, table):
         # diagonal is decided by the KEY, never by which roles showed
         # up: a cross tile whose b-block hashed empty must yield
         # nothing, not replay the a-block's diagonal
-        same = key[1] == key[2]
-        asub = pdf[pdf.role == "a"]
-        bsub = asub if same else pdf[pdf.role == "b"]
-        if asub.empty or bsub.empty or (same and len(asub) < 2):
-            return pd.DataFrame({"a_id": [], "b_id": [], "cosine": []})
-        a_ids = asub["id"].to_numpy(dtype="int64")
-        b_ids = bsub["id"].to_numpy(dtype="int64")
-        # rows are pre-normalized ONCE per tile (r12, ADVICE r11 #1):
-        # the previous per-block (A @ B.T) / np.outer(An, Bn) shape
-        # allocated four transient block_rows x |B| float64 arrays
-        # per GEMM step (~0.5 GB each at the 2048 x 32768 defaults) —
-        # normalizing in place and rounding in place leaves the
-        # matmul output as the only per-step allocation, so a task's
-        # peak really is two sub-blocks plus one sims tile.
-        # Zero-norm rows become nan either way (0/0), so the >=
-        # threshold mask is unchanged.
-        A_all = np.stack(asub["vec"].to_numpy()).astype("float64")
-        A_all /= np.linalg.norm(A_all, axis=1)[:, None]
-        if same:
-            B = A_all
-        else:
-            B = np.stack(bsub["vec"].to_numpy()).astype("float64")
-            B /= np.linalg.norm(B, axis=1)[:, None]
-        outs = []
-        for lo in range(0, len(A_all), block_rows):
-            A = A_all[lo : lo + block_rows]
-            sims = A @ B.T
-            if round_to is not None:
-                # the public 4dp contract (cosine_pairs agreement);
-                # round_to=None keeps raw float64 sims for callers
-                # thresholding on the unrounded value
-                np.round(sims, round_to, out=sims)
-            blk_ids = a_ids[lo : lo + block_rows]
-            # cross tiles carry each unordered pair once but in
-            # arbitrary id order — normalize to (lo, hi); diagonal
-            # tiles emit the upper triangle only
-            mask = sims >= threshold
-            if same:
-                mask &= blk_ids[:, None] < b_ids[None, :]
-            ai, bi_ = np.nonzero(mask)
-            pa, pb = blk_ids[ai], b_ids[bi_]
-            keep = pa != pb
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "a_id": np.minimum(pa, pb)[keep],
-                        "b_id": np.maximum(pa, pb)[keep],
-                        "cosine": sims[ai, bi_][keep],
-                    }
-                )
-            )
-        return pd.concat(outs, ignore_index=True)
+        a = table.filter(pc.equal(table["role"], "a"))
+        b = a if key[1].as_py() == key[2].as_py() else (
+            table.filter(pc.equal(table["role"], "b"))
+        )
+        a_ids, b_ids = _int_ids(a["id"]), _int_ids(b["id"])
+        found = [(np.empty(0, "int64"), np.empty(0, "int64"), np.empty(0))]
+        for i, j, s in _cosine_tiles(
+            _read_rows(a["id"], a["vec"]),
+            None if b is a else _read_rows(b["id"], b["vec"]),
+            threshold,
+            rounded,
+            block_rows,
+        ):
+            found.append((a_ids[i], b_ids[j], s))
+        pa_, pb_, s = map(np.concatenate, zip(*found))
+        # each unordered pair once, in arbitrary id order: normalize
+        # to (lo, hi) and drop pairs of rows sharing an id
+        keep = pa_ != pb_
+        return pa.table(
+            {
+                "a_id": np.minimum(pa_, pb_)[keep],
+                "b_id": np.maximum(pa_, pb_)[keep],
+                "cosine": s[keep],
+            }
+        )
 
-    return tagged.groupBy("__bkt", "bi", "bj").applyInPandas(
+    return tagged.groupBy("__bkt", "bi", "bj").applyInArrow(
         tile, "a_id long, b_id long, cosine double"
     )
 
@@ -734,37 +814,6 @@ def knn_lsh(
 
 
 
-# GEMM on unit rows and the expression join's sequential
-# dot / (na·nb) differ by at most ~(d + 3)·2^-52 for rows whose norms
-# lie in _NORM_RANGE (product and quotient stay finite and normal), so
-# every pair within _BOUNDARY_EPS of tau is re-decided exactly and the
-# rest cannot flip for any dim below ~10^6. Rows outside the range
-# (zero, huge, NaN or inf norms) are decided exactly on every pair.
-_BOUNDARY_EPS = 1e-9
-_NORM_RANGE = (1e-100, 1e100)
-
-
-def _seq_dot(A, B):
-    """Row-wise dot products summed left to right from 0.0 — the
-    order ``dot``'s aggregate() folds in, so the doubles are
-    bit-identical to the expression's."""
-    acc = np.zeros(A.shape[0])
-    for k in range(A.shape[1]):
-        acc += A[:, k] * B[:, k]
-    return acc
-
-
-def _exact_edges(V, nrm, i, j, tau):
-    """The expression join's verdict ``dot / nullif(na·nb, 0) >= tau``
-    on row pairs (i, j): a zero norm product is SQL NULL (no edge) and
-    NaN sorts above every double in Spark, so a NaN cosine IS an
-    edge."""
-    with np.errstate(all="ignore"):
-        p = nrm[i] * nrm[j]
-        sim = _seq_dot(V[i], V[j]) / p
-    return (p != 0) & ((sim >= tau) | np.isnan(sim))
-
-
 def _min_labels(lab, u, v):
     """Fold edges (u, v) into ``lab``, a star forest over node indices
     (lab[x] <= x, lab[lab] == lab): hook the larger root of every
@@ -791,58 +840,24 @@ def _fused_keep(tau):
     """Grouped Arrow kernel: one cluster's (id, __v, __cid) rows in,
     (id, cluster, keep) out. Rows are sorted by id and rows sharing an
     id are one node, so node order is id order and a component's
-    smallest node is its smallest id — the survivor."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    lo_tau, hi_tau = tau - _BOUNDARY_EPS, tau + _BOUNDARY_EPS
+    smallest node is its smallest id — the survivor. Edges are the
+    cosine kernel's raw links at tau."""
+    block_rows = _BLOCK_ROWS
 
     def run(table):
         t = table.take(pc.sort_indices(table["id"], null_placement="at_end"))
         ids = t["id"].combine_chunks()
-        vecs = t["__v"].combine_chunks()
         n = len(ids)
-        dims = pc.list_value_length(vecs).to_numpy(zero_copy_only=False)
-        if (dims != dims[0]).any():
-            raise ValueError("semdedup needs embeddings of one length")
-        flat = vecs.flatten()
-        V = flat.to_numpy(zero_copy_only=False).reshape(n, -1)
-        # ids are NULL last: a NULL id never satisfies a_id < b_id
+        # ids are NULL last: a NULL id is never live, so never links
         m = n - ids.null_count
         node = np.zeros(n, dtype="int64")
         if m > 1:
             same = pc.equal(ids[1:m], ids[: m - 1]).to_numpy(zero_copy_only=False)
             node[1:m] = np.cumsum(~same)
-        live = np.arange(n) < m
-        if flat.null_count:
-            # a NULL element makes the row's norm NULL: never an edge
-            live &= ~flat.is_null().to_numpy(zero_copy_only=False).reshape(n, -1).any(axis=1)
-        with np.errstate(all="ignore"):
-            nrm = np.sqrt(_seq_dot(V, V))
-        regular = live & (nrm >= _NORM_RANGE[0]) & (nrm <= _NORM_RANGE[1])
         lab = np.arange(int(node[m - 1]) + 1 if m else 0)
-
-        R = np.flatnonzero(regular)
-        U = V[R] / nrm[R, None]
-        for lo in range(0, len(R), _BLOCK_ROWS):
-            S = U[lo : lo + _BLOCK_ROWS] @ U[lo:].T
-            b = S.shape[0]
-            S[:, :b][np.tril_indices(b)] = -np.inf  # upper triangle only
-            r, c = np.nonzero(S >= lo_tau)
-            i, j = R[lo + r], R[lo + c]
-            near = np.flatnonzero(S[r, c] < hi_tau)
-            if len(near):
-                sure = np.ones(len(r), dtype=bool)
-                sure[near] = _exact_edges(V, nrm, i[near], j[near], tau)
-                i, j = i[sure], j[sure]
+        side = _read_rows(ids, t["__v"])
+        for i, j, _ in _cosine_tiles(side, None, tau, False, block_rows):
             lab = _min_labels(lab, node[i], node[j])
-        for x in np.flatnonzero(live & ~regular):
-            # pair the odd row with every regular row and every later
-            # odd row, each decided exactly
-            j = np.flatnonzero(regular | (live & (np.arange(n) > x)))
-            j = j[_exact_edges(V, nrm, np.full(len(j), x), j, tau)]
-            lab = _min_labels(lab, np.full(len(j), node[x]), node[j])
-
         keep = np.zeros(n, dtype=bool)
         keep[:m] = lab[node[:m]] == node[:m]
         return pa.table(
@@ -857,11 +872,9 @@ def _fused_keep(tau):
 
 
 def _oversized_keep(rows: SparkDF, tau: float) -> SparkDF:
-    """The distributed route for clusters one task cannot hold: GEMM
-    candidates from bucketed_cosine_pairs' sub-block tiles at
-    tau - _BOUNDARY_EPS, the same exact re-check (as the expression
-    itself) below tau + _BOUNDARY_EPS and for rows outside
-    _NORM_RANGE, then connected_components. Node keys are
+    """The distributed route for clusters one task cannot hold: the
+    raw links at tau of bucketed_cosine_pairs' sub-block tiles (the
+    fused pass's kernel), then connected_components. Node keys are
     (cluster << 32) + dense_rank(id) — integral, unique per (cluster,
     id) and ordered like the ids inside a cluster, so the min-key
     survivor is the min-id one and string ids work too."""
@@ -877,34 +890,9 @@ def _oversized_keep(rows: SparkDF, tau: float) -> SparkDF:
             + F.dense_rank().over(Window.partitionBy("__cid").orderBy("id")),
         )
     )
-    regular = norm(F.col("__v")).between(*_NORM_RANGE)
-    # persisted: the sure and the near edges both read the GEMM pass,
-    # and connected_components reads its edges several times
-    scored = _reusable(
-        bucketed_cosine_pairs(
-            nodes.where(regular), "__k", "__v", "__cid",
-            threshold=tau - _BOUNDARY_EPS,
-            round_to=None,
-        )
-    )
-    a = nodes.select(F.col("__k").alias("a_id"), "__cid", F.col("__v").alias("__va"))
-    b = nodes.select(F.col("__k").alias("b_id"), "__cid", F.col("__v").alias("__vb"))
-    exact = cosine(F.col("__va"), F.col("__vb")) >= tau
-    near = (
-        scored.where(F.col("cosine") < tau + _BOUNDARY_EPS)
-        .join(a.drop("__cid"), "a_id")
-        .join(b.drop("__cid"), "b_id")
-        .where(exact)
-    )
-    # ~regular is NULL for a NULL norm, so rows with NULL elements
-    # (never an edge) drop out here as well
-    odd = a.where(~norm(F.col("__va")).between(*_NORM_RANGE)).join(b, "__cid")
-    odd = odd.where((F.col("a_id") != F.col("b_id")) & exact)
+    # persisted: connected_components reads its edges several times
     edges = _reusable(
-        scored.where(F.col("cosine") >= tau + _BOUNDARY_EPS)
-        .select("a_id", "b_id")
-        .unionByName(near.select("a_id", "b_id"))
-        .unionByName(odd.select("a_id", "b_id"))
+        _tile_pairs(nodes, "__k", "__v", "__cid", tau, False).select("a_id", "b_id")
     )
     comp = connected_components(edges, "a_id", "b_id")
     kept = nodes.join(comp, nodes["__k"] == comp["node"], "left").select(
@@ -943,13 +931,10 @@ def semdedup(
     pairs are NOT considered (the paper's documented approximation;
     that is exactly what makes the method scale).
 
-    Edge contract (exact at every scale): two rows of one cluster are
-    linked iff ``a_id < b_id`` and ``dot(a, b) / nullif(norm(a) *
-    norm(b), 0) >= tau``, where ``dot`` and ``norm`` are this module's
-    expressions — double precision, summed sequentially. So a NULL id,
-    a NULL vector element or a zero norm product never links, and a
-    NaN cosine (an overflowing norm) does: Spark orders NaN above
-    every double. The survivor of each
+    Edge contract (exact at every scale): two rows of one cluster link
+    by the module's pair rule on the raw cosine, ``cosine(a, b) >=
+    tau`` (so a NULL id or element or a zero norm never links, and an
+    overflowing norm's NaN does). The survivor of each
     transitively-closed group is its smallest id (the paper keeps the
     member with the LOWEST centroid similarity; min-id is this
     engine's deterministic, tie-stable choice — swap via the returned
@@ -959,27 +944,21 @@ def semdedup(
 
     The 100 TB shape: every duplicate group lies inside one cluster,
     so after the cluster assignment each cluster is ONE grouped Arrow
-    task that scores its pairs as GEMM tiles on unit rows, re-decides
-    every pair within 1e-9 of ``tau`` with the sequential formula
-    above (the GEMM/sequential gap is ~d·2^-52, so nothing else can
-    flip), and joins components by vectorized label propagation. Pair
-    work is the sum of squared CLUSTER sizes — bounded by choosing
-    ``k`` proportional to corpus size (the paper's setting: 50k
-    clusters for LAION-440M) — never corpus all-pairs. Clusters above
+    task that links its pairs with the module's GEMM tile kernel (every
+    pair within 1e-9 of ``tau`` re-decided with the expressions'
+    sequential arithmetic; the GEMM/sequential gap is ~d·2^-52, so
+    nothing else can flip) and joins components by vectorized label
+    propagation. Pair work is the sum of squared CLUSTER sizes —
+    bounded by choosing ``k`` proportional to corpus size (the paper's
+    setting: 50k clusters for LAION-440M) — never corpus all-pairs.
+    Clusters above
     32,768 rows, which one task cannot hold, are found by a k-row size
     probe and take a distributed route (bucketed_cosine_pairs'
-    sub-block tiles, the same exact re-check, connected_components)
+    sub-block tiles through the same kernel, connected_components)
     with identical output. The model is k x dim driver floats (same
     footprint contract as the IVF codebook); k > 64 fits the two-level
     codebook (kmeans_fit_hierarchical). Deterministic: seeded init and
     a fixed iteration count."""
-    from pyspark.sql.types import (
-        BooleanType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
     from .dedup import _reusable
 
     if centroids is None and k > HIER_KMEANS_MIN_K:
@@ -1012,13 +991,7 @@ def semdedup(
         .where(F.col("count") > _MAX_CLUSTER_ROWS)
         .collect()
     ]
-    schema = StructType(
-        [
-            StructField("id", sides.schema["id"].dataType),
-            StructField("cluster", IntegerType()),
-            StructField("keep", BooleanType()),
-        ]
-    )
+    schema = f"id {sides.schema['id'].dataType.simpleString()}, cluster int, keep boolean"
     if not oversized:
         return sides.groupBy("__cid").applyInArrow(_fused_keep(tau), schema)
     big = F.col("__cid").isin(oversized)

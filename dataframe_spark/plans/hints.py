@@ -62,16 +62,20 @@ def effective_scan_partitions(sdf, planned: int, needed: int) -> int:
         return planned
 
 
-def ensure_scan_parallelism(sdf, min_fill: float = 0.5, max_bytes: int = 1 << 30):
+SCAN_MIN_FILL = 0.5  # ensure_scan_parallelism's gates (its docstring)
+SCAN_MAX_BYTES = 1 << 30
+
+
+def ensure_scan_parallelism(sdf):
     """Repartition a SMALL scan whose file-split count underuses the
     cores (a 5 MB single-row-group parquet file scans as ONE task, so
     every narrow map op downstream — tokenizing, hashing, shingling —
     runs single-threaded no matter how many cores exist).
 
     Strictly gated for scale honesty: no-op when the scan already
-    yields >= min_fill x defaultParallelism splits (at 100 TB the
+    yields >= SCAN_MIN_FILL x defaultParallelism splits (at 100 TB the
     files themselves provide parallelism) or when the plan-size
-    estimate exceeds ``max_bytes`` (repartitioning a large input
+    estimate exceeds SCAN_MAX_BYTES (repartitioning a large input
     would shuffle the corpus to fix nothing). Takes/returns a plain
     pyspark DataFrame so operators can use it internally."""
     try:
@@ -84,12 +88,12 @@ def ensure_scan_parallelism(sdf, min_fill: float = 0.5, max_bytes: int = 1 << 30
         # loses this hint, and guessing a repartition without the
         # split count would shuffle blindly.
         return sdf
-    needed = max(2, int(target * min_fill))
+    needed = max(2, int(target * SCAN_MIN_FILL))
     if effective_scan_partitions(sdf, n_parts, needed) >= needed:
         return sdf
     from .stats import plan_size_bytes
 
-    if plan_size_bytes(sdf) > max_bytes:
+    if plan_size_bytes(sdf) > SCAN_MAX_BYTES:
         return sdf
     return sdf.repartition(target)
 

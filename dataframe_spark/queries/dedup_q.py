@@ -164,7 +164,7 @@ def q_dedup_embedding(spark, sf_dir):
 
 def q_bucket_cosine(spark, sf_dir):
     """Within-bucket exact cosine pairs (cluster-then-pair): one
-    BLAS GEMM per planted label bucket via applyInPandas — the
+    grouped Arrow GEMM kernel per planted label bucket — the
     sum-of-squared-bucket-sizes candidate contract that feeds the
     pagerank edge build at scale (similarity.bucketed_cosine_pairs,
     r10). Oracle: the same label-equijoin + rounded cosine filter."""

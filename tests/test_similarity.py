@@ -47,10 +47,10 @@ def test_cosine_pairs_tiled_side_matches_broadcast_scan(spark, sf_dir, monkeypat
     emb = load_table(spark, sf_dir, "embeddings")
     key = lambda r: (r["a_id"], r["b_id"], r["cosine"])
     scan = similarity.cosine_pairs(emb, "vec_id", "embedding", threshold=0.4)
-    assert "MapInPandas" in scan._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in scan._jdf.queryExecution().executedPlan().toString()
     monkeypatch.setattr(similarity, "COSINE_BROADCAST_MAX_BYTES", 0)
     tiled = similarity.cosine_pairs(emb, "vec_id", "embedding", threshold=0.4)
-    assert "FlatMapGroupsInPandas" in (
+    assert "FlatMapGroupsInArrow" in (
         tiled._jdf.queryExecution().executedPlan().toString()
     )
     want = sorted(map(key, scan.collect()))
@@ -745,3 +745,114 @@ def test_bucketed_cosine_pairs_mega_bucket_split(spark, monkeypatch):
     ws, ss = sorted(map(key, whole)), sorted(map(key, split))
     assert ws == ss and len(ws) > 20
     assert len(set(ws)) == len(ws)  # no pair emitted twice
+
+
+def _expression_pairs(df, t):
+    """The rows every 4dp pair path must return: the self-join on
+    ``a_id < b_id`` filtered by ``round(cosine(a, b), 4) >= t``, keyed
+    so NaN cosines compare."""
+    a = df.select(F.col("vec_id").alias("a_id"), F.col("embedding").alias("va"))
+    b = df.select(F.col("vec_id").alias("b_id"), F.col("embedding").alias("vb"))
+    cos = F.round(similarity.cosine("va", "vb"), 4).alias("cosine")
+    joined = a.join(b, F.col("a_id") < F.col("b_id")).select("a_id", "b_id", cos)
+    return _pair_rows(joined.where(F.col("cosine") >= t))
+
+
+def _pair_rows(pairs):
+    return sorted((r["a_id"], r["b_id"], repr(r["cosine"])) for r in pairs.collect())
+
+
+def _pair_paths(df, t, monkeypatch):
+    """{path: rows} of cosine_pairs' broadcast scan and tiled side and
+    bucketed_cosine_pairs on single-task and on sub-block tiles, for a
+    frame whose rows share one ``label``."""
+    got = {}
+    with monkeypatch.context() as m:
+        m.setattr(similarity, "COSINE_BROADCAST_MAX_BYTES", 1 << 63)
+        got["scan"] = _pair_rows(similarity.cosine_pairs(df, "vec_id", "embedding", t))
+        m.setattr(similarity, "COSINE_BROADCAST_MAX_BYTES", 0)
+        m.setattr(similarity, "_BLOCK_ROWS", 3)
+        got["tiled"] = _pair_rows(similarity.cosine_pairs(df, "vec_id", "embedding", t))
+        got["bucket"] = _pair_rows(
+            similarity.bucketed_cosine_pairs(df, "vec_id", "embedding", "label", t))
+        m.setattr(similarity, "_MAX_CLUSTER_ROWS", 5)
+        got["sub-block"] = _pair_rows(
+            similarity.bucketed_cosine_pairs(df, "vec_id", "embedding", "label", t))
+    return got
+
+
+def _midpoint_groups(n=12, dim=32, mid=0.90005):
+    """``n`` pairs (u, v) whose sequential cosine sits within a few
+    ulps of the 4dp rounding midpoint ``mid``, found by bisecting v =
+    u + s·w: even groups keep the last v that rounds up (cosine >=
+    ``mid``), odd ones the first that rounds down."""
+    import numpy as np
+
+    rng = np.random.RandomState(3)
+
+    def seq(u, v):
+        V = np.array([u, v])
+        nrm = np.sqrt(similarity._seq_dot(V, V))
+        return similarity._seq_dot(V[:1], V[1:])[0] / (nrm[0] * nrm[1])
+
+    rows = []
+    for g in range(n):
+        u, w = rng.randn(dim), rng.randn(dim)
+        lo, hi = 0.0, 4.0
+        while lo < (lo + hi) / 2 < hi:
+            s = (lo + hi) / 2
+            lo, hi = (s, hi) if seq(u, u + s * w) >= mid else (lo, s)
+        v = u + (hi if g % 2 else lo) * w
+        assert (seq(u, v) >= mid) == (g % 2 == 0)
+        rows += [(2 * g, u.tolist(), 0), (2 * g + 1, v.tolist(), 0)]
+    return rows
+
+
+def test_rounding_midpoint_pairs_follow_expression(spark, monkeypatch):
+    """Pairs planted one ulp either side of the 0.90005 rounding
+    midpoint, where the GEMM value often lands on the other side:
+    every 4dp pair path returns the expression join's rows (Spark's
+    HALF_UP round of the sequential cosine), and semdedup on both
+    routes links exactly the pairs at or above tau = 0.90005."""
+    df = spark.createDataFrame(
+        _midpoint_groups(), "vec_id long, embedding array<double>, label int"
+    )
+    ups = [(2 * g, 2 * g + 1) for g in range(0, 12, 2)]
+    both = sorted(ups + [(2 * g, 2 * g + 1) for g in range(1, 12, 2)])
+    for t, pairs, values in ((0.9, both, {"0.9", "0.9001"}), (0.9001, ups, {"0.9001"})):
+        want = _expression_pairs(df, t)
+        assert [(a, b) for a, b, _ in want] == pairs
+        assert {c for _, _, c in want} == values
+        for path, got in _pair_paths(df, t, monkeypatch).items():
+            assert got == want, (path, t)
+    out, fused = _semdedup_rows(df, 0.90005, k=1)
+    assert fused == _semdedup_reference(df, "vec_id", "embedding", out, 0.90005)
+    assert [i for i, _, keep in fused if not keep] == [2 * g + 1 for g in range(0, 12, 2)]
+    monkeypatch.setattr(similarity, "_MAX_CLUSTER_ROWS", 5)
+    monkeypatch.setattr(similarity, "_BLOCK_ROWS", 3)
+    assert _semdedup_rows(df, 0.90005, k=1)[1] == fused
+
+
+def test_pair_paths_odd_rows_follow_expression(spark, monkeypatch):
+    """The odd rows of test_semdedup_odd_rows_follow_expression_semantics
+    through the public pair functions: a zero or underflowing norm
+    never pairs with a finite one, an overflowing norm pairs with a NaN
+    cosine, a NULL element never pairs."""
+    rows = [
+        (0, [1.0, 0.0, 0.0]),
+        (1, [2.0, 0.01, 0.0]),
+        (2, [0.0, 0.0, 0.0]),
+        (3, [1e-200, 0.0, 0.0]),
+        (4, [1e200, 1e200, 1e200]),
+        (5, [1e200, 2e200, 1e200]),
+        (6, [1.0, None, 0.0]),
+        (7, [0.0, 1.0, 0.0]),
+    ]
+    df = spark.createDataFrame(
+        [(i, v, 0) for i, v in rows], "vec_id long, embedding array<double>, label int"
+    )
+    want = _expression_pairs(df, 0.9)
+    assert want == [(0, 1, "1.0"), (2, 4, "nan"), (2, 5, "nan"), (3, 4, "nan"),
+                    (3, 5, "nan"), (4, 5, "nan")]
+    for path, got in _pair_paths(df, 0.9, monkeypatch).items():
+        assert got == want, path

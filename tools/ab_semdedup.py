@@ -1,4 +1,5 @@
-"""Interleaved A/B of ``similarity.semdedup`` between two source trees.
+"""Interleaved A/B of a ``similarity`` operator (``--op``, a key of
+OPS; default semdedup) between two source trees.
 
     python tools/ab_semdedup.py --a NAME=OLD_TREE --b NAME=NEW_TREE \\
         --data NAME=DIR[:SHARD_ROWS] [--data ...] --reps 3 --out CERT.json
@@ -11,13 +12,13 @@ Every rep runs one child process per tree, alternating which tree goes
 first, on every data dir. A child runs in its tree, imports the
 library from it, starts a local[nproc] session, and on each shard
 (consecutive ``vec_id`` ranges of SHARD_ROWS rows; the whole file when
-omitted) runs one untimed warm-up call, then times ``semdedup`` plus
-``collect()`` with q_semdedup's settings (tau 0.4, max_iter 3, k =
-max(8, rows // 256)). It reports the walls, the number of Spark jobs
-the timed calls launched, the dropped-row count and a SHA-256 of the
-sorted (id, cluster, keep) rows. The artifact keeps every child's
-record, the spin canary before and after it, each tree's median wall
-per data dir and whether the row hashes of the two trees agree.
+omitted) runs one untimed warm-up call, then times the operator plus
+``collect()`` with its registry query's settings. It reports the
+walls, the number of Spark jobs the timed calls launched, semdedup's
+dropped-row count and a SHA-256 of the sorted rows. The artifact
+keeps every child's record, the spin canary before and after it,
+each tree's median wall per data dir and whether the row hashes of
+the two trees agree.
 """
 
 from __future__ import annotations
@@ -40,7 +41,23 @@ def _spin_ms() -> float:
     return round((time.perf_counter() - t0) * 1000, 1)
 
 
-def child(tree: str, data: str, shard_rows: int) -> dict:
+# (similarity, shard, shard rows) -> result; cosine_pairs_tiled is
+# cosine_pairs with its broadcast gate shut
+OPS = {
+    "semdedup": lambda S, df, n: S.semdedup(
+        df, "vec_id", "embedding", k=max(8, n // 256), tau=0.4, max_iter=3
+    ),
+    "cosine_pairs": lambda S, df, n: S.cosine_pairs(df, "vec_id", "embedding", 0.4),
+    "cosine_pairs_tiled": lambda S, df, n: setattr(
+        S, "COSINE_BROADCAST_MAX_BYTES", 0
+    ) or S.cosine_pairs(df, "vec_id", "embedding", 0.4),
+    "bucketed_cosine_pairs": lambda S, df, n: S.bucketed_cosine_pairs(
+        df, "vec_id", "embedding", "label", 0.4
+    ),
+}
+
+
+def child(tree: str, data: str, shard_rows: int, op: str) -> dict:
     sys.path.insert(0, tree)
     from pyspark.sql import functions as F
 
@@ -59,10 +76,7 @@ def child(tree: str, data: str, shard_rows: int) -> dict:
         shard = emb.where((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + size))
 
         def call():
-            res = similarity.semdedup(
-                shard, "vec_id", "embedding",
-                k=max(8, size // 256), tau=0.4, max_iter=3,
-            )
+            res = OPS[op](similarity, shard, size)
             return sorted(tuple(r) for r in res.collect())
 
         call()
@@ -87,12 +101,13 @@ def main(argv: list[str]) -> int:
     for flag, val in zip(argv[::2], argv[1::2]):
         opts.setdefault(flag.lstrip("-"), []).append(val)
     if "child" in opts:
-        tree, data, shard_rows = opts["child"][0].split("|")
-        print(json.dumps(child(tree, data, int(shard_rows))))
+        tree, data, shard_rows, op = opts["child"][0].split("|")
+        print(json.dumps(child(tree, data, int(shard_rows), op)))
         return 0
     trees = dict(opts[side][0].split("=", 1) for side in ("a", "b"))
     datas = dict(spec.split("=", 1) for spec in opts["data"])
     reps = int(opts.get("reps", ["3"])[0])
+    op = opts.get("op", ["semdedup"])[0]
     runs = []
     for rep in range(reps):
         for data, spec in datas.items():
@@ -105,7 +120,7 @@ def main(argv: list[str]) -> int:
                 res = subprocess.run(
                     [sys.executable, os.path.abspath(__file__), "--child",
                      f"{os.path.abspath(trees[tree])}|{os.path.abspath(path)}|"
-                     f"{shard_rows or 0}"],
+                     f"{shard_rows or 0}|{op}"],
                     capture_output=True, text=True, check=True,
                     cwd=trees[tree],
                 )
@@ -129,7 +144,7 @@ def main(argv: list[str]) -> int:
             for tree in trees
         }
         summary[data]["rows_identical"] = len({r["rows_sha256"] for r in mine}) == 1
-    artifact = {"reps": reps, "summary": summary, "runs": runs}
+    artifact = {"op": op, "reps": reps, "summary": summary, "runs": runs}
     with open(opts["out"][0], "w") as f:
         json.dump(artifact, f, indent=1)
     print(json.dumps(summary, indent=1))

@@ -61,7 +61,7 @@ def main():
     if not names:
         names = list(HEADLINE)
 
-    spark = get_spark("plans", master="local[4]")
+    spark = get_spark("plans", master="local[4]", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
     # r13 (VERDICT r12 ask #7): the session default (100k chars,
     # session.py — sized to keep per-run plan rendering cheap)
