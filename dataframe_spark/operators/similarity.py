@@ -353,14 +353,14 @@ def _tile_pairs(df, id_col, vec_col, bucket_col, threshold, rounded):
             block_rows,
         ):
             found.append((a_ids[i], b_ids[j], s))
-        pa_, pb_, s = map(np.concatenate, zip(*found))
+        ida, idb, s = map(np.concatenate, zip(*found))
         # each unordered pair once, in arbitrary id order: normalize
         # to (lo, hi) and drop pairs of rows sharing an id
-        keep = pa_ != pb_
+        keep = ida != idb
         return pa.table(
             {
-                "a_id": np.minimum(pa_, pb_)[keep],
-                "b_id": np.maximum(pa_, pb_)[keep],
+                "a_id": np.minimum(ida, idb)[keep],
+                "b_id": np.maximum(ida, idb)[keep],
                 "cosine": s[keep],
             }
         )
