@@ -13,7 +13,7 @@ from pyspark.sql import Column
 from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import functions as F
 
-from .similarity import _dvec, norm
+from .similarity import _dvec, _read_matrix, norm
 
 
 def l2_normalize(vec) -> Column:
@@ -57,7 +57,7 @@ def pca_fit(df: SparkDF, vec_col: str, k: int, ddof: int = 1):
     extension: the standard projection/whitening/compression step
     before clustering or semantic dedup at corpus scale).
 
-    The 100 TB shape: ONE mapInPandas pass emits a single partial
+    The 100 TB shape: ONE mapInArrow pass emits a single partial
     row per input partition — (n, Σx, flattened XᵀX Gram) — so the
     shuffle-free scan reduces to #partitions × (1 + d + d²) doubles
     of driver state (model-sized, the kmeans_fit/IVF-codebook
@@ -81,27 +81,26 @@ def pca_fit(df: SparkDF, vec_col: str, k: int, ddof: int = 1):
         _dvec(vec_col).alias("__v")
     )
 
-    def _partials(it):
-        import numpy as np
-        import pandas as pd
+    def _partials(batches):
+        import pyarrow as pa
 
         n = 0
         s = None
         g = None
-        for pdf in it:
-            if len(pdf) == 0:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            X = np.stack(pdf["__v"].to_numpy()).astype("float64")
+            X = _read_matrix(batch.column("__v"))[0]  # a NULL element is NaN
             n += X.shape[0]
             s = X.sum(axis=0) if s is None else s + X.sum(axis=0)
             gg = X.T @ X
             g = gg if g is None else g + gg
         if n:
-            yield pd.DataFrame(
-                {"n": [n], "s": [s.tolist()], "g": [g.ravel().tolist()]}
+            yield pa.record_batch(
+                {"n": pa.array([n]), "s": pa.array([s]), "g": pa.array([g.ravel()])}
             )
 
-    rows = vecs.mapInPandas(
+    rows = vecs.mapInArrow(
         _partials, "n long, s array<double>, g array<double>"
     ).collect()
     if not rows:

@@ -18,13 +18,11 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 
 def _dvec(c) -> Column:
@@ -101,22 +99,32 @@ def _int_ids(col):
     return np.asarray(pc.fill_null(col, 0), dtype="int64")
 
 
-def _read_rows(ids, vecs):
-    """``(V, nrm, live)`` of Arrow id and ``list<double>`` (or
-    ``list<float>``) columns: the float64 matrix, the sequential norms,
-    and False where the id, the vector or an element is NULL (a NULL
-    cosine: never a pair)."""
+def _read_matrix(vecs):
+    """``(V, valid)`` of an Arrow ``list<double>`` (or ``list<float>``)
+    column: the float64 matrix (NULL elements read NaN, NULL vectors
+    0.0) and the element-valid mask (False on a NULL element or
+    vector)."""
     ok = np.asarray(pc.is_valid(vecs))
-    live = ok & np.asarray(pc.is_valid(ids))
     lens = pc.list_value_length(vecs).drop_null().to_numpy()
     d = int(lens[0]) if len(lens) else 0
     if (lens != d).any():
-        raise ValueError("cosine kernels need embeddings of one length")
+        raise ValueError("embeddings must all have one length")
     flat = pc.list_flatten(vecs)  # a NULL vector has no elements
-    V = np.zeros((len(ok), d))
-    V[ok] = np.asarray(flat).reshape(-1, d) if d else 0.0
-    if flat.null_count:
-        live[ok] &= ~np.asarray(flat.is_null()).reshape(-1, d).any(axis=1)
+    V, valid = np.zeros((len(ok), d)), np.zeros((len(ok), d), dtype=bool)
+    if d:
+        V[ok] = np.asarray(flat).reshape(-1, d)
+        valid[ok] = np.asarray(pc.is_valid(flat)).reshape(-1, d)
+    return V, valid
+
+
+def _read_rows(ids, vecs):
+    """``(V, nrm, live)`` of Arrow id and vector columns
+    (:func:`_read_matrix`): the float64 matrix, the sequential norms,
+    and False where the id, the vector or an element is NULL (a NULL
+    cosine: never a pair)."""
+    V, valid = _read_matrix(vecs)
+    live = np.asarray(pc.is_valid(vecs)) & np.asarray(pc.is_valid(ids))
+    live &= valid.all(axis=1)
     with np.errstate(all="ignore"):
         return V, np.sqrt(_seq_dot(V, V)), live
 
@@ -221,10 +229,13 @@ def cosine_pairs(
     _check_int_ids(df, id_col, "cosine_pairs")
     spark = df.sparkSession
     est = plan_size_bytes(df)
+    parallelism = spark.sparkContext.defaultParallelism
     if est > COSINE_BROADCAST_MAX_BYTES:
-        return bucketed_cosine_pairs(
-            df.withColumn("__one", F.lit(0)), id_col, vec_col, "__one", threshold
-        )
+        # the fewest id-hash sub-blocks s whose s(s+1)/2 tiles fill
+        # the cores the broadcast scan spreads over
+        s = (math.isqrt(8 * parallelism) + 1) // 2
+        one = df.withColumn("__one", F.lit(0))
+        return _tile_pairs(one, id_col, vec_col, "__one", threshold, True, s)
     corpus = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")).toArrow()
     bc = spark.sparkContext.broadcast(
         (_int_ids(corpus["id"]), _read_rows(corpus["id"], corpus["vec"]))
@@ -244,7 +255,6 @@ def cosine_pairs(
                     {"a_id": a_ids[i][keep], "b_id": b_ids[j][keep], "cosine": s[keep]}
                 )
 
-    parallelism = spark.sparkContext.defaultParallelism
     src = df.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
     ).repartition(max(2, min(parallelism, (est >> 15) + 1)))
@@ -281,26 +291,25 @@ def bucketed_cosine_pairs(
     return _tile_pairs(df, id_col, vec_col, bucket_col, threshold, True)
 
 
-def _tile_pairs(df, id_col, vec_col, bucket_col, threshold, rounded):
+def _tile_pairs(df, id_col, vec_col, bucket_col, threshold, rounded, min_blocks=1):
     """bucketed_cosine_pairs' sub-block fan-out and grouped tiles;
     ``rounded=False`` links and reports raw cosines (semdedup's
-    oversized route)."""
+    oversized route). Every bucket splits into at least
+    ``min_blocks`` sub-blocks (cosine_pairs' one bucket)."""
     block_rows, max_bucket_rows = _BLOCK_ROWS, _MAX_CLUSTER_ROWS
     src = df.where(F.col(bucket_col).isNotNull()).select(
         F.col(bucket_col).alias("__bkt"),
         F.col(id_col).alias("id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
     )
+    blocks, split_above = F.ceil(F.col("__n") / F.lit(max_bucket_rows)), max_bucket_rows
+    if min_blocks > 1:  # every bucket splits
+        blocks, split_above = F.greatest(blocks, F.lit(min_blocks)), 0
     oversized = (
         src.groupBy("__bkt")
         .agg(F.count(F.lit(1)).alias("__n"))
-        .where(F.col("__n") > max_bucket_rows)
-        .select(
-            "__bkt",
-            F.ceil(F.col("__n") / F.lit(max_bucket_rows))
-            .cast("int")
-            .alias("__s"),
-        )
+        .where(F.col("__n") > split_above)
+        .select("__bkt", blocks.cast("int").alias("__s"))
     )
     sized = src.join(F.broadcast(oversized), "__bkt", "left").select(
         "__bkt",
@@ -345,13 +354,16 @@ def _tile_pairs(df, id_col, vec_col, bucket_col, threshold, rounded):
         )
         a_ids, b_ids = _int_ids(a["id"]), _int_ids(b["id"])
         found = [(np.empty(0, "int64"), np.empty(0, "int64"), np.empty(0))]
-        for i, j, s in _cosine_tiles(
-            _read_rows(a["id"], a["vec"]),
-            None if b is a else _read_rows(b["id"], b["vec"]),
-            threshold,
-            rounded,
-            block_rows,
-        ):
+        tiles = ()
+        if a.num_rows and b.num_rows:  # a block may hash empty
+            tiles = _cosine_tiles(
+                _read_rows(a["id"], a["vec"]),
+                None if b is a else _read_rows(b["id"], b["vec"]),
+                threshold,
+                rounded,
+                block_rows,
+            )
+        for i, j, s in tiles:
             found.append((a_ids[i], b_ids[j], s))
         ida, idb, s = map(np.concatenate, zip(*found))
         # each unordered pair once, in arbitrary id order: normalize
@@ -466,20 +478,60 @@ def _unit_rows(M):
     return M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
 
 
-def _assign_udf(C_unit):
-    """Arrow-batched nearest-centroid assignment against a broadcast
-    row-normalized codebook (one BLAS matmul per batch) — the ONE
-    definition every k-means/IVF path shares."""
+def _assign(V, C_unit, S_unit=None):
+    """Nearest-centroid ids of float64 rows ``V``: the argmax of each
+    unit row against the unit codebook ``C_unit`` (first index on
+    ties, so a zero row or one with a NaN element takes centroid 0).
+    With the (k1, k2, dim) sub-codebooks ``S_unit`` the id is
+    coarse·k2 + the argmax against that coarse cluster's block:
+    n·(k1 + k2)·d work instead of n·k·d."""
+    U = _unit_rows(V)
+    cid = np.argmax(U @ C_unit.T, axis=1)
+    if S_unit is None:
+        return cid
+    sub = np.zeros_like(cid)
+    for c in np.unique(cid):
+        m = cid == c
+        sub[m] = np.argmax(U[m] @ S_unit[c].T, axis=1)
+    return cid * S_unit.shape[1] + sub
 
-    @pandas_udf("int")
-    def assign(s: pd.Series) -> pd.Series:
-        A = np.stack(s.to_numpy()).astype("float64")
-        An = np.maximum(np.linalg.norm(A, axis=1, keepdims=True), 1e-12)
-        return pd.Series(
-            np.argmax((A / An) @ C_unit.T, axis=1).astype("int32")
-        )
+
+def _assign_udf(C_unit, S_unit=None):
+    """The one assignment column every k-means/IVF path shares:
+    :func:`_assign` per Arrow batch against a broadcast codebook."""
+
+    @F.arrow_udf("int")
+    def assign(vecs: pa.Array) -> pa.Array:
+        return pa.array(_assign(_read_matrix(vecs)[0], C_unit, S_unit), pa.int32())
 
     return assign
+
+
+def _lloyd_step(V, valid, C_unit, acc=None):
+    """One Lloyd assignment of rows ``V`` (:func:`_read_matrix`)
+    against ``C_unit``, added onto ``acc`` (an earlier return): a
+    (k, 2·dim + 1) array holding each cluster's per-position sums and
+    non-NULL counts, then its row count. Sums run row by row from 0.0
+    and skip NULL elements, the order in which Spark's ``avg`` adds up
+    a partition."""
+    k, d = C_unit.shape
+    acc = np.zeros((k, 2 * d + 1)) if acc is None else acc
+    cid = _assign(V, C_unit)
+    X = np.hstack([np.where(valid, V, 0.0), valid, np.ones((len(V), 1))])
+    ends = np.cumsum(np.bincount(cid, minlength=k))[:-1]
+    for j, rows in enumerate(np.split(np.argsort(cid, kind="stable"), ends)):
+        if len(rows):
+            acc[j] = np.add.reduce(np.vstack([acc[j], X[rows]]))
+    return acc
+
+
+def _lloyd_update(C, acc):
+    """Move each centroid of ``C`` with rows (:func:`_lloyd_step`) to
+    its rows' mean, NaN where a position is NULL in all of them; a
+    cluster without rows keeps its centroid."""
+    d, hit = C.shape[1], acc[:, -1] > 0
+    with np.errstate(invalid="ignore"):
+        C[hit] = (acc[:, :d] / acc[:, d:-1])[hit]
 
 
 def _rank_probes(C_unit, qv, nprobe):
@@ -499,49 +551,48 @@ def kmeans_fit(
 ):
     """Distributed Lloyd k-means over an embedding column; returns a
     (k, dim) numpy centroid matrix (the model — k×dim floats of
-    driver state, like any fitted model).
+    driver state, like any fitted model). Rows without an embedding
+    do not participate.
 
     Init is deterministic: the k rows with the smallest
-    xxhash64(id, seed). Each iteration is ONE distributed pass:
-    assignment is an Arrow-batched pandas UDF (one BLAS matmul per
-    batch against the broadcast centroids); the centroid update is
-    posexplode → groupBy(cid, pos) avg — the shuffle is bounded by
-    #partitions × k × dim map-side partials and the collect by
-    k × dim (the model itself). The r7 form unrolled the update
-    into ``dim`` separate ``avg(element_at(vec, i))`` aggregate
-    COLUMNS, fine at the bench's dim=64 but thousands of codegen
-    expressions per pass at real embedding widths (768–4096); the
-    exploded plan keeps a single-digit agg-column count at any dim
-    (pinned in tests at dim 1024). Rows never reach the driver."""
-    # null embeddings would poison the init stack (np.stack over a
-    # None) and every avg; a corpus with missing vectors is normal —
-    # they simply don't participate in the model
+    xxhash64(id, seed). Each iteration is ONE shuffle-free mapInArrow
+    pass: every partition runs :func:`_lloyd_step` over its batches
+    and yields one row of k×dim sums and counts, which the driver adds
+    up in partition order. Rows never reach the driver.
+
+    Contract (shared with :func:`kmeans_fit_hierarchical`): the fit is
+    deterministic for a fixed partitioning; NULL elements are skipped
+    position by position (a position NULL in every row of a cluster
+    becomes NaN, as Spark's ``avg`` gives NULL); a cluster with no
+    rows keeps its centroid."""
     vecs = df.where(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("id"), _dvec(vec_col).alias("vec")
     )
     init = (
         vecs.orderBy(F.xxhash64(F.col("id"), F.lit(seed)), F.col("id"))
         .limit(k)
-        .toPandas()
+        .toArrow()
     )
-    centroids = np.stack(init["vec"].to_numpy()).astype("float64")
-    dim = centroids.shape[1]
+    if not init.num_rows:
+        raise ValueError("kmeans_fit: no non-null vectors")
+    C = _read_matrix(init["vec"])[0]
+    k, d = C.shape
 
     for _ in range(max_iter):
-        assigned = vecs.withColumn(
-            "__cid", _assign_udf(_unit_rows(centroids))(F.col("vec"))
-        )
-        rows = (
-            assigned.select(
-                "__cid", F.posexplode("vec").alias("__pos", "__x")
-            )
-            .groupBy("__cid", "__pos")
-            .agg(F.avg("__x").alias("__m"))
-            .collect()
-        )
-        for r in rows:
-            centroids[r["__cid"]][r["__pos"]] = r["__m"]
-    return centroids
+        C_unit = _unit_rows(C)
+
+        def partials(batches, C_unit=C_unit):
+            acc = None
+            for batch in batches:
+                acc = _lloyd_step(*_read_matrix(batch.column("vec")), C_unit, acc)
+            if acc is not None:
+                yield pa.record_batch({"acc": pa.array([acc.ravel()])})
+
+        parts = vecs.select("vec").mapInArrow(partials, "acc array<double>").toArrow()
+        parts = np.asarray(pc.list_flatten(parts["acc"])).reshape(-1, k, 2 * d + 1)
+        # added up as Spark merges avg partials: 0.0 + p1 + p2 + ...
+        _lloyd_update(C, np.add.reduce(np.vstack([np.zeros((1, k, 2 * d + 1)), parts])))
+    return C
 
 
 HIER_KMEANS_MIN_K = 64
@@ -558,30 +609,27 @@ def kmeans_fit_hierarchical(
     """Two-level Lloyd k-means for LARGE k: fit k1 = ceil(sqrt(k))
     coarse centroids with the flat fitter, assign once, then fit
     k2 = ceil(k/k1) sub-centroids INSIDE each coarse cluster in one
-    grouped Arrow pass. Returns ``(C1_unit, S_unit)`` where C1_unit
-    is (k1, dim) and S_unit is (k1, k2, dim); a row's cluster id is
-    ``coarse * k2 + sub``.
+    grouped Arrow pass (:func:`_lloyd_step` on the group). Returns
+    ``(C1_unit, S_unit)`` where C1_unit is (k1, dim) and S_unit is
+    (k1, k2, dim); a row's cluster id is ``coarse * k2 + sub``
+    (:func:`_assign` with both codebooks).
 
-    Why: flat Lloyd assignment is n·k·d work per pass. SemDeDup's
-    contract sets k ∝ n (mean cluster size fixed), so the flat fit
-    is O(n²·d) — invisible at 200k vectors (8 s of an 82 s wall,
-    r9 phase profile) but the dominant term by ~5M. Two levels cut
-    fit AND assignment to n·2·sqrt(k)·d = O(n^1.5·d); the edge join
-    (sum of squared cluster sizes) stays the linear term it was.
+    Why: flat Lloyd assignment is n·k·d work per pass, and SemDeDup
+    sets k ∝ n, so the flat fit is O(n²·d); two levels cut fit AND
+    assignment to n·2·sqrt(k)·d = O(n^1.5·d).
 
-    Determinism: the coarse fit is the seeded flat fitter; each
-    sub-fit sorts its group by a Spark-computed xxhash64(id, seed)
-    column and seeds from the first k2 rows, then runs a fixed
-    iteration count; assignment breaks argmax ties at the first
-    (lowest) index. Short groups fit fewer sub-centroids and PAD
-    the codebook by repeating their first row — a padded duplicate
-    can never win an argmax tie against its earlier original, so
-    padded ids are unreachable."""
+    Contract: :func:`kmeans_fit`'s. Each sub-fit sorts its group by a
+    Spark-computed xxhash64(id, seed), then id, seeds from the first
+    k2 rows and runs a fixed iteration count, so it does not depend
+    on the order rows arrive in. Short groups fit fewer
+    sub-centroids and PAD the codebook by repeating their first row —
+    a padded duplicate can never win an argmax tie against its
+    earlier original, so padded ids are unreachable. Empty coarse
+    clusters keep zero sub-codebooks: no row is assigned to them."""
     k1 = max(2, math.isqrt(max(1, k - 1)) + 1)  # ceil(sqrt(k))
     k2 = max(1, -(-k // k1))  # ceil(k / k1)
-    C1 = kmeans_fit(df, id_col, vec_col, k=k1, max_iter=max_iter, seed=seed)
-    C1u = _unit_rows(C1)
-    dim = C1.shape[1]
+    C1u = _unit_rows(kmeans_fit(df, id_col, vec_col, k=k1, max_iter=max_iter, seed=seed))
+    dim = C1u.shape[1]
     vecs = (
         df.where(F.col(vec_col).isNotNull())
         .select(F.col(id_col).alias("id"), _dvec(vec_col).alias("vec"))
@@ -589,76 +637,21 @@ def kmeans_fit_hierarchical(
         .withColumn("__coarse", _assign_udf(C1u)(F.col("vec")))
     )
 
-    def _fit_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        A = np.stack(pdf["vec"].to_numpy()).astype("float64")
-        order = np.lexsort((pdf["id"].to_numpy(), pdf["__h"].to_numpy()))
-        kk = min(k2, A.shape[0])
-        C = A[order[:kk]].copy()
+    def fit_group(table):
+        t = table.sort_by([("__h", "ascending"), ("id", "ascending")])
+        V, valid = _read_matrix(t["vec"])
+        C = V[:k2].copy()
         for _ in range(max_iter):
-            Cu = _unit_rows(C)
-            An = np.maximum(np.linalg.norm(A, axis=1, keepdims=True), 1e-12)
-            cid = np.argmax((A / An) @ Cu.T, axis=1)
-            for j in range(kk):
-                m = cid == j
-                if m.any():
-                    C[j] = A[m].mean(axis=0)
-        coarse = int(pdf["__coarse"].iloc[0])
-        return pd.DataFrame(
-            {
-                "coarse": [coarse] * kk,
-                "sub": list(range(kk)),
-                "centroid": [C[j].tolist() for j in range(kk)],
-            }
-        )
+            _lloyd_update(C, _lloyd_step(V, valid, _unit_rows(C)))
+        C = C[np.where(np.arange(k2) < len(C), np.arange(k2), 0)]  # the pad
+        return pa.table({"coarse": t["__coarse"][:1], "subs": pa.array([C.ravel()])})
 
-    rows = (
-        vecs.groupBy("__coarse")
-        .applyInPandas(
-            _fit_group,
-            "coarse int, sub int, centroid array<double>",
-        )
-        .collect()
-    )
-    S = np.zeros((k1, k2, dim), dtype="float64")
-    filled = np.zeros(k1, dtype=bool)
-    by_coarse: dict[int, list] = {}
-    for r in rows:
-        by_coarse.setdefault(r["coarse"], []).append(r)
-    for c, rs in by_coarse.items():
-        for r in rs:
-            S[c][r["sub"]] = np.asarray(r["centroid"])
-        first = min(rs, key=lambda r: r["sub"])
-        for j in range(len(rs), k2):  # pad short groups (see docstring)
-            S[c][j] = np.asarray(first["centroid"])
-        filled[c] = True
-    # empty coarse clusters keep zero rows: no vector is assigned
-    # to them, so their sub-codebook is never consulted
-    Su = S / np.maximum(
-        np.linalg.norm(S, axis=2, keepdims=True), 1e-12
-    )
+    fits = vecs.groupBy("__coarse").applyInArrow(fit_group, "coarse int, subs array<double>")
+    fits = fits.toArrow()
+    S = np.zeros((k1, k2, dim))
+    S[fits["coarse"].to_numpy()] = np.asarray(pc.list_flatten(fits["subs"])).reshape(-1, k2, dim)
+    Su = S / np.maximum(np.linalg.norm(S, axis=2, keepdims=True), 1e-12)
     return C1u, Su
-
-
-def _assign_hier_udf(C1_unit, S_unit):
-    """Arrow-batched two-stage assignment: coarse argmax against the
-    (k1, dim) codebook, then sub argmax against that coarse bucket's
-    (k2, dim) block — n·(k1 + k2)·d instead of n·k·d. Returns the
-    flat cluster id coarse·k2 + sub."""
-    k2 = S_unit.shape[1]
-
-    @pandas_udf("int")
-    def assign(s: pd.Series) -> pd.Series:
-        A = np.stack(s.to_numpy()).astype("float64")
-        An = np.maximum(np.linalg.norm(A, axis=1, keepdims=True), 1e-12)
-        U = A / An
-        coarse = np.argmax(U @ C1_unit.T, axis=1)
-        sub = np.zeros(len(coarse), dtype="int64")
-        for c in np.unique(coarse):
-            m = coarse == c
-            sub[m] = np.argmax(U[m] @ S_unit[c].T, axis=1)
-        return pd.Series((coarse * k2 + sub).astype("int32"))
-
-    return assign
 
 
 def knn_ivf(
@@ -681,8 +674,8 @@ def knn_ivf(
     nprobe/nlist of the data); probing is a broadcast semi-join, the
     final top-k is TakeOrderedAndProject. Recall/latency trades via
     nprobe exactly as in FAISS-style IVF-Flat."""
-    # rows without an embedding can't be neighbors and would crash
-    # the assign UDF's np.stack (same contract as kmeans_fit/semdedup)
+    # rows without an embedding can't be neighbors (the kmeans_fit
+    # and semdedup contract)
     df = df.where(F.col(vec_col).isNotNull())
     if centroids is None:
         centroids = kmeans_fit(
@@ -754,11 +747,8 @@ def query_ivf_index(
     nearest lists — the `__cid` filter is a Hive partition predicate,
     so pruning happens before any file is opened. Scoring is the
     JVM cosine + TakeOrderedAndProject."""
-    book = spark.read.parquet(f"{index_dir}/codebook").collect()
-    C = np.zeros((len(book), len(book[0]["centroid"])))
-    for r in book:
-        C[r["cid"]] = r["centroid"]
-    C = _unit_rows(C)
+    book = spark.read.parquet(f"{index_dir}/codebook").orderBy("cid").toArrow()
+    C = _unit_rows(_read_matrix(book["centroid"])[0])
     qv = np.asarray(list(query_vec), dtype="float64")
     probes = _rank_probes(C, qv, nprobe)
     lists = spark.read.parquet(f"{index_dir}/lists")
@@ -955,22 +945,22 @@ def semdedup(
     32,768 rows, which one task cannot hold, are found by a k-row size
     probe and take a distributed route (bucketed_cosine_pairs'
     sub-block tiles through the same kernel, connected_components)
-    with identical output. The model is k x dim driver floats (same
-    footprint contract as the IVF codebook); k > 64 fits the two-level
-    codebook (kmeans_fit_hierarchical). Deterministic: seeded init and
-    a fixed iteration count."""
+    with identical output.
+
+    The model is k x dim driver floats (the IVF codebook's footprint)
+    fitted by :func:`kmeans_fit`, or for k > 64 the two-level
+    :func:`kmeans_fit_hierarchical`, under their contract; a row with a
+    NULL element or a zero vector is assigned cluster 0."""
     from .dedup import _reusable
 
     if centroids is None and k > HIER_KMEANS_MIN_K:
         # k ∝ corpus (the paper's setting) makes the flat fit and
         # assignment O(n²·d); the two-level codebook is O(n^1.5·d)
-        # with the same output contract (the check invariants hold
-        # for ANY clustering). Driver SFs sit at k=8 and keep the
-        # flat path, so small-scale outputs are unchanged.
-        C1u, Su = kmeans_fit_hierarchical(
-            df, id_col, vec_col, k=k, max_iter=max_iter, seed=seed
+        assign = _assign_udf(
+            *kmeans_fit_hierarchical(
+                df, id_col, vec_col, k=k, max_iter=max_iter, seed=seed
+            )
         )
-        assign = _assign_hier_udf(C1u, Su)
     else:
         if centroids is None:
             centroids = kmeans_fit(

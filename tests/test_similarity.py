@@ -170,12 +170,9 @@ def test_knn_lsh_multiprobe_improves_recall(spark, sf_dir):
     assert recalls[2] >= 0.5
 
 
-def test_kmeans_wide_vectors_single_digit_agg_plan(spark):
-    """The r8 centroid update must survive REAL embedding widths:
-    at dim=1024 the old per-dimension unroll was 1024 avg aggregate
-    columns per iteration (codegen pressure and a wide one-row
-    collect); the posexplode plan keeps the agg-column count
-    constant in dim and must recover planted cluster centers."""
+def test_kmeans_wide_vectors_recover_centres(spark):
+    """The fit must survive REAL embedding widths: at dim=1024 it
+    must recover planted cluster centres."""
     import numpy as np
 
     rng = np.random.RandomState(7)
@@ -195,19 +192,190 @@ def test_kmeans_wide_vectors_single_digit_agg_plan(spark):
     for c in centers:
         dists = np.linalg.norm(got - c, axis=1)
         assert dists.min() < 1.0
-    # plan shape: the update aggregates a constant number of columns
-    assigned = df.where(F.col("vec").isNotNull()).select(
-        F.col("id"), F.col("vec")
-    ).withColumn("__cid", F.lit(0))
-    plan = (
-        assigned.select("__cid", F.posexplode("vec").alias("__pos", "__x"))
-        .groupBy("__cid", "__pos")
-        .agg(F.avg("__x").alias("__m"))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+
+
+def _np_vecs(vs):
+    import numpy as np
+
+    return np.array([[np.nan if x is None else x for x in v] for v in vs], dtype="float64")
+
+
+def _pandas_assign(C):
+    """A row's nearest centroid as a pandas UDF: np.stack, unit rows,
+    first argmax (a NULL element reads NaN and takes centroid 0)."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    Cu = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
+
+    @pandas_udf("int")
+    def assign(s: pd.Series) -> pd.Series:
+        A = np.stack(s.to_numpy()).astype("float64")
+        An = np.maximum(np.linalg.norm(A, axis=1, keepdims=True), 1e-12)
+        return pd.Series(np.argmax((A / An) @ Cu.T, axis=1).astype("int32"))
+
+    return assign
+
+
+def _kmeans_posexplode(df, k, max_iter, seed=42):
+    """kmeans_fit's contract as a posexplode plan: from the same init,
+    each iteration moves every (cluster, position) to Spark's avg of
+    its rows (NULL skipped, NULL when all are, so NaN); clusters with
+    no rows keep their centroid. Yields the centroids per iteration."""
+    vecs = df.where(F.col("vec").isNotNull())
+    init = (
+        vecs.orderBy(F.xxhash64("id", F.lit(seed)), "id").limit(k).collect()
     )
-    assert "Generate posexplode" in plan
+    C = _np_vecs(r["vec"] for r in init)
+    for _ in range(max_iter):
+        for r in (
+            vecs.select(
+                _pandas_assign(C)("vec").alias("cid"),
+                F.posexplode("vec").alias("pos", "x"),
+            )
+            .groupBy("cid", "pos")
+            .agg(F.avg("x").alias("m"))
+            .collect()
+        ):
+            C[r["cid"], r["pos"]] = float("nan") if r["m"] is None else r["m"]
+        yield C.copy()
+
+
+def _kmeans_rows(spark, init, rest, seed=42):
+    """(id, vec) rows of ``init`` + ``rest`` with ids chosen so that
+    kmeans_fit's init (the smallest xxhash64(id, seed)) is ``init``,
+    in order."""
+    order = [
+        r["id"]
+        for r in spark.range(len(init) + len(rest))
+        .orderBy(F.xxhash64("id", F.lit(seed)), "id")
+        .collect()
+    ]
+    return sorted(zip(order, init + rest))
+
+
+def _same_bits(a, b):
+    import numpy as np
+
+    nan = np.isnan(a)
+    return (nan == np.isnan(b)).all() and (
+        a[~nan].view("int64") == b[~nan].view("int64")
+    ).all()
+
+
+@pytest.mark.parametrize("case", ["planted", "null_position"])
+@pytest.mark.parametrize("partitions", [1, 4])
+def test_kmeans_fit_matches_posexplode_reference(spark, case, partitions):
+    """kmeans_fit against the posexplode/avg fit, iteration by
+    iteration from the same init: identical assignments, centroids
+    bitwise equal on one partition (both add each partition row by
+    row from 0.0) and within 1e-12 otherwise.
+
+    ``planted``: three planted clusters, a NULL-element row and a zero
+    row (both take centroid 0) and a duplicated init row, whose second
+    copy never wins a tie, so its cluster starts empty.
+    ``null_position``: centroid 1 starts from a row with a NULL
+    element, so its unit row is NaN and every valid row (the zero row
+    too) takes it; the rows with that NULL element take centroid 0,
+    whose position 2 becomes NaN, and centroid 2 is left empty."""
+    import numpy as np
+
+    rng = np.random.RandomState(3)
+    dim = 6
+    axes = np.eye(dim)
+
+    def near(i, n):
+        return [(axes[i] * 5 + rng.normal(0, 0.3, dim)).tolist() for _ in range(n)]
+
+    null_row = near(0, 1)[0]
+    null_row[2] = None
+    zero_row = [0.0] * dim
+    a, b, c = near(0, 20), near(1, 20), near(4, 20)
+    if case == "planted":
+        init, rest = [a[0], b[0], list(b[0])], a[1:] + b[1:] + c + [null_row, zero_row]
+    else:
+        nulls = near(3, 8)
+        for v in nulls:
+            v[2] = None
+        init, rest = [a[0], nulls[0], c[0]], a[1:] + b + c[1:] + nulls[1:] + [zero_row]
+    rows = _kmeans_rows(spark, init, rest)
+    rows.append((len(rows), None))  # a NULL vector takes no part
+    df = spark.createDataFrame(rows, "id long, vec array<double>").coalesce(partitions)
+    for it, want in enumerate(_kmeans_posexplode(df, 3, 3), start=1):
+        got = similarity.kmeans_fit(df, "id", "vec", k=3, max_iter=it)
+        if partitions == 1:
+            assert _same_bits(got, want), (it, got, want)
+        else:
+            np.testing.assert_allclose(got, want, rtol=0, atol=1e-12)
+        vecs = df.where(F.col("vec").isNotNull())
+        mine = vecs.select(
+            "id", similarity._assign_udf(similarity._unit_rows(got))("vec").alias("c")
+        )
+        ref = vecs.select("id", _pandas_assign(want)("vec").alias("c"))
+        assert sorted(mine.collect()) == sorted(ref.collect())
+        if it == 1:  # cluster 2 starts empty; null_position's NaN
+            assert (want[2] == init[2]).all()
+            assert np.isnan(want[0, 2]) == (case == "null_position")
+
+
+def test_hierarchical_subfit_skips_null_elements(spark):
+    """The sub-fit kernel against the same fit run on the collected
+    rows: each coarse group sorted by (xxhash64(id, seed), id), seeded
+    from its first k2 rows, means taken position by position over
+    non-NULL elements. A row with a NULL element (coarse 0, sub 0)
+    leaves every sub-centroid finite."""
+    import numpy as np
+
+    rng = np.random.RandomState(5)
+    rows = []
+    for i in range(120):
+        v = np.zeros(6)
+        v[i % 3] = 4.0
+        rows.append((i, (v + rng.rand(6) * 0.5).tolist()))
+    rows[7] = (7, [None] + rows[7][1][1:])
+    df = spark.createDataFrame(rows, "id long, vec array<double>")
+    C1u, Su = similarity.kmeans_fit_hierarchical(df, "id", "vec", k=9, max_iter=2)
+    assert np.isfinite(Su).all()
+
+    got = df.select("id", "vec", F.xxhash64("id", F.lit(42)).alias("h")).collect()
+    got.sort(key=lambda r: (r["h"], r["id"]))
+    V = _np_vecs(r["vec"] for r in got)
+    unit = similarity._unit_rows
+    coarse = np.argmax(unit(V) @ C1u.T, axis=1)
+    k2 = Su.shape[1]
+    for c in range(len(C1u)):
+        A = V[coarse == c]
+        C = A[:k2].copy()
+        for _ in range(2):
+            cid = np.argmax(unit(A) @ unit(C).T, axis=1)
+            for j in range(len(C)):
+                if (cid == j).any():
+                    C[j] = np.nansum(A[cid == j], axis=0) / (~np.isnan(A[cid == j])).sum(axis=0)
+        C = np.vstack([C, np.repeat(C[:1], k2 - len(C), axis=0)])
+        np.testing.assert_allclose(Su[c], unit(C), rtol=0, atol=1e-12)
+
+
+def test_null_element_and_zero_rows_take_cluster_zero(spark):
+    """A row with a NULL element scores NaN against every centroid and
+    a zero row 0.0, so both take the first centroid, flat and
+    two-level."""
+    import numpy as np
+
+    rows = [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [None, 1.0]), (3, [0.0, 0.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    flat = similarity.semdedup(
+        df, "vec_id", "embedding", k=2, centroids=np.array([[1.0, 0.0], [0.0, 1.0]])
+    )
+    assert sorted((r["id"], r["cluster"]) for r in flat.collect()) == [
+        (0, 0), (1, 1), (2, 0), (3, 0)
+    ]
+    rng = np.random.RandomState(7)
+    rows = [(i, (np.eye(16)[i % 8] + rng.rand(16) * 0.05).tolist()) for i in range(300)]
+    rows += [(300, [None] + [1.0] * 15), (301, [0.0] * 16)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    two = similarity.semdedup(df, "vec_id", "embedding", k=80, tau=0.95, max_iter=2)
+    assert {r["id"]: r["cluster"] for r in two.where("id >= 300").collect()} == {300: 0, 301: 0}
 
 
 def test_semdedup_known_groups(spark):

@@ -14,11 +14,11 @@ library from it, starts a local[nproc] session, and on each shard
 (consecutive ``vec_id`` ranges of SHARD_ROWS rows; the whole file when
 omitted) runs one untimed warm-up call, then times the operator plus
 ``collect()`` with its registry query's settings. It reports the
-walls, the number of Spark jobs the timed calls launched, semdedup's
-dropped-row count and a SHA-256 of the sorted rows. The artifact
-keeps every child's record, the spin canary before and after it,
-each tree's median wall per data dir and whether the row hashes of
-the two trees agree.
+walls, the number of Spark jobs and SQL executions the timed calls
+launched, semdedup's dropped-row count and a SHA-256 of the sorted
+rows. The artifact keeps every child's record, the spin canary
+before and after it, each tree's median wall per data dir and
+whether the row hashes of the two trees agree.
 """
 
 from __future__ import annotations
@@ -67,10 +67,16 @@ def child(tree: str, data: str, shard_rows: int, op: str) -> dict:
     spark = D.get_spark("ab_semdedup")
     spark.sparkContext.setLogLevel("ERROR")
     tracker = spark.sparkContext.statusTracker()
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+
+    def last_sql_id():  # ids count up; the store keeps only the latest
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        ex = sql_store.executionsList()
+        return max((ex.apply(i).executionId() for i in range(ex.size())), default=-1)
     emb = spark.read.parquet(os.path.join(data, "embeddings.parquet"))
     n = emb.count()
     size = shard_rows or n
-    out = {"rows": n, "walls_s": [], "jobs": 0, "dropped": 0}
+    out = {"rows": n, "walls_s": [], "jobs": 0, "sql": 0, "dropped": 0}
     digest = hashlib.sha256()
     for lo in range(0, n, size):
         shard = emb.where((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + size))
@@ -83,9 +89,11 @@ def child(tree: str, data: str, shard_rows: int, op: str) -> dict:
         spark.catalog.clearCache()
         group = f"timed-{lo}"
         spark.sparkContext.setJobGroup(group, group)
+        sql0 = last_sql_id()
         t0 = time.perf_counter()
         rows = call()
         out["walls_s"].append(round(time.perf_counter() - t0, 3))
+        out["sql"] += last_sql_id() - sql0
         out["jobs"] += len(tracker.getJobIdsForGroup(group))
         spark.sparkContext.setJobGroup("idle", "idle")
         spark.catalog.clearCache()
@@ -137,9 +145,9 @@ def main(argv: list[str]) -> int:
                 "median_total_wall_s": round(statistics.median(
                     sum(r["walls_s"]) for r in mine if r["tree"] == tree
                 ), 3),
-                "jobs_per_call": next(
-                    r["jobs"] / len(r["walls_s"]) for r in mine if r["tree"] == tree
-                ),
+                **{f"{what}_per_call": next(
+                    r[what] / len(r["walls_s"]) for r in mine if r["tree"] == tree
+                ) for what in ("jobs", "sql")},
             }
             for tree in trees
         }
