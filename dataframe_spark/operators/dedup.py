@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..plans.trace import stage
+
 # --- exact ------------------------------------------------------------
 
 
@@ -279,7 +281,7 @@ def jaccard_pairs(
             # 1000x e2e wall read 246-273 s where the staged
             # decomposition of the same pipeline sums to ~99 s. One
             # cheap count turns the racing stages into warm scans.
-            _materialize(prefix)
+            _materialize(prefix, "jaccard_pairs", "prefix")
         cands = _prefix_candidates(prefix, threshold)
         if big:
             cands = _truncated_bound_filter(cands, arrs, threshold)
@@ -507,7 +509,7 @@ def _truncated_bound_filter(
     )
     # barrier before the two join sides race the cold slim cache
     # (this filter only runs on the big path — see _materialize)
-    _materialize(slim)
+    _materialize(slim, "jaccard_pairs", "slim")
     a = slim.select(
         F.col("id").alias("a_id"),
         F.col("__t").alias("__ta"),
@@ -674,15 +676,16 @@ def _sampled_hot_probe(
     sample = _hashed_shingles(
         src.sample(fraction=fraction, seed=seed), id_col, text_col, n
     )
-    rows = (
-        sample.select(F.explode("sh_arr").alias("h"))
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .where(F.col("c") >= warm_min)
-        .orderBy(F.desc("c"), F.asc("h"))
-        .limit(warm_cap)
-        .collect()
-    )
+    with stage("jaccard_pairs", "sample"):
+        rows = (
+            sample.select(F.explode("sh_arr").alias("h"))
+            .groupBy("h")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .where(F.col("c") >= warm_min)
+            .orderBy(F.desc("c"), F.asc("h"))
+            .limit(warm_cap)
+            .collect()
+        )
     if not rows:
         return None
     hot = [r["h"] for r in rows[:cap] if r["c"] >= hot_min]
@@ -720,9 +723,10 @@ def _sampled_hot_probe(
     return band
 
 
-def _materialize(df: SparkDF) -> None:
-    """Eagerly fill a persisted frame's cache with ONE dedicated job
-    before multiple sibling stages consume it. Sibling stages of a
+def _materialize(df: SparkDF, op: str, step: str) -> None:
+    """Eagerly fill a persisted frame's cache with ONE dedicated job,
+    tagged ``op:step`` (``plans.trace.stage``), before multiple
+    sibling stages consume it. Sibling stages of a
     single job launch concurrently; against a cold cache each block
     is computed by whichever task arrives first while its twin
     BLOCKS on the storage lock holding a scheduler slot — measured
@@ -734,7 +738,8 @@ def _materialize(df: SparkDF) -> None:
     (CERT_barrier_ab.json, the r12 barrier-on vs barrier-off A/B of
     one plan at the 1000x cert corpus)."""
     try:
-        df.count()
+        with stage(op, step):
+            df.count()
     except Exception as exc:  # Connect count quirks
         from ..errors import warn_fallback_once
 
@@ -1042,17 +1047,22 @@ def _hash_arrays(arrs: SparkDF) -> SparkDF:
     )
 
 
+# Above this many candidate pairs _verify_jaccard's counted path keeps
+# the shuffle join: the bare (a_id, b_id) pairs it would broadcast are
+# 16-byte rows, so 8 M pairs is a ~128 MB broadcast.
+VERIFY_BROADCAST_MAX_PAIRS = 8_000_000
+
+
 def _verify_jaccard(
     cands: SparkDF,
     arrs: SparkDF,
     threshold: float,
     broadcast_pairs: bool | None = None,
-    broadcast_limit: int = 8_000_000,
+    op: str = "jaccard_pairs",
 ) -> SparkDF:
-    """Exact-Jaccard verification of candidate pairs: join each pair
-    to its two per-doc shingle arrays and intersect in-row.
-    Passenger columns on ``cands`` beyond (a_id, b_id) ride through
-    to the output (r6).
+    """Exact-Jaccard verification of (a_id, b_id) candidate pairs:
+    join each pair to its two per-doc shingle arrays and intersect
+    in-row.
 
     Join shape (r10, reworked r11): the naive ``cands ⋈ arrs ⋈
     arrs`` shuffles the FULL per-doc array table twice — at the
@@ -1061,14 +1071,11 @@ def _verify_jaccard(
     distinct over a self-join has a garbage size estimate). So the
     pair set is persisted and COUNTED — it is candidate-sized, the
     one cardinality worth an eager job — and when it is small
-    (<= ``broadcast_limit`` pairs) verification goes map-side:
+    (<= ``VERIFY_BROADCAST_MAX_PAIRS``) verification goes map-side:
 
     - only the bare (a_id, b_id) pairs broadcast — 16-byte
-      fixed-width rows, so the row limit IS a byte bound (8 M pairs
-      = ~128 MB); passenger columns (minhash member-list arrays)
-      never enter a broadcast and re-join on the SURVIVORS, which
-      are orders of magnitude fewer than candidates (ADVICE r10 #3,
-      which also flagged the r10 shape's two broadcasts of cands)
+      fixed-width rows, so the row limit IS a byte bound (ADVICE r10
+      #3 flagged the r10 shape's two broadcasts of cands)
     - the array table is pruned ONCE to candidate docs (broadcast
       semi join on the pairs' distinct ids — at most 2x the pair
       limit of longs) and the pruned frame persists; both verify
@@ -1080,26 +1087,18 @@ def _verify_jaccard(
     would not fit) the classic shuffle join stands — the arrs
     exchanges are then amortized over proportionally more
     verification work. ``broadcast_pairs`` forces either shape; the
-    result is identical."""
-    extra = [c for c in cands.columns if c not in ("a_id", "b_id")]
-    persisted = False
+    result is identical. The count and the pruned frame's cache
+    barrier run as the steps ``candidates`` and ``needed`` of ``op``
+    (``plans.trace.stage``)."""
     if broadcast_pairs is None:
         cands = _reusable(cands)
-        persisted = True
         try:
-            broadcast_pairs = cands.count() <= broadcast_limit
+            with stage(op, "candidates"):
+                broadcast_pairs = cands.count() <= VERIFY_BROADCAST_MAX_PAIRS
         except Exception:  # Spark Connect count quirks: stay lazy
             broadcast_pairs = False
     if broadcast_pairs:
-        if extra and not persisted:
-            # two lazy consumers below (slim build + survivor join)
-            cands = _reusable(cands)
-        slim = cands.select("a_id", "b_id")
-        if extra:
-            # verify each unordered pair once; extras fan back out on
-            # the survivor join below
-            slim = slim.distinct()
-        slim = _reusable(slim)
+        slim = _reusable(cands.select("a_id", "b_id"))
         need_ids = (
             slim.select(F.col("a_id").alias("id"))
             .union(slim.select(F.col("b_id").alias("id")))
@@ -1110,7 +1109,7 @@ def _verify_jaccard(
         )
         # barrier: both verify sides scan `needed`; a cold cache
         # would be raced (see _materialize)
-        _materialize(needed)
+        _materialize(needed, op, "needed")
         a = needed.select(
             F.col("id").alias("a_id"),
             F.col("sh_arr").alias("__a_arr"),
@@ -1147,11 +1146,7 @@ def _verify_jaccard(
         )
         .where(F.col("jaccard") >= threshold)
     )
-    if broadcast_pairs and extra:
-        return cands.join(
-            verified.select("a_id", "b_id", "jaccard"), ["a_id", "b_id"]
-        ).select("a_id", "b_id", *extra, "jaccard")
-    return verified.select("a_id", "b_id", *extra, "jaccard")
+    return verified.select("a_id", "b_id", "jaccard")
 
 
 def duplicated_spans(
@@ -1880,7 +1875,6 @@ def lsh_candidate_pairs(
     bands: int = 16,
     rows_per_band: int = 4,
     max_bucket: int | None = None,
-    carry: list[str] | None = None,
     persist_bands: bool = False,
 ) -> SparkDF:
     """Banding: docs sharing any band-signature become candidates.
@@ -1898,13 +1892,6 @@ def lsh_candidate_pairs(
     silent default; identical-signature degeneracy is instead
     removed losslessly upstream (minhash_dedup_pairs collapses
     duplicate shingle sets before banding).
-
-    ``carry`` names passenger columns of ``sigs`` to thread through
-    banding onto the output pairs as ``__a_<col>`` / ``__b_<col>``
-    (r6: lets the caller avoid re-joining pair rows against the
-    signature source). Duplicate pairs (shared across several bands)
-    collapse via a groupBy that keeps the first passenger values —
-    passengers are functions of the id, so all duplicates agree.
 
     Band signature (r13): ``xxhash64`` over the LONG SLICE directly.
     The r5-r12 form stringified every signature element and hashed
@@ -1929,8 +1916,9 @@ def lsh_candidate_pairs(
     cost more than the recompute (the same fixed-stage reasoning as
     every other `big` knee); minhash_dedup_pairs passes its
     ``_BIG_PATH_KNEE`` input-plan gate. With ``persist_bands=True``
-    the call itself runs a Spark job (the cache barrier's count), and the banded frame
-    stays cached after the call (see ``_reusable``)."""
+    the call itself runs a Spark job (the cache barrier's count, step
+    ``lsh_candidate_pairs:bands``), and the banded frame stays cached
+    after the call (see ``_reusable``)."""
     if rows_per_band < 1:
         # e.g. num_perm // bands with bands > num_perm: every band
         # slice would be empty and hash to ONE constant bucket — a
@@ -1942,15 +1930,14 @@ def lsh_candidate_pairs(
             F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band)
         ),
     )
-    carry = carry or []
     banded = sigs.select(
-        "id", *carry, F.posexplode(band_arr).alias("band_idx", "band_hash")
+        "id", F.posexplode(band_arr).alias("band_idx", "band_hash")
     )
     if persist_bands:
         banded = _reusable(banded)
         # barrier: the self-join consumes the cache from two sides
         # (see _materialize — a cold cache would be raced)
-        _materialize(banded)
+        _materialize(banded, "lsh_candidate_pairs", "bands")
     if max_bucket is not None:
         from pyspark.sql.window import Window
 
@@ -1960,30 +1947,12 @@ def lsh_candidate_pairs(
             .where(F.col("__bn") <= max_bucket)
             .drop("__bn")
         )
-    a = banded.select(
-        F.col("id").alias("a_id"),
-        *[F.col(c).alias(f"__a_{c}") for c in carry],
-        "band_idx",
-        "band_hash",
-    )
-    b = banded.select(
-        F.col("id").alias("b_id"),
-        *[F.col(c).alias(f"__b_{c}") for c in carry],
-        "band_idx",
-        "band_hash",
-    )
+    a = banded.select(F.col("id").alias("a_id"), "band_idx", "band_hash")
+    b = banded.select(F.col("id").alias("b_id"), "band_idx", "band_hash")
     pairs = a.join(b, on=["band_idx", "band_hash"]).where(
         F.col("a_id") < F.col("b_id")
     )
-    if not carry:
-        return pairs.select("a_id", "b_id").distinct()
-    return pairs.groupBy("a_id", "b_id").agg(
-        *[
-            F.first(f"__{s}_{c}").alias(f"__{s}_{c}")
-            for s in ("a", "b")
-            for c in carry
-        ]
-    )
+    return pairs.select("a_id", "b_id").distinct()
 
 
 def minhash_dedup_pairs(
@@ -2073,7 +2042,7 @@ def minhash_dedup_pairs(
         # reads a warm cache instead of racing a cold one (see
         # _materialize — the num_perm x |sh_arr| signature hashing
         # is the most expensive map work here)
-        _materialize(sigs)
+        _materialize(sigs, "minhash_dedup_pairs", "sigs")
     # the banded frame persists above the knee (r13): the band
     # self-join otherwise re-derives band_arr from the sigs cache
     # once per side — see lsh_candidate_pairs
@@ -2087,7 +2056,7 @@ def minhash_dedup_pairs(
     # corpus is big enough for the full-array shuffles to matter
     # (_BIG_PATH_KNEE)
     rep_pairs = _verify_jaccard(
-        cands, arrs_h, threshold, broadcast_pairs=None if big else False
+        cands, arrs_h, threshold, None if big else False, "minhash_dedup_pairs"
     )
     # member lists re-attach on the VERIFIED survivors — orders of
     # magnitude fewer rows than the banding exchanges the arrays no

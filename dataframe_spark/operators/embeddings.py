@@ -64,7 +64,9 @@ def pca_fit(df: SparkDF, vec_col: str, k: int, ddof: int = 1):
     contract; d = 64 → ~33 KB per partition). The d×d covariance
     eigendecomposition then runs driver-side in numpy. Rows never
     reach the driver; null embeddings don't participate (the
-    kmeans_fit contract).
+    kmeans_fit contract). A covariance needs every element, so a
+    vector with a NULL element raises ``ValueError`` naming how many
+    such vectors there are: drop or impute them first.
 
     Returns ``(components, eigvals, mean, total_var)``: the top-k
     eigenvectors as a (k, d) float64 matrix (rows are components,
@@ -84,27 +86,39 @@ def pca_fit(df: SparkDF, vec_col: str, k: int, ddof: int = 1):
     def _partials(batches):
         import pyarrow as pa
 
-        n = 0
+        n = n_null = 0
         s = None
         g = None
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            X = _read_matrix(batch.column("__v"))[0]  # a NULL element is NaN
+            X, valid = _read_matrix(batch.column("__v"))  # a NULL element is NaN
             n += X.shape[0]
+            n_null += int((~valid.all(axis=1)).sum())
             s = X.sum(axis=0) if s is None else s + X.sum(axis=0)
             gg = X.T @ X
             g = gg if g is None else g + gg
         if n:
             yield pa.record_batch(
-                {"n": pa.array([n]), "s": pa.array([s]), "g": pa.array([g.ravel()])}
+                {
+                    "n": pa.array([n]),
+                    "n_null": pa.array([n_null]),
+                    "s": pa.array([s]),
+                    "g": pa.array([g.ravel()]),
+                }
             )
 
     rows = vecs.mapInArrow(
-        _partials, "n long, s array<double>, g array<double>"
+        _partials, "n long, n_null long, s array<double>, g array<double>"
     ).collect()
     if not rows:
         raise ValueError("pca_fit: no non-null vectors")
+    n_null = sum(r["n_null"] for r in rows)
+    if n_null:
+        raise ValueError(
+            f"pca_fit: {n_null} vectors have a NULL element; drop or "
+            "impute them first"
+        )
     n = sum(r["n"] for r in rows)
     s = np.sum([np.asarray(r["s"]) for r in rows], axis=0)
     d = s.shape[0]

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import functions as F
 
+from ..plans.trace import stage
+
 
 # pagerank broadcasts its per-node sides (outdeg, ranks) while
 # n_nodes x ~24 B per (node, rank) row of a broadcast hash relation
@@ -150,7 +152,6 @@ def pagerank(
     iters: int = 10,
     symmetrize: bool = False,
     assume_unique: bool = False,
-    profile: dict | None = None,
 ) -> SparkDF:
     """Fixed-iteration PageRank (Page et al. 1999 power iteration)
     over an edge list — centrality scoring for graph-shaped corpus
@@ -187,13 +188,12 @@ def pagerank(
     the knee (>~5 M nodes) the shuffle join stands — on a real
     cluster that regime has aggregate memory to match.
 
-    ``profile`` (r12, VERDICT r11 ask #3): pass a dict and the
-    function records ``setup_sec`` (edge distinct + cache fill +
-    node/outdeg/dangling jobs) and ``iter_sec`` (one wall per power
-    iteration — each iteration ends in an EAGER localCheckpoint, so
-    the walls are real, not lazy stubs). Certification uses this to
-    attribute a super-linear end-to-end wall to iteration drift
-    (cache eviction grows later iterations) vs one-time setup.
+    The call runs its jobs eagerly, as the steps ``pagerank:setup``
+    (edge distinct + cache fill + node/outdeg/dangling jobs) and
+    ``pagerank:iter<i>`` (each power iteration ends in an EAGER
+    localCheckpoint), so a super-linear end-to-end wall can be
+    attributed to iteration drift or to one-time setup from Spark's
+    own job records (``plans.trace``).
 
     ``assume_unique`` (r12): the caller attests the edge list holds
     each (src, dst) row AT MOST ONCE — and, with ``symmetrize=True``,
@@ -210,13 +210,10 @@ def pagerank(
     tile/batch. Duplicate edges under this flag double-count
     contributions — that is the attestation, not a checked
     precondition (checking would cost the very shuffle this skips)."""
-    import time as _time
-
     if not 0.0 < damping < 1.0:
         raise ValueError(f"damping must be in (0, 1), got {damping}")
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    t_setup = _time.monotonic()
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
         F.col("u") != F.col("v")
     )
@@ -280,45 +277,46 @@ def pagerank(
         e = try_persist(e)
     else:
         e = try_persist(e.repartition(npart, "u", "v").distinct())
-    e.count()
-    # outdeg is node-sized and consumed by the dangling check plus
-    # every iteration (each would otherwise re-aggregate the full
-    # edge cache) — persist it up front
-    outdeg = try_persist(
-        e.groupBy("u").agg(F.count(F.lit(1)).alias("__od"))
-    )
-    if symmetrize:
-        # after symmetrization every node appears as a SOURCE, so
-        # the node set IS outdeg's key column and dangling nodes are
-        # impossible by construction (r12): deriving nodes here
-        # skips a union-distinct over 2x|edges| rows plus the
-        # anti-join dangling count — the r12 1000x profile put
-        # pagerank setup at 130-146 s of a ~300 s wall, and these
-        # two jobs were the post-distinct share of it
-        nodes = outdeg.select(F.col("u").alias("node")).localCheckpoint(
-            eager=True
+    with stage("pagerank", "setup"):
+        e.count()
+        # outdeg is node-sized and consumed by the dangling check plus
+        # every iteration (each would otherwise re-aggregate the full
+        # edge cache) — persist it up front
+        outdeg = try_persist(
+            e.groupBy("u").agg(F.count(F.lit(1)).alias("__od"))
         )
-        n = nodes.count()
-        if n == 0:
-            return nodes.select("node", F.lit(0.0).alias("rank"))
-    else:
-        nodes = (
-            e.select(F.col("u").alias("node"))
-            .union(e.select(F.col("v").alias("node")))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        n = nodes.count()
-        if n == 0:
-            return nodes.select("node", F.lit(0.0).alias("rank"))
-        n_dangling = nodes.join(
-            outdeg, nodes["node"] == outdeg["u"], "left_anti"
-        ).count()
-        if n_dangling:
-            raise ValueError(
-                f"pagerank: {n_dangling} nodes have no out-edges; pass "
-                "symmetrize=True or complete the graph first"
+        if symmetrize:
+            # after symmetrization every node appears as a SOURCE, so
+            # the node set IS outdeg's key column and dangling nodes are
+            # impossible by construction (r12): deriving nodes here
+            # skips a union-distinct over 2x|edges| rows plus the
+            # anti-join dangling count — the r12 1000x profile put
+            # pagerank setup at 130-146 s of a ~300 s wall, and these
+            # two jobs were the post-distinct share of it
+            nodes = outdeg.select(F.col("u").alias("node")).localCheckpoint(
+                eager=True
             )
+            n = nodes.count()
+            if n == 0:
+                return nodes.select("node", F.lit(0.0).alias("rank"))
+        else:
+            nodes = (
+                e.select(F.col("u").alias("node"))
+                .union(e.select(F.col("v").alias("node")))
+                .distinct()
+                .localCheckpoint(eager=True)
+            )
+            n = nodes.count()
+            if n == 0:
+                return nodes.select("node", F.lit(0.0).alias("rank"))
+            n_dangling = nodes.join(
+                outdeg, nodes["node"] == outdeg["u"], "left_anti"
+            ).count()
+            if n_dangling:
+                raise ValueError(
+                    f"pagerank: {n_dangling} nodes have no out-edges; pass "
+                    "symmetrize=True or complete the graph first"
+                )
     # broadcast outdeg under the same node gate as the ranks — with
     # both sides broadcast, an iteration is one columnar scan of the
     # cached edges + two map-side joins + partial agg + one
@@ -329,13 +327,7 @@ def pagerank(
         F.broadcast(outdeg) if bcast_ranks else outdeg, "u"
     )
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    if profile is not None:
-        profile["setup_sec"] = round(_time.monotonic() - t_setup, 3)
-        profile["n_nodes"] = n
-        profile["broadcast_ranks"] = bcast_ranks
-        profile["iter_sec"] = []
-    for _ in range(iters):
-        t_it = _time.monotonic()
+    for it in range(iters):
         rside = F.broadcast(ranks) if bcast_ranks else ranks
         sums = (
             contrib_src.join(rside, contrib_src["u"] == rside["node"])
@@ -343,19 +335,15 @@ def pagerank(
             .groupBy("v")
             .agg(F.sum("__c").alias("__m"))
         )
-        ranks = (
-            nodes.join(sums, nodes["node"] == sums["v"], "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.lit(damping) * F.coalesce(F.col("__m"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
+        ranks = nodes.join(sums, nodes["node"] == sums["v"], "left").select(
+            "node",
+            (
+                F.lit(base)
+                + F.lit(damping) * F.coalesce(F.col("__m"), F.lit(0.0))
+            ).alias("rank"),
         )
-        if profile is not None:
-            profile["iter_sec"].append(round(_time.monotonic() - t_it, 3))
+        with stage("pagerank", f"iter{it + 1}"):
+            ranks = ranks.localCheckpoint(eager=True)
     # ranks is EAGERLY checkpointed, so the working caches have no
     # remaining consumer — release them instead of leaking to LRU
     from ..plans.cache import try_unpersist

@@ -24,6 +24,8 @@ from pyspark.sql import Column
 from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import functions as F
 
+from ..plans.trace import stage
+
 
 def _dvec(c) -> Column:
     col = F.col(c) if isinstance(c, str) else c
@@ -558,7 +560,9 @@ def kmeans_fit(
     xxhash64(id, seed). Each iteration is ONE shuffle-free mapInArrow
     pass: every partition runs :func:`_lloyd_step` over its batches
     and yields one row of k×dim sums and counts, which the driver adds
-    up in partition order. Rows never reach the driver.
+    up in partition order. Rows never reach the driver. The init and
+    the iterations run as the job-tagged steps ``kmeans_fit:init`` and
+    ``kmeans_fit:iter<i>`` (``plans.trace``).
 
     Contract (shared with :func:`kmeans_fit_hierarchical`): the fit is
     deterministic for a fixed partitioning; NULL elements are skipped
@@ -568,17 +572,18 @@ def kmeans_fit(
     vecs = df.where(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("id"), _dvec(vec_col).alias("vec")
     )
-    init = (
-        vecs.orderBy(F.xxhash64(F.col("id"), F.lit(seed)), F.col("id"))
-        .limit(k)
-        .toArrow()
-    )
+    with stage("kmeans_fit", "init"):
+        init = (
+            vecs.orderBy(F.xxhash64(F.col("id"), F.lit(seed)), F.col("id"))
+            .limit(k)
+            .toArrow()
+        )
     if not init.num_rows:
         raise ValueError("kmeans_fit: no non-null vectors")
     C = _read_matrix(init["vec"])[0]
     k, d = C.shape
 
-    for _ in range(max_iter):
+    for it in range(max_iter):
         C_unit = _unit_rows(C)
 
         def partials(batches, C_unit=C_unit):
@@ -588,7 +593,8 @@ def kmeans_fit(
             if acc is not None:
                 yield pa.record_batch({"acc": pa.array([acc.ravel()])})
 
-        parts = vecs.select("vec").mapInArrow(partials, "acc array<double>").toArrow()
+        with stage("kmeans_fit", f"iter{it + 1}"):
+            parts = vecs.select("vec").mapInArrow(partials, "acc array<double>").toArrow()
         parts = np.asarray(pc.list_flatten(parts["acc"])).reshape(-1, k, 2 * d + 1)
         # added up as Spark merges avg partials: 0.0 + p1 + p2 + ...
         _lloyd_update(C, np.add.reduce(np.vstack([np.zeros((1, k, 2 * d + 1)), parts])))
@@ -647,7 +653,8 @@ def kmeans_fit_hierarchical(
         return pa.table({"coarse": t["__coarse"][:1], "subs": pa.array([C.ravel()])})
 
     fits = vecs.groupBy("__coarse").applyInArrow(fit_group, "coarse int, subs array<double>")
-    fits = fits.toArrow()
+    with stage("kmeans_fit_hierarchical", "subfit"):
+        fits = fits.toArrow()
     S = np.zeros((k1, k2, dim))
     S[fits["coarse"].to_numpy()] = np.asarray(pc.list_flatten(fits["subs"])).reshape(-1, k2, dim)
     Su = S / np.maximum(np.linalg.norm(S, axis=2, keepdims=True), 1e-12)
@@ -974,13 +981,14 @@ def semdedup(
         .select(F.col(id_col).alias("id"), _dvec(vec_col).alias("__v"))
         .withColumn("__cid", assign(F.col("__v")))
     )
-    oversized = [
-        r["__cid"]
-        for r in sides.groupBy("__cid")
-        .count()
-        .where(F.col("count") > _MAX_CLUSTER_ROWS)
-        .collect()
-    ]
+    with stage("semdedup", "sizes"):
+        oversized = [
+            r["__cid"]
+            for r in sides.groupBy("__cid")
+            .count()
+            .where(F.col("count") > _MAX_CLUSTER_ROWS)
+            .collect()
+        ]
     schema = f"id {sides.schema['id'].dataType.simpleString()}, cluster int, keep boolean"
     if not oversized:
         return sides.groupBy("__cid").applyInArrow(_fused_keep(tau), schema)

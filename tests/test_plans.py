@@ -432,7 +432,7 @@ def _call_fallback_sites(df, calls=1):
         warnings.simplefilter("always")
         for _ in range(calls):
             plan_size_bytes(df)
-            dedup._materialize(try_persist(df))
+            dedup._materialize(try_persist(df), "test", "barrier")
             try_unpersist(df)
     return _fallback_sites(got)
 

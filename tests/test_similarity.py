@@ -703,6 +703,18 @@ def test_pca_null_vectors_and_guards(spark):
         pca_fit(df.where("id < 0"), "embedding", k=2)  # no vectors
 
 
+
+def test_pca_null_element_raises_with_count(spark):
+    """A vector with a NULL element raises ValueError naming how many
+    there are; a NULL vector still just drops out."""
+    from dataframe_spark.operators.embeddings import pca_fit
+
+    rows = [(i, [float(i), 1.0, 2.0 * i + (i % 3)]) for i in range(10)]
+    rows += [(10, [1.0, None, 3.0]), (11, [None, None, 1.0]), (12, None)]
+    df = spark.createDataFrame(rows, "id long, embedding array<double>")
+    with pytest.raises(ValueError, match="2 vectors have a NULL element"):
+        pca_fit(df, "embedding", k=2)
+
 def test_pca_whitening_unit_variance(spark):
     import numpy as np
 

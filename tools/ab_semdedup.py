@@ -15,10 +15,11 @@ library from it, starts a local[nproc] session, and on each shard
 omitted) runs one untimed warm-up call, then times the operator plus
 ``collect()`` with its registry query's settings. It reports the
 walls, the number of Spark jobs and SQL executions the timed calls
-launched, semdedup's dropped-row count and a SHA-256 of the sorted
-rows. The artifact keeps every child's record, the spin canary
-before and after it, each tree's median wall per data dir and
-whether the row hashes of the two trees agree.
+launched (``stage_profile.profile_call``), semdedup's dropped-row
+count and a SHA-256 of the sorted rows. The artifact keeps every
+child's record, the spin canary before and after it, each tree's
+median wall per data dir and whether the row hashes of the two trees
+agree.
 """
 
 from __future__ import annotations
@@ -30,6 +31,8 @@ import statistics
 import subprocess
 import sys
 import time
+
+from stage_profile import profile_call
 
 
 def _spin_ms() -> float:
@@ -66,13 +69,6 @@ def child(tree: str, data: str, shard_rows: int, op: str) -> dict:
 
     spark = D.get_spark("ab_semdedup")
     spark.sparkContext.setLogLevel("ERROR")
-    tracker = spark.sparkContext.statusTracker()
-    sql_store = spark._jsparkSession.sharedState().statusStore()
-
-    def last_sql_id():  # ids count up; the store keeps only the latest
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-        ex = sql_store.executionsList()
-        return max((ex.apply(i).executionId() for i in range(ex.size())), default=-1)
     emb = spark.read.parquet(os.path.join(data, "embeddings.parquet"))
     n = emb.count()
     size = shard_rows or n
@@ -87,15 +83,10 @@ def child(tree: str, data: str, shard_rows: int, op: str) -> dict:
 
         call()
         spark.catalog.clearCache()
-        group = f"timed-{lo}"
-        spark.sparkContext.setJobGroup(group, group)
-        sql0 = last_sql_id()
-        t0 = time.perf_counter()
-        rows = call()
-        out["walls_s"].append(round(time.perf_counter() - t0, 3))
-        out["sql"] += last_sql_id() - sql0
-        out["jobs"] += len(tracker.getJobIdsForGroup(group))
-        spark.sparkContext.setJobGroup("idle", "idle")
+        rows, prof = profile_call(spark, call)
+        out["walls_s"].append(prof["wall_s"])
+        out["sql"] += prof["sql"]
+        out["jobs"] += prof["jobs"]
         spark.catalog.clearCache()
         out["dropped"] += sum(1 for r in rows if r[2] is False)
         digest.update(repr(rows).encode())

@@ -39,6 +39,12 @@ Usage: python tools/certify.py <sweep> [options]
       GROWING factor across decades, which two points cannot see.
       -> CERT_thousandx.json
 
+  vectors1000x, dedup_stages, vectors_stages
+      The vector stack at three decades, and the top-decade dedup and
+      semdedup stage profiles (see each sweep's docstring).
+      -> CERT_vectors_1000x.json, CERT_dedup_stages_r13.json,
+         CERT_vectors_stages_r13.json
+
 NOISE REGIME (r12, VERDICT r11 ask #1). The box swings same-code
 walls 2-9x (documented r11: virtio disk, long-lived JVM state, one
 wedged 48 GB JVM that poisoned a round of measurements), so raw
@@ -72,6 +78,7 @@ SF01 = "/root/testdata/sf0.1"
 DIR_10X = "/tmp/spark_graft_sf1"
 DIR_100X = "/tmp/spark_graft_sf10"
 DIR_1000X = "/tmp/spark_graft_sf100"
+DECADES = {"10x": DIR_10X, "100x": DIR_100X, "1000x": DIR_1000X}
 
 # the three-decade subset: every pipeline family with a sub-minute
 # 100x wall (vector ops stay on the 2-decade CERT_vectors sweep —
@@ -229,7 +236,7 @@ def _time_best(build, reps=3, spark=None):
     not the prepared steady state).
 
     Pass ``spark`` to ALSO clear the storage cache before every rep:
-    operators persist reusable intermediates (_reusable), and a
+    operators persist reusable intermediates, and a
     rep-2 (or later-query) build of the identical logical plan hits
     that cache. At small decades the cached frames fit and rep 2
     measures warm; at the top decade they evict and the measurement
@@ -287,28 +294,120 @@ def sweep_parity(argv):
     sys.exit(1 if n_fail else 0)
 
 
-def _ensure_10x(spark):
+def _ensure(spark, upto):
+    """Generate the chained scale-ups of sf0.1 (10x, then 100x from
+    10x, ...) once, up to and including the decade ``upto``."""
     from tools.scale_data import ensure
 
-    if not ensure(spark, SF01, DIR_10X):
-        print("10x generation failed", file=sys.stderr)
-        sys.exit(1)
+    src = SF01
+    for tag, d in DECADES.items():
+        if not ensure(spark, src, d):
+            print(f"{tag} generation failed", file=sys.stderr)
+            sys.exit(1)
+        if tag == upto:
+            return
+        src = d
 
 
-def _ensure_100x(spark):
-    from tools.scale_data import ensure
+def _run_sections(sweep, argv, tags, measure):
+    """Run each section of ``sweep`` in a FRESH process and return
+    their partial results by tag.
 
-    _ensure_10x(spark)
-    if not ensure(spark, DIR_10X, DIR_100X):
-        print("100x generation failed", file=sys.stderr)
-        sys.exit(1)
+    Why a process per section (r11, measured): a single long-lived
+    local JVM accumulates heap/GC/block-manager state, and what it
+    measured last paid for it erratically — an untouched scan-agg
+    canary read 68.1 s inside the accumulated session against
+    24.8-34.7 s in a fresh one, and the jaccard prefix stage 187 s in
+    the second section of a shared 48g process against 36.3 s fresh,
+    while the small canary stayed flat. A fresh engine per section is
+    also the honest model of production: each scale runs as its own
+    cluster submit.
+
+    The sweep re-execs itself once per tag with ``--section=TAG
+    --partdir=DIR`` (a private mkdtemp dir, ADVICE r11 #4). That child
+    generates the corpora up to 1000x, runs ``measure(tag, spark, qs,
+    part)`` inside a fixed-work canary bracket (``part["canary"]``),
+    writes ``part`` to DIR and exits."""
+    opts = dict(
+        a.split("=", 1) for a in argv if a.startswith("--") and "=" in a
+    )
+    if "--section" in opts:
+        import __spark_entry__ as entry
+
+        tag = opts["--section"]
+        spark = _spark(f"certify_{sweep}_{tag}")
+        _ensure(spark, "1000x")
+        qs = entry.queries()
+        part = {}
+        with _canary_bracket(tag, spark, qs, part):
+            measure(tag, spark, qs, part)
+        with open(f"{opts['--partdir']}/{tag}.part.json", "w") as f:
+            json.dump(part, f)
+        spark.stop()
+        sys.exit(0)
+    import shutil
+    import subprocess
+    import tempfile
+
+    partdir = tempfile.mkdtemp(prefix=f"cert_{sweep}_")
+    parts = {}
+    try:
+        for tag in tags:
+            rc = subprocess.call(
+                [sys.executable, os.path.abspath(__file__), sweep,
+                 f"--section={tag}", f"--partdir={partdir}"],
+                cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            )
+            if rc:
+                print(f"section {tag} failed (rc {rc})", file=sys.stderr)
+                sys.exit(rc)
+            with open(f"{partdir}/{tag}.part.json") as f:
+                parts[tag] = json.load(f)
+    finally:
+        shutil.rmtree(partdir, ignore_errors=True)
+    return parts
+
+
+def _stage_profile(spark, build):
+    """``(frame, profile)`` of one cold call: ``build()`` runs the
+    operator and its frame is written to the noop sink, all inside
+    ``tools.stage_profile.profile_call``, so the profile holds every
+    Spark job the call started, grouped by the library's
+    ``<op>:<step>`` job tags (the sink's jobs under ``result``). The
+    steps are the operator's own: nothing of its pipeline is rebuilt
+    here, and any count is taken from the returned frame after the
+    timing."""
+    from tools.stage_profile import profile_call
+
+    spark.catalog.clearCache()
+
+    def call():
+        df = build()
+        _noop(df)
+        return df
+
+    df, prof = profile_call(spark, call)
+    for step, rec in prof["steps"].items():
+        print(f"  {step}: {rec}", flush=True)
+    print(f"  wall {prof['wall_s']} s, driver idle {prof['driver_idle_s']} s",
+          flush=True)
+    return df, prof
+
+
+def _pairs_profile(spark, qs, name, d):
+    """Stage profile of the registry pair query ``name`` (one
+    jaccard_pairs or minhash_dedup_pairs call) at ``d``, with its
+    pair count."""
+    df, prof = _stage_profile(spark, lambda: qs[name](spark, d))
+    prof["n_pairs"] = df.count()
+    return prof
 
 
 def sweep_tenx(argv):
     import __spark_entry__ as entry
 
     spark = _spark("certify_tenx")
-    _ensure_10x(spark)
+    _ensure(spark, "10x")
     qs = entry.queries()
     out, n_err = {}, 0
     for name, fn in qs.items():
@@ -350,7 +449,7 @@ def sweep_vectors(argv):
     from tools.scale_data import EMB_CLUSTER_SIZE
 
     spark = _spark("certify_vectors")
-    _ensure_100x(spark)
+    _ensure(spark, "100x")
     decades = {"10x": DIR_10X, "100x": DIR_100X}
     out = {}
     for tag, d in decades.items():
@@ -418,7 +517,7 @@ def sweep_decades(argv):
 
     os.environ["SPARK_GRAFT_CACHE_TABLES"] = "0"
     spark = _spark("certify_decades")
-    _ensure_100x(spark)
+    _ensure(spark, "100x")
     qs = entry.queries()
     out = {}
     from dataframe_spark.queries import ml_q
@@ -445,486 +544,278 @@ def sweep_decades(argv):
 
 
 def sweep_thousandx(argv):
-    """Three-decade scaling evidence (docstring above). The 1000x
-    corpus materializes ~18 GB of parquet; the JVM gets a larger
-    heap than the 8g default so shuffle-heavy stages at 600 M rows
-    spill to disk instead of dying — on a real cluster the aggregate
-    executor memory at this scale dwarfs the input.
-
-    PROCESS ISOLATION PER DECADE (r11): without ``--decade``, this
-    sweep re-execs itself once per decade in a FRESH process and
-    merges the partials. Motivation, measured: a single long-lived
-    local JVM accumulates heap/GC/block-manager state across the
-    ~60 query executions of the full sweep, and the top decade —
-    measured last — paid for it erratically (same plan, same box,
-    minutes apart: an untouched scan-agg canary read 68.1 s inside
-    the accumulated session vs 24.8-34.7 s in a fresh one; jaccard
-    stage walls swung 2-9x). A fresh engine per decade is also the
-    honest model of production: each scale runs as its own cluster
-    submit.
+    """Three-decade scaling evidence (docstring above), one fresh
+    process per decade (``_run_sections``). The 1000x corpus
+    materializes ~18 GB of parquet; the JVM gets a larger heap than
+    the 8g default so shuffle-heavy stages at 600 M rows spill to
+    disk instead of dying — on a real cluster the aggregate executor
+    memory at this scale dwarfs the input.
 
     Noise regime (r12, VERDICT r11 ask #1): stray-JVM guard before
-    anything runs; each decade child measures a FIXED-WORK canary
+    anything runs; each decade process measures a FIXED-WORK canary
     (q_stats_agg on the 10x corpus) before and after its flagship
-    walls, and the merged artifact carries canary-normalized
-    factors (raw_factor / canary_ratio) next to the raw ones; reps
-    are best-of-3 at the top decade (best-of-SPARK_GRAFT_CERT_REPS,
+    walls, and the merged artifact carries canary-normalized factors
+    (raw_factor / canary_ratio) next to the raw ones; reps are
+    best-of-3 at the top decade (best-of-SPARK_GRAFT_CERT_REPS,
     default 2, below), with every rep wall and the max/min spread
-    committed. Partials exchange through a private mkdtemp dir
-    passed to each child (ADVICE r11 #4 — the old fixed /tmp paths
-    let concurrent sweeps clobber each other silently)."""
+    committed. The 1000x process also records the jaccard and minhash
+    stage profiles (``_pairs_profile``)."""
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
     os.environ["SPARK_GRAFT_CACHE_TABLES"] = "0"
-
-    decades = {"10x": DIR_10X, "100x": DIR_100X, "1000x": DIR_1000X}
-    opts = dict(
-        a.split("=", 1) for a in argv if a.startswith("--") and "=" in a
-    )
-    if "--decade" not in opts:
-        import shutil
-        import subprocess
-        import tempfile
-
-        _guard_stray_jvm()
-        partdir = tempfile.mkdtemp(prefix="cert_thousandx_")
-        try:
-            for tag in decades:
-                rc = subprocess.call(
-                    [sys.executable, os.path.abspath(__file__), "thousandx",
-                     f"--decade={tag}", f"--partdir={partdir}"],
-                    cwd=os.path.dirname(
-                        os.path.dirname(os.path.abspath(__file__))
-                    ),
-                )
-                if rc:
-                    print(f"decade {tag} failed (rc {rc})", file=sys.stderr)
-                    sys.exit(rc)
-            out = {}
-            stage_profile = {}
-            canary = {}
-            for tag in decades:
-                with open(f"{partdir}/{tag}.part.json") as f:
-                    part = json.load(f)
-                for name, w in part["walls"].items():
-                    out.setdefault(name, {})[tag] = w
-                stage_profile.update(part.get("stage_profile", {}))
-                canary[tag] = part["canary"]
-        finally:
-            shutil.rmtree(partdir, ignore_errors=True)
-        # canary ratio between two decade PROCESSES = how much slower
-        # the box ran while the bigger decade measured (the canary's
-        # work is identical in every process); dividing it out of the
-        # raw factor removes box drift, not plan cost
-        c_ratio = {
-            pair: canary[hi]["mean_sec"] / max(canary[lo]["mean_sec"], 1e-9)
-            for pair, lo, hi in (
-                ("100x_over_10x", "10x", "100x"),
-                ("1000x_over_100x", "100x", "1000x"),
-            )
-        }
-        factors = {}
-        for n, v in out.items():
-            raw = {
-                "100x_over_10x": round(
-                    v["100x"]["sec"] / max(v["10x"]["sec"], 1e-9), 2
-                ),
-                "1000x_over_100x": round(
-                    v["1000x"]["sec"] / max(v["100x"]["sec"], 1e-9), 2
-                ),
-            }
-            raw["canary_normalized"] = {
-                pair: round(raw[pair] / c_ratio[pair], 2)
-                for pair in c_ratio
-            }
-            factors[n] = raw
-        print("per-decade factors (10 = linear):", factors)
-        print("canary:", canary, "ratios:", c_ratio)
-        _write("CERT_thousandx.json", {
-            "sweep": "thousandx", "flagships": out,
-            "per_decade_factors": factors,
-            "canary": canary,
-            "canary_ratio": {k: round(v, 3) for k, v in c_ratio.items()},
-            "stage_profile": stage_profile,
-            "reps": int(os.environ.get("SPARK_GRAFT_CERT_REPS", "2")),
-            "reps_top_decade": 3,
-            "process_per_decade": True,
-            "note": "factor 10 = linear in rows per decade; "
-                    "canary_normalized divides out the fixed-work "
-                    "canary's drift between decade processes "
-                    "(q_stats_agg on the 10x corpus, measured before "
-                    "and after each decade's flagships); every rep "
-                    "wall is committed with its max/min spread; "
-                    "stage_profile stages are cumulatively warm "
-                    "(each reuses upstream persisted frames), so "
-                    "they sum to ~one end-to-end run",
-        })
-        return
-
-    tag = opts["--decade"]
-    partdir = opts["--partdir"]
-    d = decades[tag]
     reps = int(os.environ.get("SPARK_GRAFT_CERT_REPS", "2"))
-    if tag == "1000x":
-        reps = max(reps, 3)
-    _guard_stray_jvm()
-    import __spark_entry__ as entry
 
-    from tools.scale_data import ensure
+    def measure(tag, spark, qs, part):
+        # BPE fits are memoized per sf_dir; certification times the fit
+        from dataframe_spark.queries import text_q
 
-    spark = _spark(f"certify_thousandx_{tag}")
-    _ensure_100x(spark)
-    if not ensure(spark, DIR_100X, DIR_1000X):
-        print("1000x generation failed", file=sys.stderr)
-        sys.exit(1)
-    # BPE fits are memoized per sf_dir; certification times the fit
-    from dataframe_spark.queries import text_q
-
-    qs = entry.queries()
-    walls = {}
-    part = {"walls": walls}
-    with _canary_bracket(tag, spark, qs, part):
+        walls = part["walls"] = {}
         for name in TX_FLAGSHIPS:
-            def build(name=name, d=d):
+            def build(name=name):
                 if name == "q_bpe":
                     text_q._BPE_CACHE.clear()
-                return qs[name](spark, d)
+                return qs[name](spark, DECADES[tag])
 
-            w = _rep_stats(_time_reps(build, reps=reps, spark=spark))
-            walls[name] = w
-            print(tag, name, w, flush=True)
-    if tag == "1000x":
-        print("jaccard stage profile at 1000x:", flush=True)
-        part["stage_profile"] = {
-            "q_dedup_ngram_jaccard@1000x": _jaccard_stage_profile(
-                spark, DIR_1000X
-            )
-        }
-        print("minhash stage profile at 1000x:", flush=True)
-        part["stage_profile"]["q_dedup_minhash@1000x"] = (
-            _minhash_stage_profile(spark, DIR_1000X)
+            walls[name] = _rep_stats(_time_reps(
+                build, reps=max(reps, 3) if tag == "1000x" else reps,
+                spark=spark,
+            ))
+            print(tag, name, walls[name], flush=True)
+        if tag == "1000x":
+            part["stage_profile"] = {
+                f"{name}@1000x": _pairs_profile(spark, qs, name, DIR_1000X)
+                for name in ("q_dedup_ngram_jaccard", "q_dedup_minhash")
+            }
+
+    parts = _run_sections("thousandx", argv, DECADES, measure)
+    out, stage_profile, canary = {}, {}, {}
+    for tag, part in parts.items():
+        for name, w in part["walls"].items():
+            out.setdefault(name, {})[tag] = w
+        stage_profile.update(part.get("stage_profile", {}))
+        canary[tag] = part["canary"]
+    # canary ratio between two decade PROCESSES = how much slower
+    # the box ran while the bigger decade measured (the canary's
+    # work is identical in every process); dividing it out of the
+    # raw factor removes box drift, not plan cost
+    c_ratio = _canary_ratios(canary)
+    factors = {n: _decade_factors(v, c_ratio) for n, v in out.items()}
+    print("per-decade factors (10 = linear):", factors)
+    print("canary:", canary, "ratios:", c_ratio)
+    _write("CERT_thousandx.json", {
+        "sweep": "thousandx", "flagships": out,
+        "per_decade_factors": factors,
+        "canary": canary,
+        "canary_ratio": {k: round(v, 3) for k, v in c_ratio.items()},
+        "stage_profile": stage_profile,
+        "reps": reps,
+        "reps_top_decade": 3,
+        "process_per_decade": True,
+        "note": "factor 10 = linear in rows per decade; "
+                "canary_normalized divides out the fixed-work "
+                "canary's drift between decade processes "
+                "(q_stats_agg on the 10x corpus, measured before "
+                "and after each decade's flagships); every rep "
+                "wall is committed with its max/min spread; "
+                "stage_profile holds the Spark jobs of one cold "
+                "call per query, grouped by the library's "
+                "op:step job tags",
+    })
+
+
+def _canary_ratios(canary):
+    """Canary mean ratio of each decade process over the one below."""
+    return {
+        pair: canary[hi]["mean_sec"] / max(canary[lo]["mean_sec"], 1e-9)
+        for pair, lo, hi in (
+            ("100x_over_10x", "10x", "100x"),
+            ("1000x_over_100x", "100x", "1000x"),
         )
-    with open(f"{partdir}/{tag}.part.json", "w") as f:
-        json.dump(part, f)
-    print(f"wrote {partdir}/{tag}.part.json")
+    }
+
+
+def _decade_factors(walls, c_ratio):
+    """Raw and canary-normalized per-decade wall factors of one
+    measurement (``walls`` maps decade tag -> ``_rep_stats``)."""
+    raw = {
+        pair: round(walls[hi]["sec"] / max(walls[lo]["sec"], 1e-9), 2)
+        for pair, lo, hi in (
+            ("100x_over_10x", "10x", "100x"),
+            ("1000x_over_100x", "100x", "1000x"),
+        )
+    }
+    raw["canary_normalized"] = {
+        pair: round(raw[pair] / c_ratio[pair], 2) for pair in c_ratio
+    }
+    return raw
 
 
 def sweep_dedup_stages(argv):
-    """Focused top-decade dedup evidence (r12): the two 1000x stage
-    profiles plus a minhash e2e best-of-2, each section in a FRESH
-    process with its own fixed-work canary bracket — cheap to re-run
-    after a plan change without paying the full three-decade
-    thousandx sweep. Written for the r12 signature-kernel change:
-    CERT_thousandx's committed minhash profile describes the
-    pre-kernel plan, and its signatures stage carried an unexplained
-    278 s reading (vs 57 s in the r11 window) that only a
-    quiet-window re-read can adjudicate.
-
-    PROCESS ISOLATION PER SECTION: the first draft ran all three
-    sections in one 48g JVM and reproduced the accumulated-session
-    pathology the thousandx sweep's per-decade re-exec exists for —
-    the jaccard prefix stage read 187 s in section 2 of the shared
-    process vs 36.3 s in the committed fresh-process profile, while
-    the small fixed-work canary stayed flat (2.5 s): heap/GC/block-
-    manager accumulation hits the big stages, not the canary. Same
-    fix as thousandx: re-exec per section, merge partials.
-
-    r13: two jaccard e2e sections (100x and 1000x, each its own
-    fresh process + canary bracket, best-of-2/3) join the sweep so
-    the shingle-kernel change's TOP-DECADE FACTOR is committed with
-    spread, not just the stage delta — the merge computes
-    1000x/100x raw and canary-normalized. Output moves to
-    CERT_dedup_stages_r13.json (the r12 artifact stays as the
-    pre-kernel record)."""
+    """Focused top-decade dedup evidence (r12), cheap to re-run after
+    a plan change without paying the full three-decade thousandx
+    sweep: the 1000x jaccard and minhash stage profiles
+    (``_pairs_profile``), a minhash e2e best-of-2 at 1000x and jaccard
+    e2e walls at 100x (best-of-2) and 1000x (best-of-3), whose merge
+    computes the jaccard top-decade factor, raw and
+    canary-normalized. Every section runs in its own fresh process
+    with its own canary bracket (``_run_sections``).
+    -> CERT_dedup_stages_r13.json"""
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
     os.environ["SPARK_GRAFT_CACHE_TABLES"] = "0"
-    sections = ("minhash_profile", "jaccard_profile", "minhash_e2e",
-                "jaccard_e2e_100x", "jaccard_e2e_1000x")
-    opts = dict(
-        a.split("=", 1) for a in argv if a.startswith("--") and "=" in a
-    )
-    if "--section" not in opts:
-        import subprocess
-        import tempfile
+    e2e = {  # section -> (query, corpus, reps)
+        "minhash_e2e_1000x": ("q_dedup_minhash", DIR_1000X, 2),
+        "jaccard_e2e_100x": ("q_dedup_ngram_jaccard", DIR_100X, 2),
+        "jaccard_e2e_1000x": ("q_dedup_ngram_jaccard", DIR_1000X, 3),
+    }
+    profiles = {
+        "minhash_profile": "q_dedup_minhash",
+        "jaccard_profile": "q_dedup_ngram_jaccard",
+    }
 
-        _guard_stray_jvm()
-        partdir = tempfile.mkdtemp(prefix="cert_dedup_stages_")
-        for tag in sections:
-            rc = subprocess.call(
-                [sys.executable, os.path.abspath(__file__), "dedup_stages",
-                 f"--section={tag}", f"--partdir={partdir}"],
-                cwd=os.path.dirname(
-                    os.path.dirname(os.path.abspath(__file__))
-                ),
-            )
-            if rc:
-                print(f"section {tag} failed (rc {rc})", file=sys.stderr)
-                sys.exit(rc)
-        merged = {"sweep": "dedup_stages", "dir": DIR_1000X,
-                  "stage_profile": {}, "canary": {}}
-        for tag in sections:
-            with open(f"{partdir}/{tag}.part.json") as f:
-                part = json.load(f)
-            merged["stage_profile"].update(part.get("stage_profile", {}))
-            for k in ("minhash_e2e_1000x", "jaccard_e2e_100x",
-                      "jaccard_e2e_1000x"):
-                if k in part:
-                    merged[k] = part[k]
-            merged["canary"][tag] = part["canary"]
-        if ("jaccard_e2e_100x" in merged
-                and "jaccard_e2e_1000x" in merged):
-            raw = (merged["jaccard_e2e_1000x"]["sec"]
-                   / max(merged["jaccard_e2e_100x"]["sec"], 1e-9))
-            c_ratio = (merged["canary"]["jaccard_e2e_1000x"]["mean_sec"]
-                       / max(merged["canary"]["jaccard_e2e_100x"]
-                             ["mean_sec"], 1e-9))
-            merged["jaccard_factor_1000x_over_100x"] = {
-                "raw": round(raw, 2),
-                "canary_normalized": round(raw / c_ratio, 2),
-                "canary_ratio": round(c_ratio, 3),
+    def measure(tag, spark, qs, part):
+        if tag in profiles:
+            name = profiles[tag]
+            print(f"{name} stage profile at 1000x:", flush=True)
+            part["stage_profile"] = {
+                f"{name}@1000x": _pairs_profile(spark, qs, name, DIR_1000X)
             }
-            print("jaccard top-decade factor:",
-                  merged["jaccard_factor_1000x_over_100x"])
-        merged["note"] = (
-            "fresh process per section; stage_profile stages are "
-            "cumulatively warm (each reuses upstream persisted "
-            "frames), so they sum to ~one end-to-end run"
+            return
+        name, d, reps = e2e[tag]
+        part[tag] = _rep_stats(
+            _time_reps(lambda: qs[name](spark, d), reps=reps, spark=spark)
         )
-        _write("CERT_dedup_stages_r13.json", merged)
-        return
+        print(tag, part[tag], flush=True)
 
-    tag = opts["--section"]
-    partdir = opts["--partdir"]
-    _guard_stray_jvm()
-    import __spark_entry__ as entry
-
-    from tools.scale_data import ensure
-
-    spark = _spark(f"certify_dedup_{tag}")
-    _ensure_100x(spark)
-    if not ensure(spark, DIR_100X, DIR_1000X):
-        print("1000x generation failed", file=sys.stderr)
-        sys.exit(1)
-    qs = entry.queries()
-
-    part = {}
-    with _canary_bracket(tag, spark, qs, part):
-        if tag == "minhash_profile":
-            print("minhash stage profile at 1000x:", flush=True)
-            part["stage_profile"] = {
-                "q_dedup_minhash@1000x": _minhash_stage_profile(
-                    spark, DIR_1000X
-                )
-            }
-        elif tag == "jaccard_profile":
-            print("jaccard stage profile at 1000x:", flush=True)
-            part["stage_profile"] = {
-                "q_dedup_ngram_jaccard@1000x": _jaccard_stage_profile(
-                    spark, DIR_1000X
-                )
-            }
-        elif tag == "jaccard_e2e_100x":
-            e2e = _rep_stats(
-                _time_reps(
-                    lambda: qs["q_dedup_ngram_jaccard"](spark, DIR_100X),
-                    reps=2,
-                    spark=spark,
-                )
-            )
-            print("jaccard e2e 100x", e2e, flush=True)
-            part["jaccard_e2e_100x"] = e2e
-        elif tag == "jaccard_e2e_1000x":
-            e2e = _rep_stats(
-                _time_reps(
-                    lambda: qs["q_dedup_ngram_jaccard"](spark, DIR_1000X),
-                    reps=3,
-                    spark=spark,
-                )
-            )
-            print("jaccard e2e 1000x", e2e, flush=True)
-            part["jaccard_e2e_1000x"] = e2e
-        else:
-            e2e = _rep_stats(
-                _time_reps(
-                    lambda: qs["q_dedup_minhash"](spark, DIR_1000X),
-                    reps=2,
-                    spark=spark,
-                )
-            )
-            print("minhash e2e", e2e, flush=True)
-            part["minhash_e2e_1000x"] = e2e
-    with open(f"{partdir}/{tag}.part.json", "w") as f:
-        json.dump(part, f)
-    print(f"wrote {partdir}/{tag}.part.json")
-    spark.stop()
-
-
-def _jaccard_stage_profile(spark, d, threshold=0.8):
-    """Stage decomposition of the hash-order jaccard_pairs plan at
-    one sf_dir (VERDICT r10 ask #7 — the r10 session-only
-    chain/prefix/candidates/verify split was the round's best
-    diagnostic; committing it makes future walls attributable
-    without re-deriving). Stages time CUMULATIVELY WARM — each stage
-    reuses its predecessors' persisted frames, so the walls are the
-    decomposition of one end-to-end run, and their sum approximates
-    the query wall (plus scheduling)."""
-    import dataframe_spark.operators.dedup as dd
-    from dataframe_spark.plans.stats import plan_size_bytes
-    from dataframe_spark.tables import load_table
-
-    docs = load_table(spark, d, "documents")
-    spark.catalog.clearCache()
-    # the operator's own big-path gate turns hot-shingle demotion on
-    demote_hot = plan_size_bytes(docs) > dd._BIG_PATH_KNEE
-    prof = {}
-
-    def stage(name, df):
-        t0 = time.monotonic()
-        _noop(df)
-        prof[name] = round(time.monotonic() - t0, 3)
-        print(f"  stage {name}: {prof[name]}", flush=True)
-        return df
-
-    arrs = stage(
-        "chain_persist", dd.hashed_shingle_arrays(docs, "doc_id", "text", 3)
+    parts = _run_sections("dedup_stages", argv, [*profiles, *e2e], measure)
+    merged = {"sweep": "dedup_stages", "dir": DIR_1000X,
+              "stage_profile": {}, "canary": {}}
+    for tag, part in parts.items():
+        merged["stage_profile"].update(part.get("stage_profile", {}))
+        if tag in e2e:
+            merged[tag] = part[tag]
+        merged["canary"][tag] = part["canary"]
+    raw = (merged["jaccard_e2e_1000x"]["sec"]
+           / max(merged["jaccard_e2e_100x"]["sec"], 1e-9))
+    c_ratio = (merged["canary"]["jaccard_e2e_1000x"]["mean_sec"]
+               / max(merged["canary"]["jaccard_e2e_100x"]["mean_sec"], 1e-9))
+    merged["jaccard_factor_1000x_over_100x"] = {
+        "raw": round(raw, 2),
+        "canary_normalized": round(raw / c_ratio, 2),
+        "canary_ratio": round(c_ratio, 3),
+    }
+    print("jaccard top-decade factor:",
+          merged["jaccard_factor_1000x_over_100x"])
+    merged["note"] = (
+        "fresh process per section; each stage_profile holds the Spark "
+        "jobs of one cold call, grouped by the library's op:step job "
+        "tags"
     )
-    prefix = stage(
-        "prefix",
-        dd._hash_order_prefix(arrs, docs, "doc_id", "text", 3, threshold,
-                              demote_hot),
-    )
-    cands = stage("candidates", dd._prefix_candidates(prefix, threshold))
-    pruned = stage(
-        "truncated_bound", dd._truncated_bound_filter(cands, arrs, threshold)
-    )
-    out = stage("verify", dd._verify_jaccard(pruned, arrs, threshold))
-    prof["n_candidates"] = cands.count()
-    prof["n_after_truncated_bound"] = pruned.count()
-    prof["n_pairs"] = out.count()
-    return prof
+    _write("CERT_dedup_stages_r13.json", merged)
 
 
-def _minhash_stage_profile(
-    spark, d, n=3, num_perm=64, bands=16, threshold=0.8
-):
-    """Stage decomposition of minhash_dedup_pairs at one sf_dir
-    (VERDICT r11 ask #2 — jaccard's committed profile is why its
-    e2e overhang is arguable; minhash's 11.93x/decade had no such
-    attribution). Mirrors the operator's internal pipeline with the
-    q_dedup_minhash defaults; stages time CUMULATIVELY WARM like
-    _jaccard_stage_profile, so their sum approximates one
-    end-to-end run (the final member-list expansion is a narrow
-    projection of the verify output — sub-second, not staged)."""
+def _vectors_decade(tag, spark, part, reps=2):
+    """One decade of the vectors1000x measurement into ``part``:
+    semdedup, knn_ivf, the bucketed cosine edge build and pagerank
+    over the built edges (sweep_vectors1000x's docstring), plus the
+    megabucket stanza at 1000x."""
     from pyspark.sql import functions as F
 
-    import dataframe_spark.operators.dedup as dd
-    from dataframe_spark.tables import load_table
-
-    docs = load_table(spark, d, "documents")
-    spark.catalog.clearCache()
-    prof = {}
-
-    def stage(name, df):
-        t0 = time.monotonic()
-        _noop(df)
-        prof[name] = round(time.monotonic() - t0, 3)
-        print(f"  stage {name}: {prof[name]}", flush=True)
-        return df
-
-    arrs_h = stage(
-        "chain_persist",
-        dd.hashed_shingle_arrays(docs, "doc_id", "text", n),
-    )
-    gstats = stage(
-        "group_collapse",
-        dd._reusable(
-            arrs_h.select(
-                "id", F.xxhash64(F.array_sort("sh_arr")).alias("__g")
-            )
-            .groupBy("__g")
-            .agg(
-                F.min("id").alias("id"),
-                F.sort_array(F.collect_list("id")).alias("__mids"),
-            )
-        ),
-    )
-    sigs = stage(
-        "signatures",
-        dd._reusable(
-            dd._minhash_sigs_frame(
-                arrs_h.join(gstats.select("id"), "id"), num_perm
-            )
-        ),
-    )
-    # persist_bands=True mirrors minhash_dedup_pairs above its
-    # 128 MB gate (r13) — every profiled corpus is far above it.
-    # The banded materialization is EAGER (it runs at call time,
-    # not first action), so the construction is timed explicitly:
-    # stage()'s argument-evaluation shape would leave the banding
-    # pass outside the timed region and under-count the stage.
-    t0 = time.monotonic()
-    cands = dd.lsh_candidate_pairs(
-        sigs, bands, num_perm // bands, None, persist_bands=True
-    )
-    _noop(cands)
-    prof["band_candidates"] = round(time.monotonic() - t0, 3)
-    print(f"  stage band_candidates: {prof['band_candidates']}", flush=True)
-    out = stage(
-        "verify",
-        dd._verify_jaccard(cands, arrs_h, threshold, broadcast_pairs=None),
-    )
-    prof["n_candidates"] = cands.count()
-    prof["n_pairs"] = out.count()
-    return prof
-
-
-def _semdedup_stage_profile(spark, d, tau=0.4, max_iter=3, seed=42):
-    """Two-stage split of semdedup at one sf_dir (VERDICT r12 ask #4):
-    ``semdedup`` is the public call plus a noop write of its rows (the
-    k-means fit, the assignment, the cluster-size probe and the fused
-    per-cluster pass), then ``fit`` the public k-means fitter alone
-    (the hierarchical one at cert scale, k ∝ corpus). ``after_fit``,
-    their difference, is what the operator adds after the fit — an
-    upper bound, since the first timed call also carries the
-    session's cold start. Nothing of the operator's internals is
-    rebuilt here."""
-    from dataframe_spark.operators import similarity as sim
+    from dataframe_spark.operators import similarity
+    from dataframe_spark.operators.graph import pagerank
     from tools.scale_data import EMB_CLUSTER_SIZE
 
-    emb = spark.read.parquet(f"{d}/embeddings.parquet")
+    emb = spark.read.parquet(f"{DECADES[tag]}/embeddings.parquet")
     n = emb.count()
     k = max(8, n // EMB_CLUSTER_SIZE)
-    spark.catalog.clearCache()
-    prof = {"rows": n, "k": k}
-    t0 = time.monotonic()
-    _noop(sim.semdedup(
-        emb, "vec_id", "embedding", k=k, tau=tau, max_iter=max_iter, seed=seed
+    row = {"rows": n, "dim": 256, "semdedup_k": k}
+
+    row["semdedup"] = _rep_stats(_time_reps(
+        lambda: similarity.semdedup(
+            emb, "vec_id", "embedding", k=k, tau=0.4, max_iter=3
+        ),
+        reps=reps, spark=spark,
     ))
-    prof["semdedup"] = round(time.monotonic() - t0, 3)
-    print(f"  stage semdedup: {prof['semdedup']}", flush=True)
-    fit = (
-        sim.kmeans_fit_hierarchical if k > sim.HIER_KMEANS_MIN_K
-        else sim.kmeans_fit
+    print(tag, "semdedup", row["semdedup"], flush=True)
+    row["knn_ivf"] = _rep_stats(_time_reps(
+        lambda: similarity.knn_ivf(
+            emb, "vec_id", "embedding", query_id=0, k=10,
+            nlist=64, nprobe=8, max_iter=3,
+        ),
+        reps=reps, spark=spark,
+    ))
+    print(tag, "knn_ivf", row["knn_ivf"], flush=True)
+
+    edges_path = f"/tmp/spark_graft_vec_edges_{tag}"
+    eb_walls = []
+    for _ in range(reps):
+        spark.catalog.clearCache()
+        t0 = time.monotonic()
+        similarity.bucketed_cosine_pairs(
+            emb, "vec_id", "embedding", "label", threshold=0.4
+        ).select("a_id", "b_id").write.mode("overwrite").parquet(edges_path)
+        eb_walls.append(round(time.monotonic() - t0, 3))
+    row["edge_build"] = _rep_stats(eb_walls)
+    edges = spark.read.parquet(edges_path)
+    row["n_edges"] = edges.count()
+    print(tag, "edge_build", row["edge_build"], "edges", row["n_edges"],
+          flush=True)
+
+    # the materialized bucketed-GEMM pairs hold each unordered pair
+    # exactly once (tile construction), so the setup distinct
+    # collapses nothing -- skip its 8+ GB exchange (r12)
+    profiles = [
+        _stage_profile(spark, lambda: pagerank(
+            edges, "a_id", "b_id", damping=0.85, iters=10,
+            symmetrize=True, assume_unique=True,
+        ))[1]
+        for _ in range(reps)
+    ]
+    row["pagerank"] = _rep_stats([p["wall_s"] for p in profiles])
+    row["pagerank"]["profiles"] = profiles
+    print(tag, "pagerank", row["pagerank"]["reps"], flush=True)
+    part["row"] = row
+    if tag != "1000x":
+        return
+    # MEGABUCKET: ~100k of the 2 M vectors forced into one bucket —
+    # ceil(100k/32768) = 4 sub-blocks, 10 tile tasks; per-task peak
+    # is two 32k x 256 sub-blocks + one 2048 x 32768 sims tile
+    # regardless of the bucket size
+    mb_rows = 100_000
+    degenerate = emb.where(F.col("vec_id") < mb_rows).select(
+        "vec_id", "embedding", F.lit(0).alias("label")
     )
+    spark.catalog.clearCache()
     t0 = time.monotonic()
-    fit(emb, "vec_id", "embedding", k=k, max_iter=max_iter, seed=seed)
-    prof["fit"] = round(time.monotonic() - t0, 3)
-    print(f"  stage fit: {prof['fit']}", flush=True)
-    prof["after_fit"] = round(prof["semdedup"] - prof["fit"], 3)
-    return prof
+    mb_pairs = similarity.bucketed_cosine_pairs(
+        degenerate, "vec_id", "embedding", "label", threshold=0.4
+    ).count()
+    mb_wall = round(time.monotonic() - t0, 3)
+    n_deg = degenerate.count()
+    cap = similarity._MAX_CLUSTER_ROWS
+    s = -(-n_deg // cap)
+    part["megabucket"] = {
+        "bucket_rows": n_deg, "max_bucket_rows": cap,
+        "split_sub_blocks": s, "n_tiles": s * (s + 1) // 2,
+        "wall_sec": mb_wall, "n_pairs": mb_pairs,
+        "note": "split path exercised at cert scale (VERDICT "
+                "r11 ask #7); task peak = 2 sub-blocks + 1 "
+                "sims tile (rows pre-normalized in place, r12)",
+    }
+    print(tag, "megabucket", part["megabucket"], flush=True)
 
 
 def sweep_vectors_stages(argv):
     """Focused vectors-stack evidence for r13 (VERDICT r12 asks #4
     and #5), one FRESH PROCESS per section with fixed-work canary
-    brackets (the dedup_stages regime):
+    brackets (``_run_sections``):
 
-    - semdedup_profile: semdedup at the top decade and its k-means
-      fit alone (_semdedup_stage_profile), so the next optimization
+    - semdedup_profile: the stage profile of one semdedup call at the
+      top decade (``_stage_profile``: its k-means fit, size probe and
+      per-cluster pass as Spark ran them), so the next optimization
       target is measured, not guessed.
     - decade_10x + decade_100x: re-run of the full vectors decade
-      measurement (same code path as sweep_vectors1000x) in a quiet
-      window — the committed CERT_vectors_1000x 100x decade started
-      inside a steal burst (canary pre [38.8, 11.0] s vs post
+      measurement (``_vectors_decade``, as in sweep_vectors1000x) in a
+      quiet window — the committed CERT_vectors_1000x 100x decade
+      started inside a steal burst (canary pre [38.8, 11.0] s vs post
       [2.2, 4.8] s), inflating knn_ivf/edge_build's normalized
       factors to 22.18/16.26 against raw 6.48/4.75. The merge
       recomputes 100x/10x factors and FLAGS the run as burst-suspect
@@ -932,100 +823,61 @@ def sweep_vectors_stages(argv):
     -> CERT_vectors_stages_r13.json"""
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
     os.environ["SPARK_GRAFT_CACHE_TABLES"] = "0"
-    sections = ("semdedup_profile", "decade_10x", "decade_100x")
-    opts = dict(
-        a.split("=", 1) for a in argv if a.startswith("--") and "=" in a
-    )
-    if "--section" not in opts:
-        import subprocess
-        import tempfile
 
-        _guard_stray_jvm()
-        partdir = tempfile.mkdtemp(prefix="cert_vectors_stages_")
-        for tag in sections:
-            if tag.startswith("decade_"):
-                # reuse sweep_vectors1000x's per-decade measurement
-                # verbatim so the refreshed walls are comparable
-                args = [sys.executable, os.path.abspath(__file__),
-                        "vectors1000x", f"--decade={tag[7:]}",
-                        f"--partdir={partdir}"]
-            else:
-                args = [sys.executable, os.path.abspath(__file__),
-                        "vectors_stages", f"--section={tag}",
-                        f"--partdir={partdir}"]
-            rc = subprocess.call(args, cwd=os.path.dirname(
-                os.path.dirname(os.path.abspath(__file__))))
-            if rc:
-                print(f"section {tag} failed (rc {rc})", file=sys.stderr)
-                sys.exit(rc)
-        merged = {"sweep": "vectors_stages", "canary": {}}
-        with open(f"{partdir}/semdedup_profile.part.json") as f:
-            part = json.load(f)
-        merged["stage_profile"] = part["stage_profile"]
-        merged["canary"]["semdedup_profile"] = part["canary"]
-        rows = {}
-        for tag in ("10x", "100x"):
-            with open(f"{partdir}/{tag}.part.json") as f:
-                part = json.load(f)
-            rows[tag] = part["row"]
-            merged["canary"][f"decade_{tag}"] = part["canary"]
-        merged["decades"] = rows
-        c = merged["canary"]
-        # compare the QUIET FLOOR before vs after each section (min
-        # of each bracket): the first pre rep in a fresh process
-        # pays one-off JVM/codegen warmup (9-20 s vs the ~2 s steady
-        # canary in every r12/r13 artifact), so a max-over-all-reps
-        # spread would flag warmup as a burst
-        spreads = {
-            s: round(max(min(v["pre"]), min(v["post"]))
-                     / max(min(min(v["pre"]), min(v["post"])), 1e-9), 2)
-            for s, v in c.items()
-        }
-        merged["canary_spread"] = spreads
-        merged["burst_suspect"] = any(v > 2.0 for v in spreads.values())
-        c_ratio = (c["decade_100x"]["mean_sec"]
-                   / max(c["decade_10x"]["mean_sec"], 1e-9))
-        factors = {}
-        for op in ("semdedup", "knn_ivf", "edge_build", "pagerank"):
-            raw = round(rows["100x"][op]["sec"]
-                        / max(rows["10x"][op]["sec"], 1e-9), 2)
-            factors[op] = {
-                "100x_over_10x_raw": raw,
-                "100x_over_10x_canary_normalized": round(
-                    raw / c_ratio, 2),
-            }
-        merged["per_decade_factors_100x"] = factors
-        merged["canary_ratio_100x_over_10x"] = round(c_ratio, 3)
-        print("factors:", factors)
-        print("canary spreads:", spreads,
-              "burst_suspect:", merged["burst_suspect"])
-        _write("CERT_vectors_stages_r13.json", merged)
-        return
+    def measure(tag, spark, qs, part):
+        if tag.startswith("decade_"):
+            _vectors_decade(tag[len("decade_"):], spark, part)
+            return
+        from dataframe_spark.operators import similarity as sim
+        from tools.scale_data import EMB_CLUSTER_SIZE
 
-    tag = opts["--section"]
-    partdir = opts["--partdir"]
-    _guard_stray_jvm()
-    import __spark_entry__ as entry
-
-    from tools.scale_data import ensure
-
-    spark = _spark(f"certify_vstages_{tag}")
-    _ensure_100x(spark)
-    if not ensure(spark, DIR_100X, DIR_1000X):
-        print("1000x generation failed", file=sys.stderr)
-        sys.exit(1)
-    qs = entry.queries()
-
-    part = {}
-    with _canary_bracket(tag, spark, qs, part):
         print("semdedup stage profile at 1000x:", flush=True)
-        part["stage_profile"] = {
-            "semdedup@1000x": _semdedup_stage_profile(spark, DIR_1000X)
+        emb = spark.read.parquet(f"{DIR_1000X}/embeddings.parquet")
+        n = emb.count()
+        k = max(8, n // EMB_CLUSTER_SIZE)
+        prof = _stage_profile(spark, lambda: sim.semdedup(
+            emb, "vec_id", "embedding", k=k, tau=0.4, max_iter=3, seed=42
+        ))[1]
+        part["stage_profile"] = {"semdedup@1000x": {"rows": n, "k": k, **prof}}
+
+    parts = _run_sections(
+        "vectors_stages", argv,
+        ("semdedup_profile", "decade_10x", "decade_100x"), measure,
+    )
+    c = {tag: part["canary"] for tag, part in parts.items()}
+    rows = {tag: parts[f"decade_{tag}"]["row"] for tag in ("10x", "100x")}
+    merged = {
+        "sweep": "vectors_stages", "canary": c, "decades": rows,
+        "stage_profile": parts["semdedup_profile"]["stage_profile"],
+    }
+    # compare the QUIET FLOOR before vs after each section (min
+    # of each bracket): the first pre rep in a fresh process
+    # pays one-off JVM/codegen warmup (9-20 s vs the ~2 s steady
+    # canary in every r12/r13 artifact), so a max-over-all-reps
+    # spread would flag warmup as a burst
+    spreads = {
+        s: round(max(min(v["pre"]), min(v["post"]))
+                 / max(min(min(v["pre"]), min(v["post"])), 1e-9), 2)
+        for s, v in c.items()
+    }
+    merged["canary_spread"] = spreads
+    merged["burst_suspect"] = any(v > 2.0 for v in spreads.values())
+    c_ratio = (c["decade_100x"]["mean_sec"]
+               / max(c["decade_10x"]["mean_sec"], 1e-9))
+    factors = {}
+    for op in ("semdedup", "knn_ivf", "edge_build", "pagerank"):
+        raw = round(rows["100x"][op]["sec"]
+                    / max(rows["10x"][op]["sec"], 1e-9), 2)
+        factors[op] = {
+            "100x_over_10x_raw": raw,
+            "100x_over_10x_canary_normalized": round(raw / c_ratio, 2),
         }
-    with open(f"{partdir}/{tag}.part.json", "w") as f:
-        json.dump(part, f)
-    print(f"wrote {partdir}/{tag}.part.json")
-    spark.stop()
+    merged["per_decade_factors_100x"] = factors
+    merged["canary_ratio_100x_over_10x"] = round(c_ratio, 3)
+    print("factors:", factors)
+    print("canary spreads:", spreads,
+          "burst_suspect:", merged["burst_suspect"])
+    _write("CERT_vectors_stages_r13.json", merged)
 
 
 def sweep_vectors1000x(argv):
@@ -1043,13 +895,13 @@ def sweep_vectors1000x(argv):
 
     r12 (VERDICT r11 asks #1/#3/#7): the sweep joins the thousandx
     noise regime — stray-JVM guard, one fresh PROCESS per decade
-    with a fixed-work canary (q_stats_agg on the 10x corpus) and
-    canary-normalized factors, best-of-2 at EVERY decade (the r11
-    single-rep 1000x pagerank wall was the repo's weakest committed
-    number) with all rep walls committed, pagerank setup +
-    per-iteration walls recorded per rep (graph.pagerank profile
-    hook), and a MEGABUCKET stanza at the top decade: 100k rows
-    forced into ONE bucket (~3x _MAX_CLUSTER_ROWS) so the
+    (``_run_sections``) with a fixed-work canary (q_stats_agg on the
+    10x corpus) and canary-normalized factors, best-of-2 at EVERY
+    decade (the r11 single-rep 1000x pagerank wall was the repo's
+    weakest committed number) with all rep walls committed, the stage
+    profile of every pagerank rep (its setup and each power iteration
+    are job-tagged steps), and a MEGABUCKET stanza at the top decade:
+    100k rows forced into ONE bucket (~3x _MAX_CLUSTER_ROWS) so the
     bucketed-GEMM sub-block split path runs at certification scale
     instead of only in its toy-sized unit test.
     -> CERT_vectors_1000x.json
@@ -1057,196 +909,37 @@ def sweep_vectors1000x(argv):
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
     os.environ["SPARK_GRAFT_CACHE_TABLES"] = "0"
 
-    decades = {"10x": DIR_10X, "100x": DIR_100X, "1000x": DIR_1000X}
-    opts = dict(
-        a.split("=", 1) for a in argv if a.startswith("--") and "=" in a
-    )
-    if "--decade" not in opts:
-        import shutil
-        import subprocess
-        import tempfile
+    def measure(tag, spark, qs, part):
+        _vectors_decade(tag, spark, part)
 
-        _guard_stray_jvm()
-        partdir = tempfile.mkdtemp(prefix="cert_vectors1000x_")
-        try:
-            for tag in decades:
-                rc = subprocess.call(
-                    [sys.executable, os.path.abspath(__file__),
-                     "vectors1000x", f"--decade={tag}",
-                     f"--partdir={partdir}"],
-                    cwd=os.path.dirname(
-                        os.path.dirname(os.path.abspath(__file__))
-                    ),
-                )
-                if rc:
-                    print(f"decade {tag} failed (rc {rc})", file=sys.stderr)
-                    sys.exit(rc)
-            out, canary, megabucket = {}, {}, None
-            for tag in decades:
-                with open(f"{partdir}/{tag}.part.json") as f:
-                    part = json.load(f)
-                out[tag] = part["row"]
-                canary[tag] = part["canary"]
-                megabucket = part.get("megabucket", megabucket)
-        finally:
-            shutil.rmtree(partdir, ignore_errors=True)
-        c_ratio = {
-            pair: canary[hi]["mean_sec"] / max(canary[lo]["mean_sec"], 1e-9)
-            for pair, lo, hi in (
-                ("100x_over_10x", "10x", "100x"),
-                ("1000x_over_100x", "100x", "1000x"),
-            )
-        }
-        factors = {}
-        for op in ("semdedup", "knn_ivf", "edge_build", "pagerank"):
-            raw = {
-                "100x_over_10x": round(
-                    out["100x"][op]["sec"] / max(out["10x"][op]["sec"], 1e-9),
-                    2,
-                ),
-                "1000x_over_100x": round(
-                    out["1000x"][op]["sec"]
-                    / max(out["100x"][op]["sec"], 1e-9),
-                    2,
-                ),
-            }
-            raw["canary_normalized"] = {
-                pair: round(raw[pair] / c_ratio[pair], 2)
-                for pair in c_ratio
-            }
-            factors[op] = raw
-        print("per-decade factors (10 = linear):", factors)
-        print("canary:", canary, "ratios:", c_ratio)
-        _write("CERT_vectors_1000x.json", {
-            "sweep": "vectors1000x", "decades": out,
-            "per_decade_factors": factors,
-            "canary": canary,
-            "canary_ratio": {k: round(v, 3) for k, v in c_ratio.items()},
-            "megabucket": megabucket,
-            "process_per_decade": True,
-            "note": "factor 10 = linear in rows; canary_normalized "
-                    "divides out the fixed-work canary's drift "
-                    "between decade processes; pagerank phase-split: "
-                    "edge_build = bucketed GEMM cosine pairs to "
-                    "parquet, pagerank = 10 power iterations over "
-                    "the materialized edges (edge count grows "
-                    "linearly, fixed cluster size) with setup + "
-                    "per-iteration walls per rep; megabucket = the "
-                    "oversized-bucket sub-block split path exercised "
-                    "at 100k rows in one bucket",
-        })
-        return
-
-    tag = opts["--decade"]
-    partdir = opts["--partdir"]
-    d = decades[tag]
-    reps = 2
-    _guard_stray_jvm()
-    from pyspark.sql import functions as F
-
-    import __spark_entry__ as entry
-    from dataframe_spark.operators import similarity
-    from dataframe_spark.operators.graph import pagerank
-    from tools.scale_data import EMB_CLUSTER_SIZE, ensure
-
-    spark = _spark(f"certify_vectors1000x_{tag}")
-    _ensure_10x(spark)
-    if tag != "10x":
-        _ensure_100x(spark)
-    if tag == "1000x" and not ensure(spark, DIR_100X, DIR_1000X):
-        print("1000x generation failed", file=sys.stderr)
-        sys.exit(1)
-    qs = entry.queries()
-
-    part = {}
-    with _canary_bracket(tag, spark, qs, part):
-        emb = spark.read.parquet(f"{d}/embeddings.parquet")
-        n = emb.count()
-        k = max(8, n // EMB_CLUSTER_SIZE)
-        row = {"rows": n, "dim": 256, "semdedup_k": k}
-
-        row["semdedup"] = _rep_stats(_time_reps(
-            lambda: similarity.semdedup(
-                emb, "vec_id", "embedding", k=k, tau=0.4, max_iter=3
-            ),
-            reps=reps, spark=spark,
-        ))
-        print(tag, "semdedup", row["semdedup"], flush=True)
-        row["knn_ivf"] = _rep_stats(_time_reps(
-            lambda: similarity.knn_ivf(
-                emb, "vec_id", "embedding", query_id=0, k=10,
-                nlist=64, nprobe=8, max_iter=3,
-            ),
-            reps=reps, spark=spark,
-        ))
-        print(tag, "knn_ivf", row["knn_ivf"], flush=True)
-
-        edges_path = f"/tmp/spark_graft_vec_edges_{tag}"
-        eb_walls = []
-        for _ in range(reps):
-            spark.catalog.clearCache()
-            t0 = time.monotonic()
-            similarity.bucketed_cosine_pairs(
-                emb, "vec_id", "embedding", "label", threshold=0.4
-            ).select("a_id", "b_id").write.mode("overwrite").parquet(edges_path)
-            eb_walls.append(round(time.monotonic() - t0, 3))
-        row["edge_build"] = _rep_stats(eb_walls)
-        edges = spark.read.parquet(edges_path)
-        row["n_edges"] = edges.count()
-        print(tag, "edge_build", row["edge_build"], "edges", row["n_edges"],
-              flush=True)
-
-        pr_walls, pr_profiles = [], []
-        for _ in range(reps):
-            spark.catalog.clearCache()
-            prof = {}
-            t0 = time.monotonic()
-            # the materialized bucketed-GEMM pairs hold each unordered
-            # pair exactly once (tile construction), so the setup
-            # distinct collapses nothing -- skip its 8+ GB exchange (r12)
-            _noop(pagerank(
-                edges, "a_id", "b_id", damping=0.85, iters=10,
-                symmetrize=True, assume_unique=True, profile=prof,
-            ))
-            pr_walls.append(round(time.monotonic() - t0, 3))
-            pr_profiles.append(prof)
-        row["pagerank"] = _rep_stats(pr_walls)
-        row["pagerank"]["profiles"] = pr_profiles
-        print(tag, "pagerank", row["pagerank"], flush=True)
-
-        part["row"] = row
-        if tag == "1000x":
-            # MEGABUCKET: ~100k of the 2 M vectors forced into one
-            # bucket — ceil(100k/32768) = 4 sub-blocks, 10 tile tasks;
-            # per-task peak is two 32k x 256 sub-blocks + one
-            # 2048 x 32768 sims tile regardless of the bucket size
-            mb_rows = 100_000
-            degenerate = emb.where(F.col("vec_id") < mb_rows).select(
-                "vec_id", "embedding", F.lit(0).alias("label")
-            )
-            spark.catalog.clearCache()
-            t0 = time.monotonic()
-            mb_pairs = similarity.bucketed_cosine_pairs(
-                degenerate, "vec_id", "embedding", "label", threshold=0.4
-            ).count()
-            mb_wall = round(time.monotonic() - t0, 3)
-            n_deg = degenerate.count()
-            import math as _math
-
-            cap = similarity._MAX_CLUSTER_ROWS
-            s = _math.ceil(n_deg / cap)
-            part["megabucket"] = {
-                "bucket_rows": n_deg, "max_bucket_rows": cap,
-                "split_sub_blocks": s, "n_tiles": s * (s + 1) // 2,
-                "wall_sec": mb_wall, "n_pairs": mb_pairs,
-                "note": "split path exercised at cert scale (VERDICT "
-                        "r11 ask #7); task peak = 2 sub-blocks + 1 "
-                        "sims tile (rows pre-normalized in place, r12)",
-            }
-            print(tag, "megabucket", part["megabucket"], flush=True)
-    with open(f"{partdir}/{tag}.part.json", "w") as f:
-        json.dump(part, f)
-    print(f"wrote {partdir}/{tag}.part.json")
+    parts = _run_sections("vectors1000x", argv, DECADES, measure)
+    out = {tag: part["row"] for tag, part in parts.items()}
+    canary = {tag: part["canary"] for tag, part in parts.items()}
+    c_ratio = _canary_ratios(canary)
+    factors = {
+        op: _decade_factors({t: r[op] for t, r in out.items()}, c_ratio)
+        for op in ("semdedup", "knn_ivf", "edge_build", "pagerank")
+    }
+    print("per-decade factors (10 = linear):", factors)
+    print("canary:", canary, "ratios:", c_ratio)
+    _write("CERT_vectors_1000x.json", {
+        "sweep": "vectors1000x", "decades": out,
+        "per_decade_factors": factors,
+        "canary": canary,
+        "canary_ratio": {k: round(v, 3) for k, v in c_ratio.items()},
+        "megabucket": parts["1000x"].get("megabucket"),
+        "process_per_decade": True,
+        "note": "factor 10 = linear in rows; canary_normalized "
+                "divides out the fixed-work canary's drift "
+                "between decade processes; pagerank phase-split: "
+                "edge_build = bucketed GEMM cosine pairs to "
+                "parquet, pagerank = 10 power iterations over "
+                "the materialized edges (edge count grows "
+                "linearly, fixed cluster size) with the stage "
+                "profile of every rep; megabucket = the "
+                "oversized-bucket sub-block split path exercised "
+                "at 100k rows in one bucket",
+    })
 
 
 def main():
