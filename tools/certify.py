@@ -236,9 +236,9 @@ def _time_best(build, reps=3, spark=None):
     not the prepared steady state).
 
     Pass ``spark`` to ALSO clear the storage cache before every rep:
-    operators persist reusable intermediates, and a
-    rep-2 (or later-query) build of the identical logical plan hits
-    that cache. At small decades the cached frames fit and rep 2
+    operators persist reusable intermediates, and a rep-2 (or
+    later-query) build of the identical logical plan hits that
+    cache. At small decades the cached frames fit and rep 2
     measures warm; at the top decade they evict and the measurement
     is cold — a warm/cold asymmetry that fabricates super-linear
     decade factors (the late-r9 thousandx run read ngram-jaccard at
