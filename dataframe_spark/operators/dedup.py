@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..plans.cache import try_persist
 from ..plans.trace import stage
 
 # --- exact ------------------------------------------------------------
@@ -156,7 +157,7 @@ def hashed_shingle_arrays(
     + hashes it exactly once (r6). The chain runs as the
     ``_shingle_kernel`` mapInArrow kernel at every input size (see
     ``_hashed_shingles``); docs with fewer than n tokens drop out."""
-    return _reusable(_hashed_shingles(df, id_col, text_col, n))
+    return try_persist(_hashed_shingles(df, id_col, text_col, n))
 
 
 def shingles(df: SparkDF, id_col: str, text_col: str, n: int = 3) -> SparkDF:
@@ -344,7 +345,7 @@ def jaccard_pairs(
     # a broadcast build) ran once per side, measured 11 Spark jobs
     # vs 5 and ~2x the warm wall at sf0.1. The cached frame is one
     # thin row per prefix entry (~20% of shingle occurrences).
-    prefix = _reusable(
+    prefix = try_persist(
         per_doc.select(
             "id",
             "n_sh",
@@ -493,7 +494,7 @@ def _truncated_bound_filter(
     dominated by the candidate join's shuffle, not the 256-byte
     intersects, and smaller K's weaker bound adds verify volume.
     K = 32 stays."""
-    slim = _reusable(
+    slim = try_persist(
         arrs.select(
             "id",
             F.slice(F.array_sort("sh_arr"), 1, k).alias("__t"),
@@ -587,7 +588,7 @@ def _hash_order_prefix(
             F.slice(ordered, 1, F.greatest(plen, F.lit(0)))
         )
         shingle = F.col("col.h")
-    return _reusable(
+    return try_persist(
         arrs.select("id", "n_sh", pref).select(
             "id",
             shingle.alias("shingle"),
@@ -748,35 +749,6 @@ def _materialize(df: SparkDF, op: str, step: str) -> None:
             "cache barrier count failed; continuing without it",
             exc,
         )
-
-
-def _reusable(df: SparkDF) -> SparkDF:
-    """Disk-spillable persist for a plan with MULTIPLE downstream
-    consumers (jaccard reads the hashed shingle arrays three times:
-    document frequency, prefix build, verification; minhash twice).
-    Without it Spark re-runs the scan + tokenize + shingle + hash
-    chain once per consumer — at 100 TB that triples the most
-    CPU-intensive stage, so materializing once (memory, spilling to
-    disk when it doesn't fit) is the cheaper side of the trade. The
-    cache is left to LRU eviction: the operator returns a LAZY
-    result, so there is no safe point to unpersist inside it.
-
-    Session hygiene (r12, ADVICE r11 #3): this applies to EVERY
-    helper persist in this module — the shingle-array cache, the
-    truncated-bound slim frame, the broadcast-verify
-    slim/needed/cands frames and lsh_candidate_pairs' banded frame
-    (``persist_bands``) all outlive the call by design, unlike
-    pagerank's caches (released there because its result is eagerly
-    checkpointed before return). A long-lived session running many
-    dedup queries accumulates dead entries until LRU eviction
-    reclaims them — memory-safe (MEMORY_AND_DISK evicts cleanly,
-    and identical plans across jaccard/minhash share one entry) but
-    not free; batch pipelines that materialize each result should
-    call ``spark.catalog.clearCache()`` between queries, exactly as
-    tools/certify.py does between certification reps."""
-    from ..plans.cache import try_persist
-
-    return try_persist(df)
 
 
 def _xxh64_np(data, starts, lengths):
@@ -1091,20 +1063,20 @@ def _verify_jaccard(
     barrier run as the steps ``candidates`` and ``needed`` of ``op``
     (``plans.trace.stage``)."""
     if broadcast_pairs is None:
-        cands = _reusable(cands)
+        cands = try_persist(cands)
         try:
             with stage(op, "candidates"):
                 broadcast_pairs = cands.count() <= VERIFY_BROADCAST_MAX_PAIRS
         except Exception:  # Spark Connect count quirks: stay lazy
             broadcast_pairs = False
     if broadcast_pairs:
-        slim = _reusable(cands.select("a_id", "b_id"))
+        slim = try_persist(cands.select("a_id", "b_id"))
         need_ids = (
             slim.select(F.col("a_id").alias("id"))
             .union(slim.select(F.col("b_id").alias("id")))
             .distinct()
         )
-        needed = _reusable(
+        needed = try_persist(
             arrs.join(F.broadcast(need_ids), "id", "left_semi")
         )
         # barrier: both verify sides scan `needed`; a cold cache
@@ -1185,7 +1157,7 @@ def duplicated_spans(
     # exchange across the two consumers — without this the tokenize
     # + 20-gram shingle build ran twice. Cached pre-explode (one row
     # per doc, 8 B per window hash).
-    arrs = _reusable(
+    arrs = try_persist(
         df.select(F.col(id_col).alias("id"), spans.alias("__spans"))
     )
     win = arrs.select("id", F.explode("__spans").alias("__h"))
@@ -1254,13 +1226,13 @@ def remove_duplicated_spans(
         F.filter(tokens_expr(text_col), lambda x: x != F.lit("")),
         F.array().cast("array<string>"),
     )
-    toked = _reusable(
+    toked = try_persist(
         df.select(F.col(id_col).alias("id"), toks_e.alias("__toks"))
     )
     hashes = F.transform(
         window_array_expr(F.col("__toks"), window), lambda s: F.xxhash64(s)
     )
-    wins = _reusable(
+    wins = try_persist(
         toked.select("id", F.posexplode(hashes)).withColumnRenamed(
             "col", "__h"
         )
@@ -1351,7 +1323,7 @@ def dedup_paragraphs(
     collision trade as ``remove_duplicated_spans``."""
     import re as _re
 
-    parts = _reusable(
+    parts = try_persist(
         df.select(
             F.col(id_col).alias("id"),
             F.posexplode(
@@ -1602,7 +1574,7 @@ def edit_distance_pairs(
             lambda i: F.xxhash64(F.col("s").substr(i, F.lit(q))),
         )
     )
-    arrs = _reusable(
+    arrs = try_persist(
         base.select(
             "id",
             "s",
@@ -1636,7 +1608,7 @@ def edit_distance_pairs(
     # AQE does not reuse the exchange across the two aliased
     # projections — without this the dfreq + regroup lineage ran
     # once per side (see jaccard_pairs)
-    prefix = _reusable(
+    prefix = try_persist(
         per_str.select(
             "id",
             "len",
@@ -1918,7 +1890,7 @@ def lsh_candidate_pairs(
     ``_BIG_PATH_KNEE`` input-plan gate. With ``persist_bands=True``
     the call itself runs a Spark job (the cache barrier's count, step
     ``lsh_candidate_pairs:bands``), and the banded frame stays cached
-    after the call (see ``_reusable``)."""
+    after the call (see ``plans.cache``)."""
     if rows_per_band < 1:
         # e.g. num_perm // bands with bands > num_perm: every band
         # slice would be empty and hash to ONE constant bucket — a
@@ -1934,7 +1906,7 @@ def lsh_candidate_pairs(
         "id", F.posexplode(band_arr).alias("band_idx", "band_hash")
     )
     if persist_bands:
-        banded = _reusable(banded)
+        banded = try_persist(banded)
         # barrier: the self-join consumes the cache from two sides
         # (see _materialize — a cold cache would be raced)
         _materialize(banded, "lsh_candidate_pairs", "bands")
@@ -2008,7 +1980,7 @@ def minhash_dedup_pairs(
     # then picked by a narrow join (the gstats side is 2 slim
     # columns, so AQE broadcasts it at moderate scale and falls back
     # to an id-shuffle join beyond that)
-    gstats = _reusable(
+    gstats = try_persist(
         arrs_h.select(
             "id", F.xxhash64(F.array_sort("sh_arr")).alias("__g")
         )
@@ -2033,7 +2005,7 @@ def minhash_dedup_pairs(
     # and AQE does not reuse the exchange across the two aliased
     # projections — without the persist the num_perm×|sh_arr|
     # signature hashing ran once per side
-    sigs = _reusable(
+    sigs = try_persist(
         _minhash_sigs_frame(arrs_h.join(gstats.select("id"), "id"), num_perm)
     )
     if big:
@@ -2162,7 +2134,7 @@ def simhash_pairs(
     # both sides and AQE does not reuse the exchange across aliased
     # projections — without this the 64-aggregate simhash groupBy
     # ran once per side
-    sigs = _reusable(simhash(df, id_col, text_col))
+    sigs = try_persist(simhash(df, id_col, text_col))
     chunks = F.array(
         *[
             F.shiftright(F.col("simhash"), 16 * i).bitwiseAND(F.lit(0xFFFF))

@@ -332,11 +332,11 @@ def phash_pairs(
         )
     if cells % 4:
         raise ValueError(f"phash_pairs: cells must divide into 4 chunks, got {cells}")
-    from .dedup import _reusable
+    from ..plans.cache import try_persist
 
     width = cells // 4
     mask = (1 << width) - 1
-    sigs = _reusable(
+    sigs = try_persist(
         image_ahash(media, id_col, payload_col, cells).where(
             F.col("ahash").isNotNull()
         )

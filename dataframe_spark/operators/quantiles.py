@@ -104,6 +104,92 @@ def _radix_bin(v: Column) -> Column:
     )
 
 
+def _hit_bins(binned: SparkDF, keys: list[str], probs) -> SparkDF:
+    """PASS 1 of both radix plans: per-(key, radix-bin) counts of
+    ``binned`` (keys + ``__bin``), then per (key, prob) the bins
+    holding the bracketing order statistics as (keys, __bin, __off,
+    prob, __jlo, __jhi, __frac)."""
+    # dedupe probs: a repeated prob would duplicate its hit rows and
+    # double pass-2's per-value counts, shifting every order
+    # statistic (the old engine merged duplicates in its final
+    # groupBy and returned one row per distinct prob — keep that)
+    probs = list(dict.fromkeys(float(p) for p in probs))
+
+    # PASS 1: per-bin totals are small (#keys × #populated-bins rows)
+    psums = binned.groupBy(*keys, "__bin").agg(F.count(F.lit(1)).alias("__s"))
+
+    # ONE window pass yields both the exclusive prefix offset and the
+    # key total (same partitioning, two frames — a single exchange),
+    # then the probs attach by exploding a LITERAL array: the whole
+    # side frame is scan → agg → window → explode with ZERO joins —
+    # sequential side-plan stages were the dominant cost of the first
+    # two-pass cut (each join added a serial AQE stage + re-scan).
+    w_key = Window.partitionBy(*keys).orderBy("__bin")
+    w_off = w_key.rowsBetween(Window.unboundedPreceding, -1)
+    w_all = w_key.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    offsets = psums.select(
+        *keys,
+        "__bin",
+        "__s",
+        F.coalesce(F.sum("__s").over(w_off), F.lit(0)).alias("__off"),
+        F.sum("__s").over(w_all).alias("__n"),
+    )
+
+    # bin b holds 0-based index j  iff  __off < j+1 <= __off + __s.
+    # The side frame carries both the target-bin ids and the order-
+    # statistic indices: (keys, bin, off, prob, jlo, jhi, frac).
+    pos = F.col("prob") * (F.col("__n") - 1).cast("double")
+    j1 = F.floor(pos) + 1
+    j2 = F.ceil(pos) + 1
+    return (
+        offsets.select(
+            *keys,
+            "__bin",
+            "__s",
+            "__off",
+            "__n",
+            F.explode(
+                F.array(*[F.lit(float(p)) for p in probs])
+            ).alias("prob"),
+        )
+        .where(
+            ((j1 > F.col("__off")) & (j1 <= F.col("__off") + F.col("__s")))
+            | ((j2 > F.col("__off")) & (j2 <= F.col("__off") + F.col("__s")))
+        )
+        .select(
+            *keys,
+            "__bin",
+            "__off",
+            "prob",
+            F.floor(pos).alias("__jlo"),
+            F.ceil(pos).alias("__jhi"),
+            (pos - F.floor(pos)).alias("__frac"),
+        )
+    )
+
+
+def _fused_join(
+    binned: SparkDF, hit: SparkDF, key: str, broadcast: bool
+) -> SparkDF:
+    """``binned`` joined to ``hit`` on ONE fused long key
+    ``key``·2^42 + bin (``key`` one small non-null int), exact by
+    construction: a multi-column BroadcastHashJoin probe packs/hashes
+    an UnsafeRow per input row (measured 3.7s vs 0.9s for the
+    single-long LongHashedRelation probe on 48M rows). A hash key +
+    residual equality does NOT work here — Catalyst pulls the
+    residual equalities back into the join keys, recreating the slow
+    multi-column probe."""
+    fused = F.col(key).cast("long") * F.lit(1 << 42) + F.col("__bin")
+    hit_r = hit.select(
+        fused.alias("__k"), "__off", "prob", "__jlo", "__jhi", "__frac"
+    )
+    if broadcast:
+        hit_r = F.broadcast(hit_r)
+    return binned.withColumn("__k", fused).join(hit_r, "__k")
+
+
 def _exact_quantiles_impl(
     long: SparkDF,
     keys: list[str],
@@ -136,85 +222,15 @@ def _exact_quantiles_impl(
     prefix is exact for every kept value, the true j-th order
     statistic is in a kept bin by construction, and it is the
     smallest value anywhere in the multiset with cum >= j+1."""
-    # dedupe probs: a repeated prob would duplicate its hit rows and
-    # double pass-2's per-value counts, shifting every order
-    # statistic (the old engine merged duplicates in its final
-    # groupBy and returned one row per distinct prob — keep that)
-    probs = list(dict.fromkeys(float(p) for p in probs))
     binned = long.withColumn("__bin", _radix_bin(F.col("__v")))
-
-    # PASS 1: per-bin totals are small (#keys × #populated-bins rows)
-    psums = binned.groupBy(*keys, "__bin").agg(F.count(F.lit(1)).alias("__s"))
-
-    # ONE window pass yields both the exclusive prefix offset and the
-    # key total (same partitioning, two frames — a single exchange),
-    # then the probs attach by exploding a LITERAL array: the whole
-    # side frame is scan → agg → window → explode with ZERO joins —
-    # sequential side-plan stages were the dominant cost of the first
-    # two-pass cut (each join added a serial AQE stage + re-scan).
-    w_key = Window.partitionBy(*keys).orderBy("__bin")
-    w_off = w_key.rowsBetween(Window.unboundedPreceding, -1)
-    w_all = w_key.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    offsets = psums.select(
-        *keys,
-        "__bin",
-        "__s",
-        F.coalesce(F.sum("__s").over(w_off), F.lit(0)).alias("__off"),
-        F.sum("__s").over(w_all).alias("__n"),
-    )
-
-    # bin b holds 0-based index j  iff  __off < j+1 <= __off + __s.
-    # The side frame carries both the target-bin ids and the order-
-    # statistic indices: (keys, bin, off, prob, jlo, jhi, frac).
-    pos = F.col("prob") * (F.col("__n") - 1).cast("double")
-    j1 = F.floor(pos) + 1
-    j2 = F.ceil(pos) + 1
-    hit = (
-        offsets.select(
-            *keys,
-            "__bin",
-            "__s",
-            "__off",
-            "__n",
-            F.explode(
-                F.array(*[F.lit(float(p)) for p in probs])
-            ).alias("prob"),
-        )
-        .where(
-            ((j1 > F.col("__off")) & (j1 <= F.col("__off") + F.col("__s")))
-            | ((j2 > F.col("__off")) & (j2 <= F.col("__off") + F.col("__s")))
-        )
-        .select(
-            *keys,
-            "__bin",
-            "__off",
-            "prob",
-            F.floor(pos).alias("__jlo"),
-            F.ceil(pos).alias("__jhi"),
-            (pos - F.floor(pos)).alias("__frac"),
-        )
-    )
+    hit = _hit_bins(binned, keys, probs)
     # PASS 2: with ``fuse_int_key`` (the unpivot path — keys is one
     # small non-null int) the join runs on ONE fused long key
-    # ci·2^42 + bin, exact by construction: a multi-column
-    # BroadcastHashJoin probe packs/hashes an UnsafeRow per input
-    # row (measured 3.7s vs 0.9s for the single-long
-    # LongHashedRelation probe on 48M rows). A hash key + residual
-    # equality does NOT work here — Catalyst pulls the residual
-    # equalities back into the join keys, recreating the slow
-    # multi-column probe. Arbitrary group keys keep the plain
+    # (``_fused_join``); arbitrary group keys keep the plain
     # multi-column join.
     if fuse_int_key:
         assert len(keys) == 1
-        fused = F.col(keys[0]).cast("long") * F.lit(1 << 42) + F.col("__bin")
-        hit_r = hit.select(
-            fused.alias("__k"), "__off", "prob", "__jlo", "__jhi", "__frac"
-        )
-        if broadcast_sides:
-            hit_r = F.broadcast(hit_r)
-        joined = binned.withColumn("__k", fused).join(hit_r, "__k")
+        joined = _fused_join(binned, hit, keys[0], broadcast_sides)
     else:
         hit_r = hit
         if broadcast_sides:
@@ -332,7 +348,6 @@ def exact_quantiles_tails(
     (column, prob) — so a caller that already ends in a per-column
     agg (summarize's union-final) can fold the merge into it and
     skip this plan's last exchange."""
-    probs = list(dict.fromkeys(float(p) for p in probs))
     src = df.coalesce(nparts)
     stack_args = ", ".join(
         f"{i}, CAST({_bt(c)} AS DOUBLE)" for i, c in enumerate(cols)
@@ -345,63 +360,10 @@ def exact_quantiles_tails(
             .withColumn("__bin", _radix_bin(F.col("__v")))
         )
 
-    # PASS 1: per-(column, bin) histogram — #cols × #populated-bins
-    # rows after the map-side combine, then ONE window pass for the
-    # exclusive prefix offsets and column totals (the engine's
-    # zero-join side-chain shape).
-    psums = stacked().groupBy("__ci", "__bin").agg(
-        F.count(F.lit(1)).alias("__s")
-    )
-    w_key = Window.partitionBy("__ci").orderBy("__bin")
-    w_off = w_key.rowsBetween(Window.unboundedPreceding, -1)
-    w_all = w_key.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    offsets = psums.select(
-        "__ci",
-        "__bin",
-        "__s",
-        F.coalesce(F.sum("__s").over(w_off), F.lit(0)).alias("__off"),
-        F.sum("__s").over(w_all).alias("__n"),
-    )
-    pos = F.col("prob") * (F.col("__n") - 1).cast("double")
-    j1 = F.floor(pos) + 1
-    j2 = F.ceil(pos) + 1
-    hit = (
-        offsets.select(
-            "__ci",
-            "__bin",
-            "__s",
-            "__off",
-            "__n",
-            F.explode(
-                F.array(*[F.lit(float(p)) for p in probs])
-            ).alias("prob"),
-        )
-        .where(
-            ((j1 > F.col("__off")) & (j1 <= F.col("__off") + F.col("__s")))
-            | ((j2 > F.col("__off")) & (j2 <= F.col("__off") + F.col("__s")))
-        )
-        .select(
-            "__ci",
-            "__bin",
-            "__off",
-            "prob",
-            F.floor(pos).alias("__jlo"),
-            F.ceil(pos).alias("__jhi"),
-            (pos - F.floor(pos)).alias("__frac"),
-        )
-    )
-    # PASS 2: fused single-long key (the engine's LongHashedRelation
-    # rationale), then the sorted-tail agg instead of the
-    # count/window/conditional-min chain.
-    fused = F.col("__ci").cast("long") * F.lit(1 << 42) + F.col("__bin")
-    hit_r = F.broadcast(
-        hit.select(
-            fused.alias("__k"), "__off", "prob", "__jlo", "__jhi", "__frac"
-        )
-    )
-    joined = stacked().withColumn("__k", fused).join(hit_r, "__k")
+    hit = _hit_bins(stacked(), ["__ci"], probs)
+    # PASS 2: the fused-key join, then the sorted-tail agg instead of
+    # the count/window/conditional-min chain.
+    joined = _fused_join(stacked(), hit, "__ci", True)
     tails = joined.groupBy(
         "__ci", "prob", "__off", "__jlo", "__jhi", "__frac"
     ).agg(F.sort_array(F.collect_list("__v")).alias("__arr"))

@@ -877,10 +877,10 @@ def _oversized_keep(rows: SparkDF, tau: float) -> SparkDF:
     survivor is the min-id one and string ids work too."""
     from pyspark.sql import Window
 
-    from .dedup import _reusable
+    from ..plans.cache import try_persist
     from .graph import connected_components
 
-    nodes = _reusable(
+    nodes = try_persist(
         rows.where(F.col("id").isNotNull()).withColumn(
             "__k",
             F.shiftleft(F.col("__cid").cast("long"), 32)
@@ -888,7 +888,7 @@ def _oversized_keep(rows: SparkDF, tau: float) -> SparkDF:
         )
     )
     # persisted: connected_components reads its edges several times
-    edges = _reusable(
+    edges = try_persist(
         _tile_pairs(nodes, "__k", "__v", "__cid", tau, False).select("a_id", "b_id")
     )
     comp = connected_components(edges, "a_id", "b_id")
@@ -958,7 +958,7 @@ def semdedup(
     fitted by :func:`kmeans_fit`, or for k > 64 the two-level
     :func:`kmeans_fit_hierarchical`, under their contract; a row with a
     NULL element or a zero vector is assigned cluster 0."""
-    from .dedup import _reusable
+    from ..plans.cache import try_persist
 
     if centroids is None and k > HIER_KMEANS_MIN_K:
         # k ∝ corpus (the paper's setting) makes the flat fit and
@@ -976,7 +976,7 @@ def semdedup(
         assign = _assign_udf(_unit_rows(centroids))
     # persisted: the size probe below is its first (filling) scan and
     # the per-cluster pass its second — the assign UDF runs once
-    sides = _reusable(
+    sides = try_persist(
         df.where(F.col(vec_col).isNotNull())
         .select(F.col(id_col).alias("id"), _dvec(vec_col).alias("__v"))
         .withColumn("__cid", assign(F.col("__v")))

@@ -451,15 +451,15 @@ def pmi_collocations(df, text_col: str, min_count: int = 5, top_n: int = 100):
     if min_count < 1:
         raise ValueError(f"min_count must be >= 1, got {min_count}")
     src = ensure_scan_parallelism(df)
-    from .dedup import _reusable
+    from ..plans.cache import try_persist
 
     # BOTH count frames are multi-consumer: uni feeds the token
     # total + the w1 and w2 join sides (3 consumers), bg_all feeds
     # the unfiltered pair total + the min_count-filtered scoring
     # side — unpersisted, each extra consumer re-pays the tokenize +
     # count shuffle (review r6)
-    uni = _reusable(vocabulary(src, text_col))
-    bg_all = _reusable(
+    uni = try_persist(vocabulary(src, text_col))
+    bg_all = try_persist(
         src.select(
             F.explode(window_array_expr(tokens(text_col), 2)).alias("bigram")
         )
@@ -692,7 +692,7 @@ def ppl_buckets(
     bits with aggregation order); ties at a cutoff land in the LOWER
     bucket (quantile_bucket's convention). Zero-token docs are
     absent (nothing to score), matching perplexity_score."""
-    from ..operators.dedup import _reusable
+    from ..plans.cache import try_persist
     from .quantiles import grouped_quantiles_for
 
     lm, totals = unigram_lm(df, text_col, top_v=top_v)
@@ -701,7 +701,7 @@ def ppl_buckets(
     # aggregation and the final bucket assignment consume it, and
     # without the persist the whole LM + scoring lineage runs twice
     # (measured 3.0 s -> 0.93 s steady at sf0.1, late r9)
-    scored = _reusable(
+    scored = try_persist(
         perplexity_score(
             df.withColumn("__grp", F.col(group_col)),
             id_col, text_col, lm, totals, carry=["__grp"],

@@ -5,9 +5,8 @@ through the plan) gates several operators' small-vs-distributed
 cutover — the same statistic AQE and the broadcast threshold
 consult. Reading it runs NO job, but the accessor chain
 (``_jdf.queryExecution()``) only exists on classic-mode DataFrames;
-under Spark Connect there is no JVM handle, so callers get their
-``fallback`` instead. Every gate in this codebase passes a LARGE
-fallback, which routes Connect sessions onto the fully-distributed
+under Spark Connect there is no JVM handle, so callers get LARGE
+instead, which routes Connect sessions onto the fully-distributed
 path — the side that is always correct, merely not the small-input
 shortcut. The first fallback in a process emits a FallbackWarning.
 
@@ -25,7 +24,7 @@ from ..errors import warn_fallback_once
 LARGE = 1 << 62  # "assume big": pick the distributed/scale path
 
 
-def plan_size_bytes(sdf, fallback: int = LARGE) -> int:
+def plan_size_bytes(sdf) -> int:
     try:
         return int(
             sdf._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -33,7 +32,7 @@ def plan_size_bytes(sdf, fallback: int = LARGE) -> int:
     except Exception as exc:  # Spark Connect: no _jdf / py4j handle
         warn_fallback_once(
             "plans.stats.plan_size_bytes",
-            "plan statistics unavailable; gates take their fallback size",
+            "plan statistics unavailable; gates take the LARGE size",
             exc,
         )
-        return fallback
+        return LARGE

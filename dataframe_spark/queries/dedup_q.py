@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..core import DataFrame
 from ..operators import dedup, embeddings, graph, multimodal, similarity
+from ..plans.cache import try_persist
 from ..tables import load_table
 
 
@@ -252,7 +253,7 @@ def q_semdedup_check(spark, sf_dir):
     # persisted: consumed three times below (withv, orphans' drop
     # scan, the stats agg) — without it the sides-join-components
     # tail of the semdedup lineage re-executes per consumer (r12)
-    res = dedup._reusable(
+    res = try_persist(
         similarity.semdedup(
             emb, "vec_id", "embedding", k=_semdedup_k(sf_dir), tau=0.4,
             max_iter=3,
@@ -264,7 +265,7 @@ def q_semdedup_check(spark, sf_dir):
     # array arithmetic of the check's dominant join. dot/(na*nb) is
     # the identical expression tree per value, so the edge set (and
     # the query's output) is bit-identical (r12).
-    withv = dedup._reusable(
+    withv = try_persist(
         res.join(
             emb.select(F.col("vec_id").alias("id"), "embedding"), "id"
         ).withColumn("__nrm", similarity.norm("embedding"))
@@ -286,7 +287,7 @@ def q_semdedup_check(spark, sf_dir):
     sim = similarity.dot(F.col("__ea"), F.col("__eb")) / F.nullif(
         F.col("__na") * F.col("__nb"), F.lit(0.0)
     )
-    edges = dedup._reusable(
+    edges = try_persist(
         a.join(b, "cluster")
         .where(F.col("a_id") < F.col("b_id"))
         .where(sim >= 0.4)
@@ -514,9 +515,9 @@ def q_bloom_check(spark, sf_dir):
     parquet count, so the row universe is cross-engine-verified."""
     docs = _t(spark, sf_dir, "documents").df
     seen = docs.where(F.col("doc_id") % 3 != 0)
-    # _reusable, not bare persist: connect-safe and disk-spillable
+    # try_persist, not bare persist: connect-safe and disk-spillable
     # (three downstream consumers — viol, fp, survivor count)
-    survivors = dedup._reusable(
+    survivors = try_persist(
         dedup.bloom_filter_new(docs, seen, ["text"], m_bits=1 << 20, k=5)
     )
     seen_texts = seen.select("text").distinct()
@@ -567,7 +568,7 @@ def q_cms_check(spark, sf_dir):
 
     width, depth = 2048, 4
     docs = _t(spark, sf_dir, "documents").df
-    stream = dedup._reusable(
+    stream = try_persist(
         docs.select(
             F.explode(
                 dedup.window_array_expr(tokens("text"), 2)

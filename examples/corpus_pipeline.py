@@ -35,12 +35,13 @@ def main(sf_dir: str = "/root/testdata/sf0.001"):
     #    previously-ingested corpus (simulated here as every 5th doc)
     #    via a broadcast Bloom filter — zero joins against old data,
     #    no false negatives, the map-only 100 TB re-crawl gate.
-    from dataframe_spark.operators.dedup import _reusable, bloom_filter_new
+    from dataframe_spark.operators.dedup import bloom_filter_new
+    from dataframe_spark.plans.cache import try_persist
 
     already = docs.where(F.col("doc_id") % 5 == 0)
-    # _reusable: the screened frame feeds every downstream stage —
+    # try_persist: the screened frame feeds every downstream stage —
     # without it each action would rebuild the Bloom filter
-    docs = _reusable(bloom_filter_new(docs, already, ["text"]))
+    docs = try_persist(bloom_filter_new(docs, already, ["text"]))
     print(f"after incremental-ingest Bloom screen: {docs.count()}")
 
     # 1. Quality + language scoring (all in-row, fuses into the scan)

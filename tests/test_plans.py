@@ -281,7 +281,7 @@ def test_dsir_plan_shapes(spark, sf_dir):
 def test_remove_spans_plan_shapes(spark, sf_dir):
     """Span removal: hash-keyed joins only (broadcast at test scale;
     AQE picks shuffle joins at real scale) — no cartesian anywhere,
-    and the positional window stream persists once (the _reusable
+    and the positional window stream persists once (the try_persist
     frames) rather than re-tokenizing per consumer."""
     from dataframe_spark.operators.dedup import remove_duplicated_spans
 
@@ -372,7 +372,7 @@ def test_phash_pairs_banded_plan(spark, sf_dir):
     media = attach_payload(docs, "doc_id", "text")
     plan = _plan(phash_pairs(media))
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
-    assert "InMemoryRelation" in plan  # _reusable signature frame
+    assert "InMemoryRelation" in plan  # try_persist signature frame
     assert "chunk" in plan             # banded join keys
 
 

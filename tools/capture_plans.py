@@ -3,8 +3,12 @@ headline) into plans/<tag>/<query>_<suffix>.txt.
 
     python tools/capture_plans.py --tag r12 --suffix before [q ...]
 
-Driver-side planning only — no job execution — so it is cheap and
-safe to run next to other work.
+Capturing a plan runs no job, but building a query can: a query that
+fits or iterates at build time runs those Spark jobs before its plan
+exists. q_semdedup runs its k-means fit, and q_pagerank runs its ten
+eager power iterations, so q_pagerank's capture is only a scan of the
+checkpointed ranks and shows nothing of the iterations. A capture is
+therefore not free, and not safe to run beside a timing run.
 
 Session counters (expression and subquery ids ``#N``, ``[id=#N]``,
 ``plan_id=N``, RDD ids ``MapPartitionsRDD[N]``) are renumbered in

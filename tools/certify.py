@@ -16,48 +16,47 @@ Usage: python tools/certify.py <sweep> [options]
       record wall + row count + zero-error status.
       -> CERT_tenx.json
 
-  vectors
-      The r8 vector-scale sweep: semdedup / IVF / PageRank on the
-      SYNTHETIC clustered embedding corpora at 10x (20k x 256) and
-      100x (200k x 256), caches off, with the operator knobs scaled
-      the way their docstrings prescribe (SemDeDup k proportional to
-      corpus; IVF nlist fixed so probe cost is a constant fraction).
-      Records per-decade wall factors (100x / 10x; 10 = linear).
-      -> CERT_vectors.json
+  decades, thousandx
+      The FLAGSHIPS queries timed at 10x and 100x (decades), or at
+      10x, 100x AND 1000x (thousandx: sf0.1 scaled to ~6 B
+      lineitem-equivalent rows, ~18 GB parquet — the largest corpus
+      this box can hold), with per-decade wall factors. A plan that
+      is secretly super-linear shows a GROWING factor across
+      decades, which two points cannot see.
+      -> CERT_decades.json, CERT_thousandx.json
 
-  decades
-      The r7 two-decade flagship sweep, reproducible: ten flagship
-      queries timed at 10x and 100x (chained scale_data), caches
-      off, per-decade wall factors. -> CERT_decades.json
+  vectors, vectors1000x
+      The similarity stack (``_vectors_decade``) on the SYNTHETIC
+      clustered embedding corpora at 10x (20k x 256) and 100x
+      (200k x 256) (vectors), or at 10x, 100x AND 1000x (2 M x 256)
+      (vectors1000x), with the operator knobs scaled the way their
+      docstrings prescribe. -> CERT_vectors.json, CERT_vectors_1000x.json
 
-  thousandx
-      THREE-decade sweep (late r9): a flagship subset timed at 10x,
-      100x, AND 1000x (sf0.1 scaled to ~6 B lineitem-equivalent
-      rows, ~18 GB parquet — the largest corpus this box can hold),
-      caches off. Reports BOTH per-decade factors (100x/10x and
-      1000x/100x); a plan that is secretly super-linear shows a
-      GROWING factor across decades, which two points cannot see.
-      -> CERT_thousandx.json
-
-  vectors1000x, dedup_stages, vectors_stages
-      The vector stack at three decades, and the top-decade dedup and
-      semdedup stage profiles (see each sweep's docstring).
-      -> CERT_vectors_1000x.json, CERT_dedup_stages_r13.json,
-         CERT_vectors_stages_r13.json
+The four decade sweeps share one mechanism. Each decade runs in its
+own fresh process (``_run_sections``), which generates the corpora
+up to the sweep's top decade. Every timed rep (``_reps``) clears the
+storage cache and runs inside ``tools.stage_profile.profile_call``:
+the rep's wall is the profile's ``wall_s``, and the artifact keeps
+every rep's step table (the Spark jobs grouped by the library's
+``<op>:<step>`` job tags), so stage profiles come from the timed reps
+and no sweep runs a call only to profile it. Reps are best-of-3 at
+the sweep's top decade and best-of-2 below; caches are off. One merge
+(``_merge``) writes the walls, the raw and canary-normalized
+per-decade factors and the burst-suspect flag.
 
 NOISE REGIME (r12, VERDICT r11 ask #1). The box swings same-code
 walls 2-9x (documented r11: virtio disk, long-lived JVM state, one
 wedged 48 GB JVM that poisoned a round of measurements), so raw
-single-rep walls are not evidence. Every decade-factor sweep now:
+single-rep walls are not evidence. Every decade sweep therefore:
   (a) REFUSES to start while any java process is resident
       (_guard_stray_jvm; override SPARK_GRAFT_ALLOW_STRAY_JVM=1),
   (b) runs a FIXED-WORK canary (q_stats_agg on the 10x corpus)
       before and after each fresh decade process and commits
       canary-NORMALIZED factors next to the raw ones — the canary
       ratio measures how fast the box actually was while that
-      decade ran,
-  (c) commits EVERY rep wall (best + spread), best-of-3 at the top
-      decade.
+      decade ran — and flags the run as burst-suspect when any
+      process's canary moved more than 2x,
+  (c) commits EVERY rep wall (best + spread).
 
 Artifacts carry the sweep parameters so a diff between rounds is
 meaningful. All sweeps run on the session defaults (local[32],
@@ -80,15 +79,18 @@ DIR_100X = "/tmp/spark_graft_sf10"
 DIR_1000X = "/tmp/spark_graft_sf100"
 DECADES = {"10x": DIR_10X, "100x": DIR_100X, "1000x": DIR_1000X}
 
-# the three-decade subset: every pipeline family with a sub-minute
-# 100x wall (vector ops stay on the 2-decade CERT_vectors sweep —
-# semdedup at 2M x 256 would dominate the box for no extra signal)
-TX_FLAGSHIPS = [
+# the registry sweeps' queries: every pipeline family with a
+# sub-minute 100x wall (q_synthesis, 459 s at 100x, runs in tenx only)
+FLAGSHIPS = [
     "q1_pricing_summary",   # full-scan relational agg
     "q_stats_agg",          # wide numeric aggregation
+    "q_summarize",          # exact quantile summary
     "q_sessionize",         # per-user event windows
+    "q_holt",               # per-user recurrence
     "q_asof_join",          # range join
+    "q_skew_join",          # salted hot-key join
     "q_token_count",        # per-byte text kernel
+    "q_remove_spans",       # duplicated-span excision
     "q_dedup_minhash",      # LSH banding near-dup
     "q_dedup_ngram_jaccard",  # shingle-bucket near-dup
     "q_dedup_paragraphs",   # paragraph-level exact dedup
@@ -96,17 +98,7 @@ TX_FLAGSHIPS = [
     "q_bpe",                # tokenizer training (word-type table)
 ]
 
-FLAGSHIPS = [
-    "q1_pricing_summary", "q_stats_agg", "q_sessionize", "q_summarize",
-    "q_dedup_ngram_jaccard", "q_dedup_minhash", "q_skew_join", "q_holt",
-    "q_asof_join", "q_token_count",
-    # r9 (VERDICT r8 ask #5): the 100 TB pitch rests on the text-dedup
-    # stack — give banding/span/paragraph/bloom 100x evidence too
-    "q_remove_spans", "q_dedup_paragraphs", "q_bloom_check",
-    # r9 (VERDICT r8 ask #1): pin the beam-search scale story in the
-    # committed artifact (memoization cleared per rep — see below)
-    "q_synthesis",
-]
+REPS_TOP, REPS_BELOW = 3, 2  # best-of at a sweep's top decade / below
 
 
 def _spark(name, ansi=False):
@@ -184,27 +176,43 @@ def _guard_stray_jvm():
         sys.exit(3)
 
 
-def _time_reps(build, reps=2, spark=None):
-    """All rep walls (cold per rep — storage cache cleared like
-    _time_best) so the artifact commits the SPREAD next to the
-    point estimate (VERDICT r11 ask #1b): on a box whose
-    same-code walls swing 2-9x, a best-of without its reps is not
-    auditable."""
-    walls = []
-    for _ in range(reps):
-        if spark is not None:
-            spark.catalog.clearCache()
-        t0 = time.monotonic()
-        _noop(build())
-        walls.append(round(time.monotonic() - t0, 3))
-    return walls
+def _reps(spark, label, build, n, sink=_noop):
+    """``n`` timed reps of ``sink(build())`` (a freshly built frame per
+    rep: certification measures the submit-to-done wall, not a
+    prepared steady state). Each rep first clears the storage cache
+    and the registry's memoized fits, then runs inside
+    ``profile_call``.
 
+    Why clear the cache: operators persist reusable intermediates
+    (plans/cache.py), and a later rep's build of the identical plan
+    hits them. At small decades the cached frames fit and rep 2
+    measures warm; at the top decade they evict and it measures
+    cold — a warm/cold asymmetry that fabricated super-linear decade
+    factors (the late-r9 thousandx run read ngram-jaccard at
+    46.9x/decade; cold-vs-cold it is 8.0x). The BPE and beam-search
+    fits are memoized per sf_dir; a rep times the fit.
 
-def _rep_stats(walls):
+    Returns the best wall, every rep wall and their max/min spread
+    (VERDICT r11 ask #1b: on a box whose same-code walls swing 2-9x,
+    a best-of without its reps is not auditable), and every rep's
+    profile. A rep's wall is its profile's ``wall_s``, which does not
+    include reading the profile back."""
+    from dataframe_spark.queries import ml_q, text_q
+    from tools.stage_profile import profile_call
+
+    profiles = []
+    for _ in range(n):
+        spark.catalog.clearCache()
+        text_q._BPE_CACHE.clear()
+        ml_q._BEAM_CACHE.clear()
+        profiles.append(profile_call(spark, lambda: sink(build()))[1])
+    walls = [p["wall_s"] for p in profiles]
+    print(label, walls, flush=True)
     return {
         "sec": min(walls),
         "reps": walls,
         "spread": round(max(walls) / max(min(walls), 1e-9), 2),
+        "profiles": profiles,
     }
 
 
@@ -214,45 +222,19 @@ def _canary_bracket(tag, spark, qs, part):
     cold reps) before and after the block and record both in
     ``part["canary"]`` with the mean of their best reps."""
 
-    def reps():
-        return _time_reps(
-            lambda: qs["q_stats_agg"](spark, DIR_10X), reps=2, spark=spark
-        )
+    def reps(when):
+        return _reps(
+            spark, f"{tag} canary_{when}",
+            lambda: qs["q_stats_agg"](spark, DIR_10X), 2,
+        )["reps"]
 
-    pre = reps()
-    print(tag, "canary_pre", pre, flush=True)
+    pre = reps("pre")
     yield
-    post = reps()
-    print(tag, "canary_post", post, flush=True)
+    post = reps("post")
     part["canary"] = {
         "pre": pre, "post": post,
         "mean_sec": round((min(pre) + min(post)) / 2, 3),
     }
-
-
-def _time_best(build, reps=3, spark=None):
-    """Best-of-reps wall for a freshly built frame per rep (cold
-    plan each time — certification measures the submit-to-done wall,
-    not the prepared steady state).
-
-    Pass ``spark`` to ALSO clear the storage cache before every rep:
-    operators persist reusable intermediates, and a rep-2 (or
-    later-query) build of the identical logical plan hits that
-    cache. At small decades the cached frames fit and rep 2
-    measures warm; at the top decade they evict and the measurement
-    is cold — a warm/cold asymmetry that fabricates super-linear
-    decade factors (the late-r9 thousandx run read ngram-jaccard at
-    46.9x/decade; cold-vs-cold it is 8.0x). Decade sweeps therefore
-    clear the cache so every decade measures the same thing: the
-    cold submit-to-done wall."""
-    best = float("inf")
-    for _ in range(reps):
-        if spark is not None:
-            spark.catalog.clearCache()
-        t0 = time.monotonic()
-        _noop(build())
-        best = min(best, time.monotonic() - t0)
-    return round(best, 3)
 
 
 def sweep_parity(argv):
@@ -294,6 +276,29 @@ def sweep_parity(argv):
     sys.exit(1 if n_fail else 0)
 
 
+def sweep_tenx(argv):
+    import __spark_entry__ as entry
+
+    spark = _spark("certify_tenx")
+    _ensure(spark, "10x")
+    qs = entry.queries()
+    out, n_err = {}, 0
+    for name, fn in qs.items():
+        t0 = time.monotonic()
+        try:
+            n = fn(spark, DIR_10X).count()
+            out[name] = {"sec": round(time.monotonic() - t0, 3), "rows": n}
+        except Exception as e:  # record, keep sweeping
+            out[name] = {"error": f"{type(e).__name__}: {e}"[:200]}
+            n_err += 1
+        print(name, out[name])
+    _write("CERT_tenx.json", {
+        "sweep": "tenx", "dir": DIR_10X, "n_queries": len(out),
+        "n_errors": n_err, "queries": out,
+    })
+    sys.exit(1 if n_err else 0)
+
+
 def _ensure(spark, upto):
     """Generate the chained scale-ups of sf0.1 (10x, then 100x from
     10x, ...) once, up to and including the decade ``upto``."""
@@ -309,25 +314,137 @@ def _ensure(spark, upto):
         src = d
 
 
-def _run_sections(sweep, argv, tags, measure):
-    """Run each section of ``sweep`` in a FRESH process and return
-    their partial results by tag.
+def _flagships(tag, spark, qs, part, reps):
+    """One decade of the registry sweeps into ``part["walls"]``:
+    every FLAGSHIPS query on the decade's corpus."""
+    walls = part["walls"] = {}
+    for name in FLAGSHIPS:
+        walls[name] = _reps(
+            spark, f"{tag} {name}", lambda: qs[name](spark, DECADES[tag]), reps
+        )
 
-    Why a process per section (r11, measured): a single long-lived
+
+def _vectors_decade(tag, spark, qs, part, reps):
+    """One decade of the vector sweeps into ``part``, with the knobs
+    scaled per the operator contracts:
+
+    - semdedup: k = n_rows / EMB_CLUSTER_SIZE (the paper's k ∝
+      corpus setting; within-cluster pair work then grows linearly)
+    - knn_ivf: nlist fixed at 64, nprobe 8 — assignment is one
+      linear GEMM pass and probing scans a constant nprobe/nlist
+      fraction of rows
+    - edge_build: the bucketed-GEMM cosine pairs over the planted
+      ``label`` buckets, written to parquet (edge count grows
+      linearly because cluster SIZE is the fixed quantity)
+    - pagerank: 10 power iterations over the materialized edges,
+      timed apart from their build so a factor > 10 names its phase
+
+    At 1000x it adds a MEGABUCKET stanza (VERDICT r11 ask #7): 100k
+    rows forced into ONE bucket (~3x _MAX_CLUSTER_ROWS), so the
+    bucketed-GEMM sub-block split path runs at certification scale
+    instead of only in its toy-sized unit test."""
+    from pyspark.sql import functions as F
+
+    from dataframe_spark.operators import similarity
+    from dataframe_spark.operators.graph import pagerank
+    from tools.scale_data import EMB_CLUSTER_SIZE
+
+    emb = spark.read.parquet(f"{DECADES[tag]}/embeddings.parquet")
+    n = emb.count()
+    k = max(8, n // EMB_CLUSTER_SIZE)
+    corpus = part["corpus"] = {"rows": n, "dim": 256, "semdedup_k": k}
+    walls = part["walls"] = {}
+    walls["semdedup"] = _reps(
+        spark, f"{tag} semdedup",
+        lambda: similarity.semdedup(
+            emb, "vec_id", "embedding", k=k, tau=0.4, max_iter=3
+        ),
+        reps,
+    )
+    walls["knn_ivf"] = _reps(
+        spark, f"{tag} knn_ivf",
+        lambda: similarity.knn_ivf(
+            emb, "vec_id", "embedding", query_id=0, k=10,
+            nlist=64, nprobe=8, max_iter=3,
+        ),
+        reps,
+    )
+    edges_path = f"/tmp/spark_graft_vec_edges_{tag}"
+    walls["edge_build"] = _reps(
+        spark, f"{tag} edge_build",
+        lambda: similarity.bucketed_cosine_pairs(
+            emb, "vec_id", "embedding", "label", threshold=0.4
+        ).select("a_id", "b_id"),
+        reps, sink=lambda df: df.write.mode("overwrite").parquet(edges_path),
+    )
+    edges = spark.read.parquet(edges_path)
+    corpus["n_edges"] = edges.count()
+    # the materialized bucketed-GEMM pairs hold each unordered pair
+    # exactly once (tile construction), so the setup distinct
+    # collapses nothing -- skip its 8+ GB exchange (r12)
+    walls["pagerank"] = _reps(
+        spark, f"{tag} pagerank",
+        lambda: pagerank(
+            edges, "a_id", "b_id", damping=0.85, iters=10,
+            symmetrize=True, assume_unique=True,
+        ),
+        reps,
+    )
+    if tag != "1000x":
+        return
+    # per-task peak is two 32k x 256 sub-blocks + one 2048 x 32768
+    # sims tile regardless of the bucket size
+    degenerate = emb.where(F.col("vec_id") < 100_000).select(
+        "vec_id", "embedding", F.lit(0).alias("label")
+    )
+    n_pairs = []
+    wall = _reps(
+        spark, f"{tag} megabucket",
+        lambda: similarity.bucketed_cosine_pairs(
+            degenerate, "vec_id", "embedding", "label", threshold=0.4
+        ),
+        1, sink=lambda df: n_pairs.append(df.count()),
+    )
+    n_deg = degenerate.count()
+    cap = similarity._MAX_CLUSTER_ROWS
+    s = -(-n_deg // cap)
+    part["megabucket"] = {
+        "bucket_rows": n_deg, "max_bucket_rows": cap,
+        "split_sub_blocks": s, "n_tiles": s * (s + 1) // 2,
+        "n_pairs": n_pairs[0], **wall,
+    }
+
+
+# decade sweep -> (one decade's measurement, decades, artifact)
+DECADE_SWEEPS = {
+    "decades": (_flagships, ("10x", "100x"), "CERT_decades.json"),
+    "thousandx": (_flagships, tuple(DECADES), "CERT_thousandx.json"),
+    "vectors": (_vectors_decade, ("10x", "100x"), "CERT_vectors.json"),
+    "vectors1000x": (_vectors_decade, tuple(DECADES), "CERT_vectors_1000x.json"),
+}
+
+
+def _run_sections(sweep, argv):
+    """Run each decade of ``sweep`` in a FRESH process and return
+    their parts by decade tag.
+
+    Why a process per decade (r11, measured): a single long-lived
     local JVM accumulates heap/GC/block-manager state, and what it
     measured last paid for it erratically — an untouched scan-agg
     canary read 68.1 s inside the accumulated session against
     24.8-34.7 s in a fresh one, and the jaccard prefix stage 187 s in
     the second section of a shared 48g process against 36.3 s fresh,
-    while the small canary stayed flat. A fresh engine per section is
+    while the small canary stayed flat. A fresh engine per decade is
     also the honest model of production: each scale runs as its own
     cluster submit.
 
-    The sweep re-execs itself once per tag with ``--section=TAG
+    The sweep re-execs itself once per decade with ``--section=TAG
     --partdir=DIR`` (a private mkdtemp dir, ADVICE r11 #4). That child
-    generates the corpora up to 1000x, runs ``measure(tag, spark, qs,
-    part)`` inside a fixed-work canary bracket (``part["canary"]``),
-    writes ``part`` to DIR and exits."""
+    generates the corpora up to the sweep's top decade, runs the
+    sweep's measurement inside a fixed-work canary bracket
+    (``part["canary"]``) with REPS_TOP reps at the top decade and
+    REPS_BELOW below it, writes ``part`` to DIR and exits."""
+    measure, tags, _ = DECADE_SWEEPS[sweep]
     opts = dict(
         a.split("=", 1) for a in argv if a.startswith("--") and "=" in a
     )
@@ -336,11 +453,12 @@ def _run_sections(sweep, argv, tags, measure):
 
         tag = opts["--section"]
         spark = _spark(f"certify_{sweep}_{tag}")
-        _ensure(spark, "1000x")
+        _ensure(spark, tags[-1])
         qs = entry.queries()
         part = {}
         with _canary_bracket(tag, spark, qs, part):
-            measure(tag, spark, qs, part)
+            measure(tag, spark, qs, part,
+                    REPS_TOP if tag == tags[-1] else REPS_BELOW)
         with open(f"{opts['--partdir']}/{tag}.part.json", "w") as f:
             json.dump(part, f)
         spark.stop()
@@ -368,591 +486,93 @@ def _run_sections(sweep, argv, tags, measure):
     return parts
 
 
-def _stage_profile(spark, build):
-    """``(frame, profile)`` of one cold call: ``build()`` runs the
-    operator and its frame is written to the noop sink, all inside
-    ``tools.stage_profile.profile_call``, so the profile holds every
-    Spark job the call started, grouped by the library's
-    ``<op>:<step>`` job tags (the sink's jobs under ``result``). The
-    steps are the operator's own: nothing of its pipeline is rebuilt
-    here, and any count is taken from the returned frame after the
-    timing."""
-    from tools.stage_profile import profile_call
-
-    spark.catalog.clearCache()
-
-    def call():
-        df = build()
-        _noop(df)
-        return df
-
-    df, prof = profile_call(spark, call)
-    for step, rec in prof["steps"].items():
-        print(f"  {step}: {rec}", flush=True)
-    print(f"  wall {prof['wall_s']} s, driver idle {prof['driver_idle_s']} s",
-          flush=True)
-    return df, prof
-
-
-def _pairs_profile(spark, qs, name, d):
-    """Stage profile of the registry pair query ``name`` (one
-    jaccard_pairs or minhash_dedup_pairs call) at ``d``, with its
-    pair count."""
-    df, prof = _stage_profile(spark, lambda: qs[name](spark, d))
-    prof["n_pairs"] = df.count()
-    return prof
-
-
-def sweep_tenx(argv):
-    import __spark_entry__ as entry
-
-    spark = _spark("certify_tenx")
-    _ensure(spark, "10x")
-    qs = entry.queries()
-    out, n_err = {}, 0
-    for name, fn in qs.items():
-        t0 = time.monotonic()
-        try:
-            n = fn(spark, DIR_10X).count()
-            out[name] = {"sec": round(time.monotonic() - t0, 3), "rows": n}
-        except Exception as e:  # record, keep sweeping
-            out[name] = {"error": f"{type(e).__name__}: {e}"[:200]}
-            n_err += 1
-        print(name, out[name])
-    _write("CERT_tenx.json", {
-        "sweep": "tenx", "dir": DIR_10X, "n_queries": len(out),
-        "n_errors": n_err, "queries": out,
-    })
-    sys.exit(1 if n_err else 0)
-
-
-def sweep_vectors(argv):
-    """Per-decade scaling of the similarity stack on the synthetic
-    clustered corpora. Knobs scale per the operator contracts:
-
-    - semdedup: k = n_rows / EMB_CLUSTER_SIZE (the paper's k ∝
-      corpus setting; within-cluster pair work then grows linearly)
-    - knn_ivf: nlist fixed at 64, nprobe 8 — assignment is one
-      linear GEMM pass and probing scans a constant nprobe/nlist
-      fraction of rows
-    - pagerank: 10 power iterations over the within-cluster cosine
-      edge set (planted `label` as the bucket — edge count grows
-      linearly because cluster SIZE is the fixed quantity)
-
-    Caches OFF (honest scan path): SPARK_GRAFT_CACHE_TABLES unset.
-    """
-    os.environ["SPARK_GRAFT_CACHE_TABLES"] = "0"
-    from pyspark.sql import functions as F
-
-    from dataframe_spark.operators import similarity
-    from dataframe_spark.operators.graph import pagerank
-    from tools.scale_data import EMB_CLUSTER_SIZE
-
-    spark = _spark("certify_vectors")
-    _ensure(spark, "100x")
-    decades = {"10x": DIR_10X, "100x": DIR_100X}
-    out = {}
-    for tag, d in decades.items():
-        emb = spark.read.parquet(f"{d}/embeddings.parquet")
-        n = emb.count()
-        k = max(8, n // EMB_CLUSTER_SIZE)
-        row = {"rows": n, "dim": 256, "semdedup_k": k}
-
-        row["semdedup_sec"] = _time_best(
-            lambda: similarity.semdedup(
-                emb, "vec_id", "embedding", k=k, tau=0.4, max_iter=3
-            )
-        )
-        row["knn_ivf_sec"] = _time_best(
-            lambda: similarity.knn_ivf(
-                emb, "vec_id", "embedding", query_id=0, k=10,
-                nlist=64, nprobe=8, max_iter=3,
-            )
-        )
-
-        def build_pr():
-            a = emb.select(
-                F.col("vec_id").alias("a_id"), F.col("label"),
-                F.col("embedding").alias("__ea"),
-            )
-            b = emb.select(
-                F.col("vec_id").alias("b_id"), F.col("label"),
-                F.col("embedding").alias("__eb"),
-            )
-            edges = (
-                a.join(b, "label")
-                .where(F.col("a_id") < F.col("b_id"))
-                .where(
-                    similarity.cosine(F.col("__ea"), F.col("__eb")) >= 0.4
-                )
-                .select("a_id", "b_id")
-            )
-            # cosine_pairs pairs are unique by construction, so the
-            # setup distinct is a no-op -- skip it (r12)
-            return pagerank(
-                edges, "a_id", "b_id", damping=0.85, iters=10,
-                symmetrize=True, assume_unique=True,
-            )
-
-        row["pagerank_sec"] = _time_best(build_pr, reps=2)
-        out[tag] = row
-        print(tag, row)
-    factors = {
-        op: round(out["100x"][f"{op}_sec"] / max(out["10x"][f"{op}_sec"], 1e-9), 2)
-        for op in ("semdedup", "knn_ivf", "pagerank")
-    }
-    print("per-decade factors (10 = linear):", factors)
-    _write("CERT_vectors.json", {
-        "sweep": "vectors", "decades": out,
-        "per_decade_factors": factors,
-        "note": "factor 10 = linear in rows; semdedup k scales with "
-                "corpus per the paper, IVF nlist fixed (constant probe "
-                "fraction), pagerank edges grow linearly (fixed cluster "
-                "size)",
-    })
-
-
-def sweep_decades(argv):
-    import __spark_entry__ as entry
-
-    os.environ["SPARK_GRAFT_CACHE_TABLES"] = "0"
-    spark = _spark("certify_decades")
-    _ensure(spark, "100x")
-    qs = entry.queries()
-    out = {}
-    from dataframe_spark.queries import ml_q
-
-    for tag, d in (("10x", DIR_10X), ("100x", DIR_100X)):
-        for name in FLAGSHIPS:
-            def build(name=name, d=d):
-                if name == "q_synthesis":
-                    # the search result is memoized per (app, sf_dir);
-                    # certification must time the SEARCH, not the cache
-                    ml_q._BEAM_CACHE.clear()
-                return qs[name](spark, d)
-
-            t = _time_best(build, reps=2, spark=spark)
-            out.setdefault(name, {})[tag] = t
-            print(tag, name, t)
-    factors = {
-        n: round(v["100x"] / max(v["10x"], 1e-9), 2) for n, v in out.items()
-    }
-    print("per-decade factors (10 = linear):", factors)
-    _write("CERT_decades.json", {
-        "sweep": "decades", "flagships": out, "per_decade_factors": factors,
-    })
-
-
-def sweep_thousandx(argv):
-    """Three-decade scaling evidence (docstring above), one fresh
-    process per decade (``_run_sections``). The 1000x corpus
-    materializes ~18 GB of parquet; the JVM gets a larger heap than
-    the 8g default so shuffle-heavy stages at 600 M rows spill to
-    disk instead of dying — on a real cluster the aggregate executor
-    memory at this scale dwarfs the input.
-
-    Noise regime (r12, VERDICT r11 ask #1): stray-JVM guard before
-    anything runs; each decade process measures a FIXED-WORK canary
-    (q_stats_agg on the 10x corpus) before and after its flagship
-    walls, and the merged artifact carries canary-normalized factors
-    (raw_factor / canary_ratio) next to the raw ones; reps are
-    best-of-3 at the top decade (best-of-SPARK_GRAFT_CERT_REPS,
-    default 2, below), with every rep wall and the max/min spread
-    committed. The 1000x process also records the jaccard and minhash
-    stage profiles (``_pairs_profile``)."""
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-    os.environ["SPARK_GRAFT_CACHE_TABLES"] = "0"
-    reps = int(os.environ.get("SPARK_GRAFT_CERT_REPS", "2"))
-
-    def measure(tag, spark, qs, part):
-        # BPE fits are memoized per sf_dir; certification times the fit
-        from dataframe_spark.queries import text_q
-
-        walls = part["walls"] = {}
-        for name in TX_FLAGSHIPS:
-            def build(name=name):
-                if name == "q_bpe":
-                    text_q._BPE_CACHE.clear()
-                return qs[name](spark, DECADES[tag])
-
-            walls[name] = _rep_stats(_time_reps(
-                build, reps=max(reps, 3) if tag == "1000x" else reps,
-                spark=spark,
-            ))
-            print(tag, name, walls[name], flush=True)
-        if tag == "1000x":
-            part["stage_profile"] = {
-                f"{name}@1000x": _pairs_profile(spark, qs, name, DIR_1000X)
-                for name in ("q_dedup_ngram_jaccard", "q_dedup_minhash")
-            }
-
-    parts = _run_sections("thousandx", argv, DECADES, measure)
-    out, stage_profile, canary = {}, {}, {}
-    for tag, part in parts.items():
-        for name, w in part["walls"].items():
-            out.setdefault(name, {})[tag] = w
-        stage_profile.update(part.get("stage_profile", {}))
-        canary[tag] = part["canary"]
+def _merge(sweep, parts):
+    """The artifact of decade sweep ``sweep`` from its ``parts`` (tag
+    -> what that decade's process wrote): every measurement's rep
+    stats by decade (``walls``), its raw and canary-normalized
+    per-decade factors, the canary brackets with their ratios and
+    spreads, the burst-suspect flag, and any ``corpus`` and
+    ``megabucket`` records by decade. Pure: no Spark, no I/O."""
+    _, tags, _ = DECADE_SWEEPS[sweep]
+    steps = [(f"{hi}_over_{lo}", lo, hi) for lo, hi in zip(tags, tags[1:])]
+    canary = {t: parts[t]["canary"] for t in tags}
     # canary ratio between two decade PROCESSES = how much slower
     # the box ran while the bigger decade measured (the canary's
     # work is identical in every process); dividing it out of the
     # raw factor removes box drift, not plan cost
-    c_ratio = _canary_ratios(canary)
-    factors = {n: _decade_factors(v, c_ratio) for n, v in out.items()}
-    print("per-decade factors (10 = linear):", factors)
-    print("canary:", canary, "ratios:", c_ratio)
-    _write("CERT_thousandx.json", {
-        "sweep": "thousandx", "flagships": out,
-        "per_decade_factors": factors,
+    c_ratio = {
+        pair: canary[hi]["mean_sec"] / max(canary[lo]["mean_sec"], 1e-9)
+        for pair, lo, hi in steps
+    }
+    # compare the QUIET FLOOR before vs after each decade (min of
+    # each bracket): the first pre rep in a fresh process pays
+    # one-off JVM/codegen warmup (9-20 s vs the ~2 s steady canary in
+    # every r12/r13 artifact), so a max-over-all-reps spread would
+    # flag warmup as a burst
+    spread = {}
+    for t, c in canary.items():
+        lo, hi = sorted((min(c["pre"]), min(c["post"])))
+        spread[t] = round(hi / max(lo, 1e-9), 2)
+    walls = {}
+    for t in tags:
+        for name, w in parts[t]["walls"].items():
+            walls.setdefault(name, {})[t] = w
+    factors = {}
+    for name, w in walls.items():
+        raw = {
+            pair: round(w[hi]["sec"] / max(w[lo]["sec"], 1e-9), 2)
+            for pair, lo, hi in steps
+        }
+        factors[name] = {**raw, "canary_normalized": {
+            pair: round(raw[pair] / c_ratio[pair], 2) for pair in raw
+        }}
+    merged = {
+        "sweep": sweep, "walls": walls, "per_decade_factors": factors,
         "canary": canary,
         "canary_ratio": {k: round(v, 3) for k, v in c_ratio.items()},
-        "stage_profile": stage_profile,
-        "reps": reps,
-        "reps_top_decade": 3,
+        "canary_spread": spread,
+        "burst_suspect": any(v > 2.0 for v in spread.values()),
+        "reps": REPS_BELOW, "reps_top_decade": REPS_TOP,
         "process_per_decade": True,
         "note": "factor 10 = linear in rows per decade; "
                 "canary_normalized divides out the fixed-work "
                 "canary's drift between decade processes "
-                "(q_stats_agg on the 10x corpus, measured before "
-                "and after each decade's flagships); every rep "
-                "wall is committed with its max/min spread; "
-                "stage_profile holds the Spark jobs of one cold "
-                "call per query, grouped by the library's "
-                "op:step job tags",
-    })
-
-
-def _canary_ratios(canary):
-    """Canary mean ratio of each decade process over the one below."""
-    return {
-        pair: canary[hi]["mean_sec"] / max(canary[lo]["mean_sec"], 1e-9)
-        for pair, lo, hi in (
-            ("100x_over_10x", "10x", "100x"),
-            ("1000x_over_100x", "100x", "1000x"),
-        )
+                "(q_stats_agg on the 10x corpus, two reps before "
+                "and two after each decade's measurements); "
+                "canary_spread is each process's after/before "
+                "quiet-floor ratio, burst_suspect any spread over "
+                "2; every rep's wall and stage profile (its Spark "
+                "jobs grouped by the library's op:step job tags) "
+                "is committed",
     }
+    for key in ("corpus", "megabucket"):
+        got = {t: parts[t][key] for t in tags if key in parts[t]}
+        if got:
+            merged[key] = got
+    return merged
 
 
-def _decade_factors(walls, c_ratio):
-    """Raw and canary-normalized per-decade wall factors of one
-    measurement (``walls`` maps decade tag -> ``_rep_stats``)."""
-    raw = {
-        pair: round(walls[hi]["sec"] / max(walls[lo]["sec"], 1e-9), 2)
-        for pair, lo, hi in (
-            ("100x_over_10x", "10x", "100x"),
-            ("1000x_over_100x", "100x", "1000x"),
-        )
-    }
-    raw["canary_normalized"] = {
-        pair: round(raw[pair] / c_ratio[pair], 2) for pair in c_ratio
-    }
-    return raw
-
-
-def sweep_dedup_stages(argv):
-    """Focused top-decade dedup evidence (r12), cheap to re-run after
-    a plan change without paying the full three-decade thousandx
-    sweep: the 1000x jaccard and minhash stage profiles
-    (``_pairs_profile``), a minhash e2e best-of-2 at 1000x and jaccard
-    e2e walls at 100x (best-of-2) and 1000x (best-of-3), whose merge
-    computes the jaccard top-decade factor, raw and
-    canary-normalized. Every section runs in its own fresh process
-    with its own canary bracket (``_run_sections``).
-    -> CERT_dedup_stages_r13.json"""
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
+def sweep_decade(sweep, argv):
+    """Run decade sweep ``sweep`` (module docstring) and write its
+    merged artifact. With 1000x in the sweep the JVM gets a larger
+    heap than the 8g default, so shuffle-heavy stages at 600 M rows
+    spill to disk instead of dying — on a real cluster the aggregate
+    executor memory at this scale dwarfs the input."""
+    _, tags, path = DECADE_SWEEPS[sweep]
+    if tags[-1] == "1000x":
+        os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
     os.environ["SPARK_GRAFT_CACHE_TABLES"] = "0"
-    e2e = {  # section -> (query, corpus, reps)
-        "minhash_e2e_1000x": ("q_dedup_minhash", DIR_1000X, 2),
-        "jaccard_e2e_100x": ("q_dedup_ngram_jaccard", DIR_100X, 2),
-        "jaccard_e2e_1000x": ("q_dedup_ngram_jaccard", DIR_1000X, 3),
-    }
-    profiles = {
-        "minhash_profile": "q_dedup_minhash",
-        "jaccard_profile": "q_dedup_ngram_jaccard",
-    }
-
-    def measure(tag, spark, qs, part):
-        if tag in profiles:
-            name = profiles[tag]
-            print(f"{name} stage profile at 1000x:", flush=True)
-            part["stage_profile"] = {
-                f"{name}@1000x": _pairs_profile(spark, qs, name, DIR_1000X)
-            }
-            return
-        name, d, reps = e2e[tag]
-        part[tag] = _rep_stats(
-            _time_reps(lambda: qs[name](spark, d), reps=reps, spark=spark)
-        )
-        print(tag, part[tag], flush=True)
-
-    parts = _run_sections("dedup_stages", argv, [*profiles, *e2e], measure)
-    merged = {"sweep": "dedup_stages", "dir": DIR_1000X,
-              "stage_profile": {}, "canary": {}}
-    for tag, part in parts.items():
-        merged["stage_profile"].update(part.get("stage_profile", {}))
-        if tag in e2e:
-            merged[tag] = part[tag]
-        merged["canary"][tag] = part["canary"]
-    raw = (merged["jaccard_e2e_1000x"]["sec"]
-           / max(merged["jaccard_e2e_100x"]["sec"], 1e-9))
-    c_ratio = (merged["canary"]["jaccard_e2e_1000x"]["mean_sec"]
-               / max(merged["canary"]["jaccard_e2e_100x"]["mean_sec"], 1e-9))
-    merged["jaccard_factor_1000x_over_100x"] = {
-        "raw": round(raw, 2),
-        "canary_normalized": round(raw / c_ratio, 2),
-        "canary_ratio": round(c_ratio, 3),
-    }
-    print("jaccard top-decade factor:",
-          merged["jaccard_factor_1000x_over_100x"])
-    merged["note"] = (
-        "fresh process per section; each stage_profile holds the Spark "
-        "jobs of one cold call, grouped by the library's op:step job "
-        "tags"
-    )
-    _write("CERT_dedup_stages_r13.json", merged)
-
-
-def _vectors_decade(tag, spark, part, reps=2):
-    """One decade of the vectors1000x measurement into ``part``:
-    semdedup, knn_ivf, the bucketed cosine edge build and pagerank
-    over the built edges (sweep_vectors1000x's docstring), plus the
-    megabucket stanza at 1000x."""
-    from pyspark.sql import functions as F
-
-    from dataframe_spark.operators import similarity
-    from dataframe_spark.operators.graph import pagerank
-    from tools.scale_data import EMB_CLUSTER_SIZE
-
-    emb = spark.read.parquet(f"{DECADES[tag]}/embeddings.parquet")
-    n = emb.count()
-    k = max(8, n // EMB_CLUSTER_SIZE)
-    row = {"rows": n, "dim": 256, "semdedup_k": k}
-
-    row["semdedup"] = _rep_stats(_time_reps(
-        lambda: similarity.semdedup(
-            emb, "vec_id", "embedding", k=k, tau=0.4, max_iter=3
-        ),
-        reps=reps, spark=spark,
-    ))
-    print(tag, "semdedup", row["semdedup"], flush=True)
-    row["knn_ivf"] = _rep_stats(_time_reps(
-        lambda: similarity.knn_ivf(
-            emb, "vec_id", "embedding", query_id=0, k=10,
-            nlist=64, nprobe=8, max_iter=3,
-        ),
-        reps=reps, spark=spark,
-    ))
-    print(tag, "knn_ivf", row["knn_ivf"], flush=True)
-
-    edges_path = f"/tmp/spark_graft_vec_edges_{tag}"
-    eb_walls = []
-    for _ in range(reps):
-        spark.catalog.clearCache()
-        t0 = time.monotonic()
-        similarity.bucketed_cosine_pairs(
-            emb, "vec_id", "embedding", "label", threshold=0.4
-        ).select("a_id", "b_id").write.mode("overwrite").parquet(edges_path)
-        eb_walls.append(round(time.monotonic() - t0, 3))
-    row["edge_build"] = _rep_stats(eb_walls)
-    edges = spark.read.parquet(edges_path)
-    row["n_edges"] = edges.count()
-    print(tag, "edge_build", row["edge_build"], "edges", row["n_edges"],
-          flush=True)
-
-    # the materialized bucketed-GEMM pairs hold each unordered pair
-    # exactly once (tile construction), so the setup distinct
-    # collapses nothing -- skip its 8+ GB exchange (r12)
-    profiles = [
-        _stage_profile(spark, lambda: pagerank(
-            edges, "a_id", "b_id", damping=0.85, iters=10,
-            symmetrize=True, assume_unique=True,
-        ))[1]
-        for _ in range(reps)
-    ]
-    row["pagerank"] = _rep_stats([p["wall_s"] for p in profiles])
-    row["pagerank"]["profiles"] = profiles
-    print(tag, "pagerank", row["pagerank"]["reps"], flush=True)
-    part["row"] = row
-    if tag != "1000x":
-        return
-    # MEGABUCKET: ~100k of the 2 M vectors forced into one bucket —
-    # ceil(100k/32768) = 4 sub-blocks, 10 tile tasks; per-task peak
-    # is two 32k x 256 sub-blocks + one 2048 x 32768 sims tile
-    # regardless of the bucket size
-    mb_rows = 100_000
-    degenerate = emb.where(F.col("vec_id") < mb_rows).select(
-        "vec_id", "embedding", F.lit(0).alias("label")
-    )
-    spark.catalog.clearCache()
-    t0 = time.monotonic()
-    mb_pairs = similarity.bucketed_cosine_pairs(
-        degenerate, "vec_id", "embedding", "label", threshold=0.4
-    ).count()
-    mb_wall = round(time.monotonic() - t0, 3)
-    n_deg = degenerate.count()
-    cap = similarity._MAX_CLUSTER_ROWS
-    s = -(-n_deg // cap)
-    part["megabucket"] = {
-        "bucket_rows": n_deg, "max_bucket_rows": cap,
-        "split_sub_blocks": s, "n_tiles": s * (s + 1) // 2,
-        "wall_sec": mb_wall, "n_pairs": mb_pairs,
-        "note": "split path exercised at cert scale (VERDICT "
-                "r11 ask #7); task peak = 2 sub-blocks + 1 "
-                "sims tile (rows pre-normalized in place, r12)",
-    }
-    print(tag, "megabucket", part["megabucket"], flush=True)
-
-
-def sweep_vectors_stages(argv):
-    """Focused vectors-stack evidence for r13 (VERDICT r12 asks #4
-    and #5), one FRESH PROCESS per section with fixed-work canary
-    brackets (``_run_sections``):
-
-    - semdedup_profile: the stage profile of one semdedup call at the
-      top decade (``_stage_profile``: its k-means fit, size probe and
-      per-cluster pass as Spark ran them), so the next optimization
-      target is measured, not guessed.
-    - decade_10x + decade_100x: re-run of the full vectors decade
-      measurement (``_vectors_decade``, as in sweep_vectors1000x) in a
-      quiet window — the committed CERT_vectors_1000x 100x decade
-      started inside a steal burst (canary pre [38.8, 11.0] s vs post
-      [2.2, 4.8] s), inflating knn_ivf/edge_build's normalized
-      factors to 22.18/16.26 against raw 6.48/4.75. The merge
-      recomputes 100x/10x factors and FLAGS the run as burst-suspect
-      if any section's canary pre/post spread exceeds 2x.
-    -> CERT_vectors_stages_r13.json"""
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-    os.environ["SPARK_GRAFT_CACHE_TABLES"] = "0"
-
-    def measure(tag, spark, qs, part):
-        if tag.startswith("decade_"):
-            _vectors_decade(tag[len("decade_"):], spark, part)
-            return
-        from dataframe_spark.operators import similarity as sim
-        from tools.scale_data import EMB_CLUSTER_SIZE
-
-        print("semdedup stage profile at 1000x:", flush=True)
-        emb = spark.read.parquet(f"{DIR_1000X}/embeddings.parquet")
-        n = emb.count()
-        k = max(8, n // EMB_CLUSTER_SIZE)
-        prof = _stage_profile(spark, lambda: sim.semdedup(
-            emb, "vec_id", "embedding", k=k, tau=0.4, max_iter=3, seed=42
-        ))[1]
-        part["stage_profile"] = {"semdedup@1000x": {"rows": n, "k": k, **prof}}
-
-    parts = _run_sections(
-        "vectors_stages", argv,
-        ("semdedup_profile", "decade_10x", "decade_100x"), measure,
-    )
-    c = {tag: part["canary"] for tag, part in parts.items()}
-    rows = {tag: parts[f"decade_{tag}"]["row"] for tag in ("10x", "100x")}
-    merged = {
-        "sweep": "vectors_stages", "canary": c, "decades": rows,
-        "stage_profile": parts["semdedup_profile"]["stage_profile"],
-    }
-    # compare the QUIET FLOOR before vs after each section (min
-    # of each bracket): the first pre rep in a fresh process
-    # pays one-off JVM/codegen warmup (9-20 s vs the ~2 s steady
-    # canary in every r12/r13 artifact), so a max-over-all-reps
-    # spread would flag warmup as a burst
-    spreads = {
-        s: round(max(min(v["pre"]), min(v["post"]))
-                 / max(min(min(v["pre"]), min(v["post"])), 1e-9), 2)
-        for s, v in c.items()
-    }
-    merged["canary_spread"] = spreads
-    merged["burst_suspect"] = any(v > 2.0 for v in spreads.values())
-    c_ratio = (c["decade_100x"]["mean_sec"]
-               / max(c["decade_10x"]["mean_sec"], 1e-9))
-    factors = {}
-    for op in ("semdedup", "knn_ivf", "edge_build", "pagerank"):
-        raw = round(rows["100x"][op]["sec"]
-                    / max(rows["10x"][op]["sec"], 1e-9), 2)
-        factors[op] = {
-            "100x_over_10x_raw": raw,
-            "100x_over_10x_canary_normalized": round(raw / c_ratio, 2),
-        }
-    merged["per_decade_factors_100x"] = factors
-    merged["canary_ratio_100x_over_10x"] = round(c_ratio, 3)
-    print("factors:", factors)
-    print("canary spreads:", spreads,
-          "burst_suspect:", merged["burst_suspect"])
-    _write("CERT_vectors_stages_r13.json", merged)
-
-
-def sweep_vectors1000x(argv):
-    """THREE-decade similarity/graph evidence (VERDICT r9 ask #5):
-    semdedup / knn_ivf / pagerank at 10x, 100x AND 1000x (2 M x 256
-    vectors at the top), knobs scaled exactly like sweep_vectors
-    (semdedup k ∝ corpus, IVF nlist fixed, cluster size fixed so
-    edges grow linearly). Differences from the 2-decade sweep:
-
-    - pagerank is PHASE-SPLIT: the cosine edge build (the r10
-      bucketed-GEMM operator over the planted label buckets,
-      materialized to parquet) is timed separately from the 10
-      power iterations over the materialized edge set, so a factor
-      >10 is attributable to a phase instead of a blended wall.
-
-    r12 (VERDICT r11 asks #1/#3/#7): the sweep joins the thousandx
-    noise regime — stray-JVM guard, one fresh PROCESS per decade
-    (``_run_sections``) with a fixed-work canary (q_stats_agg on the
-    10x corpus) and canary-normalized factors, best-of-2 at EVERY
-    decade (the r11 single-rep 1000x pagerank wall was the repo's
-    weakest committed number) with all rep walls committed, the stage
-    profile of every pagerank rep (its setup and each power iteration
-    are job-tagged steps), and a MEGABUCKET stanza at the top decade:
-    100k rows forced into ONE bucket (~3x _MAX_CLUSTER_ROWS) so the
-    bucketed-GEMM sub-block split path runs at certification scale
-    instead of only in its toy-sized unit test.
-    -> CERT_vectors_1000x.json
-    """
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-    os.environ["SPARK_GRAFT_CACHE_TABLES"] = "0"
-
-    def measure(tag, spark, qs, part):
-        _vectors_decade(tag, spark, part)
-
-    parts = _run_sections("vectors1000x", argv, DECADES, measure)
-    out = {tag: part["row"] for tag, part in parts.items()}
-    canary = {tag: part["canary"] for tag, part in parts.items()}
-    c_ratio = _canary_ratios(canary)
-    factors = {
-        op: _decade_factors({t: r[op] for t, r in out.items()}, c_ratio)
-        for op in ("semdedup", "knn_ivf", "edge_build", "pagerank")
-    }
-    print("per-decade factors (10 = linear):", factors)
-    print("canary:", canary, "ratios:", c_ratio)
-    _write("CERT_vectors_1000x.json", {
-        "sweep": "vectors1000x", "decades": out,
-        "per_decade_factors": factors,
-        "canary": canary,
-        "canary_ratio": {k: round(v, 3) for k, v in c_ratio.items()},
-        "megabucket": parts["1000x"].get("megabucket"),
-        "process_per_decade": True,
-        "note": "factor 10 = linear in rows; canary_normalized "
-                "divides out the fixed-work canary's drift "
-                "between decade processes; pagerank phase-split: "
-                "edge_build = bucketed GEMM cosine pairs to "
-                "parquet, pagerank = 10 power iterations over "
-                "the materialized edges (edge count grows "
-                "linearly, fixed cluster size) with the stage "
-                "profile of every rep; megabucket = the "
-                "oversized-bucket sub-block split path exercised "
-                "at 100k rows in one bucket",
-    })
+    merged = _merge(sweep, _run_sections(sweep, argv))
+    print("per-decade factors (10 = linear):", merged["per_decade_factors"])
+    print("canary ratios:", merged["canary_ratio"], "spreads:",
+          merged["canary_spread"], "burst_suspect:", merged["burst_suspect"])
+    _write(path, merged)
 
 
 def main():
-    sweeps = {
-        "parity": sweep_parity,
-        "tenx": sweep_tenx,
-        "vectors": sweep_vectors,
-        "vectors1000x": sweep_vectors1000x,
-        "decades": sweep_decades,
-        "thousandx": sweep_thousandx,
-        "dedup_stages": sweep_dedup_stages,
-        "vectors_stages": sweep_vectors_stages,
-    }
+    sweeps = {"parity": sweep_parity, "tenx": sweep_tenx}
+    for name in DECADE_SWEEPS:
+        sweeps[name] = lambda argv, name=name: sweep_decade(name, argv)
     if len(sys.argv) < 2 or sys.argv[1] not in sweeps:
         print(__doc__)
         sys.exit(2)
