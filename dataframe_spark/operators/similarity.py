@@ -61,8 +61,10 @@ COSINE_BROADCAST_MAX_BYTES = 64 * 1024 * 1024
 # bucketed_cosine_pairs splits buckets above _MAX_CLUSTER_ROWS into
 # sub-block tiles and runs each GEMM _BLOCK_ROWS rows high, so a task
 # holds two sub-blocks plus one _BLOCK_ROWS x _MAX_CLUSTER_ROWS sims
-# tile. semdedup's fused pass holds one whole cluster per task and
-# sends larger clusters the distributed route, with the same tiles.
+# tile. semdedup's flat path holds one whole cluster per task and sends
+# larger clusters the distributed route, with the same tiles; its
+# two-level path holds one whole coarse cluster per task, with no probe
+# (semdedup docstring: its measured size).
 _MAX_CLUSTER_ROWS = 32768
 _BLOCK_ROWS = 2048
 # GEMM on unit rows and the expressions' sequential dot / (na·nb)
@@ -480,31 +482,20 @@ def _unit_rows(M):
     return M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
 
 
-def _assign(V, C_unit, S_unit=None):
+def _assign(V, C_unit):
     """Nearest-centroid ids of float64 rows ``V``: the argmax of each
     unit row against the unit codebook ``C_unit`` (first index on
-    ties, so a zero row or one with a NaN element takes centroid 0).
-    With the (k1, k2, dim) sub-codebooks ``S_unit`` the id is
-    coarse·k2 + the argmax against that coarse cluster's block:
-    n·(k1 + k2)·d work instead of n·k·d."""
-    U = _unit_rows(V)
-    cid = np.argmax(U @ C_unit.T, axis=1)
-    if S_unit is None:
-        return cid
-    sub = np.zeros_like(cid)
-    for c in np.unique(cid):
-        m = cid == c
-        sub[m] = np.argmax(U[m] @ S_unit[c].T, axis=1)
-    return cid * S_unit.shape[1] + sub
+    ties, so a zero row or one with a NaN element takes centroid 0)."""
+    return np.argmax(_unit_rows(V) @ C_unit.T, axis=1)
 
 
-def _assign_udf(C_unit, S_unit=None):
+def _assign_udf(C_unit):
     """The one assignment column every k-means/IVF path shares:
     :func:`_assign` per Arrow batch against a broadcast codebook."""
 
     @F.arrow_udf("int")
     def assign(vecs: pa.Array) -> pa.Array:
-        return pa.array(_assign(_read_matrix(vecs)[0], C_unit, S_unit), pa.int32())
+        return pa.array(_assign(_read_matrix(vecs)[0], C_unit), pa.int32())
 
     return assign
 
@@ -564,7 +555,7 @@ def kmeans_fit(
     the iterations run as the job-tagged steps ``kmeans_fit:init`` and
     ``kmeans_fit:iter<i>`` (``plans.trace``).
 
-    Contract (shared with :func:`kmeans_fit_hierarchical`): the fit is
+    Contract (shared with semdedup's two-level sub-fit): the fit is
     deterministic for a fixed partitioning; NULL elements are skipped
     position by position (a position NULL in every row of a cluster
     becomes NaN, as Spark's ``avg`` gives NULL); a cluster with no
@@ -599,66 +590,6 @@ def kmeans_fit(
         # added up as Spark merges avg partials: 0.0 + p1 + p2 + ...
         _lloyd_update(C, np.add.reduce(np.vstack([np.zeros((1, k, 2 * d + 1)), parts])))
     return C
-
-
-HIER_KMEANS_MIN_K = 64
-
-
-def kmeans_fit_hierarchical(
-    df: SparkDF,
-    id_col: str,
-    vec_col: str,
-    k: int = 256,
-    max_iter: int = 3,
-    seed: int = 42,
-):
-    """Two-level Lloyd k-means for LARGE k: fit k1 = ceil(sqrt(k))
-    coarse centroids with the flat fitter, assign once, then fit
-    k2 = ceil(k/k1) sub-centroids INSIDE each coarse cluster in one
-    grouped Arrow pass (:func:`_lloyd_step` on the group). Returns
-    ``(C1_unit, S_unit)`` where C1_unit is (k1, dim) and S_unit is
-    (k1, k2, dim); a row's cluster id is ``coarse * k2 + sub``
-    (:func:`_assign` with both codebooks).
-
-    Why: flat Lloyd assignment is n·k·d work per pass, and SemDeDup
-    sets k ∝ n, so the flat fit is O(n²·d); two levels cut fit AND
-    assignment to n·2·sqrt(k)·d = O(n^1.5·d).
-
-    Contract: :func:`kmeans_fit`'s. Each sub-fit sorts its group by a
-    Spark-computed xxhash64(id, seed), then id, seeds from the first
-    k2 rows and runs a fixed iteration count, so it does not depend
-    on the order rows arrive in. Short groups fit fewer
-    sub-centroids and PAD the codebook by repeating their first row —
-    a padded duplicate can never win an argmax tie against its
-    earlier original, so padded ids are unreachable. Empty coarse
-    clusters keep zero sub-codebooks: no row is assigned to them."""
-    k1 = max(2, math.isqrt(max(1, k - 1)) + 1)  # ceil(sqrt(k))
-    k2 = max(1, -(-k // k1))  # ceil(k / k1)
-    C1u = _unit_rows(kmeans_fit(df, id_col, vec_col, k=k1, max_iter=max_iter, seed=seed))
-    dim = C1u.shape[1]
-    vecs = (
-        df.where(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("id"), _dvec(vec_col).alias("vec"))
-        .withColumn("__h", F.xxhash64(F.col("id"), F.lit(seed)))
-        .withColumn("__coarse", _assign_udf(C1u)(F.col("vec")))
-    )
-
-    def fit_group(table):
-        t = table.sort_by([("__h", "ascending"), ("id", "ascending")])
-        V, valid = _read_matrix(t["vec"])
-        C = V[:k2].copy()
-        for _ in range(max_iter):
-            _lloyd_update(C, _lloyd_step(V, valid, _unit_rows(C)))
-        C = C[np.where(np.arange(k2) < len(C), np.arange(k2), 0)]  # the pad
-        return pa.table({"coarse": t["__coarse"][:1], "subs": pa.array([C.ravel()])})
-
-    fits = vecs.groupBy("__coarse").applyInArrow(fit_group, "coarse int, subs array<double>")
-    with stage("kmeans_fit_hierarchical", "subfit"):
-        fits = fits.toArrow()
-    S = np.zeros((k1, k2, dim))
-    S[fits["coarse"].to_numpy()] = np.asarray(pc.list_flatten(fits["subs"])).reshape(-1, k2, dim)
-    Su = S / np.maximum(np.linalg.norm(S, axis=2, keepdims=True), 1e-12)
-    return C1u, Su
 
 
 def knn_ivf(
@@ -868,6 +799,36 @@ def _fused_keep(tau):
     return run
 
 
+def _two_level_keep(k2, max_iter, tau):
+    """Grouped Arrow kernel of semdedup's two-level path: one coarse
+    cluster's (id, __v, __h, __coarse) rows in, (id, cluster, keep)
+    out. It fits k2 sub-centroids on the group (the group sorted by
+    ``__h`` = xxhash64(id, seed), then id, seeded from its first k2
+    rows, ``max_iter`` :func:`_lloyd_step` iterations, so the fit does
+    not depend on the order rows arrive in), gives each row its sub id
+    (:func:`_assign`; a row's cluster is coarse·k2 + sub), then runs
+    :func:`_fused_keep`'s kernel on each fine cluster. A group shorter
+    than k2 fits fewer sub-centroids and pads the codebook with copies
+    of its first row, which never win an argmax tie against the
+    original, so padded ids are unreachable."""
+    keep = _fused_keep(tau)
+
+    def run(table):
+        t = table.sort_by([("__h", "ascending"), ("id", "ascending")])
+        V, valid = _read_matrix(t["__v"])
+        C = V[:k2].copy()
+        for _ in range(max_iter):
+            _lloyd_update(C, _lloyd_step(V, valid, _unit_rows(C)))
+        C = C[np.where(np.arange(k2) < len(C), np.arange(k2), 0)]  # the pad
+        cid = t["__coarse"][0].as_py() * k2 + _assign(V, _unit_rows(C))
+        t = pa.table({"id": t["id"], "__v": t["__v"], "__cid": pa.array(cid, pa.int32())})
+        return pa.concat_tables(
+            [keep(t.filter(pa.array(cid == c))) for c in np.unique(cid)]
+        )
+
+    return run
+
+
 def _oversized_keep(rows: SparkDF, tau: float) -> SparkDF:
     """The distributed route for clusters one task cannot hold: the
     raw links at tau of bucketed_cosine_pairs' sub-block tiles (the
@@ -906,6 +867,10 @@ def _oversized_keep(rows: SparkDF, tau: float) -> SparkDF:
     )
 
 
+# semdedup fits a two-level codebook above this k
+HIER_KMEANS_MIN_K = 64
+
+
 def semdedup(
     df: SparkDF,
     id_col: str,
@@ -940,47 +905,59 @@ def semdedup(
     cluster act as one node.
 
     The 100 TB shape: every duplicate group lies inside one cluster,
-    so after the cluster assignment each cluster is ONE grouped Arrow
-    task that links its pairs with the module's GEMM tile kernel (every
-    pair within 1e-9 of ``tau`` re-decided with the expressions'
-    sequential arithmetic; the GEMM/sequential gap is ~d·2^-52, so
-    nothing else can flip) and joins components by vectorized label
+    so after the cluster assignment each cluster is linked inside ONE
+    grouped Arrow task with the module's GEMM tile kernel (every pair
+    within 1e-9 of ``tau`` re-decided with the expressions' sequential
+    arithmetic; the GEMM/sequential gap is ~d·2^-52, so nothing else
+    can flip), and components are joined by vectorized label
     propagation. Pair work is the sum of squared CLUSTER sizes —
     bounded by choosing ``k`` proportional to corpus size (the paper's
     setting: 50k clusters for LAION-440M) — never corpus all-pairs.
-    Clusters above
-    32,768 rows, which one task cannot hold, are found by a k-row size
-    probe and take a distributed route (bucketed_cosine_pairs'
-    sub-block tiles through the same kernel, connected_components)
-    with identical output.
 
-    The model is k x dim driver floats (the IVF codebook's footprint)
-    fitted by :func:`kmeans_fit`, or for k > 64 the two-level
-    :func:`kmeans_fit_hierarchical`, under their contract; a row with a
-    NULL element or a zero vector is assigned cluster 0."""
+    The model is k x dim driver floats (the IVF codebook's footprint).
+    For k <= HIER_KMEANS_MIN_K, or given ``centroids``, it is
+    :func:`kmeans_fit`'s flat codebook: rows are assigned, a k-row size
+    probe (the step ``semdedup:sizes``) finds the clusters above
+    32,768 rows, which one task cannot hold, and those take a
+    distributed route (bucketed_cosine_pairs' sub-block tiles through
+    the same kernel, connected_components) with identical output.
+    For larger k (k ∝ corpus makes a flat fit and assignment
+    O(n²·d)), the fit is two-level: k1 = ceil(sqrt(k)) coarse centroids
+    from :func:`kmeans_fit`, then ONE lazy grouped pass per coarse
+    cluster (:func:`_two_level_keep`) fits k2 = ceil(k / k1)
+    sub-centroids inside it, assigns its rows and links each fine
+    cluster in the same task — O(n^1.5·d) fit and assignment, and no
+    eager step after the coarse fit. A task there holds one whole
+    coarse cluster, whatever its fine clusters' sizes: on the 256-d
+    cert corpora the largest coarse cluster is 2,820 rows at 10x
+    (20,000 rows, k1 = 9) and 8,151 at 100x (200,000 rows, k1 = 28),
+    the largest fine one 769 and 726. Both fits follow
+    :func:`kmeans_fit`'s contract; a row with a NULL element or a zero
+    vector is assigned cluster 0."""
     from ..plans.cache import try_persist
 
-    if centroids is None and k > HIER_KMEANS_MIN_K:
-        # k ∝ corpus (the paper's setting) makes the flat fit and
-        # assignment O(n²·d); the two-level codebook is O(n^1.5·d)
-        assign = _assign_udf(
-            *kmeans_fit_hierarchical(
-                df, id_col, vec_col, k=k, max_iter=max_iter, seed=seed
-            )
+    two_level = centroids is None and k > HIER_KMEANS_MIN_K
+    if two_level:
+        k1 = max(2, math.isqrt(max(1, k - 1)) + 1)  # ceil(sqrt(k))
+        k2 = max(1, -(-k // k1))  # ceil(k / k1)
+        centroids = kmeans_fit(df, id_col, vec_col, k=k1, max_iter=max_iter, seed=seed)
+    elif centroids is None:
+        centroids = kmeans_fit(df, id_col, vec_col, k=k, max_iter=max_iter, seed=seed)
+    vecs = df.where(F.col(vec_col).isNotNull()).select(
+        F.col(id_col).alias("id"), _dvec(vec_col).alias("__v")
+    )
+    assign = _assign_udf(_unit_rows(centroids))(F.col("__v"))
+    schema = f"id {vecs.schema['id'].dataType.simpleString()}, cluster int, keep boolean"
+    if two_level:
+        return (
+            vecs.withColumn("__h", F.xxhash64(F.col("id"), F.lit(seed)))
+            .withColumn("__coarse", assign)
+            .groupBy("__coarse")
+            .applyInArrow(_two_level_keep(k2, max_iter, tau), schema)
         )
-    else:
-        if centroids is None:
-            centroids = kmeans_fit(
-                df, id_col, vec_col, k=k, max_iter=max_iter, seed=seed
-            )
-        assign = _assign_udf(_unit_rows(centroids))
     # persisted: the size probe below is its first (filling) scan and
     # the per-cluster pass its second — the assign UDF runs once
-    sides = try_persist(
-        df.where(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("id"), _dvec(vec_col).alias("__v"))
-        .withColumn("__cid", assign(F.col("__v")))
-    )
+    sides = try_persist(vecs.withColumn("__cid", assign))
     with stage("semdedup", "sizes"):
         oversized = [
             r["__cid"]
@@ -989,7 +966,6 @@ def semdedup(
             .where(F.col("count") > _MAX_CLUSTER_ROWS)
             .collect()
         ]
-    schema = f"id {sides.schema['id'].dataType.simpleString()}, cluster int, keep boolean"
     if not oversized:
         return sides.groupBy("__cid").applyInArrow(_fused_keep(tau), schema)
     big = F.col("__cid").isin(oversized)

@@ -72,9 +72,10 @@ def test_certify_offers_the_six_sweeps():
 
 
 def test_every_rep_is_a_profiled_cold_call(profiled):
-    """Each rep clears the storage cache and the memoized fits, then
-    runs build + sink inside profile_call; the rep's wall is the
-    profile's wall and every profile is kept."""
+    """An untimed warm-up call, then each rep: every call clears the
+    storage cache and the memoized fits, then runs build + sink inside
+    profile_call; a rep's wall is its profile's wall, every timed
+    rep's profile is kept, and the warm-up's wall is kept apart."""
     from dataframe_spark.queries import ml_q, text_q
 
     spark, log = _Spark(), []
@@ -85,11 +86,12 @@ def test_every_rep_is_a_profiled_cold_call(profiled):
         return _Frame(log, "q")
 
     got = certify._reps(spark, "10x q", build, 3)
-    assert spark.clears == 3
-    assert log == [("save", "q")] * 3
-    assert got["reps"] == [1.0, 2.0, 3.0]
-    assert got["sec"] == 1.0 and got["spread"] == 3.0
-    assert [p["steps"]["result"]["jobs"] for p in got["profiles"]] == [0, 1, 2]
+    assert spark.clears == 4
+    assert log == [("save", "q")] * 4
+    assert got["warmup_s"] == 1.0
+    assert got["reps"] == [2.0, 3.0, 4.0]
+    assert got["sec"] == 2.0 and got["spread"] == 2.0
+    assert [p["steps"]["result"]["jobs"] for p in got["profiles"]] == [1, 2, 3]
 
 
 def test_registry_decade_times_every_flagship(profiled):
@@ -101,9 +103,9 @@ def test_registry_decade_times_every_flagship(profiled):
     part = {}
     certify._flagships("100x", spark, qs, part, 2)
     assert list(part["walls"]) == certify.FLAGSHIPS
-    assert log == [
+    assert log == [  # a warm-up call, then the two reps
         ("save", (name, certify.DIR_100X))
-        for name in certify.FLAGSHIPS for _ in range(2)
+        for name in certify.FLAGSHIPS for _ in range(3)
     ]
     assert all(len(w["profiles"]) == 2 for w in part["walls"].values())
 

@@ -319,41 +319,51 @@ def test_kmeans_fit_matches_posexplode_reference(spark, case, partitions):
             assert np.isnan(want[0, 2]) == (case == "null_position")
 
 
-def test_hierarchical_subfit_skips_null_elements(spark):
-    """The sub-fit kernel against the same fit run on the collected
-    rows: each coarse group sorted by (xxhash64(id, seed), id), seeded
-    from its first k2 rows, means taken position by position over
-    non-NULL elements. A row with a NULL element (coarse 0, sub 0)
-    leaves every sub-centroid finite."""
+def test_two_level_clusters_match_numpy_reference(spark):
+    """semdedup's two-level clusters (k = 200: k1 = 15 coarse, k2 = 14
+    sub) against the same math on the collected rows: the coarse
+    assignment against kmeans_fit's k1 centroids, then per coarse
+    group the rows sorted by (xxhash64(id, seed), id), k2 sub-centroids
+    seeded from the first k2 rows, means taken position by position
+    over non-NULL elements, the codebook padded with its first row,
+    and the first argmax. A row with a NULL element takes coarse 0 and
+    sub 0, and its NULL position adds nothing to its sub-centroid."""
     import numpy as np
 
     rng = np.random.RandomState(5)
-    rows = []
-    for i in range(120):
-        v = np.zeros(6)
-        v[i % 3] = 4.0
-        rows.append((i, (v + rng.rand(6) * 0.5).tolist()))
+    rows = [(i, rng.randn(6).tolist()) for i in range(120)]
     rows[7] = (7, [None] + rows[7][1][1:])
-    df = spark.createDataFrame(rows, "id long, vec array<double>")
-    C1u, Su = similarity.kmeans_fit_hierarchical(df, "id", "vec", k=9, max_iter=2)
-    assert np.isfinite(Su).all()
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out, got = _semdedup_rows(df, 0.99, k=200, max_iter=2)
+    assert got == _semdedup_reference(df, "vec_id", "embedding", out, 0.99)
 
-    got = df.select("id", "vec", F.xxhash64("id", F.lit(42)).alias("h")).collect()
-    got.sort(key=lambda r: (r["h"], r["id"]))
-    V = _np_vecs(r["vec"] for r in got)
+    k1, k2 = 15, 14
     unit = similarity._unit_rows
-    coarse = np.argmax(unit(V) @ C1u.T, axis=1)
-    k2 = Su.shape[1]
-    for c in range(len(C1u)):
+    C1 = unit(similarity.kmeans_fit(df, "vec_id", "embedding", k=k1, max_iter=2))
+    coll = df.select(
+        "vec_id", "embedding", F.xxhash64("vec_id", F.lit(42)).alias("h")
+    ).collect()
+    coll.sort(key=lambda r: (r["h"], r["vec_id"]))
+    ids = np.array([r["vec_id"] for r in coll])
+    V = _np_vecs(r["embedding"] for r in coll)
+    coarse = np.argmax(unit(V) @ C1.T, axis=1)
+    want, short = {}, 0
+    for c in np.unique(coarse):
         A = V[coarse == c]
         C = A[:k2].copy()
         for _ in range(2):
             cid = np.argmax(unit(A) @ unit(C).T, axis=1)
             for j in range(len(C)):
                 if (cid == j).any():
-                    C[j] = np.nansum(A[cid == j], axis=0) / (~np.isnan(A[cid == j])).sum(axis=0)
+                    with np.errstate(invalid="ignore"):  # NULL in every row: NaN
+                        C[j] = np.nansum(A[cid == j], 0) / (~np.isnan(A[cid == j])).sum(0)
+        short += len(C) < k2
         C = np.vstack([C, np.repeat(C[:1], k2 - len(C), axis=0)])
-        np.testing.assert_allclose(Su[c], unit(C), rtol=0, atol=1e-12)
+        sub = np.argmax(unit(A) @ unit(C).T, axis=1)
+        want.update(zip(ids[coarse == c].tolist(), (c * k2 + sub).tolist()))
+    assert short  # some group fits fewer than k2 and pads
+    assert want[7] == 0
+    assert {i: c for i, c, _ in got} == want
 
 
 def test_null_element_and_zero_rows_take_cluster_zero(spark):
@@ -374,8 +384,9 @@ def test_null_element_and_zero_rows_take_cluster_zero(spark):
     rows = [(i, (np.eye(16)[i % 8] + rng.rand(16) * 0.05).tolist()) for i in range(300)]
     rows += [(300, [None] + [1.0] * 15), (301, [0.0] * 16)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    two = similarity.semdedup(df, "vec_id", "embedding", k=80, tau=0.95, max_iter=2)
-    assert {r["id"]: r["cluster"] for r in two.where("id >= 300").collect()} == {300: 0, 301: 0}
+    two, got = _semdedup_rows(df, 0.95, k=80, max_iter=2)
+    assert {i: c for i, c, _ in got if i >= 300} == {300: 0, 301: 0}
+    assert got == _semdedup_reference(df, "vec_id", "embedding", two, 0.95)
 
 
 def test_semdedup_known_groups(spark):
@@ -561,32 +572,38 @@ def test_semdedup_odd_rows_follow_expression_semantics(spark, monkeypatch, bound
 
 def test_semdedup_string_ids(spark):
     """String ids (no integral surrogate needed): survivors are the
-    smallest id in Spark's string order, non-ASCII included."""
+    smallest id in Spark's string order, non-ASCII included, flat and
+    two-level."""
     rows = [
         (f"{'é' if i % 3 == 0 else 'd'}{i:04d}", v)
         for i, v in _near_dup_rows(13, n=60)
     ]
     df = spark.createDataFrame(rows, "vec_id string, embedding array<float>")
-    out, got = _semdedup_rows(df, 0.9, k=3, max_iter=2)
-    assert got == _semdedup_reference(df, "vec_id", "embedding", out, 0.9)
-    assert any(not keep for _, _, keep in got)
+    for k in (3, 65):
+        out, got = _semdedup_rows(df, 0.9, k=k, max_iter=2)
+        assert got == _semdedup_reference(df, "vec_id", "embedding", out, 0.9), k
+        assert any(not keep for _, _, keep in got), k
 
 
 def test_semdedup_null_id_never_links(spark):
+    """A NULL id links with nothing and keeps NULL, flat and two-level;
+    the other rows are the expression reference's."""
     rows = [(0, [1.0, 0.0]), (None, [1.0, 0.0]), (1, [2.0, 0.0]),
             (2, [0.0, 1.0]), (None, [0.0, 3.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = sorted(
-        (r["id"] is None, r["id"], r["keep"])
-        for r in similarity.semdedup(df, "vec_id", "embedding", k=1).collect()
-    )
-    assert got == [(False, 0, True), (False, 1, False), (False, 2, True),
-                   (True, None, None), (True, None, None)]
+    for k in (1, 65):
+        out = similarity.semdedup(df, "vec_id", "embedding", k=k)
+        got = sorted((r["id"] is None, r["id"], r["keep"]) for r in out.collect())
+        assert got == [(False, 0, True), (False, 1, False), (False, 2, True),
+                       (True, None, None), (True, None, None)], k
+        live = sorted(tuple(r) for r in out.where(F.col("id").isNotNull()).collect())
+        assert live == _semdedup_reference(df, "vec_id", "embedding", out, 0.9), k
 
 
-def test_semdedup_hierarchical_matches_reference(spark):
-    """k > HIER_KMEANS_MIN_K (the two-level codebook) through the
-    same fused pass."""
+def test_semdedup_hierarchical_matches_reference(spark, monkeypatch):
+    """k > HIER_KMEANS_MIN_K (the two-level codebook) links every fine
+    cluster inside its coarse group's task, whatever its size: the
+    same rows with _MAX_CLUSTER_ROWS at 2."""
     import numpy as np
 
     rng = np.random.RandomState(7)
@@ -599,6 +616,8 @@ def test_semdedup_hierarchical_matches_reference(spark):
     out, got = _semdedup_rows(df, 0.95, k=80, max_iter=2)
     assert len({c for _, c, _ in got}) > 8
     assert got == _semdedup_reference(df, "vec_id", "embedding", out, 0.95)
+    monkeypatch.setattr(similarity, "_MAX_CLUSTER_ROWS", 2)
+    assert _semdedup_rows(df, 0.95, k=80, max_iter=2)[1] == got
 
 
 def test_min_labels_long_chain():

@@ -67,7 +67,7 @@ def test_pair_big_paths_tag_every_eager_step(spark, planted, monkeypatch, op, st
 
 
 def test_vector_operator_steps(spark):
-    """k-means (flat and two-level), semdedup and pagerank tag their
+    """k-means, semdedup (flat and two-level) and pagerank tag their
     fit, probe, setup and iteration jobs."""
     import numpy as np
 
@@ -82,11 +82,11 @@ def test_vector_operator_steps(spark):
         spark, lambda: sim.semdedup(emb, "id", "embedding", k=3, max_iter=2)
     )
     assert list(prof["steps"]) == fit + ["semdedup:sizes"]
+    # two-level (k1 = 9 coarse centroids): nothing eager after the fit
     _, prof = profile_call(
-        spark,
-        lambda: sim.kmeans_fit_hierarchical(emb, "id", "embedding", k=9, max_iter=2),
+        spark, lambda: sim.semdedup(emb, "id", "embedding", k=65, max_iter=2)
     )
-    assert list(prof["steps"]) == fit + ["kmeans_fit_hierarchical:subfit"]
+    assert list(prof["steps"]) == fit
     edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src long, dst long")
     _, prof = profile_call(spark, lambda: pagerank(edges, iters=2))
     assert list(prof["steps"]) == ["pagerank:setup", "pagerank:iter1", "pagerank:iter2"]

@@ -15,8 +15,9 @@ library from it, starts a local[nproc] session, and on each shard
 omitted) runs one untimed warm-up call, then times the operator plus
 ``collect()`` with its registry query's settings. It reports the
 walls, the number of Spark jobs and SQL executions the timed calls
-launched (``stage_profile.profile_call``), semdedup's dropped-row
-count and a SHA-256 of the sorted rows. The artifact keeps every
+launched and the MB their steps shuffled (read plus write;
+``stage_profile.profile_call``), semdedup's dropped-row count and a
+SHA-256 of the sorted rows. The artifact keeps every
 child's record, the spin canary before and after it, each tree's
 median wall per data dir and whether the row hashes of the two trees
 agree.
@@ -72,7 +73,8 @@ def child(tree: str, data: str, shard_rows: int, op: str) -> dict:
     emb = spark.read.parquet(os.path.join(data, "embeddings.parquet"))
     n = emb.count()
     size = shard_rows or n
-    out = {"rows": n, "walls_s": [], "jobs": 0, "sql": 0, "dropped": 0}
+    out = {"rows": n, "walls_s": [], "jobs": 0, "sql": 0, "shuffle_mb": 0.0,
+           "dropped": 0}
     digest = hashlib.sha256()
     for lo in range(0, n, size):
         shard = emb.where((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + size))
@@ -87,6 +89,9 @@ def child(tree: str, data: str, shard_rows: int, op: str) -> dict:
         out["walls_s"].append(prof["wall_s"])
         out["sql"] += prof["sql"]
         out["jobs"] += prof["jobs"]
+        out["shuffle_mb"] = round(
+            out["shuffle_mb"] + sum(st["shuffle_mb"] for st in prof["steps"].values()), 1
+        )
         spark.catalog.clearCache()
         out["dropped"] += sum(1 for r in rows if r[2] is False)
         digest.update(repr(rows).encode())
@@ -138,7 +143,7 @@ def main(argv: list[str]) -> int:
                 ), 3),
                 **{f"{what}_per_call": next(
                     r[what] / len(r["walls_s"]) for r in mine if r["tree"] == tree
-                ) for what in ("jobs", "sql")},
+                ) for what in ("jobs", "sql", "shuffle_mb")},
             }
             for tree in trees
         }

@@ -40,9 +40,10 @@ the rep's wall is the profile's ``wall_s``, and the artifact keeps
 every rep's step table (the Spark jobs grouped by the library's
 ``<op>:<step>`` job tags), so stage profiles come from the timed reps
 and no sweep runs a call only to profile it. Reps are best-of-3 at
-the sweep's top decade and best-of-2 below; caches are off. One merge
-(``_merge``) writes the walls, the raw and canary-normalized
-per-decade factors and the burst-suspect flag.
+the sweep's top decade and best-of-2 below, each after one untimed
+warm-up call; caches are off. One merge (``_merge``) writes the
+walls, the raw and canary-normalized per-decade factors and the
+burst-suspect flag.
 
 NOISE REGIME (r12, VERDICT r11 ask #1). The box swings same-code
 walls 2-9x (documented r11: virtio disk, long-lived JVM state, one
@@ -177,11 +178,17 @@ def _guard_stray_jvm():
 
 
 def _reps(spark, label, build, n, sink=_noop):
-    """``n`` timed reps of ``sink(build())`` (a freshly built frame per
-    rep: certification measures the submit-to-done wall, not a
-    prepared steady state). Each rep first clears the storage cache
-    and the registry's memoized fits, then runs inside
-    ``profile_call``.
+    """One untimed warm-up call, then ``n`` timed reps of
+    ``sink(build())`` (a freshly built frame per rep: certification
+    measures the submit-to-done wall, not a prepared steady state).
+    Each call first clears the storage cache and the registry's
+    memoized fits, then runs inside ``profile_call``.
+
+    Why the warm-up: a decade process's first call of a query pays
+    its JIT and codegen warm-up (on a 4-vCPU box 1.2-2.4x the second
+    call at 10x, 22.5 vs 16.9 s for 100x semdedup), so best-of-n over
+    cold reps would take a lower decade's best from fewer warm reps
+    than the top decade's and bias every factor low.
 
     Why clear the cache: operators persist reusable intermediates
     (plans/cache.py), and a later rep's build of the identical plan
@@ -192,27 +199,30 @@ def _reps(spark, label, build, n, sink=_noop):
     46.9x/decade; cold-vs-cold it is 8.0x). The BPE and beam-search
     fits are memoized per sf_dir; a rep times the fit.
 
-    Returns the best wall, every rep wall and their max/min spread
-    (VERDICT r11 ask #1b: on a box whose same-code walls swing 2-9x,
-    a best-of without its reps is not auditable), and every rep's
-    profile. A rep's wall is its profile's ``wall_s``, which does not
-    include reading the profile back."""
+    Returns the timed reps' best wall, every timed rep wall and their
+    max/min spread (on a box whose same-code walls swing 2-9x, a
+    best-of without its reps is not auditable), every timed rep's
+    profile, and the warm-up's wall (``warmup_s``). A wall is its
+    profile's ``wall_s``, which does not include reading the profile
+    back."""
     from dataframe_spark.queries import ml_q, text_q
     from tools.stage_profile import profile_call
 
     profiles = []
-    for _ in range(n):
+    for _ in range(n + 1):
         spark.catalog.clearCache()
         text_q._BPE_CACHE.clear()
         ml_q._BEAM_CACHE.clear()
         profiles.append(profile_call(spark, lambda: sink(build()))[1])
+    warmup, profiles = profiles[0], profiles[1:]
     walls = [p["wall_s"] for p in profiles]
-    print(label, walls, flush=True)
+    print(label, "warm-up", warmup["wall_s"], "reps", walls, flush=True)
     return {
         "sec": min(walls),
         "reps": walls,
         "spread": round(max(walls) / max(min(walls), 1e-9), 2),
         "profiles": profiles,
+        "warmup_s": warmup["wall_s"],
     }
 
 
@@ -541,7 +551,10 @@ def _merge(sweep, parts):
                 "and two after each decade's measurements); "
                 "canary_spread is each process's after/before "
                 "quiet-floor ratio, burst_suspect any spread over "
-                "2; every rep's wall and stage profile (its Spark "
+                "2; every measurement (the canary too) runs one "
+                "untimed warm-up call (warmup_s) before its timed "
+                "reps, so sec, reps and spread read warm calls only; "
+                "every timed rep's wall and stage profile (its Spark "
                 "jobs grouped by the library's op:step job tags) "
                 "is committed",
     }
